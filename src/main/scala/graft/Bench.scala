@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.Loops
+
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and prints
   * ONE JSON line {"metric","value","unit","queries","sf"}.
   *
@@ -13,7 +15,9 @@ package graft
   *    of three timed runs: the sandbox shares CPU, and a single timed run was
   *    observed to swing 3-14s on a 1s query purely from scheduler/GC noise;
   *  - a failed query is reported as -1 and named in "failed", never silently
-  *    folded into wall time.
+  *    folded into wall time;
+  *  - each run is one [[graft.operators.Loops.scope]]: the checkpoints the
+  *    query made are released after its timer stops, outside the timing.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -34,7 +38,7 @@ object Bench {
     var failed = List.empty[String]
     val results = names.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        def once(): Double = {
+        def once(): Double = Loops.scope {
           val t0 = System.nanoTime()
           fn(spark, sfDir).queryExecution.toRdd.count()
           (System.nanoTime() - t0) / 1e9

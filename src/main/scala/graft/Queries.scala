@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.Exprs
 import graft.functions.{Text, VectorExpressions => V}
-import graft.operators.{Ann, AsOfJoin, Dedup, DomainFilter, OrderedAnalytics, SpanDedup}
+import graft.operators.{Ann, AsOfJoin, Dedup, DomainFilter, Loops, OrderedAnalytics,
+  SpanDedup}
 
 /** The registered query catalog: one entry per operator family from
   * SURVEY.md §2 plus the LLM-data-pipeline operators (dedup / ANN / text
@@ -76,7 +77,7 @@ object Queries {
     // materialize, then release the catalog entries (the q142 hygiene):
     // lingering views would clobber same-named user views and pin the last
     // `dir` for any later resolver
-    val out = s.sql(
+    val out = Loops.checkpoint(s.sql(
       """SELECT n_name, year(o_orderdate) AS order_year,
         |  grouping_id() AS gid,
         |  count(*) AS order_cnt,
@@ -85,8 +86,8 @@ object Queries {
         |JOIN q157_customer c ON o.o_custkey = c.c_custkey
         |JOIN q157_nation n ON c.c_nationkey = n.n_nationkey
         |GROUP BY CUBE(n_name, year(o_orderdate))
-        |ORDER BY gid, n_name ASC NULLS FIRST, order_year ASC NULLS FIRST""".stripMargin)
-      .localCheckpoint(true)
+        |ORDER BY gid, n_name ASC NULLS FIRST, order_year ASC NULLS FIRST""".stripMargin),
+      eager = true)
     Seq("q157_orders", "q157_customer", "q157_nation")
       .foreach(s.catalog.dropTempView(_): Unit)
     out
@@ -187,8 +188,8 @@ object Queries {
     // queries + corpus + a majority-dim probe from this frame (5 scans
     // before); block resolution depends only on (n, dim, parallelism) and
     // per-pair cosines are block-independent, so the output is unchanged
-    val emb = T(s, dir, "embeddings").filter(col("embedding").isNotNull)
-      .localCheckpoint(true)
+    val emb = Loops.checkpoint(
+      T(s, dir, "embeddings").filter(col("embedding").isNotNull), eager = true)
     val queries = emb.filter(pmod(col("vec_id"), lit(13)) === 0)
     val corpus = emb.filter(pmod(col("vec_id"), lit(13)) =!= 0)
     def codesOf(df: DataFrame) = df
@@ -220,8 +221,8 @@ object Queries {
     * no-transcendental, no-rounding contract. */
   def matryoshkaEval(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE embeddings scan (the q178 argument)
-    val emb = T(s, dir, "embeddings").filter(col("embedding").isNotNull)
-      .localCheckpoint(true)
+    val emb = Loops.checkpoint(
+      T(s, dir, "embeddings").filter(col("embedding").isNotNull), eager = true)
     val queries = emb.filter(pmod(col("vec_id"), lit(13)) === 0)
     val corpus = emb.filter(pmod(col("vec_id"), lit(13)) =!= 0)
     def trunc(df: DataFrame) = df.select(col("vec_id"),
@@ -420,7 +421,7 @@ object Queries {
     T(s, dir, "orders").createOrReplaceTempView("q180_orders")
     T(s, dir, "customer").createOrReplaceTempView("q180_customer")
     T(s, dir, "nation").createOrReplaceTempView("q180_nation")
-    val out = s.sql(
+    val out = Loops.checkpoint(s.sql(
       """SELECT n_name, year(o_orderdate) AS order_year,
         |  grouping_id() AS gid,
         |  count(*) AS order_cnt,
@@ -430,8 +431,7 @@ object Queries {
         |JOIN q180_nation n ON c.c_nationkey = n.n_nationkey
         |GROUP BY GROUPING SETS ((n_name), (year(o_orderdate)), ())
         |ORDER BY gid, n_name ASC NULLS FIRST, order_year ASC NULLS FIRST"""
-        .stripMargin)
-      .localCheckpoint(true)
+        .stripMargin), eager = true)
     Seq("q180_orders", "q180_customer", "q180_nation")
       .foreach(s.catalog.dropTempView(_): Unit)
     out
@@ -564,11 +564,10 @@ object Queries {
         proj, feats.map(_._1), "__y", iters = 3, lr = 0.5,
         link = graft.operators.Classifier.Link.Softsign)
       val scored = round(model.score(feats.map { case (n, _) => col(n) }), 6)
-      proj.select(
+      Loops.checkpoint(proj.select(
           col("doc_id"), col("__y").cast("long").as("label"),
           scored.as("score"), (scored >= lit(0.5)).as("predicted"))
-        .orderBy("doc_id")
-        .localCheckpoint(true) // materialize off the persisted projection
+        .orderBy("doc_id"), eager = true) // materialize off the persisted projection
     } finally { proj.unpersist(); () }
   }
 
@@ -597,7 +596,7 @@ object Queries {
       store.overwriteBucketed("ord",
         T(s, dir, "orders").select("o_orderkey", "o_orderdate"),
         16, Seq("o_orderkey"), Seq("o_orderkey"))
-      store.readBucketed("li")
+      Loops.checkpoint(store.readBucketed("li")
         .join(store.readBucketed("ord"),
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(year(col("o_orderdate")).cast("long").as("order_year"))
@@ -605,8 +604,8 @@ object Queries {
           count(lit(1)).as("line_cnt"),
           sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
             .cast("decimal(18,6)")).cast("double").as("revenue"))
-        .orderBy("order_year")
-        .localCheckpoint(true) // materialize before the files are released
+        .orderBy("order_year"),
+        eager = true) // materialize before the files are released
     } finally {
       // failure-isolated: a throw from one drop must not strand the other's
       // catalog entry, and never mask the original exception
@@ -642,13 +641,13 @@ object Queries {
           "l_quantity")
       store.overwriteZOrdered("zli", li, Seq("ship_day", "l_partkey"),
         files = 16)
-      store.read("zli")
+      Loops.checkpoint(store.read("zli")
         .filter(col("ship_day") >= lit(11400L) && col("ship_day") < lit(11500L) &&
           col("l_partkey") < lit(500L))
         .select("l_orderkey", "l_linenumber", "ship_day", "l_partkey",
           "l_quantity")
-        .orderBy("l_orderkey", "l_linenumber")
-        .localCheckpoint(true) // materialize before the files are released
+        .orderBy("l_orderkey", "l_linenumber"),
+        eager = true) // materialize before the files are released
     } finally deleteDirTree(root) // table, staging/retired gens, AND the root
   }
 
@@ -672,13 +671,13 @@ object Queries {
       val after = store.compactFiles("frag", targetBytes = 4L << 20)
       require(after < 64,
         s"compaction must collapse the 64-file fragmentation (got $after)")
-      store.read("frag")
+      Loops.checkpoint(store.read("frag")
         .groupBy("source", "lang")
         .agg(count(lit(1)).as("n_docs"),
           sum("n_chars").as("sum_chars"),
           sum("doc_id").as("sum_ids"))
-        .orderBy("source", "lang")
-        .localCheckpoint(true) // materialize before the files are released
+        .orderBy("source", "lang"),
+        eager = true) // materialize before the files are released
     } finally deleteDirTree(root)
   }
 
@@ -744,14 +743,14 @@ object Queries {
         .join(emb.select(col("vec_id").as("doc_id"), col("embedding").as("__de")),
           Seq("doc_id"))
         .withColumn("cosine", round(V.vec_cosine(col("__qe"), col("__de")), 6))
-      reranked
+      Loops.checkpoint(reranked
         .withColumn("rank", row_number().over(
           Window.partitionBy("query_id")
             .orderBy(col("cosine").desc, col("doc_id"))).cast("long"))
         .filter(col("rank") <= 5)
         .select("query_id", "rank", "doc_id", "cosine", "bm25_score")
-        .orderBy("query_id", "rank")
-        .localCheckpoint(true) // materialize before the index is released
+        .orderBy("query_id", "rank"),
+        eager = true) // materialize before the index is released
     } finally idx.unpersist()
   }
 
@@ -1738,8 +1737,8 @@ object Queries {
       .select("id_a", "id_b")
     val touchesNew = pmod(col("id_a"), lit(5)) === 0 ||
       pmod(col("id_b"), lit(5)) === 0
-    val oldPairs = pairs.filter(!touchesNew).localCheckpoint(true)
-    val newPairs = pairs.filter(touchesNew).localCheckpoint(true)
+    val oldPairs = Loops.checkpoint(pairs.filter(!touchesNew), eager = true)
+    val newPairs = Loops.checkpoint(pairs.filter(touchesNew), eager = true)
     val oldDocs = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       .select(col("doc_id").as("id"))
     // yesterday's labeling: components over yesterday's pairs, singletons
@@ -2033,9 +2032,9 @@ object Queries {
     // DOC-sized (one stats row per document — the LM stats table a pipeline
     // would persist anyway), so materialize it once rather than re-running
     // the whole score pipeline (vocab rollup + token join) per consumer
-    val scored = graft.operators.UnigramLm.score(docs, "doc_id", "text")
-      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .localCheckpoint(true)
+    val scored = Loops.checkpoint(
+      graft.operators.UnigramLm.score(docs, "doc_id", "text")
+      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id")), eager = true)
     val wLang = Window.partitionBy("lang")
     val wCum = wLang.orderBy(col("mean_tok_prob").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3161,14 +3160,13 @@ object Queries {
         expr("try_cast(get_json_object(props, '$.k') AS BIGINT)").as("node"))
       .filter(col("node").isNotNull)
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val agg = ev.select(col("node").as("src"),
+    val agg = Loops.checkpoint(ev.select(col("node").as("src"),
         lead(col("node"), 1).over(w).as("dst"),
         lead(col("ts"), 1).over(w).as("__dts"))
       .filter(col("dst").isNotNull)
       .groupBy("src", "dst").agg(count(lit(1)).as("w"),
         sum(when(col("__dts") < lit(cutoff).cast("timestamp"), 1L)
-          .otherwise(0L)).as("__wy"))
-      .localCheckpoint(true)
+          .otherwise(0L)).as("__wy")), eager = true)
     (agg.select("src", "dst", "w"),
       agg.filter(col("__wy") > 0)
         .select(col("src"), col("dst"), col("__wy").as("w")))
@@ -3532,12 +3530,11 @@ object Queries {
   def kcoreIncremental(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE events scan — und feeds the old build, the delta, and the
     // maintenance entry (each re-derived it from the raw scan before)
-    val und = affinityTopEdges(s, dir)
+    val und = Loops.checkpoint(affinityTopEdges(s, dir)
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
     // r18: the filters of the canonical frame stay canonical — peel and
     // maintenance run directly on them (no re-distinct + checkpoint)
     val oldEdges = und.filter(pmod(col("u") + col("v"), lit(5)) =!= 0)
@@ -3590,8 +3587,8 @@ object Queries {
     // r17: both graphs from the one-scan split (one events scan + window
     // + rollup instead of two — see eventsTransitionEdgesSplit)
     val (tE, yE) = affinityTopEdgesSplit(s, dir, KCoreChurnCutoff)
-    val today = canon(tE).localCheckpoint(true)
-    val yesterday = canon(yE).localCheckpoint(true)
+    val today = Loops.checkpoint(canon(tE), eager = true)
+    val yesterday = Loops.checkpoint(canon(yE), eager = true)
     val inserts = today.join(yesterday, Seq("u", "v"), "left_anti")
     val deletes = yesterday.join(today, Seq("u", "v"), "left_anti")
     require(!inserts.isEmpty && !deletes.isEmpty,
@@ -3651,14 +3648,13 @@ object Queries {
     val q = stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], _: Long) =>
-        val b = freshStats(batch.localCheckpoint(true))
+        val b = freshStats(Loops.checkpoint(batch, eager = true))
         if (!b.isEmpty) {
-          acc = freshStats((if (acc == null) b else acc.unionByName(b))
-            .localCheckpoint(true))
-          core = freshStats(graft.operators.KCore.maintain(
+          acc = freshStats(Loops.checkpoint(
+            if (acc == null) b else acc.unionByName(b), eager = true))
+          core = freshStats(Loops.checkpoint(graft.operators.KCore.maintain(
               acc, core.select("node"), k = KCoreK,
-              maxRounds = 2 * KCoreOracleLayers, delta = Some(b))
-            .localCheckpoint(true))
+              maxRounds = 2 * KCoreOracleLayers, delta = Some(b)), eager = true))
         }
       }
       .start()
@@ -3692,14 +3688,13 @@ object Queries {
     val q = stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], _: Long) =>
-        val b = freshStats(batch.localCheckpoint(true))
+        val b = freshStats(Loops.checkpoint(batch, eager = true))
         if (!b.isEmpty) {
-          acc = freshStats((if (acc == null) b else acc.unionByName(b))
-            .localCheckpoint(true))
-          truss = freshStats(graft.operators.Truss.maintain(
+          acc = freshStats(Loops.checkpoint(
+            if (acc == null) b else acc.unionByName(b), eager = true))
+          truss = freshStats(Loops.checkpoint(graft.operators.Truss.maintain(
               acc, truss.select("u", "v"), k = TrussK, maxRounds = 50,
-              delta = Some(b))
-            .localCheckpoint(true))
+              delta = Some(b)), eager = true))
         }
       }
       .start()
@@ -3733,13 +3728,12 @@ object Queries {
     val q = stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], _: Long) =>
-        val b = freshStats(batch.localCheckpoint(true))
+        val b = freshStats(Loops.checkpoint(batch, eager = true))
         if (!b.isEmpty) {
-          acc = freshStats((if (acc == null) b else acc.unionByName(b))
-            .localCheckpoint(true))
-          scc = freshStats(graft.operators.Scc.maintain(
-              acc, scc, maxRounds = 50, delta = Some(b))
-            .localCheckpoint(true))
+          acc = freshStats(Loops.checkpoint(
+            if (acc == null) b else acc.unionByName(b), eager = true))
+          scc = freshStats(Loops.checkpoint(graft.operators.Scc.maintain(
+              acc, scc, maxRounds = 50, delta = Some(b)), eager = true))
         }
       }
       .start()
@@ -3775,14 +3769,14 @@ object Queries {
     val q = stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], _: Long) =>
-        val b = freshStats(batch.localCheckpoint(true))
+        val b = freshStats(Loops.checkpoint(batch, eager = true))
         if (!b.isEmpty) {
-          acc = freshStats((if (acc == null) b else acc.unionByName(b))
-            .localCheckpoint(true))
-          shells = freshStats(graft.operators.KCore.corenessMaintain(
+          acc = freshStats(Loops.checkpoint(
+            if (acc == null) b else acc.unionByName(b), eager = true))
+          shells = freshStats(Loops.checkpoint(
+            graft.operators.KCore.corenessMaintain(
               acc, shells, delta = Some(b), maxK = 2 * CorenessMaxK,
-              maxRounds = 2 * CorenessLayers)
-            .localCheckpoint(true))
+              maxRounds = 2 * CorenessLayers), eager = true))
         }
       }
       .start()
@@ -3842,12 +3836,11 @@ object Queries {
   def corenessIncremental(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE events scan — und feeds the old build, the delta, and the
     // maintenance entry (each re-derived it from the raw scan before)
-    val und = affinityTopEdges(s, dir)
+    val und = Loops.checkpoint(affinityTopEdges(s, dir)
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
     // r18: the filters of the canonical frame stay canonical — the graded
     // peel and maintenance run directly on them (no re-distinct + ckpt)
     val oldEdges = und.filter(pmod(col("u") + col("v"), lit(5)) =!= 0)
@@ -3901,7 +3894,7 @@ object Queries {
     * chain verbatim, then the same four exact terms. */
   def communityModularity(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE events scan — edges feed both the detector and the evaluator
-    val edges = affinityTopEdges(s, dir).localCheckpoint(true)
+    val edges = Loops.checkpoint(affinityTopEdges(s, dir), eager = true)
     val labels = graft.operators.LabelProp.communities(
       edges, rounds = LpaRounds).select("node", "label")
     graft.operators.GraphStats.modularity(edges, labels).orderBy("label")
@@ -3957,7 +3950,7 @@ object Queries {
     * fixpoint; the in-query require pins the fit, the q176 contract). */
   def louvainRefined(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE events scan — edges feed both the detector and the refiner
-    val edges = affinityTopEdges(s, dir).localCheckpoint(true)
+    val edges = Loops.checkpoint(affinityTopEdges(s, dir), eager = true)
     val labels = graft.operators.Louvain.communities(
       edges, sweeps = LouvainSweeps)
     val (out, rounds) = graft.operators.Louvain.refineWithRounds(
@@ -4448,16 +4441,15 @@ object Queries {
   def sccIncremental(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE events scan — the frame feeds the old solve, the delta, and
     // the maintenance entry (each re-derived it from the raw scan before)
-    val edges = affinityTopEdges(s, dir)
+    val edges = Loops.checkpoint(affinityTopEdges(s, dir)
       .filter(col("src") =!= col("dst"))
-      .select("src", "dst").distinct()
-      .localCheckpoint(true)
+      .select("src", "dst").distinct(), eager = true)
     // r18b: the filters of the distinct canonical frame stay distinct —
     // the solve and maintenance entries run directly on them (the public
     // entries re-paid a full distinct shuffle + checkpoint each); the lazy
     // checkpoint materializes the filtered view in the solve's first job
-    val oldEdges = graft.operators.Loops.lazyCk(
-      edges.filter(pmod(col("src") + col("dst"), lit(5)) =!= 0))
+    val oldEdges = Loops.checkpoint(
+      edges.filter(pmod(col("src") + col("dst"), lit(5)) =!= 0), eager = false)
     val newEdges = edges.filter(pmod(col("src") + col("dst"), lit(5)) === 0)
     val oldScc = graft.operators.Scc.componentsCanonWithRounds(
       oldEdges, maxRounds = 50)._1
@@ -4487,8 +4479,8 @@ object Queries {
       .select("src", "dst").distinct()
     // r17: both graphs from the one-scan split (see eventsTransitionEdgesSplit)
     val (tE, yE) = affinityTopEdgesSplit(s, dir, KCoreChurnCutoff)
-    val today = dedir(tE).localCheckpoint(true)
-    val yesterday = dedir(yE).localCheckpoint(true)
+    val today = Loops.checkpoint(dedir(tE), eager = true)
+    val yesterday = Loops.checkpoint(dedir(yE), eager = true)
     val inserts = today.join(yesterday, Seq("src", "dst"), "left_anti")
     val deletes = yesterday.join(today, Seq("src", "dst"), "left_anti")
     require(!inserts.isEmpty && !deletes.isEmpty,
@@ -4646,12 +4638,11 @@ object Queries {
   def trussIncremental(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE events scan — und feeds the old build, the delta, and the
     // maintenance entry (each re-derived it from the raw scan before)
-    val und = affinityTopEdges(s, dir, n = 8)
+    val und = Loops.checkpoint(affinityTopEdges(s, dir, n = 8)
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
     // r18: the filters of the canonical frame stay canonical — the peel and
     // the maintenance entries run directly on them (no re-distinct shuffle
     // + checkpoint per entry, the cross-operator canonical factoring)
@@ -4689,8 +4680,8 @@ object Queries {
       .distinct()
     // r17: both graphs from the one-scan split (see eventsTransitionEdgesSplit)
     val (tE, yE) = affinityTopEdgesSplit(s, dir, KCoreChurnCutoff, n = 8)
-    val today = canon(tE).localCheckpoint(true)
-    val yesterday = canon(yE).localCheckpoint(true)
+    val today = Loops.checkpoint(canon(tE), eager = true)
+    val yesterday = Loops.checkpoint(canon(yE), eager = true)
     val inserts = today.join(yesterday, Seq("u", "v"), "left_anti")
     val deletes = yesterday.join(today, Seq("u", "v"), "left_anti")
     require(!inserts.isEmpty && !deletes.isEmpty,
@@ -4769,12 +4760,11 @@ object Queries {
     * q201). */
   def betweennessSampledReport(s: SparkSession, dir: String): DataFrame = {
     val edges = affinityTopEdges(s, dir)
-    val nodes = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
+    val nodes = Loops.checkpoint(edges.select(col("src").as("node"))
+      .unionByName(edges.select(col("dst").as("node"))).distinct(), eager = true)
     val pivots = nodes.filter(pmod(col("node"), lit(2)) === 0)
-    val exact = graft.operators.Betweenness.fromPivots(
-      edges, nodes, maxDepth = 20).localCheckpoint(true)
+    val exact = Loops.checkpoint(graft.operators.Betweenness.fromPivots(
+      edges, nodes, maxDepth = 20), eager = true)
     val sampled = graft.operators.Betweenness.fromPivots(
       edges, pivots, maxDepth = 20)
     val k = 10
@@ -4782,7 +4772,7 @@ object Queries {
     def top(df: DataFrame, n: Int) = df
       .orderBy(col("betweenness").desc, col("node").asc).limit(n)
       .select("node")
-    val topSampled = top(sampled, k).localCheckpoint(true)
+    val topSampled = Loops.checkpoint(top(sampled, k), eager = true)
     val hits = top(exact, k).join(topSampled, Seq("node"), "left_semi")
       .count()
     val bandHits = topSampled.join(top(exact, band), Seq("node"),
@@ -5137,8 +5127,8 @@ object Queries {
     // materialize, then release the run's resources — without this every
     // invocation leaks a temp parquet dir and an accumulating memory-sink
     // table (repeated correctness runs grow disk + driver heap unboundedly)
-    val out = s.table(sink).orderBy("window_start", "event_type")
-      .localCheckpoint(true)
+    val out = Loops.checkpoint(
+      s.table(sink).orderBy("window_start", "event_type"), eager = true)
     s.catalog.dropTempView(sink)
     deleteDirTree(src)
     out
@@ -5212,12 +5202,11 @@ object Queries {
       }.start()
     try q.processAllAvailable() finally q.stop()
     val latest = emb.filter(col("vec_id") % 10 =!= 0).unionByName(updates)
-    val out = graft.operators.AnnIndex.query(store, "emb",
+    val out = Loops.checkpoint(graft.operators.AnnIndex.query(store, "emb",
       latest.filter(col("vec_id") % 5 === 0), "vec_id", "embedding",
       k = 3, nProbe = 8)
       .withColumn("cosine", round(col("cosine"), 6))
-      .orderBy("id", "rank")
-      .localCheckpoint(true)
+      .orderBy("id", "rank"), eager = true)
     deleteDirTree(srcDir.toString)
     deleteDirTree(root)
     out
@@ -5268,9 +5257,9 @@ object Queries {
     val q = joined.writeStream.format("memory").queryName(sink)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
-    val out = s.table(sink)
-      .orderBy("user_id", "view_ts", "view_event", "purchase_ts", "purchase_event")
-      .localCheckpoint(true)
+    val out = Loops.checkpoint(s.table(sink)
+      .orderBy("user_id", "view_ts", "view_event", "purchase_ts", "purchase_event"),
+      eager = true)
     s.catalog.dropTempView(sink)
     deleteDirTree(srcV)
     deleteDirTree(srcP)
@@ -5316,9 +5305,9 @@ object Queries {
     val q = joined.writeStream.format("memory").queryName(sink)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
-    val out = s.table(sink)
-      .orderBy("user_id", "view_ts", "view_event", "purchase_ts", "purchase_event")
-      .localCheckpoint(true)
+    val out = Loops.checkpoint(s.table(sink)
+      .orderBy("user_id", "view_ts", "view_event", "purchase_ts", "purchase_event"),
+      eager = true)
     s.catalog.dropTempView(sink)
     deleteDirTree(srcV)
     deleteDirTree(srcP)
@@ -5380,10 +5369,12 @@ object Queries {
     graft.operators.AnnIndex.build(store, "emb", base, "vec_id", "embedding",
       nClusters = 8, iters = 3)
     def recallOf(queries: DataFrame): (Long, Long) = {
-      val approx = graft.operators.AnnIndex.query(store, "emb", queries,
-        "vec_id", "embedding", k = 3, nProbe = 1).localCheckpoint(true)
-      val exact = graft.operators.AnnIndex.query(store, "emb", queries,
-        "vec_id", "embedding", k = 3, nProbe = 64).localCheckpoint(true)
+      val approx = Loops.checkpoint(
+        graft.operators.AnnIndex.query(store, "emb", queries,
+          "vec_id", "embedding", k = 3, nProbe = 1), eager = true)
+      val exact = Loops.checkpoint(
+        graft.operators.AnnIndex.query(store, "emb", queries,
+          "vec_id", "embedding", k = 3, nProbe = 64), eager = true)
       val nE = exact.count()
       val nH = exact.select("id", "neighbor_id")
         .join(approx.select("id", "neighbor_id"),
@@ -5446,9 +5437,9 @@ object Queries {
     val q = joined.writeStream.format("memory").queryName(sink)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
-    val out = s.table(sink)
-      .orderBy("user_id", "view_ts", "view_event", "purchase_ts", "purchase_event")
-      .localCheckpoint(true)
+    val out = Loops.checkpoint(s.table(sink)
+      .orderBy("user_id", "view_ts", "view_event", "purchase_ts", "purchase_event"),
+      eager = true)
     s.catalog.dropTempView(sink)
     deleteDirTree(srcV)
     deleteDirTree(srcP)
@@ -5488,9 +5479,9 @@ object Queries {
     val q = joined.writeStream.format("memory").queryName(sink)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
-    val out = s.table(sink)
-      .orderBy("user_id", "view_ts", "view_event", "purchase_ts", "purchase_event")
-      .localCheckpoint(true)
+    val out = Loops.checkpoint(s.table(sink)
+      .orderBy("user_id", "view_ts", "view_event", "purchase_ts", "purchase_event"),
+      eager = true)
     s.catalog.dropTempView(sink)
     deleteDirTree(srcV)
     deleteDirTree(srcP)
@@ -5533,12 +5524,11 @@ object Queries {
     val q = sessions.writeStream.format("memory").queryName(sink)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
-    val out = s.table(sink)
+    val out = Loops.checkpoint(s.table(sink)
       .select(col("user_id"), unix_millis(col("session_start")).as("start_ms"),
         unix_millis(col("session_end")).as("last_ms"), col("n_events"),
         col("sum_value"))
-      .orderBy("user_id", "start_ms")
-      .localCheckpoint(true)
+      .orderBy("user_id", "start_ms"), eager = true)
     s.catalog.dropTempView(sink)
     deleteDirTree(src)
     out
@@ -5637,25 +5627,23 @@ object Queries {
     val media = mm.syntheticMedia(s, 600)
     val videos = media.filter(col("kind") === "video")
       .select("media_id", "kind", "payload")
-    val nudged = mm.lumaNudge(videos, delta = 1).filter(col("nudged"))
-      .localCheckpoint(true)
+    val nudged = Loops.checkpoint(
+      mm.lumaNudge(videos, delta = 1).filter(col("nudged")), eager = true)
     val vTruth = nudged.select(col("media_id").as("id_a"),
       (col("media_id") + lit(100000L)).as("id_b"))
-    val vCorpus = videos.unionByName(
+    val vCorpus = Loops.checkpoint(videos.unionByName(
       nudged.select((col("media_id") + lit(100000L)).as("media_id"),
-        col("kind"), col("payload")))
-      .localCheckpoint(true)
+        col("kind"), col("payload"))), eager = true)
     val audio = media.filter(col("kind") === "audio")
       .select("media_id", "kind", "payload")
-    val ascaled = mm.scaleAmplitude(audio, 9, 10).filter(col("scaled"))
-      .localCheckpoint(true)
+    val ascaled = Loops.checkpoint(
+      mm.scaleAmplitude(audio, 9, 10).filter(col("scaled")), eager = true)
     val aTruth = ascaled.select(col("media_id").as("id_a"),
       (col("media_id") + lit(100000L)).as("id_b"))
-    val aHashes = mm.audioHash(audio.unionByName(
+    val aHashes = Loops.checkpoint(mm.audioHash(audio.unionByName(
         ascaled.select((col("media_id") + lit(100000L)).as("media_id"),
           col("kind"), col("payload"))))
-      .filter(col("valid")).select("media_id", "ahash")
-      .localCheckpoint(true)
+      .filter(col("valid")).select("media_id", "ahash"), eager = true)
     def audioPairs(maxHamming: Int) = graft.operators.Dedup
       .hammingNearDupPairs(aHashes, "media_id", "ahash",
         bits = 64, maxHamming = maxHamming)
@@ -5868,13 +5856,13 @@ object Queries {
       .agg(max_by(col("kmv"), col("n_seen")).as("kmv"))
     val exact = ev.groupBy("key")
       .agg(countDistinct("user_id").as("exact_distinct"))
-    val out = latest.select(col("key"),
+    val out = Loops.checkpoint(latest.select(col("key"),
         size(col("kmv")).cast("long").as("n_kept"),
         when(size(col("kmv")) >= KmvK, element_at(col("kmv"), KmvK))
           .as("kth_min"),
         graft.operators.Kmv.estimate(col("kmv"), KmvK).as("est_distinct"))
       .join(exact, Seq("key"))
-      .orderBy("key").localCheckpoint(true)
+      .orderBy("key"), eager = true)
     s.catalog.dropTempView(sink)
     deleteDirTree(src)
     out
@@ -6034,11 +6022,10 @@ object Queries {
     try q.processAllAvailable() finally q.stop()
     // materialize + drop the sink view (the q142 leak fix — an accumulating
     // memory-sink table per invocation grows driver heap across runs)
-    val out = s.table(sink)
+    val out = Loops.checkpoint(s.table(sink)
       .select(col("doc_id"), col("lang_pred"), col("quality_score"),
         col("n_tokens"), col("text").as("scrubbed"))
-      .orderBy("doc_id")
-      .localCheckpoint(true)
+      .orderBy("doc_id"), eager = true)
     s.catalog.dropTempView(sink)
     out
   }
@@ -6079,7 +6066,7 @@ object Queries {
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
     // materialize + release the sink view (the q142 hygiene)
-    val out = s.table(sink).orderBy("doc_id").localCheckpoint(true)
+    val out = Loops.checkpoint(s.table(sink).orderBy("doc_id"), eager = true)
     s.catalog.dropTempView(sink)
     out
   }
@@ -6108,7 +6095,7 @@ object Queries {
       .outputMode("complete").start()
     try q.processAllAvailable() finally q.stop()
     // materialize, then release the sink view + temp source dir (q142 fix)
-    val out = s.table(sink).orderBy("content_hash").localCheckpoint(true)
+    val out = Loops.checkpoint(s.table(sink).orderBy("content_hash"), eager = true)
     s.catalog.dropTempView(sink)
     deleteDirTree(src)
     out
@@ -6208,14 +6195,13 @@ object Queries {
     * final flag pass re-derived both — four percentile passes where two is
     * the MAD floor. */
   private[graft] def outliersOf(ev: DataFrame): DataFrame = {
-    val med = ev.groupBy("event_type")
-      .agg(round(expr("percentile(value, 0.5)"), 6).as("med"))
-      .localCheckpoint(true)
+    val med = Loops.checkpoint(ev.groupBy("event_type")
+      .agg(round(expr("percentile(value, 0.5)"), 6).as("med")), eager = true)
     val withMed = ev.join(broadcast(med), Seq("event_type"))
-    val mad = withMed.withColumn("__adev", abs(col("value") - col("med")))
+    val mad = Loops.checkpoint(withMed
+      .withColumn("__adev", abs(col("value") - col("med")))
       .groupBy("event_type")
-      .agg(round(expr("percentile(__adev, 0.5)"), 6).as("mad"))
-      .localCheckpoint(true)
+      .agg(round(expr("percentile(__adev, 0.5)"), 6).as("mad")), eager = true)
     withMed.join(broadcast(mad), Seq("event_type"))
       .withColumn("is_outlier", abs(col("value") - col("med")) > lit(3.0) * col("mad"))
       .select("event_id", "event_type", "value", "med", "mad", "is_outlier")

@@ -21,20 +21,18 @@ object Sessions {
     // events.parquet is written with TIMESTAMP(NANOS); Spark can only read it
     // as a raw long (Tables.load converts to a micros TimestampType).
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Checkpoint-block lifetime, r18: the iterative loops now unpersist a
-    // superseded ROUND explicitly (Loops.ckpt/Round.free — the r17 leak
-    // fixed at its source), but each query's ONE-OFF checkpoints (canonical
-    // frames, certified sets, accumulator layers) are still released only
-    // when the ContextCleaner sees their RDDs garbage-collected — and a
-    // driver whose heap never pressures can go a whole multi-query session
-    // without an old-gen GC, piling dead blocks into the storage pool
-    // (measured r18: the LAST ~30 queries of the 165-query bench ran
-    // 1.3-2× slower with no periodic GC, while the first 100 were 2-3×
-    // faster than under r17's every-60s forced GC — which itself cost
+    // Checkpoint-block lifetime: the loops free superseded rounds
+    // (Loops.free) and Bench/Verify release each query's checkpoints when
+    // it returns (Loops.scope), but checkpoints made OUTSIDE a scope (table
+    // functions, tests, library callers) are released only when the
+    // ContextCleaner sees their RDDs garbage-collected — and a driver whose
+    // heap never pressures can go a whole session without an old-gen GC,
+    // piling dead blocks into the storage pool (measured r18, before the
+    // scope existed: the LAST ~30 queries of the 165-query bench ran
+    // 1.3-2× slower with no periodic GC, while an every-60s forced GC cost
     // 10-15% on heavy queries, measured by tools/ProbeSession). 5 minutes
-    // is the measured middle: a handful of forced GCs per bench session
-    // bounds the one-off-frame accumulation without the per-minute pause
-    // tax, on any long-lived deployment.
+    // is the measured middle. Whether the scope alone now suffices for the
+    // bench tail is open until a back-to-back bench A/B says so.
     .config("spark.cleaner.periodicGC.interval", "5min")
     // vec_cosine / minhash_signature / simhash64 / lsh_bucket as SQL functions
     .config("spark.sql.extensions", "graft.GraftExtensions")

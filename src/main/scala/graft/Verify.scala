@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.operators.Loops
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   */
@@ -26,8 +28,11 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // the query's checkpoints are released once its result is written
+      try Loops.scope {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      }
       catch { case e: Throwable =>
         failed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

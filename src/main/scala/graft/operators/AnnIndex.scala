@@ -219,10 +219,10 @@ object AnnIndex {
     val (centroids, dim) = readCentroids(store, name)
     val seq = readMaxSeq(store, name) + 1L
     // one assignment pass serves the dup check, the write, and the count
-    val posted = assign(batch.select(col(idCol).cast("long").as(idCol), col(vecCol)),
-      idCol, vecCol, centroids, dim)
-      .withColumn("seq", lit(seq))
-      .localCheckpoint(true)
+    val posted = Loops.checkpoint(
+      assign(batch.select(col(idCol).cast("long").as(idCol), col(vecCol)),
+        idCol, vecCol, centroids, dim)
+        .withColumn("seq", lit(seq)), eager = true)
     val dup = posted.groupBy("id").agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1).limit(1).collect()
     require(dup.isEmpty,
@@ -313,10 +313,10 @@ object AnnIndex {
   def partialProbeRecall(
       store: TableStore, name: String, probes: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int): Double = {
-    val approx = query(store, name, probes, idCol, vecCol, k, nProbe)
-      .localCheckpoint(true)
-    val exact = query(store, name, probes, idCol, vecCol, k,
-      nProbe = Int.MaxValue).localCheckpoint(true)
+    val approx = Loops.checkpoint(
+      query(store, name, probes, idCol, vecCol, k, nProbe), eager = true)
+    val exact = Loops.checkpoint(query(store, name, probes, idCol, vecCol, k,
+      nProbe = Int.MaxValue), eager = true)
     val nExact = exact.count()
     require(nExact > 0,
       "partialProbeRecall: the probe batch produced no exact neighbors — " +
@@ -399,7 +399,7 @@ object AnnIndex {
     val cellSplits = math.min(64, math.max(1,
       spark.sparkContext.defaultParallelism / math.max(1, centroids.length)) * 4)
 
-    val probed = queries
+    val probed = Loops.checkpoint(queries
       .select(col(idCol).cast("long").as(idCol), col(vecCol))
       .as[(Long, Seq[Float])]
       .mapPartitions { it =>
@@ -408,8 +408,7 @@ object AnnIndex {
           if (s == null || s.length != dim) Iterator.empty
           else Ivf.probes(ctrs, s.toArray, p).iterator.map(c => (c, id, s))
         }
-      }
-      .localCheckpoint(true) // one assignment pass serves collect + scan
+      }, eager = true) // one assignment pass serves collect + scan
     val cells = probed.map(_._1).distinct().collect().sorted
 
     // keep-latest resolution (see [[upsert]]'s duplicate-id policy): an id

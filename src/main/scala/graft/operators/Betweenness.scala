@@ -64,33 +64,34 @@ object Betweenness {
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .distinct()
-    val adj = und.select(col("u").as("node"), col("v").as("nbr"))
-      .unionAll(und.select(col("v").as("node"), col("u").as("nbr")))
-      .localCheckpoint(true)
-    val nodes = adj.select("node").distinct().localCheckpoint(true)
+    val adj = Loops.checkpoint(und.select(col("u").as("node"), col("v").as("nbr"))
+      .unionAll(und.select(col("v").as("node"), col("u").as("nbr"))), eager = true)
+    val nodes = Loops.checkpoint(adj.select("node").distinct(), eager = true)
     // forward: levels(d) = (root, node, sig) for nodes first reached at
     // depth d; every pivot advances in the same composite-key frontier.
     // One job: the seed level's checkpoint IS its emptiness check (r18b)
-    val (lvl0R, nSeeds) = Loops.ckptCount(
+    val lvl0 = Loops.checkpoint(
       pivots.select(col("node")).distinct()
         .join(nodes, Seq("node"), "left_semi")
-        .select(col("node").as("root"), col("node"), lit(1L).as("sig")))
-    val levels = ArrayBuffer(lvl0R.df)
+        .select(col("node").as("root"), col("node"), lit(1L).as("sig")),
+        eager = false)
+    val nSeeds = Loops.matCount(lvl0)
+    val levels = ArrayBuffer(lvl0)
     // the visited accumulator is consumed by the NEXT level's anti-join —
     // a lazy checkpoint folds its materialization into that job (r18b);
     // all referenced level frames stay alive for the backward pass
-    var visited = Loops.lazyCk(levels(0).select("root", "node"))
+    var visited = Loops.checkpoint(levels(0).select("root", "node"), eager = false)
     var depth = 0
     var frontierEmpty = nSeeds == 0L
     while (!frontierEmpty && depth < maxDepth) {
       depth += 1
       // one job: the level's checkpoint IS its emptiness check (r18)
-      val (nextR, n) = Loops.ckptCount(levels(depth - 1)
+      val next = Loops.checkpoint(levels(depth - 1)
         .join(adj, Seq("node"))
         .select(col("root"), col("nbr").as("node"), col("sig"))
         .groupBy("root", "node").agg(sum("sig").as("sig"))
-        .join(visited, Seq("root", "node"), "left_anti"))
-      val next = nextR.df
+        .join(visited, Seq("root", "node"), "left_anti"), eager = false)
+      val n = Loops.matCount(next)
       if (n == 0L) { frontierEmpty = true; depth -= 1 }
       else {
         levels += next
@@ -103,8 +104,8 @@ object Betweenness {
         // the checkpoint is LAZY — planning (and the Catalyst workaround)
         // is unchanged, but the materializing count folds into the next
         // level's anti-join job (nothing visited references is ever freed)
-        visited = Loops.lazyCk(
-          visited.unionByName(next.select("root", "node")))
+        visited = Loops.checkpoint(
+          visited.unionByName(next.select("root", "node")), eager = false)
       }
     }
     require(frontierEmpty,
@@ -117,8 +118,8 @@ object Betweenness {
     // the whole pass checkpoints LAZILY — one materializing chain inside
     // the final action instead of one count job per level (r18b; the level
     // frames referenced are never freed)
-    var deltas = List(Loops.lazyCk(
-      levels(depth).withColumn("delta", lit(0.0))))
+    var deltas = List(Loops.checkpoint(
+      levels(depth).withColumn("delta", lit(0.0)), eager = false))
     for (d <- (depth - 1) to 0 by -1) {
       val terms = levels(d)
         .join(adj, Seq("node"))
@@ -134,10 +135,10 @@ object Betweenness {
         .groupBy("root", "node")
         .agg(aggregate(array_sort(collect_list(col("__t"))), lit(0.0),
           (acc, x) => acc + x.getField("term")).as("__sum"))
-      val lvl = Loops.lazyCk(levels(d)
+      val lvl = Loops.checkpoint(levels(d)
         .join(terms, Seq("root", "node"), "left_outer")
         .select(col("root"), col("node"), col("sig"),
-          coalesce(col("__sum"), lit(0.0)).as("delta")))
+          coalesce(col("__sum"), lit(0.0)).as("delta")), eager = false)
       deltas = lvl :: deltas
     }
     val bc = deltas.map(_.select("root", "node", "delta"))

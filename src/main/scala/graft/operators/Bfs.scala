@@ -51,8 +51,8 @@ object Bfs {
       sources: DataFrame,
       maxDepth: Int): DataFrame = {
     // lazy: level 1's job materializes the seed frame (r18b; never freed)
-    var visited = Loops.lazyCk(sources.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)))
+    var visited = Loops.checkpoint(sources.select(col("node")).distinct()
+      .withColumn("dist", lit(0L)), eager = false)
     var frontier = visited.select("node")
     var depth = 0L
     var done = maxDepth == 0
@@ -60,12 +60,12 @@ object Bfs {
       depth += 1
       // one job: the level's checkpoint IS its emptiness check (r18); the
       // frame joins the visited accumulator, so it is never freed
-      val (nextR, n) = Loops.ckptCount(frontier
+      val next = Loops.checkpoint(frontier
         .join(e.withColumnRenamed("src", "node"), Seq("node"))
         .select(col("dst").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
-        .withColumn("dist", lit(depth)))
-      val next = nextR.df
+        .withColumn("dist", lit(depth)), eager = false)
+      val n = Loops.matCount(next)
       if (n == 0L || depth >= maxDepth) done = true
       visited = visited.unionByName(next)
       frontier = next.select("node")
@@ -97,15 +97,15 @@ object Bfs {
     val spark = edges.sparkSession
     val e = edges.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst")).distinct()
-    val sym = e.unionByName(e.select(col("dst").as("src"),
-      col("src").as("dst"))).distinct().localCheckpoint(true)
+    val sym = Loops.checkpoint(e.unionByName(e.select(col("dst").as("src"),
+      col("src").as("dst"))).distinct(), eager = true)
     require(!Loops.matIsEmpty(sym),
       "doubleSweep needs at least one (non-self-loop) edge")
     val seed = sym.agg(min(least(col("src"), col("dst")))).head.getLong(0)
     val seedDf = spark.range(1).select(lit(seed).as("node"))
     // sym is already distinct + checkpointed — run the loop directly (the
     // public entry would re-distinct it, a full shuffle per sweep)
-    val d1 = distancesOver(sym, seedDf, maxDepth).localCheckpoint(true)
+    val d1 = Loops.checkpoint(distancesOver(sym, seedDf, maxDepth), eager = true)
     val far = d1.orderBy(col("dist").desc, col("node").asc).limit(1)
       .head
     val (peripheral, ecc1) = (far.getLong(0), far.getLong(1))
@@ -142,21 +142,21 @@ object Bfs {
     require(maxDepth >= 0, s"maxDepth must be >= 0 (got $maxDepth)")
     val e = edges.select(col("src"), col("dst")).distinct().persist()
     // lazy: level 1's job materializes the seed frame (r18b; never freed)
-    var visited = Loops.lazyCk(sources.select(col("node")).distinct()
+    var visited = Loops.checkpoint(sources.select(col("node")).distinct()
       .select(col("node").as("root"), col("node"))
-      .withColumn("dist", lit(0L)))
+      .withColumn("dist", lit(0L)), eager = false)
     var frontier = visited.select("root", "node")
     var depth = 0L
     var done = maxDepth == 0
     while (!done) {
       depth += 1
       // one job: the level's checkpoint IS its emptiness check (r18)
-      val (nextR, n) = Loops.ckptCount(frontier
+      val next = Loops.checkpoint(frontier
         .join(e.withColumnRenamed("src", "node"), Seq("node"))
         .select(col("root"), col("dst").as("node")).distinct()
         .join(visited.select("root", "node"), Seq("root", "node"), "left_anti")
-        .withColumn("dist", lit(depth)))
-      val next = nextR.df
+        .withColumn("dist", lit(depth)), eager = false)
+      val n = Loops.matCount(next)
       if (n == 0L || depth >= maxDepth) done = true
       // lazy union of checkpointed per-depth frames (the distancesOver
       // accumulator argument)

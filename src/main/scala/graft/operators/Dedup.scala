@@ -651,7 +651,6 @@ object Dedup {
     // superseded round frames are freed explicitly (r18): Dataset.unpersist
     // is a no-op on a checkpoint-backed frame, so the per-round checkpoints
     // used to live until the ContextCleaner noticed them
-    var edgesR: Loops.Round = null
     while (!converged && iter < maxIter) {
       // checkpoint EVERY round: one star step references its input three
       // times (symmetrized edges, neighborhood mins, relink), so the logical
@@ -661,12 +660,12 @@ object Dedup {
       // the localCheckpoint keeps every round's plan constant-size, and the
       // checksum right below is its materializing action (r18b: one job
       // per round where the eager checkpoint + checksum pair was two)
-      val next = Loops.ckptLazy(star(star(edges, large = true), large = false))
-      val nextSig = checksum(next.df)
-      edges.unpersist() // round 1: releases the initial persisted frame
-      if (edgesR != null) edgesR.free()
-      edgesR = next
-      edges = next.df
+      val next = Loops.checkpoint(
+        star(star(edges, large = true), large = false), eager = false)
+      val nextSig = checksum(next)
+      // round 1 releases the initial persisted frame
+      if (iter == 0) edges.unpersist() else Loops.free(edges)
+      edges = next
       converged = nextSig == sig
       sig = nextSig
       iter += 1
@@ -677,7 +676,6 @@ object Dedup {
         // discarded anyway, and at crawl scale that final eager stage is
         // real cluster time
         edges.unpersist()
-        if (edgesR != null) edgesR.free()
         nodes.unpersist()
         throw new IllegalStateException(
           s"connected components did not converge within $iter rounds — " +
@@ -693,10 +691,8 @@ object Dedup {
     val comp = nodes
       .join(edges.select(col("u").as("id"), col("v").as("__c")), Seq("id"), "left")
       .groupBy("id").agg(coalesce(min(col("__c")), first(col("id"))).as("comp"))
-    val result = comp.localCheckpoint(true)
-    // result is materialized — the final round's edge frame has no consumer
+    val result = Loops.checkpoint(comp, eager = true)
     edges.unpersist()
-    if (edgesR != null) edgesR.free()
     nodes.unpersist()
     (result, iter, converged)
   }
@@ -770,7 +766,7 @@ object Dedup {
         .groupBy("id").agg(min("comp").as("comp"))
       val checkpointRound = (iter + 1) % 5 == 0
       val next =
-        if (checkpointRound) grown.localCheckpoint(true) // cut lineage
+        if (checkpointRound) Loops.checkpoint(grown, eager = true) // cut lineage
         else grown.persist()
       changed = next.join(comp.withColumnRenamed("comp", "__old"), Seq("id"))
         .filter(col("comp") =!= col("__old")).count()
@@ -786,7 +782,7 @@ object Dedup {
     // holds exactly that — don't re-materialize a second full copy.
     if (compCheckpointed) (comp, iter)
     else {
-      val result = comp.localCheckpoint(true)
+      val result = Loops.checkpoint(comp, eager = true)
       comp.unpersist()
       (result, iter)
     }
@@ -819,19 +815,19 @@ object Dedup {
       .unionByName(newNodes.select(col("id")))
       .distinct()
     // each touched node's CURRENT label (unseen ids label themselves)
-    val lbl = touched.join(existing, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("lbl"))
-      .localCheckpoint(true)
+    val lbl = Loops.checkpoint(touched.join(existing, Seq("id"), "left_outer")
+      .select(col("id"), coalesce(col("comp"), col("id")).as("lbl")),
+      eager = true)
     val lblEdges = newPairs
       .join(lbl.toDF("id_a", "__la"), Seq("id_a"))
       .join(lbl.toDF("id_b", "__lb"), Seq("id_b"))
       .select(col("__la").as("id_a"), col("__lb").as("id_b"))
     // components over the label graph — increment-sized, never the corpus
     val merged = connectedComponentsLogRoundsStrict(lblEdges)
-    val relabel = lbl.select(col("lbl")).distinct()
+    val relabel = Loops.checkpoint(lbl.select(col("lbl")).distinct()
       .join(merged.withColumnRenamed("id", "lbl"), Seq("lbl"), "left_outer")
-      .select(col("lbl"), coalesce(col("comp"), col("lbl")).as("__new"))
-      .localCheckpoint(true)
+      .select(col("lbl"), coalesce(col("comp"), col("lbl")).as("__new")),
+      eager = true)
     val updatedOld = existing
       .join(broadcast(relabel.withColumnRenamed("lbl", "comp")),
         Seq("comp"), "left_outer")

@@ -86,10 +86,9 @@ object Dsir {
     // (and last) corpus pass is scan-local straight into the per-document
     // partial aggregate — two corpus passes total, one id-keyed shuffle,
     // zero bucket-keyed shuffles.
-    val counts = feats.groupBy("__bk").agg(
+    val counts = Loops.checkpoint(feats.groupBy("__bk").agg(
       count(lit(1)).as("__n_raw"),
-      sum(when(col("__is_t"), 1L).otherwise(0L)).as("__n_t"))
-      .localCheckpoint(true)
+      sum(when(col("__is_t"), 1L).otherwise(0L)).as("__n_t")), eager = true)
     val totals = counts.agg(
       coalesce(sum("__n_raw"), lit(0L)).as("__N_raw"),
       coalesce(sum("__n_t"), lit(0L)).as("__N_t"))

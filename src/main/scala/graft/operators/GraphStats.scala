@@ -48,11 +48,11 @@ object GraphStats {
     * undefined, not 0). Empty graphs fail loudly. */
   def assortativity(edges: DataFrame): DataFrame = {
     // one job: the canonical frame's checkpoint IS the emptiness gate (r18b)
-    val (undR, nUnd) = Loops.ckptCount(edges.filter(col("src") =!= col("dst"))
+    val und = Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct())
-    val und = undR.df
+      .distinct(), eager = false)
+    val nUnd = Loops.matCount(und)
     require(nUnd > 0L,
       "assortativity needs at least one (non-self-loop) edge")
     val deg = und.select(col("u").as("node"))
@@ -86,17 +86,17 @@ object GraphStats {
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
     // one job: the canonical frame's checkpoint IS the m count (r18b —
     // the eager checkpoint + count() pair was two)
-    val (undR, m) = Loops.ckptCount(edges.filter(col("src") =!= col("dst"))
+    val und = Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct())
-    val und = undR.df
+      .distinct(), eager = false)
+    val m = Loops.matCount(und)
     require(m > 0L,
       "modularity needs at least one (non-self-loop) edge — an empty " +
         "graph has no null model to compare against")
     // lazy: the unlabeled-endpoint gate right below materializes it (r18b)
-    val lab = Loops.lazyCk(
-      labels.select(col("node"), col("label")).distinct())
+    val lab = Loops.checkpoint(
+      labels.select(col("node"), col("label")).distinct(), eager = false)
     val endpoints = und.select(col("u").as("node"))
       .unionByName(und.select(col("v").as("node"))).distinct()
     val unlabeled = endpoints.join(lab, Seq("node"), "left_anti").count()

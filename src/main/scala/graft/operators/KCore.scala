@@ -49,11 +49,11 @@ object KCore {
     require(maxRounds >= 1, s"maxRounds must be >= 1 (got $maxRounds)")
     // one job: the canonical frame's checkpoint IS the peel's entry count
     // (r18b — the eager checkpoint + matCount pair was two)
-    val (curR, n) = Loops.ckptCount(edges.filter(col("src") =!= col("dst"))
+    val cur = Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct())
-    peel(curR.df, k, maxRounds, knownCount = n)
+      .distinct(), eager = false)
+    peel(cur, k, maxRounds, knownCount = Loops.matCount(cur))
   }
 
   private def degrees(und: DataFrame): DataFrame =
@@ -74,9 +74,9 @@ object KCore {
       k: Int,
       maxRounds: Int,
       knownCount: Long = -1L): (DataFrame, Int, Long) = {
-    var cur = canonUnd
-    var curR: Loops.Round = null // in-loop rounds only; the input is the caller's
-    // callers that materialized the input via ckptCount pass the count in —
+    var cur = canonUnd // in-loop rounds are freed; the input is the caller's
+    // callers that materialized the input with a counted checkpoint pass
+    // the count in —
     // the entry re-count job disappears (r18b)
     var nEdges = if (knownCount >= 0L) knownCount else Loops.matCount(cur)
     var rounds = 0
@@ -85,18 +85,19 @@ object KCore {
       rounds += 1
       val alive = degrees(cur).filter(col("deg") >= k).select("node")
       // one job: the round's checkpoint IS its convergence count (r18)
-      val (next, n) = Loops.ckptCount(cur
+      val next = Loops.checkpoint(cur
         .join(alive.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-        .join(alive.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
+        .join(alive.withColumnRenamed("node", "v"), Seq("v"), "left_semi"),
+        eager = false)
+      val n = Loops.matCount(next)
       // a peeled node always owns ≥ 1 surviving edge (degree ≥ 1 — nodes
       // exist only as edge endpoints), so edge-count fixpoint ⟺ node
       // fixpoint: nothing removed means the peel is done
       converged = n == nEdges
       // the superseded round's blocks are released immediately (r18 —
       // dead rounds otherwise pile up in the block manager for the session)
-      if (curR != null) curR.free()
-      curR = next
-      cur = next.df
+      if (cur ne canonUnd) Loops.free(cur)
+      cur = next
       nEdges = n
     }
     require(converged,
@@ -143,11 +144,10 @@ object KCore {
       maxK: Int = 64,
       maxRounds: Int = 100): (DataFrame, (Int, Seq[Int])) =
     corenessCanonWithStats(
-      edges.filter(col("src") =!= col("dst"))
+      Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
-        .distinct()
-        .localCheckpoint(true),
+        .distinct(), eager = true),
       maxK, maxRounds)
 
   /** [[corenessWithStats]] over an ALREADY canonical, ALREADY materialized
@@ -166,7 +166,8 @@ object KCore {
         .unionByName(e.select(col("v").as("node"))).distinct()
     // every edge endpoint has degree >= 1: shell starts at 1.
     // acc is consumed only by the final rollup — lazy checkpoint (r18b)
-    var acc = Loops.lazyCk(endpoints(cur).withColumn("k", lit(1L)))
+    var acc =
+      Loops.checkpoint(endpoints(cur).withColumn("k", lit(1L)), eager = false)
     var k = 1
     var rounds = List.empty[Int]
     // the entry count doubles as level 2's peel entry count (r18b — the
@@ -266,11 +267,10 @@ object KCore {
       delta: Option[DataFrame] = None): (DataFrame, (Int, Int)) = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(maxRounds >= 1, s"maxRounds must be >= 1 (got $maxRounds)")
-    val und = edges.filter(col("src") =!= col("dst"))
+    val und = Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
     maintainCanon(und, oldCore, k, maxRounds, delta)
   }
 
@@ -294,26 +294,26 @@ object KCore {
     // was pure per-level waste
     val prev =
       if (prevCanon) oldCore.select(col("node"))
-      else oldCore.select(col("node")).distinct().localCheckpoint(true)
+      else Loops.checkpoint(oldCore.select(col("node")).distinct(), eager = true)
     // phase 1 — certify: the old-core induced subgraph, re-peeled (it is
     // already canonical/distinct — semi-joins of a canonical frame). One
     // job: the induced frame's checkpoint IS the peel's entry count (r18b)
-    val (inducedR, nInduced) = Loops.ckptCount(und
+    val induced = Loops.checkpoint(und
       .join(prev.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
-      .join(prev.withColumnRenamed("node", "v"), Seq("v"), "left_semi"))
-    val induced = inducedR.df
+      .join(prev.withColumnRenamed("node", "v"), Seq("v"), "left_semi"),
+      eager = false)
     val (certCore, certifyRounds) =
-      peel(induced, k, maxRounds, knownCount = nInduced)
+      peel(induced, k, maxRounds, knownCount = Loops.matCount(induced))
     // consumed by the candidate anti-join right below — lazy (r18b)
-    val cert = Loops.lazyCk(certCore.select("node"))
+    val cert = Loops.checkpoint(certCore.select("node"), eager = false)
     // phase 2 — grow: candidate adjacency and the static certified degrees.
     // One job: the candidate frame's checkpoint IS the emptiness probe the
     // early exit below needs (r18b)
     val adj = und.select(col("u").as("node"), col("v").as("nbr"))
       .unionAll(und.select(col("v").as("node"), col("u").as("nbr")))
-    val (candAllR, nCandAll) =
-      Loops.ckptCount(adj.join(cert, Seq("node"), "left_anti"))
-    val candAdjAll = candAllR.df
+    val candAdjAll =
+      Loops.checkpoint(adj.join(cert, Seq("node"), "left_anti"), eager = false)
+    val nCandAll = Loops.matCount(candAdjAll)
     val (candAdj, nCand) = delta match {
       case None => (candAdjAll, nCandAll)
       case Some(d) =>
@@ -330,23 +330,22 @@ object KCore {
         // deep-chain deltas, where maxRounds here would fail loudly first;
         // swap it in for that regime.
         // consumed per closure hop — lazy, materializes in hop 1 (r18b)
-        val ccAdj = Loops.lazyCk(candAdjAll
+        val ccAdj = Loops.checkpoint(candAdjAll
           .join(cert.withColumnRenamed("node", "nbr"), Seq("nbr"),
-            "left_anti"))
+            "left_anti"), eager = false)
         val dl = d.filter(col("src") =!= col("dst"))
           .select(least(col("src"), col("dst")).as("u"),
             greatest(col("src"), col("dst")).as("v"))
         val evictees = prev.join(cert, Seq("node"), "left_anti")
         // one job: the seed frame's checkpoint IS its emptiness check (r18b)
-        val (affR, nAff) = Loops.ckptCount(dl.select(col("u").as("node"))
+        var affected = Loops.checkpoint(dl.select(col("u").as("node"))
           .unionByName(dl.select(col("v").as("node")))
           .distinct()
           .join(cert, Seq("node"), "left_anti")
           .unionByName(evictees)
-          .distinct())
-        var affected = affR.df
+          .distinct(), eager = false)
         var frontier = affected
-        var closed = nAff == 0L
+        var closed = Loops.matCount(affected) == 0L
         var hops = 0
         while (!closed) {
           hops += 1
@@ -354,27 +353,27 @@ object KCore {
             s"affected-component closure exceeded maxRounds=$maxRounds —" +
               " raise it (a deep candidate chain hangs off the delta)")
           // one job: checkpoint + emptiness check share the count (r18)
-          val (next, n) = Loops.ckptCount(frontier.join(ccAdj, Seq("node"))
+          val next = Loops.checkpoint(frontier.join(ccAdj, Seq("node"))
             .select(col("nbr").as("node")).distinct()
-            .join(affected, Seq("node"), "left_anti"))
-          if (n == 0L) closed = true
+            .join(affected, Seq("node"), "left_anti"), eager = false)
+          if (Loops.matCount(next) == 0L) closed = true
           else {
             // lazy union of checkpointed per-hop frames (the Bfs
             // accumulator argument)
-            affected = affected.unionByName(next.df)
-            frontier = next.df
+            affected = affected.unionByName(next)
+            frontier = next
           }
         }
         // one job: the restricted candidate frame's checkpoint IS the
         // emptiness probe the early exit below needs (r18b)
-        val (candR, n) = Loops.ckptCount(
+        val cand = Loops.checkpoint(
           candAdjAll.join(affected, Seq("node"), "left_semi")
             // an edge into an UNAFFECTED candidate never counts: that
             // neighbor stays out today by the closure argument
             .join(affected.withColumnRenamed("node", "nbr")
                 .unionByName(cert.withColumnRenamed("node", "nbr")),
-              Seq("nbr"), "left_semi"))
-        (candR.df, n)
+              Seq("nbr"), "left_semi"), eager = false)
+        (cand, Loops.matCount(cand))
     }
     // r17 early exit: with no candidates (deep shells under a bounded
     // delta — certification alone closes the level) the grow phase is a
@@ -389,51 +388,49 @@ object KCore {
       return (out, coreEdges, (certifyRounds, 0))
     }
     // consumed every grow round — lazy, materializes in round 1 (r18b)
-    val staticDeg = Loops.lazyCk(candAdj
+    val staticDeg = Loops.checkpoint(candAdj
       .join(cert.withColumnRenamed("node", "nbr"), Seq("nbr"), "left_semi")
-      .groupBy("node").agg(count(lit(1)).as("sdeg")))
-    var ccEdgesR = Loops.ckptLazy(candAdj
-      .join(cert.withColumnRenamed("node", "nbr"), Seq("nbr"), "left_anti"))
+      .groupBy("node").agg(count(lit(1)).as("sdeg")), eager = false)
+    var ccEdges = Loops.checkpoint(candAdj
+      .join(cert.withColumnRenamed("node", "nbr"), Seq("nbr"), "left_anti"),
+      eager = false)
     // the LAZY next-round edge frame references its parent — frees defer
-    // one generation (the Loops.ckptLazy contract, r18b)
-    var ccEdgesPrevR: Loops.Round = null
-    var (aliveR, nAlive) = Loops.ckptCount(candAdj.select("node").distinct())
-    var alive = aliveR.df
+    // one generation (storage rule 2 in [[Loops]], r18b)
+    var ccEdgesPrev: DataFrame = null
+    var alive = Loops.checkpoint(candAdj.select("node").distinct(), eager = false)
+    var nAlive = Loops.matCount(alive)
     var growRounds = 0
     var converged = nAlive == 0L
     while (!converged && growRounds < maxRounds) {
       growRounds += 1
-      val ccDeg = ccEdgesR.df.groupBy("node").agg(count(lit(1)).as("cdeg"))
+      val ccDeg = ccEdges.groupBy("node").agg(count(lit(1)).as("cdeg"))
       // one job: the round's checkpoint IS its convergence count (r18) —
       // and the job that materializes the round's lazy edge frame
-      val (next, n) = Loops.ckptCount(alive
+      val next = Loops.checkpoint(alive
         .join(staticDeg, Seq("node"), "left_outer")
         .join(ccDeg, Seq("node"), "left_outer")
         .filter(coalesce(col("sdeg"), lit(0L)) +
           coalesce(col("cdeg"), lit(0L)) >= k)
-        .select("node"))
+        .select("node"), eager = false)
+      val n = Loops.matCount(next)
       converged = n == nAlive
       // the round's edge frame is materialized now — its grandparent is
       // provably dead (the parent may still feed the next lazy frame)
-      if (ccEdgesPrevR != null) ccEdgesPrevR.free()
+      if (ccEdgesPrev != null) Loops.free(ccEdgesPrev)
       if (!converged) {
-        val nextE = Loops.ckptLazy(ccEdgesR.df
-          .join(next.df, Seq("node"), "left_semi")
-          .join(next.df.withColumnRenamed("node", "nbr"), Seq("nbr"),
-            "left_semi"))
-        ccEdgesPrevR = ccEdgesR; ccEdgesR = nextE
-      } else ccEdgesPrevR = null
-      aliveR.free(); aliveR = next
-      alive = next.df
+        val nextE = Loops.checkpoint(ccEdges
+          .join(next, Seq("node"), "left_semi")
+          .join(next.withColumnRenamed("node", "nbr"), Seq("nbr"),
+            "left_semi"), eager = false)
+        ccEdgesPrev = ccEdges; ccEdges = nextE
+      } else ccEdgesPrev = null
+      Loops.free(alive)
+      alive = next
       nAlive = n
     }
     require(converged,
       s"incremental k-core grow phase did not converge in $maxRounds " +
         "rounds — raise maxRounds")
-    // the final alive frame is checkpointed — the candidate-candidate edge
-    // frames have no consumer past the loop
-    if (ccEdgesPrevR != null) ccEdgesPrevR.free()
-    ccEdgesR.free()
     // final membership + ONE full-edge pass for in-core degrees
     val members = cert.unionByName(alive)
     val coreEdges = und
@@ -499,11 +496,10 @@ object KCore {
       maxK: Int = 64,
       maxRounds: Int = 100): (DataFrame, (Int, Seq[(Int, Int)])) =
     corenessMaintainCanonWithStats(
-      edges.filter(col("src") =!= col("dst"))
+      Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
-        .distinct()
-        .localCheckpoint(true),
+        .distinct(), eager = true),
       oldCoreness, delta, maxK, maxRounds)
 
   /** [[corenessMaintainWithStats]] over an ALREADY canonical, ALREADY
@@ -520,16 +516,17 @@ object KCore {
     var cur = canonUnd
     // one-off frames, never freed: LAZY checkpoints, each materializes in
     // its first consumer's job (r18b)
-    val prevC = Loops.lazyCk(
-      oldCoreness.select(col("node"), col("coreness")).distinct())
-    val dl = delta.map(d => Loops.lazyCk(d.filter(col("src") =!= col("dst"))
+    val prevC = Loops.checkpoint(
+      oldCoreness.select(col("node"), col("coreness")).distinct(), eager = false)
+    val dl = delta.map(d => Loops.checkpoint(d.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct()))
+      .distinct(), eager = false))
     def endpoints(e: DataFrame): DataFrame =
       e.select(col("u").as("node"))
         .unionByName(e.select(col("v").as("node"))).distinct()
-    var acc = Loops.lazyCk(endpoints(cur).withColumn("k", lit(1L)))
+    var acc =
+      Loops.checkpoint(endpoints(cur).withColumn("k", lit(1L)), eager = false)
     var prevMembers = acc.select("node")
     var k = 1
     var stats = List.empty[(Int, Int)]
@@ -573,10 +570,9 @@ object KCore {
           prevCanon = true)
       stats = stats :+ ((cr, gr))
       // one job: the level's checkpoint IS its emptiness check (r18)
-      val (curNextR, nCore) = Loops.ckptCount(coreEdges)
-      val curNext = curNextR.df
+      val curNext = Loops.checkpoint(coreEdges, eager = false)
       // k >= 2 here: the core's edge frame is empty iff its member set is
-      if (nCore == 0L) done = true
+      if (Loops.matCount(curNext) == 0L) done = true
       else {
         val members = endpoints(curNext)
         // lazy union of checkpointed per-level member frames — acc is only

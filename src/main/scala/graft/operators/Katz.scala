@@ -43,11 +43,10 @@ object Katz {
     require(depth >= 1 && depth <= 32,
       s"depth must be in [1,32] — deeper walks vanish under alpha^k " +
         s"(got $depth)")
-    val e = edges.filter(col("src") =!= col("dst"))
-      .select("src", "dst").distinct().localCheckpoint(true)
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
+    val e = Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
+      .select("src", "dst").distinct(), eager = true)
+    val nodes = Loops.checkpoint(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct(), eager = true)
     var t = nodes.withColumn("__t", lit(1.0))
     var x = nodes.withColumn("katz", lit(0.0))
     for (_ <- 1 to depth) {
@@ -66,11 +65,12 @@ object Katz {
             .agg((lit(alpha) * sum(col("__v"))).as("__nt"))
       // LAZY rounds (r18b): t materializes inside x's checkpoint call (its
       // stage build reads t), x inside the next round's — nothing is freed,
-      // so the Loops.ckptLazy parent contract holds trivially
-      t = Loops.lazyCk(nodes.join(folded, Seq("node"), "left_outer")
-        .select(col("node"), coalesce(col("__nt"), lit(0.0)).as("__t")))
-      x = Loops.lazyCk(x.join(t, Seq("node"))
-        .select(col("node"), (col("katz") + col("__t")).as("katz")))
+      // so storage rule 2 in [[Loops]] holds trivially
+      t = Loops.checkpoint(nodes.join(folded, Seq("node"), "left_outer")
+        .select(col("node"), coalesce(col("__nt"), lit(0.0)).as("__t")),
+        eager = false)
+      x = Loops.checkpoint(x.join(t, Seq("node"))
+        .select(col("node"), (col("katz") + col("__t")).as("katz")), eager = false)
     }
     x
   }

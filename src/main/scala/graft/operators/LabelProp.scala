@@ -49,14 +49,13 @@ object LabelProp {
     val adj = und.select(col("u").as("node"), col("v").as("nbr"))
       .unionAll(und.select(col("v").as("node"), col("u").as("nbr")))
       .persist()
-    var labelsR = Loops.ckptLazy(adj.select(col("node")).distinct()
-      .withColumn("label", col("node")))
-    var labels = labelsR.df
+    var labels = Loops.checkpoint(adj.select(col("node")).distinct()
+      .withColumn("label", col("node")), eager = false)
     // lazy sweeps, grandparent frees — the [[Louvain.communitiesFrom]]
     // discipline (r18b): sweep i−1 materializes while sweep i's checkpoint
     // builds its stages; the final sweep is eager so every parent settles
     // before adj unpersists and the caller reads
-    var labelsPrevR: Loops.Round = null
+    var labelsPrev: DataFrame = null
     var r = 0
     while (r < rounds) {
       r += 1
@@ -68,13 +67,11 @@ object LabelProp {
           .as("__best"))
         .select(col("node"),
           (-col("__best").getField("__neg")).as("label"))
-      val next =
-        if (r == rounds) Loops.ckpt(sweepPlan) else Loops.ckptLazy(sweepPlan)
-      if (labelsPrevR != null) labelsPrevR.free() // grandparent: dead
-      labelsPrevR = labelsR; labelsR = next
-      labels = next.df
+      val next = Loops.checkpoint(sweepPlan, eager = r == rounds)
+      if (labelsPrev != null) Loops.free(labelsPrev) // grandparent: dead
+      labelsPrev = labels
+      labels = next
     }
-    if (labelsPrevR != null) labelsPrevR.free() // settled by the eager final
     adj.unpersist()
     labels
   }

@@ -1,133 +1,111 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.annotation.tailrec
+import scala.collection.mutable.ArrayBuffer
 
-/** Convergence-check actions for the iterative operators (r17).
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project,
+  Union}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** The one way the engine reaches checkpoint storage.
   *
-  * Every fixpoint loop here materializes its round frame with
-  * `localCheckpoint(true)` and then asks "how many rows / any rows?" to
-  * decide termination. `df.count()` plans a two-stage partial/final
-  * aggregate — one extra exchange and (under AQE) an extra scheduler job
-  * PER ROUND, priced at wave cadence: a maintenance query runs hundreds of
-  * rounds-with-checks, and on a cluster each check is a full stage
-  * round-trip. For a frame that is ALREADY materialized (or a pure
-  * filter/projection of one), counting the cached InternalRows directly is
-  * the same number with ONE job, no exchange, and no row decode
-  * (`toRdd` is the internal binary iterator, not the external Row view).
+  * [[checkpoint]] is `localCheckpoint`: the frame's plan becomes a
+  * `LogicalRDD` leaf over a persisted RDD, so every fixpoint round plans in
+  * constant size. EAGER runs a count job now; LAZY marks the RDD and lets
+  * the frame's first consumer be the materializing job. A loop that counts
+  * each round anyway checkpoints lazily and lets [[matCount]] be that job,
+  * so the round's checkpoint and its convergence check share ONE job. A
+  * lazy frame must be certain to run later; a conditional consumer makes
+  * job counts non-deterministic.
   *
-  * ONLY safe on materialized frames or narrow (filter/project) views of
-  * them: on anything with a join/agg in the plan, `toRdd` would execute
-  * that plan WITHOUT adaptive planning — never call it there. */
+  * The storage of a checkpoint is read from its plan (the `LogicalRDD`'s
+  * RDD is exactly the persisted one), never by diffing the context's
+  * persistent-RDD set, so queries can checkpoint concurrently in one
+  * session. Three rules decide when that storage goes:
+  *
+  *  1. In-loop frees bound a long query: a loop calls [[free]] on the round
+  *     frame its new round superseded, so the block manager holds O(1)
+  *     rounds, not O(rounds).
+  *  2. A lazy successor defers its parent's free by one generation: the
+  *     successor reads its parents when it first materializes, and a
+  *     lineage-truncated parent freed before that is lost for good.
+  *  3. Everything else is released by the entry point's [[scope]] once the
+  *     query returns, or, outside any scope, by Spark's ContextCleaner when
+  *     the frame is garbage-collected.
+  *
+  * A freed frame (and every view of it) must never run again.
+  *
+  * [[matCount]] and [[matIsEmpty]] count the cached rows of a materialized
+  * frame with one job, no exchange and no row decode. On a plan with a join
+  * or an aggregate, `toRdd` would run that plan without adaptive planning,
+  * so both refuse anything but Project, Filter and Union over checkpoints. */
 private[graft] object Loops {
 
-  /** Exact row count of a materialized frame (or a narrow view of one) as
-    * one scheduler job over the cached partitions. */
-  def matCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
+  /** Checkpoints made on this thread inside the innermost open [[scope]]. */
+  private val open = new ThreadLocal[ArrayBuffer[RDD[_]]]
 
-  /** Emptiness of a materialized frame (or a narrow view of one) as one
-    * take(1)-style job over the cached partitions. */
-  def matIsEmpty(df: DataFrame): Boolean = df.queryExecution.toRdd.isEmpty()
-
-  /** A materialized round frame whose storage can be RELEASED the moment
-    * the loop supersedes it (r18). `localCheckpoint` blocks otherwise live
-    * until the ContextCleaner notices the RDD got garbage-collected — in a
-    * long session the dead rounds of every query pile up in the block
-    * manager (measured r17: a query mid-session ran 4.5× its isolated time
-    * purely from that storage pressure). Freeing the superseded round
-    * explicitly bounds the leak at its source, on any deployment.
-    *
-    * SAFETY: `free()` drops the checkpoint blocks of a LINEAGE-TRUNCATED
-    * frame — the frame (and any lazy view of it) must never be executed
-    * again afterwards. Only call it on a round frame that the loop has
-    * fully replaced and that no accumulator/result still references. */
-  final class Round private[Loops] (val df: DataFrame, rddId: Int) {
-    def free(): Unit =
-      df.sparkSession.sparkContext.getPersistentRDDs
-        .get(rddId).foreach(_.unpersist(blocking = false))
+  /** `ds.localCheckpoint(eager)`; recorded by the thread's open scope. */
+  def checkpoint[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
+    val out = ds.localCheckpoint(eager)
+    val made = open.get
+    if (made != null) made += storage(out.queryExecution.analyzed, "checkpoint")
+    out
   }
 
-  /** `df.localCheckpoint(true)` plus a handle to the checkpoint RDD's
-    * storage, identified as the persistent-RDD id the checkpoint
-    * registered (the loops are single-threaded per query, so the diff is
-    * exactly the one new checkpoint RDD). */
-  def ckpt(df: DataFrame): Round = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(true)
-    val added = sc.getPersistentRDDs.keySet -- before
-    new Round(out, if (added.isEmpty) -1 else added.max)
+  /** Unpersists the checkpoint under `df`, a checkpointed frame or a
+    * Project/Filter view of one; throws on any other plan. */
+  def free(df: DataFrame): Unit =
+    release(storage(df.queryExecution.analyzed, "free"))
+
+  /** Exact row count of a materialized frame as one job over its cached
+    * partitions. */
+  def matCount(df: DataFrame): Long = {
+    requireMaterialized(df, "matCount")
+    df.queryExecution.toRdd.count()
   }
 
-  /** Materializing checkpoint that RETURNS THE ROW COUNT — one job where
-    * `ckpt` + [[matCount]] were two (r18): an EAGER localCheckpoint already
-    * runs a count action internally just to materialize, and every
-    * fixpoint loop here immediately counts the same frame again to decide
-    * termination. The lazy-checkpoint variant marks the RDD for
-    * persistence and lets OUR count be the materializing action, so the
-    * round's checkpoint and its convergence check share a single job.
-    * Same materialization semantics as `ckpt` (the blocks persist during
-    * the count); same free() contract. */
-  def ckptCount(df: DataFrame): (Round, Long) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(eager = false)
-    val added = sc.getPersistentRDDs.keySet -- before
-    val n = out.queryExecution.toRdd.count()
-    (new Round(out, if (added.isEmpty) -1 else added.max), n)
+  /** Emptiness of a materialized frame as one take(1)-style job. */
+  def matIsEmpty(df: DataFrame): Boolean = {
+    requireMaterialized(df, "matIsEmpty")
+    df.queryExecution.toRdd.isEmpty()
   }
 
-  /** LAZY materializing checkpoint — the [[ckptCount]] mechanism for frames
-    * whose row count nobody needs (r18b): an EAGER `localCheckpoint` runs a
-    * count action just to materialize, one scheduler job per call, priced
-    * at loop cadence for per-round accumulators (Betweenness visited,
-    * backward dependency levels, Scc found frames, Louvain sweeps). Marking
-    * the checkpoint lazy makes the frame's FIRST CONSUMER the materializing
-    * action — the blocks persist from that job on, and the plan is already
-    * truncated to a LogicalRDD at call time (identical planning to the
-    * eager form; under AQE the upstream exchange stages still materialize
-    * here, only the result stage defers), so downstream plans are
-    * byte-identical to the eager variant.
-    *
-    * ONLY safe when (a) the frame is CERTAIN to be executed later — an
-    * unconsumed lazy frame silently skips its own cost, which is fine, but
-    * a conditional consumer makes job counts non-deterministic — and (b)
-    * every frame its final stage reads (its checkpointed parents) stays
-    * un-freed until that first consumption: freeing a lineage-truncated
-    * parent before the lazy child materializes loses the data irrecoverably
-    * (the [[Round.free]] contract). Loops that free superseded rounds must
-    * defer the free ONE GENERATION when the superseding round is lazy. */
-  def ckptLazy(df: DataFrame): Round = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(eager = false)
-    val added = sc.getPersistentRDDs.keySet -- before
-    new Round(out, if (added.isEmpty) -1 else added.max)
+  /** Runs `body`, then unpersists every checkpoint this thread made inside
+    * it. Checkpoints made outside any scope, or on other threads, are left
+    * alone. Nested scopes release their own checkpoints. */
+  def scope[T](body: => T): T = {
+    val outer = open.get
+    val made = ArrayBuffer.empty[RDD[_]]
+    open.set(made)
+    try body
+    finally {
+      open.set(outer)
+      made.foreach(release)
+    }
   }
 
-  /** [[ckptLazy]] for accumulator frames that are never freed — just the
-    * DataFrame, no storage handle. */
-  def lazyCk(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+  private def release(rdd: RDD[_]): Unit =
+    if (rdd.getStorageLevel != StorageLevel.NONE) rdd.unpersist(blocking = false)
 
-  /** [[ckptCount]] that ALSO counts the rows matching `pred` in the same
-    * materializing pass — for loops whose convergence check is a count of
-    * a FILTER of the round frame (the Scc wave frontiers), which otherwise
-    * costs a second job per wave. `pred` reads the frame's InternalRow by
-    * ordinal, so each call site is coupled to the select list right above
-    * it — keep them adjacent. */
-  def ckptCountWhere(df: DataFrame)(
-      pred: org.apache.spark.sql.catalyst.InternalRow => Boolean)
-      : (Round, Long) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val out = df.localCheckpoint(eager = false)
-    val added = sc.getPersistentRDDs.keySet -- before
-    val matched = out.queryExecution.toRdd
-      .mapPartitions { it =>
-        var m = 0L
-        while (it.hasNext) { if (pred(it.next())) m += 1 }
-        Iterator.single(m)
-      }
-      .fold(0L)(_ + _)
-    (new Round(out, if (added.isEmpty) -1 else added.max), matched)
+  @tailrec private def storage(plan: LogicalPlan, op: String): RDD[_] = plan match {
+    case r: LogicalRDD => r.rdd
+    case Project(_, child) => storage(child, op)
+    case Filter(_, child) => storage(child, op)
+    case other => throw new IllegalArgumentException(
+      s"Loops.$op needs a checkpointed frame or a Project/Filter view of " +
+        s"one; found ${other.nodeName}")
+  }
+
+  private def requireMaterialized(df: DataFrame, op: String): Unit = {
+    val bad = df.queryExecution.analyzed.find {
+      case _: LogicalRDD | _: Project | _: Filter | _: Union => false
+      case _ => true
+    }
+    require(bad.isEmpty,
+      s"Loops.$op runs only on materialized frames: Project, Filter and " +
+        s"Union over checkpoints (LogicalRDD leaves); found ${bad.get.nodeName}")
   }
 }

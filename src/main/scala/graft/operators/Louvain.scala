@@ -86,11 +86,11 @@ object Louvain {
     require(sweeps >= 0, s"sweeps must be >= 0 (got $sweeps)")
     // one job: the canonical frame's checkpoint IS the m count (r18);
     // never freed — the persisted adj recomputes through it on eviction
-    val (undR, m) = Loops.ckptCount(edges.filter(col("src") =!= col("dst"))
+    val und = Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct())
-    communitiesFromCanon(undR.df, m, oldLabels, sweeps)
+      .distinct(), eager = false)
+    communitiesFromCanon(und, Loops.matCount(und), oldLabels, sweeps)
   }
 
   /** [[communitiesFrom]] over an ALREADY canonical (u < v, distinct,
@@ -109,21 +109,20 @@ object Louvain {
       .unionAll(und.select(col("v").as("node"), col("u").as("nbr")))
       .persist()
     // consumed every sweep — lazy, materializes in sweep 1 (r18b)
-    val deg = Loops.lazyCk(
-      adj.groupBy("node").agg(count(lit(1)).as("deg")))
+    val deg = Loops.checkpoint(
+      adj.groupBy("node").agg(count(lit(1)).as("deg")), eager = false)
     val nodes = adj.select(col("node")).distinct()
-    var labelsR = Loops.ckptLazy(oldLabels match {
+    var labels = Loops.checkpoint(oldLabels match {
       case None => nodes.withColumn("label", col("node"))
       case Some(old) => nodes
         .join(old.select(col("node"), col("label").as("__ol")).distinct(),
           Seq("node"), "left_outer")
         .select(col("node"), coalesce(col("__ol"), col("node")).as("label"))
-    })
-    var labels = labelsR.df
-    // lazy sweeps defer each free ONE MORE generation (the Loops.ckptLazy
-    // contract): sweep i−1 materializes while sweep i's checkpoint builds
+    }, eager = false)
+    // lazy sweeps defer each free ONE MORE generation (storage rule 2 in
+    // [[Loops]]): sweep i−1 materializes while sweep i's checkpoint builds
     // its stages, so only the GRANDPARENT is provably dead per sweep (r18b)
-    var labelsPrevR: Loops.Round = null
+    var labelsPrev: DataFrame = null
     for (i <- 1 to sweeps) {
       // r17 sweep shape: ONE scored frame, ONE final rollup. The previous
       // form built best/stay from separately re-joined kic/commDeg/cur
@@ -167,13 +166,11 @@ object Louvain {
       // intermediate sweeps LAZY (the next sweep's checkpoint materializes
       // them while building its stages); the FINAL sweep eager, so every
       // parent is settled before adj unpersists and the caller reads (r18b)
-      val next =
-        if (i == sweeps) Loops.ckpt(sweepPlan) else Loops.ckptLazy(sweepPlan)
-      if (labelsPrevR != null) labelsPrevR.free() // grandparent: dead
-      labelsPrevR = labelsR; labelsR = next
-      labels = next.df
+      val next = Loops.checkpoint(sweepPlan, eager = i == sweeps)
+      if (labelsPrev != null) Loops.free(labelsPrev) // grandparent: dead
+      labelsPrev = labels
+      labels = next
     }
-    if (labelsPrevR != null) labelsPrevR.free() // settled by the eager final
     adj.unpersist()
     labels
   }
@@ -218,8 +215,8 @@ object Louvain {
                        maxRounds: Int = 100): (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1 (got $maxRounds)")
     // one-off frames, never freed: LAZY checkpoints (r18b)
-    val lab = Loops.lazyCk(
-      labels.select(col("node"), col("label")).distinct())
+    val lab = Loops.checkpoint(
+      labels.select(col("node"), col("label")).distinct(), eager = false)
     val und = edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
@@ -232,13 +229,14 @@ object Louvain {
         Seq("v"))
       .filter(col("__lu") === col("__lv"))
       .select("u", "v")
-    val adj = Loops.lazyCk(
+    val adj = Loops.checkpoint(
       intra.select(col("u").as("node"), col("v").as("nbr"))
-        .unionAll(intra.select(col("v").as("node"), col("u").as("nbr"))))
-    // round 1's ckptCountWhere materializes it before the round-1 free
-    var compR = Loops.ckptLazy(
-      lab.select(col("node")).withColumn("refined", col("node")))
-    var comp = compR.df
+        .unionAll(intra.select(col("v").as("node"), col("u").as("nbr"))),
+      eager = false)
+    // round 1's counted checkpoint materializes it before the round-1 free
+    var comp = Loops.checkpoint(
+      lab.select(col("node")).withColumn("refined", col("node")), eager = false)
+    val moved = col("__moved")
     var rounds = 0
     var done = false
     while (!done) {
@@ -249,22 +247,21 @@ object Louvain {
           "or switch to the log-rounds CC)")
       // r17: carry the previous label through the rollup (it is constant
       // per node, so grouping by it changes nothing). r18b: ONE job — the
-      // round's checkpoint counts the moved rows during its own
-      // materializing pass. The moved test rides as a codegen'd boolean
-      // column (ordinal 3) so the predicate never assumes the node id
-      // type (the TVF accepts arbitrary user tables); min over a
-      // non-empty group is never null, so the flag is non-null too
-      val (next, nMoved) = Loops.ckptCountWhere(
+      // round's lazy checkpoint materializes in the count of its moved
+      // rows. The moved test rides as a boolean column so the filter never
+      // assumes the node id type (the TVF accepts arbitrary user tables);
+      // min over a non-empty group is never null, so the flag is non-null
+      val next = Loops.checkpoint(
         comp.join(adj, Seq("node"), "left_outer")
           .join(comp.select(col("node").as("nbr"),
             col("refined").as("__nr")), Seq("nbr"), "left_outer")
           .groupBy(col("node"), col("refined").as("__old"))
           .agg(least(min(col("refined")), min(col("__nr"))).as("refined"))
-          .withColumn("__moved", col("refined") =!= col("__old")))(
-        r => r.getBoolean(3))
-      if (nMoved == 0L) done = true
-      compR.free(); compR = next // superseded round released (r18)
-      comp = next.df.select("node", "refined")
+          .withColumn("__moved", col("refined") =!= col("__old")),
+        eager = false)
+      if (Loops.matCount(next.where(moved)) == 0L) done = true
+      Loops.free(comp) // superseded round released (r18)
+      comp = next.select("node", "refined")
     }
     (lab.join(comp, Seq("node")).select("node", "label", "refined"),
       rounds)
@@ -290,12 +287,10 @@ object Louvain {
     require(sweeps >= 0, s"sweeps must be >= 0 (got $sweeps)")
     val canon = edges.select(least(col("src"), col("dst")).as("u"),
       greatest(col("src"), col("dst")).as("v"), col("w"))
-    val und = canon.filter(col("u") =!= col("v"))
-      .groupBy("u", "v").agg(sum(col("w")).as("w"))
-      .localCheckpoint(true)
-    val self = canon.filter(col("u") === col("v"))
-      .groupBy(col("u").as("node")).agg(sum(col("w")).as("__sw"))
-      .localCheckpoint(true)
+    val und = Loops.checkpoint(canon.filter(col("u") =!= col("v"))
+      .groupBy("u", "v").agg(sum(col("w")).as("w")), eager = true)
+    val self = Loops.checkpoint(canon.filter(col("u") === col("v"))
+      .groupBy(col("u").as("node")).agg(sum(col("w")).as("__sw")), eager = true)
     val m = und.agg(coalesce(sum(col("w")), lit(0L))).head.getLong(0) +
       self.agg(coalesce(sum(col("__sw")), lit(0L))).head.getLong(0)
     require(m > 0L,
@@ -307,18 +302,16 @@ object Louvain {
       .persist()
     val nodes = adj.select("node")
       .unionByName(self.select("node")).distinct()
-    val deg = nodes
+    val deg = Loops.checkpoint(nodes
       .join(adj.groupBy("node").agg(sum(col("w")).as("__aw")),
         Seq("node"), "left_outer")
       .join(self, Seq("node"), "left_outer")
       .select(col("node"), (coalesce(col("__aw"), lit(0L)) +
-        lit(2L) * coalesce(col("__sw"), lit(0L))).as("deg"))
-      .localCheckpoint(true)
-    var labelsR = Loops.ckptLazy(deg.select(col("node"))
-      .withColumn("label", col("node")))
-    var labels = labelsR.df
+        lit(2L) * coalesce(col("__sw"), lit(0L))).as("deg")), eager = true)
+    var labels = Loops.checkpoint(deg.select(col("node"))
+      .withColumn("label", col("node")), eager = false)
     // lazy sweeps, grandparent frees — see [[communitiesFrom]] (r18b)
-    var labelsPrevR: Loops.Round = null
+    var labelsPrev: DataFrame = null
     for (i <- 1 to sweeps) {
       // r17 sweep shape — see [[communitiesFrom]]: one scored frame, one
       // final rollup extracting best move AND k_{i,a} together
@@ -353,13 +346,11 @@ object Louvain {
       val sweepPlan = labels.join(moved, Seq("node"), "left_outer")
         .select(col("node"),
           coalesce(col("__nl"), col("label")).as("label"))
-      val next =
-        if (i == sweeps) Loops.ckpt(sweepPlan) else Loops.ckptLazy(sweepPlan)
-      if (labelsPrevR != null) labelsPrevR.free() // grandparent: dead
-      labelsPrevR = labelsR; labelsR = next
-      labels = next.df
+      val next = Loops.checkpoint(sweepPlan, eager = i == sweeps)
+      if (labelsPrev != null) Loops.free(labelsPrev) // grandparent: dead
+      labelsPrev = labels
+      labels = next
     }
-    if (labelsPrevR != null) labelsPrevR.free() // settled by the eager final
     adj.unpersist()
     labels
   }
@@ -387,11 +378,11 @@ object Louvain {
     // whatever plan produced `edges`) twice per call. r18b: the checkpoint
     // doubles as level 1's m count, and the canon entry skips the second
     // identical distinct shuffle the public entry paid
-    val (undR, m) = Loops.ckptCount(edges.filter(col("src") =!= col("dst"))
+    val und = Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct())
-    val und = undR.df
+      .distinct(), eager = false)
+    val m = Loops.matCount(und)
     // already a materialized checkpoint (the final sweep is eager) — no
     // defensive re-checkpoint needed for its three consumers below (r18b)
     val l1 = communitiesFromCanon(und, m, None, sweeps1)

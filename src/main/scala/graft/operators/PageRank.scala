@@ -208,11 +208,11 @@ object PageRank {
       val sn = s.count()
       require(sn > 0,
         "personalized PageRank needs at least one seed present in the graph")
-      nodes
+      Loops.checkpoint(nodes
         .join(s.withColumn("__isSeed", lit(true)), Seq("node"), "left")
         .select(col("node"),
-          when(col("__isSeed"), lit(1.0 / sn)).otherwise(lit(0.0)).as("__p"))
-        .localCheckpoint(true)
+          when(col("__isSeed"), lit(1.0 / sn)).otherwise(lit(0.0)).as("__p")),
+        eager = true)
     }
 
     var ranks = (pFrame, init) match {
@@ -235,8 +235,8 @@ object PageRank {
     // the last two in-loop checkpoints (r18b: lazy rounds defer each free
     // one more generation — see the loop comment); rounds otherwise pile
     // up in the block manager for the session (r18)
-    var lastCkpt: Loops.Round = null
-    var prevCkpt: Loops.Round = null
+    var lastCkpt: DataFrame = null
+    var prevCkpt: DataFrame = null
     while (i <= iters && !converged) {
       val contribs = e
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
@@ -273,15 +273,15 @@ object PageRank {
       // is LAZY — once persisted (at the next round's stage build, or the
       // tol delta probe) both references read the same blocks, so the
       // double-reference argument is unaffected while the eager count job
-      // per round disappears; frees defer one generation (the Loops
-      // .ckptLazy contract). `checkpointEvery` can stretch the cadence for
+      // per round disappears; frees defer one generation (storage rule 2
+      // in [[Loops]]). `checkpointEvery` can stretch the cadence for
       // callers who prefer re-execution over materialization (it also
       // still truncates lineage for deep runs).
       val newCkpt =
         if (eager && (tol.isDefined || (i % checkpointEvery == 0 && i < iters)))
-          Some(Loops.ckptLazy(next))
+          Some(Loops.checkpoint(next, eager = false))
         else None
-      val nextMat = newCkpt.map(_.df).getOrElse(next)
+      val nextMat = newCkpt.getOrElse(next)
       // convergence mode: one node-sized equi-join + scalar rollup per round
       // (reads the PREVIOUS round too — it is freed only after this; the
       // probe is also the round's materializing action under tol)
@@ -295,7 +295,7 @@ object PageRank {
       newCkpt.foreach { r =>
         // round i−1 materialized while this round's stages built (or in the
         // tol probe above) — its parent, round i−2, is now provably dead
-        if (prevCkpt != null) prevCkpt.free()
+        if (prevCkpt != null) Loops.free(prevCkpt)
         prevCkpt = lastCkpt
         lastCkpt = r
       }
@@ -304,11 +304,7 @@ object PageRank {
     }
     if (!eager) ranks
     else {
-      val result = ranks.localCheckpoint(true)
-      // the final round is folded into `result` (materializing every lazy
-      // ancestor) — the in-loop checkpoints have no consumer past this point
-      if (lastCkpt != null) lastCkpt.free()
-      if (prevCkpt != null) prevCkpt.free()
+      val result = Loops.checkpoint(ranks, eager = true)
       e.unpersist(); nodes.unpersist(); outW.unpersist()
       result
     }

@@ -46,8 +46,8 @@ object Scc {
       edges: DataFrame,
       maxRounds: Int = 100): (DataFrame, Int) =
     componentsCanonWithRounds(
-      edges.filter(col("src") =!= col("dst"))
-        .select("src", "dst").distinct().localCheckpoint(true),
+      Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
+        .select("src", "dst").distinct(), eager = true),
       maxRounds)
 
   /** [[componentsWithRounds]] over an ALREADY deduplicated,
@@ -60,12 +60,11 @@ object Scc {
       maxRounds: Int = 100): (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds must be >= 1 (got $maxRounds)")
     val spark = canonE.sparkSession
-    var e = canonE
-    var eR: Loops.Round = null // in-loop rounds only; the input is the caller's
-    var ePrevR: Loops.Round = null // lazy eNext defers the parent's free (r18b)
-    var (nodesR, remaining) = Loops.ckptCount(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct())
-    var nodes = nodesR.df
+    var e = canonE // in-loop rounds are freed; the input is the caller's
+    var ePrev: DataFrame = null // lazy e defers its parent's free (r18b)
+    var nodes = Loops.checkpoint(e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))).distinct(), eager = false)
+    var remaining = Loops.matCount(nodes)
     var result = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(
@@ -87,35 +86,34 @@ object Scc {
       // instead of all colors leaves the per-wave state (and therefore
       // the wave count) bit-identical while the shuffle shrinks to the
       // live frontier — the standard delta-iteration form.
-      var colors = nodes.withColumn("color", col("id"))
-      var colorsR: Loops.Round = null // in-loop waves only
+      val seed = nodes.withColumn("color", col("id"))
+      var colors = seed // in-loop waves are freed; the seed is a view of nodes
       var frontier = colors // wave 1: every node announces its own id
+      val improved = col("__next") < col("color")
       var changed = 1L
       while (changed > 0) {
         val pushed = e
           .join(frontier.select(col("id").as("src"), col("color").as("__c")),
             Seq("src"))
           .groupBy(col("dst").as("id")).agg(min(col("__c")).as("__in"))
-        // ONE job per wave: the checkpoint's materializing pass also counts
-        // the improved frontier (r18; the predicate reads the select list
-        // right above by ordinal — (id, color, __next), all non-null longs)
-        val (next, nChanged) = Loops.ckptCountWhere(
+        // ONE job per wave: the lazy checkpoint materializes in the count
+        // of its improved frontier (r18)
+        val next = Loops.checkpoint(
           colors.join(pushed, Seq("id"), "left_outer")
             .select(col("id"), col("color"),
               least(col("color"), coalesce(col("__in"), col("color")))
-                .as("__next")))(r => r.getLong(2) < r.getLong(1))
-        frontier = next.df.filter(col("__next") < col("color"))
-          .select(col("id"), col("__next").as("color"))
-        changed = nChanged
-        if (colorsR != null) colorsR.free()
-        colorsR = next
-        colors = next.df.select(col("id"), col("__next").as("color"))
+                .as("__next")), eager = false)
+        val improvedRows = next.where(improved)
+        changed = Loops.matCount(improvedRows)
+        frontier = improvedRows.select(col("id"), col("__next").as("color"))
+        if (colors ne seed) Loops.free(colors)
+        colors = next.select(col("id"), col("__next").as("color"))
       }
       // 2. backward confirmation within color classes: flag = reaches the
       // class root (seeded at the root itself)
-      var flags = colors
+      val flagSeed = colors
         .withColumn("__f", col("color") === col("id"))
-      var flagsR: Loops.Round = null // in-loop waves only
+      var flags = flagSeed // in-loop waves are freed; the seed views colors
       // DELTA PUSH, backward leg: the flag is a monotone boolean, so only
       // NEWLY flagged nodes have anything to announce (re-announcing an
       // old flag is a no-op through `__f || ...`); wave states and count
@@ -123,6 +121,7 @@ object Scc {
       // frontier. Wave 1's frontier is the class roots themselves.
       var fFrontier = flags.filter(col("__f"))
         .select(col("id"), col("color"))
+      val gainedFlag = col("__nf") && !col("__f")
       changed = 1L
       while (changed > 0) {
         // u gains the flag if some edge u->v has flag(v) with v in u's
@@ -138,56 +137,50 @@ object Scc {
           .filter(col("__cv") === col("color"))
           .select("id").distinct()
           .withColumn("__g", lit(true))
-        // same single-job-per-wave shape as the forward loop (the predicate
-        // reads the select list right above by ordinal — (id, color, __nf,
-        // __f), the flags non-null booleans)
-        val (next, nChanged) = Loops.ckptCountWhere(
+        // same single-job-per-wave shape as the forward loop
+        val next = Loops.checkpoint(
           flags.join(gainedMine, Seq("id"), "left_outer")
             .select(col("id"), col("color"),
               (col("__f") || coalesce(col("__g"), lit(false))).as("__nf"),
-              col("__f")))(r => r.getBoolean(2) && !r.getBoolean(3))
-        fFrontier = next.df.filter(col("__nf") && !col("__f"))
-          .select(col("id"), col("color"))
-        changed = nChanged
-        if (flagsR != null) flagsR.free()
-        flagsR = next
-        flags = next.df.select(col("id"), col("color"), col("__nf").as("__f"))
+              col("__f")), eager = false)
+        val gainedRows = next.where(gainedFlag)
+        changed = Loops.matCount(gainedRows)
+        fFrontier = gainedRows.select(col("id"), col("color"))
+        if (flags ne flagSeed) Loops.free(flags)
+        flags = next.select(col("id"), col("color"), col("__nf").as("__f"))
       }
       // lazy: found materializes inside the remaining-count job right below
       // (its parent wave frames are freed only AFTER that job — r18b)
-      val found = Loops.lazyCk(flags.filter(col("__f"))
-        .select(col("id"), col("color").as("scc")))
+      val found = Loops.checkpoint(flags.filter(col("__f"))
+        .select(col("id"), col("color").as("scc")), eager = false)
       // the accumulator is a union of checkpointed per-round frames — a
       // flat scan-union plan; re-materializing it every round copied the
       // whole result set O(rounds) times
       result = result.unionByName(found)
       // one job: the round's node checkpoint IS the remaining count (r18) —
       // and the job that materializes `found`
-      val (nodesNext, nRemaining) = Loops.ckptCount(
-        nodes.join(found.select("id"), Seq("id"), "left_anti"))
-      // found is materialized now — the wave frames behind it can go
-      if (colorsR != null) colorsR.free()
-      if (flagsR != null) flagsR.free()
+      val nodesNext = Loops.checkpoint(
+        nodes.join(found.select("id"), Seq("id"), "left_anti"), eager = false)
+      remaining = Loops.matCount(nodesNext)
+      // found is materialized now — the wave frames behind it can go (both
+      // loops ran at least one wave, so neither is a seed view)
+      Loops.free(colors)
+      Loops.free(flags)
       // lazy: the next round's first wave materializes the shrunken edge
       // frame; its parents (e, found) are freed one generation later / never
-      val eNext = Loops.ckptLazy(e
+      val eNext = Loops.checkpoint(e
         .join(found.select(col("id").as("src")), Seq("src"), "left_anti")
         .join(found.select(col("id").as("dst")), Seq("dst"), "left_anti")
-        .select("src", "dst"))
-      if (nodesR != null) nodesR.free()
+        .select("src", "dst"), eager = false)
+      Loops.free(nodes)
       // e feeds the LAZY eNext — defer its free until eNext materialized
       // (the next round's first wave); the previous generation is dead now
-      if (ePrevR != null) ePrevR.free()
-      ePrevR = eR
-      nodesR = nodesNext; nodes = nodesNext.df
-      eR = eNext; e = eNext.df
-      remaining = nRemaining
+      if (ePrev != null) Loops.free(ePrev)
+      ePrev = if (e ne canonE) e else null
+      nodes = nodesNext
+      e = eNext
     }
-    // the loop exits with every node retired into `found` checkpoints; the
-    // last (empty-by-count or superseded) graph frames have no consumer
-    if (nodesR != null) nodesR.free()
-    if (eR != null) eR.free()
-    if (ePrevR != null) ePrevR.free()
+    // the last graph frames are left to the entry point's scope
     (result, rounds)
   }
 
@@ -247,8 +240,8 @@ object Scc {
       maxRounds: Int = 100,
       delta: Option[DataFrame] = None): (DataFrame, (Int, Int)) =
     maintainCanonWithRounds(
-      edgesDf.filter(col("src") =!= col("dst"))
-        .select("src", "dst").distinct().localCheckpoint(true),
+      Loops.checkpoint(edgesDf.filter(col("src") =!= col("dst"))
+        .select("src", "dst").distinct(), eager = true),
       oldScc, maxRounds, delta)
 
   /** [[maintainWithRounds]] over an ALREADY deduplicated, self-loop-free,
@@ -263,17 +256,18 @@ object Scc {
     val e = canonE
     // one-off frames, never freed: LAZY checkpoints — each materializes in
     // its first consumer's job instead of paying an eager count job (r18b)
-    val nodes = Loops.lazyCk(e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct())
-    val prev = Loops.lazyCk(oldScc.select(col("id"), col("scc")).distinct())
+    val nodes = Loops.checkpoint(e.select(col("src").as("id"))
+      .unionByName(e.select(col("dst").as("id"))).distinct(), eager = false)
+    val prev = Loops.checkpoint(oldScc.select(col("id"), col("scc")).distinct(),
+      eager = false)
     // ONE labeled edge frame serves BOTH phases (r18 — labE and ge each
     // re-joined the node-sized label map into the full edge frame twice,
     // four big-side label joins per maintain; now the two prev joins run
     // once into a checkpointed frame, and the contract phase below
     // re-labels it with only the SMALL changed-node override)
-    val eLab = Loops.lazyCk(e
+    val eLab = Loops.checkpoint(e
       .join(prev.toDF("src", "__gs"), Seq("src"), "left_outer")
-      .join(prev.toDF("dst", "__gd"), Seq("dst"), "left_outer"))
+      .join(prev.toDF("dst", "__gd"), Seq("dst"), "left_outer"), eager = false)
     // within-class edges by yesterday's labels (class connectivity
     // depends on nothing else; a NULL label never equals anything, exactly
     // the old inner join)
@@ -289,7 +283,7 @@ object Scc {
         // entry's full re-distinct shuffle; the lazy checkpoint materializes
         // in the solve's first node-count job (r18b)
         val (refined, r) = componentsCanonWithRounds(
-          Loops.lazyCk(labE.select("src", "dst")), maxRounds)
+          Loops.checkpoint(labE.select("src", "dst"), eager = false), maxRounds)
         (nodes.join(refined.toDF("id", "g"), Seq("id"), "left_outer")
           .select(col("id"), coalesce(col("g"), col("id")).as("g")), r)
       case Some(d) =>
@@ -300,17 +294,16 @@ object Scc {
         val deletions = d.filter(col("src") =!= col("dst"))
           .select("src", "dst")
           .join(e, Seq("src", "dst"), "left_anti")
-        val dirty = deletions
+        val dirty = Loops.checkpoint(deletions
           .join(prev.toDF("src", "gs"), Seq("src"))
           .join(prev.toDF("dst", "gd"), Seq("dst"))
           .filter(col("gs") === col("gd"))
-          .select(col("gs").as("scc")).distinct()
-          .localCheckpoint(false)
+          .select(col("gs").as("scc")).distinct(), eager = false)
         // same canon-entry argument as the None branch: a semi-join of the
         // deduplicated within-class edges stays deduplicated (r18b)
         val (refined, r) = componentsCanonWithRounds(
-          Loops.lazyCk(labE.join(dirty.toDF("gs"), Seq("gs"), "left_semi")
-            .select("src", "dst")),
+          Loops.checkpoint(labE.join(dirty.toDF("gs"), Seq("gs"), "left_semi")
+            .select("src", "dst"), eager = false),
           maxRounds)
         // dirty classes: refined label (or singleton for members that
         // lost every within-class edge); clean classes: yesterday's
@@ -324,7 +317,7 @@ object Scc {
               coalesce(col("__rg"), col("id")))
               .otherwise(coalesce(col("scc"), col("id"))).as("g")), r)
     }
-    val grp = Loops.lazyCk(group)
+    val grp = Loops.checkpoint(group, eager = false)
     // contract and solve on the condensation-sized graph. grp differs from
     // the coalesce(prev, id) fallback eLab already carries only on CHANGED
     // nodes (dirty-class members, refined-away or unlabeled nodes) — a
@@ -332,11 +325,10 @@ object Scc {
     // checkpointed eLab with the small override instead of re-joining the
     // full node-sized label map into the edge frame twice (the override
     // side is runtime-broadcastable under AQE at any scale)
-    val changed = grp
+    val changed = Loops.checkpoint(grp
       .join(prev.toDF("id", "__ps"), Seq("id"), "left_outer")
       .filter(col("g") =!= coalesce(col("__ps"), col("id")))
-      .select(col("id"), col("g"))
-      .localCheckpoint(false)
+      .select(col("id"), col("g")), eager = false)
     val ge = eLab
       .join(changed.toDF("src", "__ns"), Seq("src"), "left_outer")
       .join(changed.toDF("dst", "__nd"), Seq("dst"), "left_outer")
@@ -349,7 +341,7 @@ object Scc {
     // ge already filters gs ≠ gd and deduplicates — the canon entry skips
     // the public entry's second identical distinct shuffle (r18b)
     val (solved, solveRounds) =
-      componentsCanonWithRounds(Loops.lazyCk(ge), maxRounds)
+      componentsCanonWithRounds(Loops.checkpoint(ge, eager = false), maxRounds)
     val out = grp.join(solved.toDF("g", "gl"), Seq("g"), "left_outer")
       .select(col("id"), coalesce(col("gl"), col("g")).as("scc"))
     (out, (certifyRounds, solveRounds))

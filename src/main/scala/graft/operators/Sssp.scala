@@ -79,14 +79,12 @@ object Sssp {
       if (neg.nonEmpty) throw new IllegalArgumentException(
         s"edge (${neg(0).get(0)} -> ${neg(0).get(1)}) has negative weight" +
           " — min-plus shortest path requires w >= 0")
-      var distR = Loops.ckptLazy(sources.select(col("node")).distinct()
-        .withColumn("dist", lit(0L)))
-      var dist = distR.df
-      // lazy merges defer the superseded round's free one generation (the
-      // Loops.ckptLazy contract, r18b): merged_r materializes inside round
+      var dist = Loops.checkpoint(sources.select(col("node")).distinct()
+        .withColumn("dist", lit(0L)), eager = false)
+      // lazy merges defer the superseded round's free one generation (storage
+      // rule 2 in [[Loops]], r18b): merged_r materializes inside round
       // r+1's wave job, so only then is dist_{r−1} provably dead
-      var distPrevR: Loops.Round = null
-      var frontierR: Loops.Round = null
+      var distPrev: DataFrame = null
       var frontier = dist
       var round = 0
       var done = maxRounds == 0
@@ -95,35 +93,34 @@ object Sssp {
         round += 1
         // one job: the wave's checkpoint IS its emptiness check (r18) —
         // and the job that materializes the previous round's lazy merge
-        val (improved, nImp) = Loops.ckptCount(frontier
+        val improved = Loops.checkpoint(frontier
           .join(e.withColumnRenamed("src", "node"), Seq("node"))
           .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
           .groupBy("node").agg(min("dist").as("dist"))
           .join(dist.select(col("node"), col("dist").as("__old")),
             Seq("node"), "left_outer")
           .filter(col("__old").isNull || col("dist") < col("__old"))
-          .select("node", "dist"))
+          .select("node", "dist"), eager = false)
+        val nImp = Loops.matCount(improved)
         // the previous merge is materialized now — its parent is dead
-        if (distPrevR != null) { distPrevR.free(); distPrevR = null }
+        if (distPrev != null) { Loops.free(distPrev); distPrev = null }
         if (nImp == 0L) { converged = true; done = true }
         else if (round >= maxRounds) done = true
         // the converged round improved nothing — merging the empty frame
         // would only copy `dist` (r18: skip the dead merge + checkpoint)
         if (!converged) {
-          val mergedPlan = dist.unionByName(improved.df)
+          val mergedPlan = dist.unionByName(improved)
             .groupBy("node").agg(min("dist").as("dist"))
-          // the LAST merge is eager (the returned frame must be settled
-          // before the post-loop frontier free); in-loop merges are lazy
-          val merged =
-            if (done) Loops.ckpt(mergedPlan) else Loops.ckptLazy(mergedPlan)
-          if (done) distR.free() else distPrevR = distR
-          distR = merged; dist = merged.df
+          // the LAST merge is eager, so its parent is freed at once;
+          // in-loop merges are lazy
+          val merged = Loops.checkpoint(mergedPlan, eager = done)
+          if (done) Loops.free(dist) else distPrev = dist
+          dist = merged
         }
-        if (frontierR != null) frontierR.free()
-        frontierR = improved; frontier = improved.df
+        // round 1's frontier is the seed frame `dist` started as
+        if (round > 1) Loops.free(frontier)
+        frontier = improved
       }
-      if (frontierR != null) frontierR.free()
-      if (distPrevR != null) distPrevR.free()
       require(converged || allowPartial,
         s"min-plus relaxation did not converge within maxRounds=$maxRounds —" +
           " the distances would be a silent partial answer (missing nodes or" +

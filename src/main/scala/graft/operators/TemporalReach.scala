@@ -78,13 +78,11 @@ object TemporalReach {
       if (neg.nonEmpty) throw new IllegalArgumentException(
         s"edge (${neg(0).get(0)} -> ${neg(0).get(1)}) has a negative" +
           " timestamp — earliest-arrival needs ts >= 0")
-      var arrR = Loops.ckptLazy(sources.select(col("node")).distinct()
-        .withColumn("arrival", lit(-1L)))
-      var arr = arrR.df
-      // lazy merges defer the superseded round's free one generation (the
-      // Loops.ckptLazy contract, r18b) — the [[Sssp]] discipline
-      var arrPrevR: Loops.Round = null
-      var frontierR: Loops.Round = null
+      var arr = Loops.checkpoint(sources.select(col("node")).distinct()
+        .withColumn("arrival", lit(-1L)), eager = false)
+      // lazy merges defer the superseded round's free one generation (storage
+      // rule 2 in [[Loops]], r18b) — the [[Sssp]] discipline
+      var arrPrev: DataFrame = null
       var frontier = arr
       var round = 0
       var done = maxRounds == 0
@@ -93,7 +91,7 @@ object TemporalReach {
         round += 1
         // one job: the wave's checkpoint IS its emptiness check (r18) —
         // and the job that materializes the previous round's lazy merge
-        val (improved, nImp) = Loops.ckptCount(frontier
+        val improved = Loops.checkpoint(frontier
           .join(e.withColumnRenamed("src", "node"), Seq("node"))
           .filter(col("arrival") <= col("ts"))
           .select(col("dst").as("node"), col("ts").as("arrival"))
@@ -101,28 +99,27 @@ object TemporalReach {
           .join(arr.select(col("node"), col("arrival").as("__old")),
             Seq("node"), "left_outer")
           .filter(col("__old").isNull || col("arrival") < col("__old"))
-          .select("node", "arrival"))
+          .select("node", "arrival"), eager = false)
+        val nImp = Loops.matCount(improved)
         // the previous merge is materialized now — its parent is dead
-        if (arrPrevR != null) { arrPrevR.free(); arrPrevR = null }
+        if (arrPrev != null) { Loops.free(arrPrev); arrPrev = null }
         if (nImp == 0L) { converged = true; done = true }
         else if (round >= maxRounds) done = true
         // the converged round improved nothing — merging the empty frame
         // would only copy `arr` (r18: skip the dead merge + checkpoint)
         if (!converged) {
-          val mergedPlan = arr.unionByName(improved.df)
+          val mergedPlan = arr.unionByName(improved)
             .groupBy("node").agg(min("arrival").as("arrival"))
-          // the LAST merge is eager (the returned frame must be settled
-          // before the post-loop frontier free); in-loop merges are lazy
-          val merged =
-            if (done) Loops.ckpt(mergedPlan) else Loops.ckptLazy(mergedPlan)
-          if (done) arrR.free() else arrPrevR = arrR
-          arrR = merged; arr = merged.df
+          // the LAST merge is eager, so its parent is freed at once;
+          // in-loop merges are lazy
+          val merged = Loops.checkpoint(mergedPlan, eager = done)
+          if (done) Loops.free(arr) else arrPrev = arr
+          arr = merged
         }
-        if (frontierR != null) frontierR.free()
-        frontierR = improved; frontier = improved.df
+        // round 1's frontier is the seed frame `arr` started as
+        if (round > 1) Loops.free(frontier)
+        frontier = improved
       }
-      if (frontierR != null) frontierR.free()
-      if (arrPrevR != null) arrPrevR.free()
       require(converged || allowPartial,
         s"earliest-arrival relaxation did not converge within maxRounds=" +
           s"$maxRounds — the arrivals would be a silent partial answer" +

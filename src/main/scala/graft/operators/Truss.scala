@@ -59,11 +59,11 @@ object Truss {
     require(maxRounds >= 1, s"maxRounds must be >= 1 (got $maxRounds)")
     // one job: the canonical frame's checkpoint IS the peel's entry count
     // (r18b — the eager checkpoint + matCount pair was two)
-    val (curR, n) = Loops.ckptCount(edgesDf.filter(col("src") =!= col("dst"))
+    val cur = Loops.checkpoint(edgesDf.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct())
-    peelCanon(curR.df, k, maxRounds, knownCount = n)
+      .distinct(), eager = false)
+    peelCanon(cur, k, maxRounds, knownCount = Loops.matCount(cur))
   }
 
   /** [[edgesWithRounds]] over an ALREADY canonical (u < v, distinct,
@@ -96,16 +96,16 @@ object Truss {
     // (lastSup) references the PREVIOUS round's edge frame through its
     // aliveT semi-join, so the parent must outlive the loop — only the
     // grandparent is provably dead each round.
-    var curR: Loops.Round = null
-    var prevR: Loops.Round = null
-    // callers that materialized the input via ckptCount pass the count in
+    var prev: DataFrame = null
+    // callers that materialized the input with a counted checkpoint pass
+    // the count in
     var nEdges = if (knownCount >= 0L) knownCount else Loops.matCount(cur)
     // ONE triangle enumeration, exploded to canonical edges: (a,b,c,u,v) —
     // 3 rows per triangle, the same frame the old per-round enumeration
     // generated EVERY round (so peak memory is unchanged; it just lives
     // across the peel instead of being rebuilt per round). LAZY: round 1's
     // recount job materializes it (r18b; cur is the caller's, never freed)
-    var t2eR = Loops.ckptLazy(trianglesOf(cur)
+    var t2e = Loops.checkpoint(trianglesOf(cur)
       // (a,b,c) is degree-oriented, not id-sorted — canonicalize each pair
       .select(explode(array(
           struct(least(col("a"), col("b")).as("u"),
@@ -116,7 +116,7 @@ object Truss {
             greatest(col("b"), col("c")).as("v")))).as("p"),
         col("a"), col("b"), col("c"))
       .select(col("a"), col("b"), col("c"),
-        col("p.u").as("u"), col("p.v").as("v")))
+        col("p.u").as("u"), col("p.v").as("v")), eager = false)
     var rounds = 0
     var converged = nEdges == 0L
     var sinceShrink = 0
@@ -135,7 +135,6 @@ object Truss {
       // Every 3rd round amortizes the swap's extra materialization against
       // the shrink (every-round shrinking was measured +1 job/round for
       // marginal wall gain at bench scale).
-      val t2e = t2eR.df
       val aliveT = t2e.join(cur, Seq("u", "v"), "left_semi")
         .groupBy("a", "b", "c").agg(count(lit(1)).as("__ne"))
         .filter(col("__ne") === 3)
@@ -144,29 +143,31 @@ object Truss {
       // __ne == 3 test), so the semi-join on aliveT alone suffices
       // the shrunken frame is LAZY — the round's convergence job right
       // below materializes it (via sup), so the superseded triangle frame
-      // is freed only AFTER that job (the Loops.ckptLazy contract, r18b)
-      var t2eOldR: Loops.Round = null
+      // is freed only AFTER that job (storage rule 2 in [[Loops]], r18b)
+      var t2eOld: DataFrame = null
       val sup =
         if (sinceShrink >= 2) {
-          val t2eNext = Loops.ckptLazy(
-            t2e.join(aliveT, Seq("a", "b", "c"), "left_semi"))
-          t2eOldR = t2eR; t2eR = t2eNext; sinceShrink = 0
-          t2eNext.df.groupBy("u", "v").agg(count(lit(1)).as("support"))
+          val t2eNext = Loops.checkpoint(
+            t2e.join(aliveT, Seq("a", "b", "c"), "left_semi"), eager = false)
+          t2eOld = t2e; t2e = t2eNext; sinceShrink = 0
+          t2eNext.groupBy("u", "v").agg(count(lit(1)).as("support"))
         } else {
           sinceShrink += 1
           t2e.join(aliveT, Seq("a", "b", "c"), "left_semi")
             .groupBy("u", "v").agg(count(lit(1)).as("support"))
         }
       // one job: the round's checkpoint IS its convergence count (r18)
-      val (next, n) = Loops.ckptCount(cur.join(
+      val next = Loops.checkpoint(cur.join(
         sup.filter(col("support") >= k - 2).select("u", "v"),
-        Seq("u", "v"), "left_semi"))
+        Seq("u", "v"), "left_semi"), eager = false)
+      val n = Loops.matCount(next)
       // the shrunken triangle frame is materialized now — its parent is dead
-      if (t2eOldR != null) t2eOldR.free()
+      if (t2eOld != null) Loops.free(t2eOld)
       converged = n == nEdges
       // grandparent round released (parent may still feed lastSup)
-      if (prevR != null) prevR.free()
-      prevR = curR; curR = next; cur = next.df
+      if (prev != null) Loops.free(prev)
+      prev = if (cur ne canonUnd) cur else null
+      cur = next
       nEdges = n
       lastSup = sup
     }
@@ -179,7 +180,7 @@ object Truss {
     // — the empty recount over the (empty) triangle frame is still exact.
     val sup =
       if (lastSup != null) lastSup
-      else t2eR.df.groupBy("u", "v").agg(count(lit(1)).as("support"))
+      else t2e.groupBy("u", "v").agg(count(lit(1)).as("support"))
     (cur.join(sup, Seq("u", "v")), rounds)
   }
 
@@ -256,11 +257,10 @@ object Truss {
       delta: Option[DataFrame] = None): (DataFrame, (Int, Int)) = {
     require(k >= 3, s"k must be >= 3 — the 2-truss is every edge (got $k)")
     require(maxRounds >= 1, s"maxRounds must be >= 1 (got $maxRounds)")
-    val und = edgesDf.filter(col("src") =!= col("dst"))
+    val und = Loops.checkpoint(edgesDf.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
     maintainCanonWithRounds(und, oldTruss, k, maxRounds, delta)
   }
 
@@ -281,26 +281,27 @@ object Truss {
     // shuffle here was pure waste; the lazy checkpoint still cuts the
     // upstream plan off at first use (prev is consumed twice)
     val prev =
-      if (prevCanon) Loops.lazyCk(oldTruss.select(col("u"), col("v")))
-      else oldTruss
+      if (prevCanon) Loops.checkpoint(oldTruss.select(col("u"), col("v")),
+        eager = false)
+      else Loops.checkpoint(oldTruss
         .select(least(col("u"), col("v")).as("u"),
           greatest(col("u"), col("v")).as("v"))
-        .distinct().localCheckpoint(true)
+        .distinct(), eager = true)
     // phase 1 — certify: yesterday's truss edges still present, re-peeled
     // (already canonical/distinct — a semi-join of a canonical frame).
     // One job: the induced frame's checkpoint IS the peel's entry count
-    val (inducedR, nInduced) =
-      Loops.ckptCount(und.join(prev, Seq("u", "v"), "left_semi"))
-    val inducedPrev = inducedR.df
+    val inducedPrev =
+      Loops.checkpoint(und.join(prev, Seq("u", "v"), "left_semi"), eager = false)
     val (certT, certifyRounds) =
-      peelCanon(inducedPrev, k, maxRounds, knownCount = nInduced)
+      peelCanon(inducedPrev, k, maxRounds,
+        knownCount = Loops.matCount(inducedPrev))
     // consumed by the candidate anti-join right below — lazy (r18b)
-    val cert = Loops.lazyCk(certT.select("u", "v"))
+    val cert = Loops.checkpoint(certT.select("u", "v"), eager = false)
     // phase 2 — grow over the candidates. One job: the candidate frame's
     // checkpoint IS the emptiness probe the early exit below needs (r18b)
-    val (candAllR, nCandAll) =
-      Loops.ckptCount(und.join(cert, Seq("u", "v"), "left_anti"))
-    val candAll = candAllR.df
+    val candAll =
+      Loops.checkpoint(und.join(cert, Seq("u", "v"), "left_anti"), eager = false)
+    val nCandAll = Loops.matCount(candAll)
     val (cand, nCand) = delta match {
       case None => (candAll, nCandAll)
       case Some(d) =>
@@ -316,15 +317,16 @@ object Truss {
             greatest(col("src"), col("dst")).as("v"))
           .unionByName(prev.join(cert, Seq("u", "v"), "left_anti"))
         // one job: the seed frame's checkpoint IS its emptiness check (r18b)
-        val (affR, nAff) = Loops.ckptCount(seeds.select(col("u").as("node"))
+        var affected = Loops.checkpoint(seeds.select(col("u").as("node"))
           .unionByName(seeds.select(col("v").as("node")))
-          .distinct())
-        var affected = affR.df
+          .distinct(), eager = false)
+        val nAff = Loops.matCount(affected)
         // consumed per closure hop — lazy, materializes in hop 1 (r18b)
-        val cAdj = Loops.lazyCk(
+        val cAdj = Loops.checkpoint(
           candAll.select(col("u").as("node"), col("v").as("nbr"))
             .unionAll(
-              candAll.select(col("v").as("node"), col("u").as("nbr"))))
+              candAll.select(col("v").as("node"), col("u").as("nbr"))),
+          eager = false)
         var frontier = affected
         var closed = nAff == 0L
         var hops = 0
@@ -334,23 +336,23 @@ object Truss {
             s"affected-component closure exceeded maxRounds=$maxRounds —" +
               " raise it (a deep candidate chain hangs off the delta)")
           // one job: checkpoint + emptiness check share the count (r18)
-          val (next, n) = Loops.ckptCount(frontier.join(cAdj, Seq("node"))
+          val next = Loops.checkpoint(frontier.join(cAdj, Seq("node"))
             .select(col("nbr").as("node")).distinct()
-            .join(affected, Seq("node"), "left_anti"))
-          if (n == 0L) closed = true
+            .join(affected, Seq("node"), "left_anti"), eager = false)
+          if (Loops.matCount(next) == 0L) closed = true
           else {
             // lazy union of checkpointed per-hop frames (the Bfs
             // accumulator argument)
-            affected = affected.unionByName(next.df)
-            frontier = next.df
+            affected = affected.unionByName(next)
+            frontier = next
           }
         }
         // closure ⇒ an affected endpoint implies both endpoints affected.
         // One job: the checkpoint IS the early exit's emptiness probe
-        val (candR, n) = Loops.ckptCount(
+        val cand = Loops.checkpoint(
           candAll.join(affected.withColumnRenamed("node", "u"), Seq("u"),
-            "left_semi"))
-        (candR.df, n)
+            "left_semi"), eager = false)
+        (cand, Loops.matCount(cand))
     }
     // r17 early exit: with no candidate edges (insert-free level, or a
     // delta whose closure touches nothing) the grow phase is a no-op —
@@ -363,13 +365,13 @@ object Truss {
     val certAdj = cert.select(col("u").as("p"), col("v").as("w"))
       .unionAll(cert.select(col("v").as("p"), col("u").as("w")))
     // consumed every grow round — lazy, materializes in round 1 (r18b)
-    val sSup = Loops.lazyCk(cand
+    val sSup = Loops.checkpoint(cand
       .join(certAdj.toDF("u", "w"), Seq("u"))
       .select(col("u"), col("v"),
         least(col("v"), col("w")).as("cu"),
         greatest(col("v"), col("w")).as("cv"))
       .join(cert.toDF("cu", "cv"), Seq("cu", "cv"), "left_semi")
-      .groupBy("u", "v").agg(count(lit(1)).as("ssup")))
+      .groupBy("u", "v").agg(count(lit(1)).as("ssup")), eager = false)
     // live triangles (≥ 2 candidate edges): candidate-candidate wedges
     // closed by any certified-or-candidate third edge, enumerated ONCE;
     // per-triangle candidate-edge composition drives the per-round recount
@@ -384,7 +386,7 @@ object Truss {
       .select(col("t")(0).as("a"), col("t")(1).as("b"), col("t")(2).as("c"))
       .distinct()
     // lazy: round 1's recount job materializes both (r18b)
-    var t2candR = Loops.ckptLazy(tri
+    var t2cand = Loops.checkpoint(tri
       .select(col("a"), col("b"), col("c"),
         explode(array(
           struct(col("a").as("u"), col("b").as("v")),
@@ -392,11 +394,10 @@ object Truss {
           struct(col("b").as("u"), col("c").as("v")))).as("p"))
       .select(col("a"), col("b"), col("c"),
         col("p.u").as("u"), col("p.v").as("v"))
-      .join(cand, Seq("u", "v"), "left_semi"))
-    val t2n = Loops.lazyCk(t2candR.df
-      .groupBy("a", "b", "c").agg(count(lit(1)).as("ncand")))
-    var alive = cand
-    var aliveR: Loops.Round = null // in-loop rounds only; cand is shared
+      .join(cand, Seq("u", "v"), "left_semi"), eager = false)
+    val t2n = Loops.checkpoint(t2cand
+      .groupBy("a", "b", "c").agg(count(lit(1)).as("ncand")), eager = false)
+    var alive = cand // in-loop rounds are freed; cand is shared
     var nAlive = Loops.matCount(alive)
     var growRounds = 0
     var converged = nAlive == 0L
@@ -408,7 +409,6 @@ object Truss {
       // to the surviving triangles' rows every 3rd round (r18, the
       // peelCanon cadence argument — a triangle that loses a candidate
       // edge never returns, and stale dead rows only cost the recount)
-      val t2cand = t2candR.df
       val aliveTri = t2cand.join(alive, Seq("u", "v"), "left_semi")
         .groupBy("a", "b", "c").agg(count(lit(1)).as("nalive"))
         .join(t2n, Seq("a", "b", "c"))
@@ -416,38 +416,37 @@ object Truss {
         .select("a", "b", "c")
       // the shrunken frame is LAZY — the round's convergence job right
       // below materializes it, so the superseded frame is freed only AFTER
-      // that job (the Loops.ckptLazy contract, r18b)
-      var t2candOldR: Loops.Round = null
+      // that job (storage rule 2 in [[Loops]], r18b)
+      var t2candOld: DataFrame = null
       val liveSup =
         if (sinceShrink >= 2) {
-          val t2candNext = Loops.ckptLazy(
-            t2cand.join(aliveTri, Seq("a", "b", "c"), "left_semi"))
-          t2candOldR = t2candR; t2candR = t2candNext; sinceShrink = 0
-          t2candNext.df.groupBy("u", "v").agg(count(lit(1)).as("lsup"))
+          val t2candNext = Loops.checkpoint(
+            t2cand.join(aliveTri, Seq("a", "b", "c"), "left_semi"),
+            eager = false)
+          t2candOld = t2cand; t2cand = t2candNext; sinceShrink = 0
+          t2candNext.groupBy("u", "v").agg(count(lit(1)).as("lsup"))
         } else {
           sinceShrink += 1
           t2cand.join(aliveTri, Seq("a", "b", "c"), "left_semi")
             .groupBy("u", "v").agg(count(lit(1)).as("lsup"))
         }
       // one job: the round's checkpoint IS its convergence count (r18)
-      val (next, n) = Loops.ckptCount(alive
+      val next = Loops.checkpoint(alive
         .join(sSup, Seq("u", "v"), "left_outer")
         .join(liveSup, Seq("u", "v"), "left_outer")
         .filter(coalesce(col("ssup"), lit(0L)) +
           coalesce(col("lsup"), lit(0L)) >= k - 2)
-        .select("u", "v"))
-      if (t2candOldR != null) t2candOldR.free()
+        .select("u", "v"), eager = false)
+      val n = Loops.matCount(next)
+      if (t2candOld != null) Loops.free(t2candOld)
       converged = n == nAlive
-      if (aliveR != null) aliveR.free()
-      aliveR = next; alive = next.df
+      if (alive ne cand) Loops.free(alive)
+      alive = next
       nAlive = n
     }
     require(converged,
       s"incremental $k-truss grow phase did not converge in $maxRounds " +
         "rounds — raise maxRounds")
-    // the final alive frame is checkpointed — the live-triangle frame has
-    // no consumer past the loop
-    t2candR.free()
     // final membership + ONE triangle pass over the truss-induced edges
     // for in-truss supports; every member has support >= k-2 >= 1 within
     // the fixpoint subgraph, so the inner join drops nothing

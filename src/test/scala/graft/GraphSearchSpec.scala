@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.file.Paths
+import java.util.concurrent.{Executors, TimeUnit}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bm25, PageRank, SnapshotDiff}
+import graft.operators.{Bm25, Loops, PageRank, SnapshotDiff}
 
 /** Unit fixtures for the r12 additions: BM25 batch retrieval, damped
   * PageRank, and the keyed snapshot diff. */
@@ -1400,5 +1405,75 @@ class GraphSearchSpec extends SparkSpec {
     // a node never on any shortest path stays exactly 0 in both modes
     assert(exact.toMap.values.exists(_ == 0.0) ===
       sampled.toMap.values.exists(_ == 0.0))
+  }
+
+  // ------------------------------------------------------- Loops storage
+
+  private def persistedIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def rddId(ck: DataFrame): Int =
+    ck.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
+
+  test("Loops.matCount/matIsEmpty: narrow views of checkpoints only") {
+    val a = Loops.checkpoint(Seq(1L, 2L, 3L).toDF("id"), eager = true)
+    assert(Loops.matCount(a) === 3L)
+    assert(Loops.matCount(a.filter(col("id") > 1).select("id")) === 2L)
+    assert(Loops.matCount(a.unionByName(a)) === 6L)
+    assert(!Loops.matIsEmpty(a.where(col("id") === 3L)))
+    val e = intercept[IllegalArgumentException](Loops.matCount(a.join(a, "id")))
+    assert(e.getMessage.contains("only on materialized frames") &&
+      e.getMessage.contains("Join"), e.getMessage)
+    intercept[IllegalArgumentException](Loops.matIsEmpty(a.distinct()))
+  }
+
+  test("Loops.free: releases the checkpoint under a view, rejects other plans") {
+    val a = Loops.checkpoint(Seq(1L, 2L).toDF("id"), eager = true)
+    val e = intercept[IllegalArgumentException](Loops.free(a.join(a, "id")))
+    assert(e.getMessage.contains("Loops.free"), e.getMessage)
+    assert(persistedIds().contains(rddId(a)))
+    Loops.free(a.filter(col("id") > 1).select("id"))
+    assert(!persistedIds().contains(rddId(a)))
+  }
+
+  test("Loops.scope: a checkpoint made outside any scope is left alone") {
+    val outside = Loops.checkpoint(spark.range(10).toDF("id"), eager = true)
+    val insideId = Loops.scope {
+      val inside = Loops.checkpoint(outside.filter(col("id") > 4), eager = true)
+      assert(persistedIds().contains(rddId(inside)))
+      rddId(inside)
+    }
+    assert(!persistedIds().contains(insideId))
+    assert(persistedIds().contains(rddId(outside)))
+    assert(outside.count() === 10L)
+  }
+
+  /** Test data of the registered queries (SF 0.001). */
+  private lazy val sf0001 = sys.env.getOrElse("SPARK_GRAFT_TESTDATA",
+    Paths.get(sys.props("user.home"), "testdata").toString) + "/sf0.001"
+
+  private def resultRows(query: String): Seq[String] =
+    Queries.all(query)(spark, sf0001).collect().map(_.toString).toSeq.sorted
+
+  test("Loops.scope: q188 and q195 on two threads match a sequential run, release everything") {
+    val names = Seq("q188_scc", "q195_truss")
+    val sequential = names.map { n =>
+      val before = persistedIds()
+      val rows = Loops.scope(resultRows(n))
+      assert((persistedIds() -- before).isEmpty, s"$n left checkpoints behind")
+      rows
+    }
+    assert(sequential.forall(_.nonEmpty))
+    val before = persistedIds()
+    val pool = Executors.newFixedThreadPool(2)
+    val concurrent =
+      try names.map(n => pool.submit(() => Loops.scope(resultRows(n))))
+        .map(_.get(10, TimeUnit.MINUTES))
+      finally pool.shutdown()
+    names.zip(concurrent).zip(sequential).foreach { case ((n, got), want) =>
+      assert(got === want, s"$n differs when run concurrently")
+    }
+    assert((persistedIds() -- before).isEmpty,
+      "the concurrent scopes left checkpoints behind")
   }
 }
