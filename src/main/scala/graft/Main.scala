@@ -36,9 +36,14 @@ object Main {
       errorMessage: String,
       counts: Map[String, Long])
 
-  private val CuratedTables = Seq(
-    "dim_chorister", "dim_chorister_assignment", "dim_song",
-    "fact_attendance", "fact_song_time")
+  /** The five curated tables in write order, each with its builder over RAW;
+    * also the order of the `rows_<name>` columns of `etl_log`. */
+  private[graft] val CuratedTables: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "dim_chorister" -> DimChorister.build,
+    "dim_chorister_assignment" -> DimChorister.buildAssignments,
+    "dim_song" -> DimSong.build,
+    "fact_attendance" -> (raw => FactAttendance.build(raw, DimChorister.idByKey(raw))),
+    "fact_song_time" -> (raw => FactSongTime.build(raw, DimSong.withSeq(raw))))
 
   /** Build + write the five curated tables, then marts, then alerts.
     * Mirrors main.py:182-299; the etl_log append happens here too, so a
@@ -51,20 +56,13 @@ object Main {
     var status = "success"
     var error = ""
     val counts = scala.collection.mutable.LinkedHashMap(
-      CuratedTables.map(_ -> 0L): _*)
+      CuratedTables.map(_._1 -> 0L): _*)
 
     try {
-      def writeCounted(name: String, df: DataFrame): Unit = {
-        store.overwrite(name, df)
+      CuratedTables.foreach { case (name, build) =>
+        store.overwrite(name, build(raw))
         counts(name) = store.read(name).count()
       }
-      writeCounted("dim_chorister", DimChorister.build(raw))
-      writeCounted("dim_chorister_assignment", DimChorister.buildAssignments(raw))
-      val dimSong = DimSong.withSeq(raw)
-      writeCounted("dim_song", DimSong.build(raw))
-      writeCounted("fact_attendance",
-        FactAttendance.build(raw, DimChorister.idByKey(raw)))
-      writeCounted("fact_song_time", FactSongTime.build(raw, dimSong))
 
       buildMarts(spark, store)
 
@@ -83,7 +81,7 @@ object Main {
     * Raises if any required table is missing, like the reference's
     * precondition check. */
   def buildMarts(spark: SparkSession, store: TableStore): Unit = {
-    val missing = CuratedTables.filterNot(store.exists)
+    val missing = CuratedTables.map(_._1).filterNot(store.exists)
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"Cannot build marts; missing tables: ${missing.mkString(", ")}")
@@ -120,15 +118,10 @@ object Main {
       status: String,
       error: String,
       counts: Map[String, Long]): Unit = {
-    val row = spark.sql("SELECT 1").select(
-      current_timestamp().as("run_ts"),
-      lit(status).as("status"),
-      lit(counts("dim_chorister")).as("rows_dim_chorister"),
-      lit(counts("dim_chorister_assignment")).as("rows_dim_chorister_assignment"),
-      lit(counts("dim_song")).as("rows_dim_song"),
-      lit(counts("fact_attendance")).as("rows_fact_attendance"),
-      lit(counts("fact_song_time")).as("rows_fact_song_time"),
-      lit(error).as("error_message"))
+    val cols = Seq(current_timestamp().as("run_ts"), lit(status).as("status")) ++
+      CuratedTables.map { case (name, _) => lit(counts(name)).as(s"rows_$name") } :+
+      lit(error).as("error_message")
+    val row = spark.sql("SELECT 1").select(cols: _*)
     store.append("etl_log", row)
   }
 

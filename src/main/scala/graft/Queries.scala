@@ -3525,8 +3525,9 @@ object Queries {
     * q176, green on the same graph and k every round, pins that the
     * from-scratch wave count fits the shared unroll depth. Deletion
     * cascades and evictee re-entry are exercised in GraphSearchSpec (the
-    * operator is sound under arbitrary deltas); RampProbe5 measures the
-    * incremental-vs-full crossover on a 10× history ramp. */
+    * operator is sound under arbitrary deltas); `tools/RampProbe5.scala`
+    * at `0ab6ae2` measured the incremental-vs-full crossover on a 10×
+    * history ramp. */
   def kcoreIncremental(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE events scan — und feeds the old build, the delta, and the
     // maintenance entry (each re-derived it from the raw scan before)
@@ -3627,7 +3628,7 @@ object Queries {
     * statistics. `localCheckpoint` preserves origin stats, and inside
     * `foreachBatch` AQE is off, so join-multiplied sizeInBytes estimates
     * compound EXPONENTIALLY across maintenance batches — measured by
-    * [[graft.tools.ProbeStats]] at sf0.001: 1.2k → 148k → 8.5M BITS of
+    * `tools/ProbeStats.scala` at `0ab6ae2`, sf0.001: 1.2k → 148k → 8.5M BITS of
     * BigInteger per optimizer stats pass, the fourth batch spending 20+
     * minutes inside Toom-Cook multiplication. Resetting to the 63-bit
     * leaf default at every batch boundary keeps each batch's optimizer
@@ -3754,7 +3755,8 @@ object Queries {
     * batch grading EXACTLY regardless of file splits — q209's
     * nested-chain oracle verifies the final maintained state VERBATIM
     * (fourth reuse of the output-invariance argument). Stats reset per
-    * batch boundary ([[freshStats]], the ProbeStats blowup). Bench-
+    * batch boundary ([[freshStats]], the blowup `tools/ProbeStats.scala`
+    * at `0ab6ae2` measured). Bench-
     * excluded: a registered streaming query prices the micro-batch
     * harness, not engine throughput. */
   def streamCorenessMaintain(s: SparkSession, dir: String): DataFrame = {
@@ -3787,7 +3789,8 @@ object Queries {
 
   /** q209's oracle bounds: chains for k = 2..[[CorenessMaxK]] at
     * [[CorenessLayers]] unrolled peel layers each. Degeneracy measured 4
-    * at every SF with per-k waves ≤ 7 (ProbeCoreness) — K = 6 and 12
+    * at every SF with per-k waves ≤ 7 (`tools/ProbeCoreness.scala` at
+    * `0ab6ae2`) — K = 6 and 12
     * layers carry the margin; the query asserts both. */
   private val CorenessMaxK = 6
   private val CorenessLayers = 12
@@ -3831,8 +3834,8 @@ object Queries {
     * q202/q209 output-invariance disciplines composed); q209, green on
     * the same graph every round, pins that the from-scratch waves fit
     * the shared unroll. Deletion cascades and delta-widening are
-    * exercised in GraphSearchSpec; RampProbe6 measures the
-    * incremental-vs-full crossover. */
+    * exercised in GraphSearchSpec; `tools/RampProbe6.scala` at `0ab6ae2`
+    * measured the incremental-vs-full crossover. */
   def corenessIncremental(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE events scan — und feeds the old build, the delta, and the
     // maintenance entry (each re-derived it from the raw scan before)
@@ -3990,8 +3993,8 @@ object Queries {
       .orderBy("node")
 
 
-  /** q226's warm refresh budget: 2 half-sweeps. ProbeWarm (committed)
-    * measured warm-vs-cold ΣQ at budgets 1/2/4 on all three SFs: at 1–2
+  /** q226's warm refresh budget: 2 half-sweeps. `tools/ProbeWarm.scala`
+    * at `0ab6ae2` measured warm-vs-cold ΣQ at budgets 1/2/4 on all three SFs: at 1–2
     * sweeps warm wins 1.3–1.9× everywhere (0.168/0.164/0.172 vs
     * 0.118/0.124/0.129 at budget 2); by budget 4 the advantage
     * dissipates (greedy paths converge — 0.203 vs 0.183, 0.186 vs 0.134,
@@ -4009,7 +4012,8 @@ object Queries {
     * from yesterday's partition (new nodes join as singletons via the
     * coalesce hand-off). The economics: from singletons the optimizer
     * spends its first sweeps rebuilding yesterday's basins; seeded, the
-    * same budget absorbs the delta — ProbeWarm measures warm beating
+    * same budget absorbs the delta — `tools/ProbeWarm.scala` at
+    * `0ab6ae2` measured warm beating
     * cold 1.3–1.9× in ΣQ at this budget on every SF, and the spec pins
     * Q(warm) ≥ Q(cold) at the refresh budget on the real graph. Fully
     * deterministic, so the oracle replays yesterday's 6-sweep chain, the
@@ -4437,7 +4441,8 @@ object Queries {
     * from scratch (the q186/q202 output-invariance discipline). Deletion
     * cascades (dirty-class splits), merges through the contracted solve,
     * and garbage-label tolerance are exercised in GraphSearchSpec;
-    * RampProbe5 measures the crossover on deep-cycle history. */
+    * `tools/RampProbe5.scala` at `0ab6ae2` measured the crossover on
+    * deep-cycle history. */
   def sccIncremental(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE events scan — the frame feeds the old solve, the delta, and
     // the maintenance entry (each re-derived it from the raw scan before)
@@ -4633,8 +4638,8 @@ object Queries {
     * that the from-scratch wave count fits the shared unroll depth.
     * Deletion cascades and evictee re-entry are exercised in
     * GraphSearchSpec (the operator is sound under arbitrary deltas);
-    * RampProbe5 measures the incremental-vs-full crossover on the truss
-    * family's 10× history ramp. */
+    * `tools/RampProbe5.scala` at `0ab6ae2` measured the incremental-vs-full
+    * crossover on the truss family's 10× history ramp. */
   def trussIncremental(s: SparkSession, dir: String): DataFrame = {
     // r17: ONE events scan — und feeds the old build, the delta, and the
     // maintenance entry (each re-derived it from the raw scan before)
@@ -4701,7 +4706,8 @@ object Queries {
   }
 
   /** q201's oracle unrolls this many σ (forward) and δ (backward) layers —
-    * the measured affinity-graph BFS depth is 4–5 at every SF (ProbeBc);
+    * the measured affinity-graph BFS depth is 4–5 at every SF
+    * (`tools/ProbeBc.scala` at `0ab6ae2`);
     * the in-query require keeps the unroll honest (the q172/q176/q195
     * fixed-unroll contract). */
   private val BcOracleDepth = 8
@@ -4742,7 +4748,8 @@ object Queries {
     * affinity graph, so the approximate kernel's quality is a NUMBER in
     * the round artifacts, not a synthetic-spec assertion. Pivots are
     * every node with id ≡ 0 (mod 2) — deterministic, half the exact
-    * row's work. TWO measured gates (ProbeBc2 numbers):
+    * row's work. TWO measured gates (numbers from `tools/ProbeBc2.scala`
+    * at `0ab6ae2`):
     * top-10 recall ≥ 0.7 — measured 0.9 / 0.9 / 0.7 at sf0.001/0.01/0.1;
     * the sf0.1 misses are NOT rank inversions but boundary swaps inside
     * the flat centrality band at ranks 7–16 (scores 172→151, 1–2 %
@@ -5904,7 +5911,8 @@ object Queries {
     * relative standard error ≈ 1/√(k−2) ≈ 12.7%, so 0.35 is ~2.8σ. The
     * check is DETERMINISTIC per dataset (one fixed hash of fixed data), so
     * the row cannot flake — the band documents the estimator's quality
-    * class. Measured (ProbeXx): sf0.001 fully unsaturated (exact path,
+    * class. Measured (`tools/ProbeXx.scala` at `0ab6ae2`): sf0.001 fully
+    * unsaturated (exact path,
     * zero mismatches); saturated grains ≤ 19.8% off exact at sf0.01 and
     * ≤ 10.2% at sf0.1 — inside the band with ≥ 1.7× margin. */
   private val KmvXxBand = 0.35
@@ -6824,34 +6832,34 @@ object Queries {
 
   // ---- Choir marts on the golden fixture (driver-verified ETL core) ---------
 
-  private def choirTables(s: SparkSession) = {
+  /** The curated tables of [[Main.CuratedTables]] over the golden fixture. */
+  private def choirTables(s: SparkSession): Map[String, DataFrame] = {
     val raw = graft.etl.ChoirFixture.raw(s)
-    (graft.etl.DimChorister.build(raw),
-      graft.etl.DimChorister.buildAssignments(raw),
-      graft.etl.DimSong.build(raw),
-      graft.etl.FactAttendance.build(raw, graft.etl.DimChorister.idByKey(raw)),
-      graft.etl.FactSongTime.build(raw, graft.etl.DimSong.withSeq(raw)))
+    Main.CuratedTables.map { case (name, build) => name -> build(raw) }.toMap
   }
 
   /** The full mart_attendance pipeline (R1/R2/P7/P8/D1/D4/J1/J3/X1/P11) on
     * the golden fixture; oracle = the hand-computed expected rows. */
   def choirMartAttendance(s: SparkSession, dir: String): DataFrame = {
-    val (dimC, asg, _, factA, _) = choirTables(s)
-    graft.etl.Marts.martAttendance(dimC, asg, factA)
+    val t = choirTables(s)
+    graft.etl.Marts.martAttendance(
+      t("dim_chorister"), t("dim_chorister_assignment"), t("fact_attendance"))
       .orderBy("chorister_id", "rehearsal_date")
   }
 
   /** mart_song_rehearsal (R3/D2/D5/J2/P12) on the golden fixture. */
   def choirMartSong(s: SparkSession, dir: String): DataFrame = {
-    val (_, _, dimS, _, factS) = choirTables(s)
-    graft.etl.Marts.martSongRehearsal(dimS, factS)
+    val t = choirTables(s)
+    graft.etl.Marts.martSongRehearsal(t("dim_song"), t("fact_song_time"))
       .orderBy("rehearsal_date", "song_id")
   }
 
   /** mart_chorister_song (J3/J4/J5) on the golden fixture. */
   def choirMartChoristerSong(s: SparkSession, dir: String): DataFrame = {
-    val (dimC, asg, dimS, factA, factS) = choirTables(s)
-    graft.etl.Marts.martChoristerSong(dimC, asg, dimS, factA, factS)
+    val t = choirTables(s)
+    graft.etl.Marts.martChoristerSong(
+      t("dim_chorister"), t("dim_chorister_assignment"), t("dim_song"),
+      t("fact_attendance"), t("fact_song_time"))
       .orderBy("rehearsal_date", "chorister_id", "song_id")
   }
 

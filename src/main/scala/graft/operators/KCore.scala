@@ -226,7 +226,8 @@ object KCore {
     *     candidate-sized degree rollup + two semi-joins on the shrinking
     *     candidate edge frame. With a bounded daily delta the candidate
     *     set is delta-neighborhood-sized, not history-sized — that is the
-    *     incremental-vs-full crossover (RampProbe5 measures it).
+    *     incremental-vs-full crossover (`tools/RampProbe5.scala` at
+    *     `0ab6ae2` measured it).
     *
     * With `delta` provided — the canonical edges that CHANGED since
     * yesterday (insertions and deletions together; the standard
@@ -239,7 +240,8 @@ object KCore {
     * today-out status (insert near it would have seeded it; deletion near
     * it only lowers degrees). That is the "a daily delta only ever peels
     * or un-peels a bounded neighborhood" bound — grow work scales with
-    * the DELTA NEIGHBORHOOD, not with the non-core history (RampProbe5:
+    * the DELTA NEIGHBORHOOD, not with the non-core history
+    * (`tools/RampProbe5.scala` at `0ab6ae2`:
     * full recompute re-pays the whole peel cascade over all history every
     * day; maintenance does not). Without `delta`, every non-certified
     * node is a candidate (sound with zero caller knowledge, but grow then

@@ -208,7 +208,8 @@ object Scc {
     *     coloring fixpoint runs at CONDENSATION diameter over
     *     condensation-sized frames — the full recompute's dominant cost
     *     (giant-component coloring waves over all edges) is gone
-    *     (RampProbe5 measures the crossover on deep-cycle history).
+    *     (`tools/RampProbe5.scala` at `0ab6ae2` measured the crossover on
+    *     deep-cycle history).
     *
     * Labels compose exactly: group labels are min member ids (clean
     * classes keep yesterday's label; refined groups and singletons get

@@ -223,8 +223,8 @@ object Truss {
     * triangle would make it affected), and that whole subgraph already
     * existed yesterday with internal support ≥ k−2 — contradicting
     * yesterday's maximality. Grow work therefore scales with the DELTA
-    * NEIGHBORHOOD, not with non-truss history (RampProbe5 measures the
-    * crossover). Without `delta`, every non-certified edge is a candidate
+    * NEIGHBORHOOD, not with non-truss history (`tools/RampProbe5.scala`
+    * at `0ab6ae2` measured the crossover). Without `delta`, every non-certified edge is a candidate
     * (sound with zero caller knowledge, but grow then re-examines the
     * non-truss fringe of all history).
     *

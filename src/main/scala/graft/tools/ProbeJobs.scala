@@ -3,6 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.graftshim.ListenerBusAccess
 
 import graft.{Queries, Sessions}
 
@@ -13,9 +14,10 @@ import graft.{Queries, Sessions}
   * tasks, and shuffle bytes written. A "fast locally" change that does not
   * reduce jobs/stages/shuffle-bytes is a config accident; one that does
   * carries to the cluster (guide §1/§2: count the passes and the bytes,
-  * not just the seconds). Usage:
+  * not just the seconds). `SPARK_GRAFT_KNOB=key=value` sets one SQL conf
+  * first, to A/B a runtime knob on the same queries. Usage:
   *
-  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... \
+  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... [SPARK_GRAFT_KNOB=k=v] \
   *     sbt "runMain graft.tools.ProbeJobs <query> [query ...]"
   */
 object ProbeJobs {
@@ -23,6 +25,11 @@ object ProbeJobs {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption).getOrElse(32)
     val spark = Sessions.local(cores = cpus)
+    sys.env.get("SPARK_GRAFT_KNOB").foreach { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      spark.conf.set(k, v)
+      System.err.println(s"[probejobs] $k=$v")
+    }
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
@@ -36,19 +43,21 @@ object ProbeJobs {
         shuffleWrite.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
       }
     })
+    // listener events are async: drain the bus before resetting and before
+    // reading, so no warm-up event lands in the row and none is missed
+    def drain(): Unit = ListenerBusAccess.drain(spark.sparkContext)
     println(f"${"query"}%-28s ${"sec"}%8s ${"jobs"}%6s ${"stages"}%7s ${"tasks"}%7s ${"shufMB"}%8s")
     args.foreach { n =>
       Queries.all.get(n) match {
         case None => System.err.println(s"[probejobs] unknown query: $n")
         case Some(fn) =>
           fn(spark, dir).queryExecution.toRdd.count() // warm-up, untimed
-          Thread.sleep(200)
+          drain()
           jobs.set(0); stages.set(0); tasks.set(0); shuffleWrite.set(0)
           val t0 = System.nanoTime()
           fn(spark, dir).queryExecution.toRdd.count()
           val sec = (System.nanoTime() - t0) / 1e9
-          // listener events are async; give the bus a beat to drain
-          Thread.sleep(300)
+          drain()
           println(f"$n%-28s $sec%8.2f ${jobs.get}%6d ${stages.get}%7d ${tasks.get}%7d ${shuffleWrite.get / 1e6}%8.2f")
       }
     }

@@ -1,16 +1,18 @@
 package graft.tools
 
 import graft.{Queries, Sessions}
+import graft.operators.Loops
 
 /** SESSION-PRESSURE probe (r18, the VERDICT #4 A/B): run a sequence of
   * checkpoint-heavy graph queries in ONE session, then time a probe query
   * (q226) that r17 measured at 4.5× its isolated time when dead checkpoint
-  * blocks had piled up. Compares the "mid-session premium" across storage
-  * policies: set SPARK_GRAFT_GC=60s to re-add the r17 forced-minutely-GC
-  * knob the r18 session dropped (the default run measures the
-  * targeted-unpersist-only policy).
+  * blocks had piled up. Each run is one [[graft.operators.Loops.scope]],
+  * released after its timer stops, exactly as `Bench` runs a query.
+  * Compares the "mid-session premium" across periodic-GC policies:
+  * SPARK_GRAFT_GC sets `spark.cleaner.periodicGC.interval` (unset: Spark's
+  * 30min default).
   *
-  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 [SPARK_GRAFT_GC=60s] \
+  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 [SPARK_GRAFT_GC=30min] \
   *     sbt "runMain graft.tools.ProbeSession"
   */
 object ProbeSession {
@@ -32,7 +34,7 @@ object ProbeSession {
       "q204_scc_incremental", "q203_truss_incremental", "q219_kcore_churn",
       "q202_kcore_incremental", "q225_louvain_two_level",
       "q199_pagerank_incremental", "q220_louvain_refine")
-    def run(name: String): Double = {
+    def run(name: String): Double = Loops.scope {
       val t0 = System.nanoTime()
       Queries.all(name)(spark, dir).queryExecution.toRdd.count()
       (System.nanoTime() - t0) / 1e9
@@ -48,7 +50,7 @@ object ProbeSession {
     val storage = spark.sparkContext.getRDDStorageInfo
     println(f"[probesession] gc=${gc.getOrElse("default")} probe_isolated=$iso%.2f s " +
       f"probe_mid_session=$mid%.2f s premium=${mid / iso}%.2fx " +
-      s"persistent_rdds=${spark.sparkContext.getPersistentRDDs.size} " +
+      s"persistent_rdds=${storage.length} " +
       f"cached_mb=${storage.map(_.memSize).sum / 1e6}%.1f")
     spark.stop()
   }

@@ -7,9 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps checkpoint storage on one path: outside `operators/Loops.scala`
-  * (and the `tools/` probe mains) no main source may call
-  * `localCheckpoint(` or read `getPersistentRDDs` — checkpoints go through
-  * `Loops.checkpoint`, releases through `Loops.free` and `Loops.scope`. */
+  * no main source may call `localCheckpoint(` or read `getPersistentRDDs`
+  * — checkpoints go through `Loops.checkpoint`, releases through
+  * `Loops.free` and `Loops.scope`. */
 class CheckpointGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
@@ -21,10 +21,8 @@ class CheckpointGuardSpec extends AnyFunSuite {
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally s.close()
     }
-    def allowed(p: Path): Boolean = {
-      val rel = root.relativize(p).toString.replace('\\', '/')
-      rel == "operators/Loops.scala" || rel.startsWith("tools/")
-    }
+    def allowed(p: Path): Boolean =
+      root.relativize(p).toString.replace('\\', '/') == "operators/Loops.scala"
     val hits = for {
       p <- files if !allowed(p)
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex

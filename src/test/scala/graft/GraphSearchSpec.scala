@@ -1158,7 +1158,8 @@ class GraphSearchSpec extends SparkSpec {
     assert(!ms.contains(777L), "a vanished node must not resurface")
     // the refresh economics ON THE REAL GRAPH: at the registered 2-sweep
     // budget, warm (seeded from yesterday's converged partition) beats
-    // cold under the exact evaluator — ProbeWarm measured 1.3-1.9x
+    // cold under the exact evaluator — `tools/ProbeWarm.scala` at
+    // `0ab6ae2` measured 1.3-1.9x
     val dir = "/root/testdata/sf0.001"
     val today = Queries.affinityTopEdges(spark, dir).localCheckpoint(true)
     val old = Louvain.communities(Queries.affinityTopEdges(spark, dir,
