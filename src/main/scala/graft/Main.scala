@@ -60,8 +60,7 @@ object Main {
 
     try {
       CuratedTables.foreach { case (name, build) =>
-        store.overwrite(name, build(raw))
-        counts(name) = store.read(name).count()
+        counts(name) = store.overwrite(name, build(raw))
       }
 
       buildMarts(spark, store)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** Shared session tuning for every entry point (Verify, Bench, tests, main).
@@ -23,6 +25,14 @@ object Sessions {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // vec_cosine / minhash_signature / simhash64 / lsh_bucket as SQL functions
     .config("spark.sql.extensions", "graft.GraftExtensions")
+    // Generated-class cache. One choir pass (Main.run + buildMarts +
+    // runAlerts) has a working set of about 230 classes (perfbench
+    // choir_etl's cold pass compiles 235). At Spark's default of 100 entries
+    // each class is evicted before its next use: a warm Main.run on the
+    // golden fixture recompiled 157 classes, and compiles 16 at 1000.
+    // A static conf: CodeGenerator sizes its cache once per JVM, at the
+    // first codegen, so later sessions in the same JVM share that size.
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   def local(cores: Int = 4, shufflePartitions: Int = 0): SparkSession = {
     val sp = if (shufflePartitions > 0) shufflePartitions else cores
@@ -32,6 +42,11 @@ object Sessions {
         .config("spark.sql.shuffle.partitions", sp.toString))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Loops.scope releases checkpoints by unpersisting them, and Spark warns
+    // on every unpersist of a locally checkpointed RDD (always a
+    // MapPartitionsRDD) that its lineage is gone. That is the intent of a
+    // release, not a fault: 943 of Verify's 1,115 WARN lines at sf0.001.
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
     spark
   }
 }

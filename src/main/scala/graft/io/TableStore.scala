@@ -1,8 +1,11 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The curated-table catalog (S3-S6): named parquet tables under one root,
   * with idempotent overwrite, append, and existence probes.
@@ -37,6 +40,10 @@ object TableStore {
     * instead of silently routing keys to the wrong bucket (which would
     * duplicate them). */
   private[io] val KbMeta = "_graft_kb_buckets"
+
+  /** Footer key under which Spark's parquet writer stores the row schema
+    * as JSON (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 }
 
 final class TableStore(private[graft] val spark: SparkSession, root: String) {
@@ -52,16 +59,48 @@ final class TableStore(private[graft] val spark: SparkSession, root: String) {
   /** Read a table. The store-internal key-bucket layout column
     * ([[TableStore.KB]], written by [[overwriteKeyed]]/[[upsertKeyed]]) is
     * dropped — consumers see the logical schema regardless of which
-    * physical layout the table carries. */
+    * physical layout the table carries. The data schema comes from
+    * [[footerSchema]], so creating the reader launches no job; partition
+    * columns are still discovered from directory names. */
   def read(name: String): DataFrame = {
-    val df = spark.read.parquet(path(name))
+    val df = footerSchema(path(name))
+      .fold(spark.read)(spark.read.schema).parquet(path(name))
     if (df.columns.contains(TableStore.KB)) df.drop(TableStore.KB) else df
   }
 
+  /** The Spark schema stored in the footer of the table's first data file
+    * in path order: the same single footer Spark's non-merging schema
+    * inference reads, but read here on the driver instead of in a job.
+    * None (plain inference) when the table has no data file or its footer
+    * carries no Spark schema. */
+  private def footerSchema(dir: String): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    // Spark's listing filter: `__kb=0` is a partition dir, `_SUCCESS` is not
+    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    def firstDataFile(d: Path): Option[Path] =
+      fs.listStatus(d).filterNot(s => hidden(s.getPath.getName)).sortBy(_.getPath.getName)
+        .iterator.flatMap(s => if (s.isDirectory) firstDataFile(s.getPath) else Some(s.getPath))
+        .nextOption()
+    if (!fs.exists(root)) None
+    else firstDataFile(root).flatMap { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(TableStore.SparkSchemaKey) finally reader.close()
+      Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
+    }
+  }
+
   /** S3/S4: idempotent full overwrite (clear + write in one atomic-per-dir
-    * commit). */
-  def overwrite(name: String, df: DataFrame): Unit =
-    df.write.mode("overwrite").parquet(path(name))
+    * commit). Returns the number of rows written, observed on the write
+    * itself, so no read-back count job is needed. */
+  def overwrite(name: String, df: DataFrame): Long = {
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(path(name))
+    written.get("rows").asInstanceOf[Long]
+  }
 
   /** Failure-ATOMIC overwrite through the staged swap: the new generation
     * lands in a side directory and replaces the live one only after a

@@ -1,7 +1,9 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.graftshim.ListenerBusAccess
 
@@ -14,8 +16,12 @@ import graft.{Queries, Sessions}
   * tasks, and shuffle bytes written. A "fast locally" change that does not
   * reduce jobs/stages/shuffle-bytes is a config accident; one that does
   * carries to the cluster (guide §1/§2: count the passes and the bytes,
-  * not just the seconds). `SPARK_GRAFT_KNOB=key=value` sets one SQL conf
-  * first, to A/B a runtime knob on the same queries. Usage:
+  * not just the seconds). `compiles` counts the classes Janino compiled in
+  * the measured run: the count-first number for a compile-bound change.
+  * Before the measured run the probe waits (up to 4 s) for the JIT compiler
+  * to go idle, so the warm-up's compile backlog is not timed in `sec`.
+  * `SPARK_GRAFT_KNOB=key=value` sets one SQL conf first, to A/B a runtime
+  * knob on the same queries. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=... [SPARK_GRAFT_KNOB=k=v] \
   *     sbt "runMain graft.tools.ProbeJobs <query> [query ...]"
@@ -46,19 +52,34 @@ object ProbeJobs {
     // listener events are async: drain the bus before resetting and before
     // reading, so no warm-up event lands in the row and none is missed
     def drain(): Unit = ListenerBusAccess.drain(spark.sparkContext)
-    println(f"${"query"}%-28s ${"sec"}%8s ${"jobs"}%6s ${"stages"}%7s ${"tasks"}%7s ${"shufMB"}%8s")
+    // no JIT compile time added for 250 ms, waiting at most 4 s
+    def jitIdle(): Unit = {
+      val jit = ManagementFactory.getCompilationMXBean
+      var prev = -1L
+      var waitedMs = 0
+      while (waitedMs < 4000 && jit.getTotalCompilationTime != prev) {
+        prev = jit.getTotalCompilationTime
+        Thread.sleep(250)
+        waitedMs += 250
+      }
+    }
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    println(f"${"query"}%-28s ${"sec"}%8s ${"jobs"}%6s ${"stages"}%7s ${"tasks"}%7s ${"shufMB"}%8s ${"compiles"}%8s")
     args.foreach { n =>
       Queries.all.get(n) match {
         case None => System.err.println(s"[probejobs] unknown query: $n")
         case Some(fn) =>
           fn(spark, dir).queryExecution.toRdd.count() // warm-up, untimed
           drain()
+          jitIdle()
           jobs.set(0); stages.set(0); tasks.set(0); shuffleWrite.set(0)
+          val compiles0 = compiled()
           val t0 = System.nanoTime()
           fn(spark, dir).queryExecution.toRdd.count()
           val sec = (System.nanoTime() - t0) / 1e9
+          val compiles = compiled() - compiles0
           drain()
-          println(f"$n%-28s $sec%8.2f ${jobs.get}%6d ${stages.get}%7d ${tasks.get}%7d ${shuffleWrite.get / 1e6}%8.2f")
+          println(f"$n%-28s $sec%8.2f ${jobs.get}%6d ${stages.get}%7d ${tasks.get}%7d ${shuffleWrite.get / 1e6}%8.2f $compiles%8d")
       }
     }
     spark.stop()

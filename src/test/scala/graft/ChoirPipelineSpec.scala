@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 
 import graft.etl.RawSheet
@@ -173,6 +174,21 @@ class ChoirPipelineSpec extends SparkSpec {
     assert(log.forall(_.getAs[Long]("rows_fact_attendance") === 20L))
   }
 
+  test("a warm run compiles almost nothing and counts exactly what it wrote") {
+    val raw = RawSheet.fromRows(spark, header, rows)
+    def freshStore() = new TableStore(spark, Files.createTempDirectory("choir_warm").toString)
+    assert(Main.run(spark, raw, freshStore()).status === "success")
+    val warmStore = freshStore()
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val warm = Main.run(spark, raw, warmStore)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    assert(warm.status === "success", warm.errorMessage)
+    assert(compiles <= 30, s"the warm run compiled $compiles classes")
+    Main.CuratedTables.foreach { case (t, _) =>
+      assert(warm.counts(t) === warmStore.read(t).count(), t)
+    }
+  }
+
   test("fail-fast: bad hours cell fails the run and logs a failed etl_log row") {
     val root = Files.createTempDirectory("choir_fail").toString
     val failStore = new TableStore(spark, root)
@@ -185,6 +201,14 @@ class ChoirPipelineSpec extends SparkSpec {
     val log = failStore.read("etl_log").collect()
     assert(log.length === 1 && log(0).getAs[String]("status") === "failed")
     assert(log(0).getAs[String]("error_message").nonEmpty)
+    // the tables written before the failure are counted; the rest log 0
+    val written = Map("dim_chorister" -> 5L, "dim_chorister_assignment" -> 6L, "dim_song" -> 3L)
+    Main.CuratedTables.foreach { case (t, _) =>
+      val expected = written.getOrElse(t, 0L)
+      assert(res.counts(t) === expected, t)
+      assert(log(0).getAs[Long](s"rows_$t") === expected, t)
+      if (expected > 0) assert(failStore.read(t).count() === expected, t)
+    }
   }
 
   test("CSV ingest handles quoted commas and embedded newlines in cells") {
