@@ -782,33 +782,89 @@ class GraphSearchSpec extends SparkSpec {
 
   test("scc: rings collapse, one-way bridges do not, DAG nodes are singletons") {
     import graft.operators.Scc
+    def canon(df: DataFrame) = Loops.checkpoint(df.filter(col("src") =!= col("dst"))
+      .select("src", "dst").distinct(), eager = true)
+    // every fixture peeled all-distributed (bound 0) and all on the driver
+    // (unbounded) must give the same rows and the same round count
+    def solve(edges: DataFrame, bound: Long = Long.MaxValue) = {
+      val (out, rounds) = Scc.componentsCanonWithRounds(canon(edges), 100, bound)
+      (out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+    }
+    def both(edges: DataFrame) = {
+      val local = solve(edges)
+      assert(solve(edges, 0L) === local)
+      local
+    }
     // ring {1,2} --one-way--> ring {5,6}; tail 6 -> 9 (DAG); ring {3,4,7}
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 5L), (5L, 6L), (6L, 5L),
       (6L, 9L), (3L, 4L), (4L, 7L), (7L, 3L)).toDF("src", "dst")
-    val (out, rounds) = Scc.componentsWithRounds(edges)
-    val m = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (m, rounds) = both(edges)
     assert(m === Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L,
       3L -> 3L, 4L -> 3L, 7L -> 3L))
-    assert(rounds <= 4, s"shallow SCC DAG should peel fast, took $rounds")
+    assert(rounds === 3, s"shallow SCC DAG should peel in 3, took $rounds")
+    assert(Scc.componentsWithRounds(edges)._2 === rounds)
+    // 17 live rows in round 1, 6 ({5,6,9} and their 3 edges) in round 2:
+    // a bound of 6 starts distributed and finishes on the driver, with
+    // fewer jobs than all-distributed and more than all-local
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsAt(bound: Long) = {
+      val e = canon(edges)
+      org.apache.spark.sql.graftshim.ListenerBusAccess.drain(spark.sparkContext)
+      jobs.set(0)
+      val (out, r) = Scc.componentsCanonWithRounds(e, 100, bound)
+      assert((out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, r) ===
+        (m, rounds))
+      org.apache.spark.sql.graftshim.ListenerBusAccess.drain(spark.sparkContext)
+      jobs.get
+    }
+    // a bound of 8 admits round 1's 8 nodes but not its 9 edges: round 1
+    // stays distributed and the driver finishes from round 2
+    assert(solve(edges, 8L) === (m, rounds))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (all, mixed, none) = (jobsAt(0L), jobsAt(6L), jobsAt(Long.MaxValue))
+      assert(all > mixed && mixed > none, s"jobs at bound 0/6/inf: $all/$mixed/$none")
+    } finally spark.sparkContext.removeSparkListener(listener)
     // pure DAG: every node its own SCC
     val dag = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("src", "dst")
-    assert(Scc.components(dag).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
-      Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    assert(both(dag)._1 === Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
     // duplicates/self-loops tolerated; min member labels even when the
     // smallest id sits mid-ring (8 -> 2 -> 6 -> 8 labels as 2)
     val ring = Seq((8L, 2L), (2L, 6L), (6L, 8L), (6L, 8L), (2L, 2L))
       .toDF("src", "dst")
-    assert(Scc.components(ring).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
-      Map(2L -> 2L, 6L -> 2L, 8L -> 2L))
+    assert(both(ring)._1 === Map(2L -> 2L, 6L -> 2L, 8L -> 2L))
     intercept[IllegalArgumentException](Scc.components(ring, maxRounds = 0))
+    // 1 -> 2 needs two peel rounds: both paths fail the same way at 1
+    val pair = canon(Seq((1L, 2L)).toDF("src", "dst"))
+    val messages = Seq(0L, Long.MaxValue).map(b =>
+      intercept[IllegalArgumentException](
+        Scc.componentsCanonWithRounds(pair, 1, b)).getMessage)
+    assert(messages.distinct === Seq(
+      "requirement failed: SCC did not finish in 1 peel rounds — raise maxRounds"))
   }
 
   test("scc maintain: output-invariant vs full recompute under inserts, deletes, merges") {
     import graft.operators.Scc
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // every maintenance runs all-distributed (bound 0) and all on the
+    // driver (unbounded): the same rows and the same round counts
+    def maint(edges: DataFrame, old: DataFrame,
+        delta: Option[DataFrame] = None) = {
+      val canonE = Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
+        .select("src", "dst").distinct(), eager = true)
+      val runs = Seq(0L, Long.MaxValue).map { bound =>
+        val (out, rounds) =
+          Scc.maintainCanonWithRounds(canonE, old, 100, delta, bound)
+        (asMap(out), rounds)
+      }
+      assert(runs.head === runs.last)
+      runs.last
+    }
     // yesterday: ring {1,2,3} --one-way 3->10--> ring {10,11,12}
     val oldEdges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L),
       (11L, 12L), (12L, 10L), (3L, 10L))
@@ -819,51 +875,47 @@ class GraphSearchSpec extends SparkSpec {
     // SCC; certification must be FREE (no deletions => no dirty classes)
     // and the merge happens entirely in the contracted solve
     val ins = (oldEdges ++ Seq((12L, 2L))).toDF("src", "dst")
-    val (mIns, (certIns, _)) = Scc.maintainWithRounds(ins, oldScc,
-      delta = Some(Seq((12L, 2L)).toDF("src", "dst")))
-    assert(asMap(mIns) === asMap(Scc.components(ins)))
-    assert(asMap(mIns).values.toSet === Set(1L))
+    val (mIns, (certIns, _)) = maint(ins, oldScc,
+      Some(Seq((12L, 2L)).toDF("src", "dst")))
+    assert(mIns === asMap(Scc.components(ins)))
+    assert(mIns.values.toSet === Set(1L))
     assert(certIns === 0, s"insert-only certify must be free, ran $certIns")
     // DELETION: 2->3 removed — ring {1,2,3} shatters into singletons
     // (the dirty-class re-solve), ring {10,11,12} is untouched
     val del = Seq((1L, 2L), (3L, 1L), (10L, 11L), (11L, 12L), (12L, 10L),
       (3L, 10L)).toDF("src", "dst")
-    val mDel = Scc.maintain(del, oldScc,
-      delta = Some(Seq((2L, 3L)).toDF("src", "dst")))
-    assert(asMap(mDel) === asMap(Scc.components(del)))
-    assert(asMap(mDel)(1L) === 1L && asMap(mDel)(2L) === 2L &&
-      asMap(mDel)(10L) === 10L)
+    val mDel = maint(del, oldScc, Some(Seq((2L, 3L)).toDF("src", "dst")))._1
+    assert(mDel === asMap(Scc.components(del)))
+    assert(mDel(1L) === 1L && mDel(2L) === 2L && mDel(10L) === 10L)
     // DELETE + REWIRE in one delta: 2->3 out, 2->1 in — {1,2} stays
     // mutual, 3 drops to a singleton feeding the far ring
     val re = Seq((1L, 2L), (2L, 1L), (3L, 1L), (10L, 11L), (11L, 12L),
       (12L, 10L), (3L, 10L)).toDF("src", "dst")
-    val mRe = Scc.maintain(re, oldScc,
-      delta = Some(Seq((2L, 3L), (2L, 1L)).toDF("src", "dst")))
-    assert(asMap(mRe) === asMap(Scc.components(re)))
-    assert(asMap(mRe)(2L) === 1L && asMap(mRe)(3L) === 3L)
+    val mRe = maint(re, oldScc,
+      Some(Seq((2L, 3L), (2L, 1L)).toDF("src", "dst")))._1
+    assert(mRe === asMap(Scc.components(re)))
+    assert(mRe(2L) === 1L && mRe(3L) === 3L)
     // NEW NODES arriving in the delta form their own ring via singleton
     // groups + the contracted solve
     val grown = (oldEdges ++ Seq((30L, 31L), (31L, 30L), (12L, 30L)))
       .toDF("src", "dst")
-    val mGrown = Scc.maintain(grown, oldScc,
-      delta = Some(Seq((30L, 31L), (31L, 30L), (12L, 30L))
-        .toDF("src", "dst")))
-    assert(asMap(mGrown) === asMap(Scc.components(grown)))
-    assert(asMap(mGrown)(30L) === 30L && asMap(mGrown)(31L) === 30L)
+    val mGrown = maint(grown, oldScc,
+      Some(Seq((30L, 31L), (31L, 30L), (12L, 30L)).toDF("src", "dst")))._1
+    assert(mGrown === asMap(Scc.components(grown)))
+    assert(mGrown(30L) === 30L && mGrown(31L) === 30L)
     // WITHOUT delta the labels are never trusted: empty degrades to
     // exactly components(); garbage (everything one class) is re-solved
-    assert(asMap(Scc.maintain(ins,
-        Seq.empty[(Long, Long)].toDF("id", "scc"))) ===
+    assert(maint(ins, Seq.empty[(Long, Long)].toDF("id", "scc"))._1 ===
       asMap(Scc.components(ins)))
     val garbage = Seq(1L, 2L, 3L, 10L, 11L, 12L).map(_ -> 1L)
       .toDF("id", "scc")
+    assert(maint(del, garbage)._1 === asMap(Scc.components(del)))
     assert(asMap(Scc.maintain(del, garbage)) === asMap(Scc.components(del)))
     // an empty delta on an unchanged graph: certification free, and the
     // answer is yesterday's labeling verbatim
-    val (mNoop, (certNoop, _)) = Scc.maintainWithRounds(
-      oldEdges.toDF("src", "dst"), oldScc,
-      delta = Some(Seq.empty[(Long, Long)].toDF("src", "dst")))
-    assert(asMap(mNoop) === asMap(oldScc))
+    val (mNoop, (certNoop, _)) = maint(oldEdges.toDF("src", "dst"), oldScc,
+      Some(Seq.empty[(Long, Long)].toDF("src", "dst")))
+    assert(mNoop === asMap(oldScc))
     assert(certNoop === 0)
   }
 
