@@ -417,8 +417,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "components (mutual reachability, scc = min member id) over " +
           "DIRECTED (src, dst) edges. NOTE: EAGER like pagerank/graph_bfs " +
           "— resolving the call runs the coloring rounds (each wave is " +
-          "materialized; once the live graph has at most 1M nodes plus " +
-          "edges, one job collects it and the driver finishes the rounds)"),
+          "materialized; once the live graph of integer ids has at most 1M " +
+          "nodes plus edges, one job collects it and the driver finishes " +
+          "the rounds)"),
       (children: Seq[Expression]) => {
         require(children.length >= 1 && children.length <= 2,
           "graph_scc(edgesTable[, maxRounds]) takes 1-2 arguments")

@@ -4,7 +4,8 @@ import scala.collection.mutable.ArrayBuilder
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType,
+  StructField, StructType}
 
 /** STRONGLY CONNECTED COMPONENTS by iterative coloring (Orzan 2004; the
   * FW-BW family) — the DIRECTED-graph complement of [[Dedup]]'s weakly
@@ -41,7 +42,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * at most [[LocalRows]] rows, it is collected in one job and the driver
   * finishes the remaining peel rounds itself with the same two fixpoints
   * (same labels, same round count, same `maxRounds` failure). Above the
-  * bound the rounds stay distributed. */
+  * bound, or for ids of a non-integral type, the rounds stay distributed. */
 object Scc {
 
   /** Live-graph rows (nodes + edges) at or under which the peel finishes on
@@ -97,19 +98,20 @@ object Scc {
         s"SCC did not finish in $maxRounds peel rounds — raise maxRounds")
     }
     // ROUND COMPRESSION: once the live graph fits the driver, finish every
-    // remaining peel round there. A graph that does not fit is retried only
-    // once its node count has halved, so it pays O(log n) extra count jobs.
-    var triedAt = Long.MaxValue
+    // remaining peel round there. The driver keys nodes by long: integral
+    // ids widen to long exactly, any other id type stays distributed
+    val longIds = Seq("src", "dst").forall(c => Seq(ByteType, ShortType,
+      IntegerType, LongType).contains(canonE.schema(c).dataType))
     def finishedLocally(): Boolean =
-      remaining <= localRows && remaining <= triedAt / 2 && {
+      longIds && remaining <= localRows && {
         // this count materializes a lazy e, whose parent ePrev is freed
         // only after it; the last nodes/e/ePrev are left to the scope
         val edges = Loops.matCount(e)
-        val fits = remaining + edges <= localRows
-        if (fits) result = result.unionByName(peelLocally(
-          nodes, remaining.toInt, e, edges.toInt, () => nextRound()))
-        else triedAt = remaining
-        fits
+        remaining + edges <= localRows && {
+          result = result.unionByName(peelLocally(
+            nodes, remaining.toInt, e, edges.toInt, () => nextRound()))
+          true
+        }
       }
     while (remaining > 0 && !finishedLocally()) {
       nextRound()
@@ -231,8 +233,9 @@ object Scc {
   private def peelLocally(nodes: DataFrame, n: Int, e: DataFrame, m: Int,
       nextRound: () => Unit): DataFrame = {
     // a node travels as (id, id), which no edge can be: e is self-loop-free
-    val parts = nodes.select(col("id"), col("id")).queryExecution.toRdd
-      .union(e.select("src", "dst").queryExecution.toRdd)
+    val asLong = (c: String) => col(c).cast(LongType)
+    val parts = nodes.select(asLong("id"), asLong("id")).queryExecution.toRdd
+      .union(e.select(asLong("src"), asLong("dst")).queryExecution.toRdd)
       .mapPartitions { it =>
         val b = new ArrayBuilder.ofLong
         it.foreach { r => b += r.getLong(0); b += r.getLong(1) }

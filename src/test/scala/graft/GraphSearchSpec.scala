@@ -784,16 +784,21 @@ class GraphSearchSpec extends SparkSpec {
     import graft.operators.Scc
     def canon(df: DataFrame) = Loops.checkpoint(df.filter(col("src") =!= col("dst"))
       .select("src", "dst").distinct(), eager = true)
-    // every fixture peeled all-distributed (bound 0) and all on the driver
-    // (unbounded) must give the same rows and the same round count
+    def asMap(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def solve(edges: DataFrame, bound: Long = Long.MaxValue) = {
       val (out, rounds) = Scc.componentsCanonWithRounds(canon(edges), 100, bound)
-      (out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+      (asMap(out), rounds)
     }
+    // every raw fixture through the public entry (its self-loop filter and
+    // distinct, then the default bound) must give the same rows and round
+    // count as its canonical edges peeled all-distributed (bound 0) and all
+    // on the driver (unbounded)
     def both(edges: DataFrame) = {
-      val local = solve(edges)
-      assert(solve(edges, 0L) === local)
-      local
+      val (out, rounds) = Scc.componentsWithRounds(edges)
+      val public = (asMap(out), rounds)
+      assert(solve(edges, 0L) === public)
+      assert(solve(edges) === public)
+      public
     }
     // ring {1,2} --one-way--> ring {5,6}; tail 6 -> 9 (DAG); ring {3,4,7}
     val edges = Seq((1L, 2L), (2L, 1L), (2L, 5L), (5L, 6L), (6L, 5L),
@@ -802,7 +807,6 @@ class GraphSearchSpec extends SparkSpec {
     assert(m === Map(1L -> 1L, 2L -> 1L, 5L -> 5L, 6L -> 5L, 9L -> 9L,
       3L -> 3L, 4L -> 3L, 7L -> 3L))
     assert(rounds === 3, s"shallow SCC DAG should peel in 3, took $rounds")
-    assert(Scc.componentsWithRounds(edges)._2 === rounds)
     // 17 live rows in round 1, 6 ({5,6,9} and their 3 edges) in round 2:
     // a bound of 6 starts distributed and finishes on the driver, with
     // fewer jobs than all-distributed and more than all-local
@@ -816,8 +820,7 @@ class GraphSearchSpec extends SparkSpec {
       org.apache.spark.sql.graftshim.ListenerBusAccess.drain(spark.sparkContext)
       jobs.set(0)
       val (out, r) = Scc.componentsCanonWithRounds(e, 100, bound)
-      assert((out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, r) ===
-        (m, rounds))
+      assert((asMap(out), r) === (m, rounds))
       org.apache.spark.sql.graftshim.ListenerBusAccess.drain(spark.sparkContext)
       jobs.get
     }
@@ -838,6 +841,10 @@ class GraphSearchSpec extends SparkSpec {
       .toDF("src", "dst")
     assert(both(ring)._1 === Map(2L -> 2L, 6L -> 2L, 8L -> 2L))
     intercept[IllegalArgumentException](Scc.components(ring, maxRounds = 0))
+    // INT ids with a negative one: the driver widens them to long exactly,
+    // so -4 stays the least member of its ring
+    val ints = Seq((3, -4), (-4, 3), (3, 5)).toDF("src", "dst")
+    assert(both(ints)._1 === Map(-4L -> -4L, 3L -> -4L, 5L -> 5L))
     // 1 -> 2 needs two peel rounds: both paths fail the same way at 1
     val pair = canon(Seq((1L, 2L)).toDF("src", "dst"))
     val messages = Seq(0L, Long.MaxValue).map(b =>
@@ -851,19 +858,21 @@ class GraphSearchSpec extends SparkSpec {
     import graft.operators.Scc
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // every maintenance runs all-distributed (bound 0) and all on the
-    // driver (unbounded): the same rows and the same round counts
+    // every maintenance runs through the public entry (default bound),
+    // all-distributed (bound 0) and all on the driver (unbounded): the same
+    // rows and the same round counts
     def maint(edges: DataFrame, old: DataFrame,
         delta: Option[DataFrame] = None) = {
       val canonE = Loops.checkpoint(edges.filter(col("src") =!= col("dst"))
         .select("src", "dst").distinct(), eager = true)
-      val runs = Seq(0L, Long.MaxValue).map { bound =>
+      val (out, rounds) = Scc.maintainWithRounds(edges, old, 100, delta)
+      val public = (asMap(out), rounds)
+      for (bound <- Seq(0L, Long.MaxValue)) {
         val (out, rounds) =
           Scc.maintainCanonWithRounds(canonE, old, 100, delta, bound)
-        (asMap(out), rounds)
+        assert((asMap(out), rounds) === public, s"at bound $bound")
       }
-      assert(runs.head === runs.last)
-      runs.last
+      public
     }
     // yesterday: ring {1,2,3} --one-way 3->10--> ring {10,11,12}
     val oldEdges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L),
