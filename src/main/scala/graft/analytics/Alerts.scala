@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.etl.Exprs
+
 /** Alert analytics over mart_attendance: current consecutive-miss streaks and
   * the attendance rate, with the exact semantics of the reference
   * (/root/reference/etl/alerts.py:40-174).
@@ -35,9 +37,8 @@ object Alerts {
     val c = col(name)
     df.schema(name).dataType match {
       case BooleanType => when(c, 1).otherwise(0)
-      case _: NumericType => when(c.isNotNull && c =!= 0, 1).otherwise(0)
-      case _ =>
-        when(upper(trim(c.cast("string"))).isin("1", "TRUE", "YES"), 1).otherwise(0)
+      case _: NumericType => Exprs.flagFromNumeric(c)
+      case _ => Exprs.flagFromString(c)
     }
   }
 
@@ -51,7 +52,7 @@ object Alerts {
     mart
       .filter(flagOf(mart, "available_flag") === 1)
       .select(
-        substring(trim(col("rehearsal_date").cast("string")), 1, 10).as("rehearsal_date"),
+        Exprs.dateSlice(col("rehearsal_date")).as("rehearsal_date"),
         s("chorister_id").as("chorister_id"),
         s("full_name").as("full_name"),
         s("voice_part").as("voice_part"),
@@ -139,58 +140,4 @@ object Alerts {
   def attendanceRate(mart: DataFrame, lookbackWeeks: Int): Option[Double] =
     attendanceRateFrame(mart, lookbackWeeks)
       .collect().headOption.map(_.getAs[Double]("rate"))
-
-  /** Alert #2 from the reference's contract (docs/data_contract.md:209-212 —
-    * spec'd there, never implemented): misses restricted to rehearsals where
-    * a specific song was rehearsed. `songRehearsals` is mart_song_rehearsal
-    * (or any frame with rehearsal_date + song_name); a chorister is reported
-    * when, within the lookback window, they were active on their latest
-    * in-window row and missed at least `missThreshold` available rehearsals
-    * whose date rehearsed a song matching `songFilter` (case-insensitive
-    * substring). Returns (chorister_id, full_name, voice_part, tgid,
-    * n_missed_song, missed_dates) — missed_dates newest-first, capped at 10
-    * like alert #1 (W4).
-    */
-  def missedWhileSong(
-      mart: DataFrame,
-      songRehearsals: DataFrame,
-      songFilter: String,
-      lookbackWeeks: Int,
-      missThreshold: Int): DataFrame = {
-    val songDates = songRehearsals
-      .filter(lower(coalesce(col("song_name").cast("string"), lit("")))
-        .contains(songFilter.toLowerCase))
-      .select(substring(trim(col("rehearsal_date").cast("string")), 1, 10)
-        .as("rehearsal_date"))
-      .filter(col("rehearsal_date") =!= "")
-      .distinct()
-
-    // one pass: mark song dates by broadcast left join, then latest-row
-    // attributes and the song-miss aggregates in a single groupBy (no second
-    // mart scan, no second max-date aggregation)
-    val songMiss = col("__is_song_date").isNotNull &&
-      col("missed_flag") === 1 && col("attended_flag") === 0
-    inWindow(normalizeAvailable(mart), lookbackWeeks)
-      .join(broadcast(songDates.withColumn("__is_song_date", lit(1))),
-        Seq("rehearsal_date"), "left")
-      .groupBy("chorister_id")
-      .agg(
-        max_by(
-          struct(col("is_active"), col("full_name"), col("voice_part"), col("tgid")),
-          col("rehearsal_date")).as("__latest"),
-        count(when(songMiss, 1)).as("n_missed_song"),
-        slice(sort_array(collect_list(when(songMiss, col("rehearsal_date"))),
-          asc = false), 1, 10).as("missed_dates"))
-      .filter(col("__latest.is_active") && col("n_missed_song") >= missThreshold)
-      .select(
-        col("chorister_id"),
-        when(col("__latest.full_name") === "", "—")
-          .otherwise(col("__latest.full_name")).as("full_name"),
-        when(col("__latest.voice_part") === "", "—")
-          .otherwise(col("__latest.voice_part")).as("voice_part"),
-        col("__latest.tgid").as("tgid"),
-        col("n_missed_song"),
-        col("missed_dates"))
-      .orderBy("chorister_id")
-  }
 }

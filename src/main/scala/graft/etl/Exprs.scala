@@ -73,7 +73,7 @@ object Exprs {
     *     impossible calendar dates → "";
     *  4. anything else → "".
     * Strings are the reference's transport type for dates (ISO strings compare
-    * correctly lexicographically); use [[toDateIso]] for a typed DateType.
+    * correctly lexicographically).
     */
   def normalizeDateToIso(c: Column): Column = {
     val s = trim(c.cast("string"))
@@ -93,10 +93,6 @@ object Exprs {
         coalesce(date_format(try_to_date(format_string("%04d-%02d-%02d", y, m, d), "yyyy-MM-dd"), "yyyy-MM-dd"), lit("")))
       .otherwise(lit(""))
   }
-
-  /** Typed variant: the normalized ISO string as a DateType (null if "" or a
-    * non-calendar ISO prefix slipped through). */
-  def toDateIso(c: Column): Column = try_to_date(normalizeDateToIso(c), "yyyy-MM-dd")
 
   /** Lenient numeric parse: comma decimals accepted, empty/garbage → null. (P9) */
   def parseNumLenient(c: Column): Column = {

@@ -60,70 +60,4 @@ object FactAttendance {
       when(empty, 1).otherwise(0).as("missed_flag"),
       current_timestamp().as("load_ts"))
   }
-
-  /** Lenient variant with a `bad_cells` quarantine
-    * (docs/data_contract.md:196-205 — spec'd in the reference contract but
-    * never implemented there; grain: one row per invalid source cell).
-    * Invalid cells (unparseable or negative hours) are diverted to the
-    * quarantine frame with their context instead of aborting the run; the
-    * corresponding fact rows are dropped. Returns (facts, badCells).
-    */
-  def buildWithQuarantine(raw: DataFrame, idByKey: DataFrame): (DataFrame, DataFrame) = {
-    val dateCols = RawSheet.dateColumns(raw)
-    val fixed = Seq(
-      col(RowIdx),
-      safeStr(qcol("Tag")).as("tag"),
-      safeStr(qcol("Joined")).as("joined_date"),
-      safeStr(qcol("Who")).as("full_name"))
-    val dated = dateCols.map { case (name, iso) =>
-      coalesce(qcol(name).cast("string"), lit("")).as(iso)
-    }
-    val base = raw
-      .select(fixed ++ dated: _*)
-      .filter(col("tag") =!= "" && col("tag") =!= "Song" && col("full_name") =!= "")
-      .join(broadcast(idByKey), Seq("full_name", "joined_date"), "inner")
-
-    if (dateCols.isEmpty) {
-      val emptyFacts = base.select(
-        lit("").as("rehearsal_date"), col("chorister_id"),
-        lit(0.0).as("hours_attended"), lit(0).as("missed_flag"),
-        current_timestamp().as("load_ts")).limit(0)
-      val emptyBad = base.select(
-        lit("chorister").as("entity_type"), col("tag"), col("full_name").as("who"),
-        lit(null).cast("date").as("rehearsal_date"), lit("").as("raw_value"),
-        lit("").as("error_reason"), current_timestamp().as("run_ts")).limit(0)
-      return (emptyFacts, emptyBad)
-    }
-
-    val unp = base.unpivot(
-      Array(col("chorister_id"), col("tag"), col("full_name")),
-      dateCols.map { case (_, iso) => col("`" + iso + "`") }.toArray,
-      "rehearsal_date", "raw_val")
-
-    val trimmed = trim(coalesce(col("raw_val"), lit("")))
-    val parsed = parseNumLenient(col("raw_val"))
-    val reason = when(trimmed === "", lit(null))
-      .when(parsed.isNull, lit("unparseable number"))
-      .when(parsed < 0, lit("negative hours"))
-      .otherwise(lit(null))
-    val tagged = unp.withColumn("__reason", reason)
-
-    val facts = tagged.filter(col("__reason").isNull).select(
-      col("rehearsal_date"),
-      col("chorister_id"),
-      when(trimmed === "", 0.0).otherwise(parsed).as("hours_attended"),
-      when(trimmed === "", 1).otherwise(0).as("missed_flag"),
-      current_timestamp().as("load_ts"))
-
-    val badCells = tagged.filter(col("__reason").isNotNull).select(
-      lit("chorister").as("entity_type"),
-      col("tag"),
-      col("full_name").as("who"),
-      try_to_date(col("rehearsal_date"), "yyyy-MM-dd").as("rehearsal_date"),
-      trimmed.as("raw_value"),
-      col("__reason").as("error_reason"),
-      current_timestamp().as("run_ts"))
-
-    (facts, badCells)
-  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * per element (half a quantization step). Shuffles over quantized vectors
   * shrink by the same factor, which is where the win actually lands on a
   * cluster: ANN candidate generation and re-ranking can run on codes and
-  * only dequantize the survivors.
+  * only reconstruct floats for the survivors.
   *
   * Engine-independent by construction: rounding is the explicit
   * `floor(x * scale + 0.5)` (no engine's round-half-to-even ambiguity),
@@ -36,9 +36,4 @@ object Quantization {
     transform(vec, x =>
       least(greatest(floor(x.cast("double") * scale + lit(0.5)), lit(-127.0)),
         lit(127.0)).cast("int"))
-
-  /** Reconstruction: `code / scale`, double per element. Max elementwise
-    * error is `0.5 / scale` (half a step) — spec-asserted on real data. */
-  def dequantize(codes: Column, scale: Column): Column =
-    transform(codes, c => c.cast("double") / scale)
 }

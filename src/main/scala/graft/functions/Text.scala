@@ -83,10 +83,6 @@ object Text {
   def patternHits(c: Column, pattern: String): Column =
     regexp_count(lower(coalesce(c, lit(""))), lit(pattern))
 
-  /** Characters outside printable ASCII — a cheap script detector. */
-  def nonAsciiCount(c: Column): Column =
-    length(regexp_replace(coalesce(c, lit("")), "[\\x20-\\x7e]", "")).cast("long")
-
   /** Sentence-ending punctuation count. */
   def punctCount(c: Column): Column =
     length(regexp_replace(coalesce(c, lit("")), "[^.!?]", "")).cast("long")

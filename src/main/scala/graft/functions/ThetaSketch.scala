@@ -41,14 +41,6 @@ object ThetaSketch {
     theta_sketch_agg(c, lgK)
   }
 
-  /** Merge already-built sketches (binary column) — the rollup aggregate
-    * that re-aggregates a per-(segment, day) sketch table to any coarser
-    * grain. */
-  def thetaUnionAgg(c: Column, lgK: Int = 12): Column = {
-    require(lgK >= 4 && lgK <= 26, s"theta lgK must be in [4,26] (got $lgK)")
-    theta_union_agg(c, lgK)
-  }
-
   /** Distinct-count estimate of a sketch as a long (exact mode ⇒ exactly
     * the distinct count). */
   def thetaEstimate(c: Column): Column = theta_sketch_estimate(c)

@@ -39,13 +39,4 @@ object TopK {
     ColumnGlue.column(
       new CollectTopK(ColumnGlue.expression(c), k, true).toAggregateExpression())
   }
-
-  /** The k LARGEST values of `c` per group, descending — element-for-element
-    * `slice(sort_array(collect_list(c), asc=false), 1, k)` with an O(k)
-    * buffer. */
-  def topKDesc(c: Column, k: Int): Column = {
-    require(k >= 1, s"k must be >= 1 (got $k)")
-    ColumnGlue.column(
-      new CollectTopK(ColumnGlue.expression(c), k, false).toAggregateExpression())
-  }
 }

@@ -117,22 +117,6 @@ final class TableStore(private[graft] val spark: SparkSession, root: String) {
   def append(name: String, df: DataFrame): Unit =
     df.write.mode("append").parquet(path(name))
 
-  /** Sort-on-write layout: range-partition into `files` output files by
-    * `sortCols` and sort within each, so every file's parquet min/max stats
-    * span a NARROW slice of the sort key — a pushed predicate on the leading
-    * column then skips whole files/row groups at the reader, before a byte
-    * of the column data is decoded. The 100 TB point: partition directories
-    * prune at day granularity; THIS layout prunes inside a partition, and it
-    * is the difference between decoding a full day and decoding the
-    * key-range actually asked for. */
-  def overwriteSorted(
-      name: String, df: DataFrame, sortCols: Seq[String], files: Int): Unit = {
-    require(sortCols.nonEmpty && files >= 1)
-    overwriteStaged(name,
-      df.repartitionByRange(files, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*))
-  }
-
   /** Z-order-on-write layout ([[graft.functions.ZOrder]]): range-partition +
     * sort on the bit-interleaved key of `zCols`, giving EVERY z-column
     * locality in the file layout — a selective predicate on any one of them
@@ -382,41 +366,6 @@ final class TableStore(private[graft] val spark: SparkSession, root: String) {
       name: String, df: DataFrame, partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty, "need at least one partition column")
     df.write.mode("append").partitionBy(partitionCols: _*).parquet(path(name))
-  }
-
-  /** Token-balanced sharded training export — the materialization of
-    * [[graft.operators.Budget.assignShards]]: documents are cut into
-    * consecutive `tokensPerShard`-token shards in salted-hash epoch order
-    * and written as one Hive-style `shard_id=<k>` directory per shard
-    * (through the same failure-atomic staged swap as every overwrite), so a
-    * data loader streams shard directories in order and every shard carries
-    * the same training payload. A `<name>_manifest` companion table
-    * (shard_id, n_docs, n_tokens) is derived FROM THE WRITTEN TABLE — a
-    * read-back barrier, so the manifest can never describe a generation that
-    * failed to land — and returned for the caller's run log.
-    *
-    * 100 TB shape: the assignment is the bucketed two-phase prefix sum (no
-    * global sort), the write's only data movement is the partitioned write
-    * itself, and the manifest is one tiny rollup over the scan. Shard
-    * directories, not single files, are the unit — each holds as many part
-    * files as the cluster's tasks produced. */
-  def exportShards(
-      name: String,
-      df: DataFrame,
-      idCol: String,
-      tokensCol: String,
-      priorityCol: String,
-      tokensPerShard: Long): DataFrame = {
-    val assigned = graft.operators.Budget.assignShards(
-      df, idCol, tokensCol, priorityCol, tokensPerShard)
-    overwritePartitioned(name, assigned, Seq("shard_id"))
-    // partition discovery re-infers shard_id as INT on read-back; pin the
-    // manifest to the long the assignment produced
-    val manifest = read(name)
-      .groupBy(col("shard_id").cast("long").as("shard_id"))
-      .agg(count(lit(1)).as("n_docs"), sum(col(tokensCol)).as("n_tokens"))
-    overwrite(name + "_manifest", manifest)
-    read(name + "_manifest")
   }
 
   /** Keyed upsert — the incremental-maintenance sink ("merge tonight's batch

@@ -4,7 +4,7 @@ import java.io.ByteArrayInputStream
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
-import org.apache.spark.sql.functions.{coalesce, col, count, lit, typedLit}
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types._
 
 /** Multimodal columns: images/audio/video travel as opaque `binary` columns
@@ -29,22 +29,11 @@ import org.apache.spark.sql.types._
   * SplitMix64 pixel/sample streams) so the synthetic table — and therefore
   * the q25 oracle constants — are pure functions of `media_id`; a production
   * ingest replaces them with files read from storage while every decode path
-  * stays as tested. Feature extraction comes in two forms:
-  * [[extractFeatures]] computes REAL classical features from the decoded
-  * content (channel means + luminance histogram for rasters; RMS / peak /
-  * zero-crossing rate + amplitude histogram for PCM audio), and
-  * [[extractFeaturesStub]] remains the one disclosed stand-in — its vector
-  * MATH substitutes for a neural encoder (no model weights ship in a
-  * zero-egress build), while the binary-in/`array<float>`-out batched
-  * contract around both is identical. Both are [[MediaEncoder]]
-  * implementations behind the encoder-agnostic [[encodeFeatures]] plumbing —
-  * the production seam: a real neural encoder (ONNX session, JNI model) is
-  * one trait implementation, zero pipeline changes.
+  * stays as tested.
   *
   * Scale notes: media work is CPU-per-row-heavy with tiny keys, so the right
   * shape is a narrow mapPartitions (no shuffle) after an optional
-  * `repartition(n)` to spread decode cost; feature vectors then feed the
-  * existing ANN operators ([[graft.operators.Ann]]) unchanged.
+  * `repartition(n)` to spread decode cost.
   */
 object Multimodal {
 
@@ -103,9 +92,6 @@ object Multimodal {
   /** Row stride of a 24-bit BMP: 3 bytes/px padded to a 4-byte boundary. */
   def bmpStride(width: Int): Int = ((3 * width + 3) / 4) * 4
 
-  /** Total file size of a 24-bit BMP at the given dimensions. */
-  def bmpSize(width: Int, height: Int): Int = BmpHeaderLen + bmpStride(width) * height
-
   /** Encode a 24-bit uncompressed BMP (BITMAPINFOHEADER, bottom-up rows,
     * BGR) with SplitMix64-deterministic pixel bytes — a REAL file any BMP
     * reader opens. */
@@ -137,19 +123,12 @@ object Multimodal {
     out
   }
 
-  /** Total file size of an [[encodePng]] image: signature (8) + IHDR chunk
-    * (25) + IDAT chunk framing a single STORED deflate block (12 chunk
-    * framing + 2 zlib header + 5 stored-block header + raw + 4 adler) +
-    * IEND (12), where raw = height filter-prefixed RGB scanlines. Closed
-    * form — the property the q25 oracle arithmetic rests on. */
-  def pngSize(width: Int, height: Int): Int = 68 + height * (1 + 3 * width)
-
   /** Encode a REAL 8-bit truecolor PNG (signature, IHDR/IDAT/IEND, genuine
     * CRC32 + Adler32 — any PNG reader opens it) with SplitMix64-deterministic
     * pixels. The IDAT zlib stream is a single STORED (uncompressed) deflate
     * block, so unlike a compressed PNG the byte size is a pure function of
-    * the dimensions ([[pngSize]]) and the q25 oracle can restate it as
-    * arithmetic. A stored block caps at 65535 raw bytes — far above the
+    * the dimensions (68 + height·(1 + 3·width)) and the q25 oracle can
+    * restate it as arithmetic. A stored block caps at 65535 raw bytes — far above the
     * synthetic-media sizes; real ingests use real encoders. */
   def encodePng(seed: Long, width: Int, height: Int): Array[Byte] = {
     val stride = 1 + 3 * width // filter byte + RGB
@@ -198,9 +177,6 @@ object Multimodal {
   }
 
   private val WavHeaderLen = 44
-
-  /** Total file size of a 16-bit PCM WAV clip. */
-  def wavSize(nSamples: Int, channels: Int): Int = WavHeaderLen + 2 * channels * nSamples
 
   /** Encode a RIFF/WAVE 16-bit PCM clip around caller-supplied samples
     * (interleaved if multi-channel) — the audio counterpart of
@@ -319,7 +295,7 @@ object Multimodal {
     * (6000×4000 = 24M). The bound is PER IMAGE (BufferedImage holds 4 B/px,
     * so ~134 MB transient per decoding task slot — size it against
     * heap / task-slots, not the whole heap); ingests with genuinely larger
-    * rasters raise the `maxPixels` knob on [[decode]]/[[resize]], smaller
+    * rasters raise the `maxPixels` knob on [[decode]], smaller
     * executors lower it. */
   val DefaultMaxImagePixels: Long = 1L << 25
 
@@ -372,8 +348,7 @@ object Multimodal {
   /** Sniff-and-decode one payload by content (not by the `kind` column — a
     * mislabeled row must decode by what its bytes actually are): RIFF/WAVE
     * through AudioSystem, everything else through whatever ImageIO reader
-    * accepts the bytes (BMP/PNG/GIF/JPEG) — the SAME family [[resize]]
-    * accepts, so decode-validity and resize-ability agree per payload. */
+    * accepts the bytes (BMP/PNG/GIF/JPEG). */
   private def decodePayload(payload: Array[Byte], maxPixels: Long): Option[(Int, Int, Int)] =
     if (payload == null) None
     else if (isRiff(payload)) decodeWav(payload)
@@ -403,239 +378,6 @@ object Multimodal {
         }
       }
     }(rowEncoder(DecodedSchema))
-  }
-
-  /** Feature extraction through the hash-projection stand-in
-    * ([[HashProjectionEncoder]] via the [[MediaEncoder]] seam): payload →
-    * fixed-dim float vector. The vector MATH substitutes for a neural
-    * encoder; the contract — binary in, `array<float>` out,
-    * partition-batched, ready for [[graft.operators.Ann]] — is the real one,
-    * and a production model is one [[MediaEncoder]] implementation away
-    * (same plumbing, see [[encodeFeatures]]). Historical 2-column schema
-    * kept: the hash projection never rejects a payload, so `valid` would be
-    * constant true — which is also why `feature` is re-tightened to
-    * nullable=false here (the seam's [[FeatureSchema]] allows null for
-    * encoders that reject payloads; this encoder never does, and writers
-    * pinned to the original stub schema expect the non-null contract). */
-  def extractFeaturesStub(media: DataFrame, dim: Int = 16): DataFrame =
-    encodeFeatures(media, new HashProjectionEncoder(dim))
-      // the coalesce arm never fires (this encoder never returns null); its
-      // non-nullable literal is what lets Catalyst re-derive nullable=false
-      // declaratively (no RDD round-trip, stays in codegen)
-      .select(col("media_id"),
-        coalesce(col("feature"), typedLit(Array.empty[Float])).as("feature"))
-
-  private val FeatureSchema = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("valid", BooleanType, nullable = false),
-    StructField("feature", ArrayType(FloatType, containsNull = false), nullable = true)))
-
-  private val MaxAudioBytes: Long = 1L << 24 // 16 MiB of PCM per clip
-
-  /** Classical image features over the DECODED raster: 12 floats —
-    * [modality=0, meanR, meanG, meanB, 8-bin luminance histogram
-    * (Rec.601 weights, 32-value bins, normalized)]. */
-  private def imageFeature(img: java.awt.image.BufferedImage): Array[Float] = {
-    val w = img.getWidth
-    val h = img.getHeight
-    val n = w.toLong * h
-    var sr = 0.0; var sg = 0.0; var sb = 0.0
-    val hist = new Array[Long](8)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val rgb = img.getRGB(x, y) // any color model -> packed sRGB
-        val r = (rgb >> 16) & 0xff
-        val g = (rgb >> 8) & 0xff
-        val b = rgb & 0xff
-        sr += r; sg += g; sb += b
-        val lum = 0.299 * r + 0.587 * g + 0.114 * b
-        hist(math.min(7, (lum / 32.0).toInt)) += 1
-        x += 1
-      }
-      y += 1
-    }
-    val out = new Array[Float](12)
-    out(0) = 0f
-    out(1) = (sr / n).toFloat; out(2) = (sg / n).toFloat; out(3) = (sb / n).toFloat
-    var i = 0
-    while (i < 8) { out(4 + i) = (hist(i).toDouble / n).toFloat; i += 1 }
-    out
-  }
-
-  /** Classical audio features over the DECODED 16-bit PCM samples: 12 floats —
-    * [modality=1, RMS, peak, zero-crossing rate, 8-bin |amplitude| histogram
-    * (normalized)]. Channels are interleaved into one sequence (the
-    * energy/crossing stats are per-clip, not per-channel). */
-  private def audioFeature(payload: Array[Byte]): Option[Array[Float]] =
-    try {
-      val src = javax.sound.sampled.AudioSystem
-        .getAudioInputStream(new ByteArrayInputStream(payload))
-      // normalize every decode()-accepted PCM variant (8-bit, unsigned, ...)
-      // to 16-bit signed through AudioSystem's converters, so decode-valid
-      // and feature-valid agree; genuinely unconvertible encodings throw
-      // into the catch below
-      val f0 = src.getFormat
-      val in =
-        if (f0.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-          f0.getSampleSizeInBits == 16) src
-        else javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new javax.sound.sampled.AudioFormat(
-            f0.getSampleRate, 16, f0.getChannels, true, false), src)
-      try {
-        val f = in.getFormat
-        if (in.getFrameLength <= 0 ||
-          in.getFrameLength * f.getFrameSize > MaxAudioBytes) None
-        else {
-          val bytes = in.readAllBytes()
-          val n = bytes.length / 2
-          if (n == 0) None
-          else {
-            val big = f.isBigEndian
-            var sumSq = 0.0; var peak = 0.0; var crossings = 0L; var prev = 0.0
-            val hist = new Array[Long](8)
-            var i = 0
-            while (i < n) {
-              val b0 = bytes(2 * i) & 0xff
-              val b1 = bytes(2 * i + 1) & 0xff
-              val s = (if (big) (b0 << 8) | b1 else (b1 << 8) | b0).toShort / 32768.0
-              sumSq += s * s
-              val a = math.abs(s)
-              if (a > peak) peak = a
-              hist(math.min(7, (a * 8).toInt)) += 1
-              if (i > 0 && s * prev < 0) crossings += 1
-              prev = s
-              i += 1
-            }
-            val out = new Array[Float](12)
-            out(0) = 1f
-            out(1) = math.sqrt(sumSq / n).toFloat
-            out(2) = peak.toFloat
-            out(3) = (if (n > 1) crossings.toDouble / (n - 1) else 0.0).toFloat
-            var j = 0
-            while (j < 8) { out(4 + j) = (hist(j).toDouble / n).toFloat; j += 1 }
-            Some(out)
-          }
-        }
-      } finally in.close()
-    } catch { case _: Exception => None }
-
-  /** REAL content-derived feature extraction — the classical-CV/DSP
-    * counterpart of [[extractFeaturesStub]]'s neural-encoder stand-in:
-    * every number is computed from DECODED pixels/samples, not hashed bytes.
-    * Fixed 12-dim vector per row (leading modality flag, then means/energy
-    * stats + an 8-bin histogram — see [[imageFeature]]/[[audioFeature]]);
-    * video payloads get their FIRST frame's image features (the BMP reader
-    * stops at frame 0, same contract as [[decode]]). Corrupt or unsupported
-    * payloads yield valid=false with a null vector instead of failing the
-    * batch. Narrow mapPartitions, no shuffle; deterministic; the vectors
-    * feed [[graft.operators.Ann]] and [[graft.operators.SemDedup]] exactly
-    * like embedding columns do (MultimodalSpec's bridge test runs media →
-    * features → SemDedup end-to-end), so multimodal near-dup removal is the
-    * same declarative pipeline as text-embedding dedup. */
-  def extractFeatures(media: DataFrame, maxPixels: Long = DefaultMaxImagePixels): DataFrame =
-    encodeFeatures(media, new ClassicalEncoder(maxPixels))
-
-  /** The classical bytes → vector kernel behind [[ClassicalEncoder]]: same
-    * sniff primitives as decodePayload (isRiff → audio, else the ImageIO
-    * family), so decode-validity and feature-validity agree. */
-  private[multimodal] def classicalFeature(
-      payload: Array[Byte], maxPixels: Long): Option[Array[Float]] =
-    if (payload == null) None
-    else if (isRiff(payload)) audioFeature(payload)
-    else readImageBounded(payload, maxPixels).map(imageFeature)
-
-  /** Output width of [[classicalFeature]] (modality flag + means/energy +
-    * 8-bin histogram). */
-  private[multimodal] val ClassicalFeatureDim: Int = 12
-
-  /** Encoder-agnostic feature extraction — the Spark PLUMBING half of the
-    * [[MediaEncoder]] seam: one narrow partition-batched pass, corrupt rows
-    * become valid=false instead of failing the batch, output
-    * (media_id, kind, valid, feature) ready for [[graft.operators.Ann]] /
-    * [[graft.operators.SemDedup]]. The encoder instance ships in the task
-    * closure — an implementation holding a lazy model handle (ONNX session,
-    * JNI model) loads once per executor JVM. A `kind` column is optional:
-    * encoders that sniff content (both shipped ones do) run on bare
-    * (media_id, payload) frames. */
-  def encodeFeatures(media: DataFrame, encoder: MediaEncoder): DataFrame = {
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val kindIdx = media.schema.fieldNames.indexOf("kind") // -1 when absent
-    media.mapPartitions { it =>
-      it.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        val kind = if (kindIdx >= 0) r.getString(kindIdx) else ""
-        encoder.encode(kind, payload) match {
-          case Some(v) =>
-            require(v.length == encoder.dim,
-              s"encoder emitted ${v.length}-dim vector, contract says ${encoder.dim}")
-            Row(r.getLong(idIdx), kind, true, v.toSeq)
-          case None => Row(r.getLong(idIdx), kind, false, null)
-        }
-      }
-    }(rowEncoder(FeatureSchema))
-  }
-
-  /** REAL raster resize: decode each image payload through ImageIO,
-    * nearest-neighbor sample the actual pixels to `targetW`×`targetH`, and
-    * re-encode as a 24-bit BMP — the output round-trips through [[decode]]
-    * at the new dimensions. Non-image rows and corrupt payloads pass through
-    * unchanged with resized=false rather than failing the batch. Narrow
-    * mapPartitions, no shuffle; deterministic (integer pixel indexing, no
-    * filtering kernel). */
-  def resize(media: DataFrame, targetW: Int, targetH: Int,
-      maxPixels: Long = DefaultMaxImagePixels): DataFrame = {
-    require(maxPixels >= 1, s"maxPixels must be >= 1 (got $maxPixels)")
-    require(targetW >= 1 && targetW <= 0xffff && targetH >= 1 && targetH <= 0xffff,
-      s"target dimensions out of range: ${targetW}x$targetH")
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("kind", StringType, nullable = false),
-      StructField("payload", BinaryType, nullable = true),
-      StructField("resized", BooleanType, nullable = false)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val kindIdx = media.schema.fieldIndex("kind")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    media.mapPartitions { it =>
-      it.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        val resizedPayload =
-          if (r.getString(kindIdx) != "image" || payload == null) None
-          else try {
-            // any ImageIO-readable format resizes (same family decode()
-            // accepts), allocation-bounded like decode
-            readImageBounded(payload, maxPixels).map { img =>
-              val (w, h) = (img.getWidth, img.getHeight)
-              val stride = bmpStride(targetW)
-              val pixels = new Array[Byte](stride * targetH)
-              var y = 0
-              while (y < targetH) {
-                // BMP rows are bottom-up; BufferedImage rows are top-down
-                val srcY = (y.toLong * h / targetH).toInt
-                val rowOff = (targetH - 1 - y) * stride
-                var x = 0
-                while (x < targetW) {
-                  val srcX = (x.toLong * w / targetW).toInt
-                  val rgb = img.getRGB(srcX, srcY)
-                  pixels(rowOff + 3 * x) = (rgb & 0xff).toByte // B
-                  pixels(rowOff + 3 * x + 1) = ((rgb >> 8) & 0xff).toByte // G
-                  pixels(rowOff + 3 * x + 2) = ((rgb >> 16) & 0xff).toByte // R
-                  x += 1
-                }
-                y += 1
-              }
-              encodeBmpPixels(targetW, targetH, pixels)
-            }
-          } catch { case _: Exception => None }
-        resizedPayload match {
-          case Some(p) => Row(r.getLong(idIdx), r.getString(kindIdx), p, true)
-          case None => Row(r.getLong(idIdx), r.getString(kindIdx), payload, false)
-        }
-      }
-    }(rowEncoder(schema))
   }
 
   /** 64-bit difference hash (dHash) of a decoded raster — the standard
@@ -813,8 +555,10 @@ object Multimodal {
     }(rowEncoder(schema))
   }
 
-  /** Per-frame channel means of a WAV payload, decoded through the same
-    * AudioSystem 16-bit path as [[audioFeature]] — the sample stream every
+  private val MaxAudioBytes: Long = 1L << 24 // 16 MiB of PCM per clip
+
+  /** Per-frame channel means of a WAV payload, decoded through
+    * AudioSystem's 16-bit path — the sample stream every
     * audio-content hash derives from. Averaging channels per frame makes
     * the value exactly CHANNEL-LAYOUT-INVARIANT: a mono clip duplicated to
     * stereo yields bit-identical frame means ((s + s) / 2 = s in IEEE). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,32 +9,17 @@ import graft.functions.{VectorExpressions => V}
 /** Nearest-neighbor search over an embedding column (`array<float>`).
   *
   * Three tiers, by scale:
-  *  - EXACT, production: the block-partitioned kernels ([[blockTopK]] /
+  *  - EXACT: the block-partitioned kernels ([[blockTopK]] /
   *    [[blockTopKJoin]] / [[blockPairsAbove]]) — O(n·m·d) arithmetic fully
   *    distributed with bounded per-task memory, no driver collect, no BNLJ.
   *    These are the registered/benched exact paths; the join form is the
   *    asymmetric batch-vs-corpus shape.
-  *  - EXACT, test oracles: the declarative join ([[bruteForceTopK]] /
-  *    [[cosinePairsAbove]]) and the broadcast-index kernel
-  *    ([[bruteForceTopKBroadcast]]) — reference implementations the block
-  *    kernels are proven row-identical against; the join forms materialize
-  *    O(n²) rows / BNLJ, the broadcast form bounds n by driver memory.
   *  - APPROXIMATE, extreme scale: multi-table hyperplane LSH ([[lshTopK]] /
   *    [[lshPairsAbove]]) and IVF ([[Ivf.ivfTopK]]) — bucket equi-joins, cost
   *    O(n · bucket-width · d); recall bought with `tables`/`nProbe`. Tune
   *    nBits up with log₂(n) to hold bucket width constant.
   */
 object Ann {
-
-  /** Majority length wins; ties break toward the smaller dimension. Using the
-    * majority — not the first row — means one corrupt (mismatched) vector can
-    * never silently disqualify the whole well-formed corpus. */
-  private[operators] def majorityDim(lengths: Iterator[Int]): Int = {
-    val counts = scala.collection.mutable.Map.empty[Int, Long]
-    lengths.foreach(l => counts(l) = counts.getOrElse(l, 0L) + 1L)
-    require(counts.nonEmpty, "majorityDim of an empty corpus")
-    counts.maxBy { case (d, c) => (c, -d.toLong) }._1
-  }
 
   /** Majority vector dimension of a frame plus the number of rows carrying
     * it, computed distributed (one count-by-length aggregation — a narrow
@@ -65,100 +50,6 @@ object Ann {
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select("id", "neighbor_id", "cosine", "rank")
-  }
-
-  /** Exact cosine top-k per vector: (id, neighbor_id, cosine, rank). */
-  def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val a = emb.select(col(idCol).as("id"), col(vecCol).as("__va"))
-    val b = emb.select(col(idCol).as("neighbor_id"), col(vecCol).as("__vb"))
-    topK(
-      a.join(b, col("id") =!= col("neighbor_id"))
-        .withColumn("cosine", V.vec_cosine(col("__va"), col("__vb"))),
-      k)
-  }
-
-  /** Exact cosine top-k via a broadcast index matrix: the corpus (id, vector)
-    * is collected and broadcast, and each partition scans its queries against
-    * it with a bounded top-k selection — no join, no shuffle, no O(n²) row
-    * materialization. On a well-formed corpus (non-null, uniform-dimension
-    * vectors, unique ids) the output is row-identical to [[bruteForceTopK]]
-    * (same double arithmetic, same (cosine desc, id asc) tie-break; proven by
-    * an identity spec); null or dimension-mismatched vectors are EXCLUDED
-    * from both sides (the join formulation instead ranks them with null
-    * cosine — exclusion is this kernel's contract).
-    *
-    * Bounds: the index must fit in DRIVER memory (one collect) and executor
-    * memory (the broadcast) — the inherent limit of exact brute force; past
-    * it, use [[lshTopK]]/[[Ivf.ivfTopK]]. Broadcasts are reclaimed by
-    * Spark's ContextCleaner once the returned frame becomes unreachable.
-    */
-  def bruteForceTopKBroadcast(
-      emb: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val pairs = emb.select(col(idCol).cast("long"), col(vecCol)).as[(Long, Seq[Float])]
-    val collected = pairs.collect().collect {
-      case (id, v) if v != null => (id, v.toArray)
-    }
-    val dim =
-      if (collected.isEmpty) 0 else majorityDim(collected.iterator.map(_._2.length))
-    val index = collected.filter(_._2.length == dim)
-    val bc = spark.sparkContext.broadcast(index)
-    pairs.mapPartitions { it =>
-      val idx = bc.value
-      it.flatMap {
-        case (_, null) => Iterator.empty
-        case (qid, qSeq) if qSeq.length == dim =>
-          val q = qSeq.toArray
-          var qn = 0.0
-          var i = 0
-          while (i < q.length) { qn += q(i).toDouble * q(i); i += 1 }
-          val qNorm = math.sqrt(qn)
-          // bounded selection: k best by (cosine desc, id asc); the index
-          // position breaks ties so duplicate corpus ids are all retained
-          val best = new java.util.TreeSet[(Double, Long, Int)](
-            Ordering.Tuple3(Ordering[Double].reverse, Ordering[Long], Ordering[Int]))
-          var j = 0
-          while (j < idx.length) {
-            val (nid, v) = idx(j)
-            if (nid != qid) {
-              var dot = 0.0; var vn = 0.0
-              var x = 0
-              while (x < v.length) {
-                dot += q(x).toDouble * v(x); vn += v(x).toDouble * v(x); x += 1
-              }
-              val cos = if (qn == 0.0 || vn == 0.0) 0.0 else dot / (qNorm * math.sqrt(vn))
-              best.add((cos, nid, j))
-              if (best.size > k) best.remove(best.last)
-            }
-            j += 1
-          }
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double, Long)]
-          val iter = best.iterator()
-          var rank = 1L
-          while (iter.hasNext) {
-            val (cos, nid, _) = iter.next()
-            out += ((qid, nid, cos, rank))
-            rank += 1
-          }
-          out.iterator
-        case _ => Iterator.empty
-      }
-    }.toDF("id", "neighbor_id", "cosine", "rank")
-  }
-
-  /** All pairs with cosine >= `threshold` — the exact near-duplicate pair
-    * scan, O(n²·d): the recall oracle for threshold dedup, not the production
-    * path. At scale, run [[lshTopK]]-style bucketing first and apply the
-    * threshold to candidates. */
-  def cosinePairsAbove(
-      emb: DataFrame, idCol: String, vecCol: String, threshold: Double): DataFrame = {
-    val a = emb.select(col(idCol).as("id_a"), col(vecCol).as("__va"))
-    val b = emb.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))
-    a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cosine", V.vec_cosine(col("__va"), col("__vb")))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
   }
 
   /** Candidate pairs sharing an LSH bucket in at least one of `tables`
@@ -230,8 +121,8 @@ object Ann {
 
   /** LSH-gated near-duplicate pairs: bucket candidates (no all-pairs stage),
     * then the TRUE cosine thresholded on candidates only — the production
-    * form of [[cosinePairsAbove]] at extreme scale. Approximate solely by
-    * candidate recall (a pair above threshold sharing no bucket is missed);
+    * form of the exact thresholded pair scan at extreme scale. Approximate
+    * solely by candidate recall (a pair above threshold sharing no bucket is missed);
     * every emitted cosine is exact. Recall-tested against the exact scan. */
   def lshPairsAbove(
       emb: DataFrame,
@@ -253,8 +144,8 @@ object Ann {
   // ---- Block-partitioned exact kernels ---------------------------------------
   //
   // Exact kNN / exact thresholded pairs are inherently O(n²·d) arithmetic; the
-  // scale question is only WHERE that arithmetic runs. The broadcast kernel
-  // above bounds n by driver + executor memory; the non-equi join formulation
+  // scale question is only WHERE that arithmetic runs. A broadcast index
+  // bounds n by driver + executor memory; a non-equi join formulation
   // materializes O(n²) rows through a BroadcastNestedLoopJoin. The block form
   // has neither choke point: the corpus is hash-split into `blocks` index
   // blocks (one shuffle), queries are replicated to every block (a `blocks`×
@@ -289,10 +180,7 @@ object Ann {
     * via [[autoBlocks]] from `n`, passed BY NAME — kernels that already hold
     * the majority-dim row count (free with the dim from
     * [[majorityDimAndCountOf]]) pass it directly and auto-resolution costs
-    * NO extra job; [[blockPairsAboveJoinWithDim]] passes a lazy
-    * `corpus.count()` that only runs when blocks is actually 0. Callers that
-    * invoke a kernel repeatedly against the same corpus (streaming
-    * micro-batches) should still resolve once and pin. */
+    * NO extra job. */
   private def resolveBlocks(blocks: Int, n: => Long, dim: Int, df: DataFrame): Int = {
     require(blocks >= 0, s"blocks must be >= 0 (0 = auto; got $blocks)")
     if (blocks > 0) blocks
@@ -464,7 +352,7 @@ object Ann {
   }
 
   /** Exact cosine top-k, block-partitioned (see block comment above): row-for-
-    * row identical to [[bruteForceTopKBroadcast]] on a well-formed corpus
+    * row identical to an exact broadcast-index scan on a well-formed corpus
     * (same double arithmetic, same (cosine desc, neighbor_id asc) order —
     * identity spec), with no driver collect and no broadcast: the production
     * registration of exact kNN. `blocks` trades per-task memory for query
@@ -541,9 +429,8 @@ object Ann {
     * [[blockTopK]], emitting (id_a, id_b, cosine) with id_a < id_b and
     * cosine >= `threshold`. Each unordered pair is scored exactly once (the
     * smaller id is always the query side; the index side holds the larger id).
-    * Replaces the O(n²)-row non-equi join of [[cosinePairsAbove]] as the
-    * registered exact pair scan; at extreme scale, prefer [[lshPairsAbove]]
-    * (candidate-gated). */
+    * Replaces an O(n²)-row non-equi join as the registered exact pair scan;
+    * at extreme scale, prefer [[lshPairsAbove]] (candidate-gated). */
   def blockPairsAbove(
       emb: DataFrame,
       idCol: String,
@@ -579,25 +466,8 @@ object Ann {
     val (dim, n) = majorityDimAndCountOf(corpus, cVec).getOrElse(
       return queries.select(col(qId).cast("long").as("query_id"),
         col(qId).cast("long").as("corpus_id"), lit(0.0).as("cosine")).limit(0))
-    blockPairsAboveJoinWithDim(queries, qId, qVec, corpus, cId, cVec, threshold, dim,
-      resolveBlocks(blocks, n, dim, corpus))
-  }
-
-  /** [[blockPairsAboveJoin]] with a PRECOMPUTED corpus dimension — for
-    * repeated invocations against a static corpus (per micro-batch in
-    * [[graft.streaming.EventStream.nearDupScreen]]): the per-call
-    * majority-dim aggregation job (a full corpus scan + driver collect) is
-    * paid once by the caller instead of once per call. */
-  def blockPairsAboveJoinWithDim(
-      queries: DataFrame, qId: String, qVec: String,
-      corpus: DataFrame, cId: String, cVec: String,
-      threshold: Double,
-      dim: Int,
-      blocks: Int = 0): DataFrame = {
     require(dim >= 1, s"dim must be >= 1 (got $dim)")
-    // blocks=0 here pays ONE corpus count (lazy by-name arg); repeated
-    // callers (streaming micro-batches) precompute and pin, like dim
-    val b = resolveBlocks(blocks, corpus.count(), dim, corpus)
+    val b = resolveBlocks(blocks, n, dim, corpus)
     cogroupBlocks(corpus, cId, cVec, queries, qId, qVec, b, dim)(
       pairScan(threshold, (_, _) => true))
       .select(col("id").as("query_id"), col("neighbor_id").as("corpus_id"), col("cosine"))

@@ -296,67 +296,6 @@ object AnnIndex {
     build(store, name, latest, "id", "vector", nClusters, sampleSize, iters)
   }
 
-  /** The outcome of one [[maybeRetrain]] policy evaluation. `recallAfter`
-    * is present only when a retrain actually ran. */
-  final case class RetrainDecision(
-      recallBefore: Double, retrained: Boolean, recallAfter: Option[Double])
-
-  /** Partial-probe RECALL of the index's current state — q174's staleness
-    * number as a reusable primitive: the production-shaped query
-    * (`nProbe` cells) measured against the full-probe twin on the SAME
-    * index state, which is exact by construction (the q147 device).
-    * `probes` is a SAMPLED query batch (idCol, vecCol) — the measurement
-    * costs two query passes over the probed cells, so keep it the
-    * monitoring sample, not the corpus. Returns hits/exact over the
-    * probes' top-k lists; an empty probe batch is rejected loudly (a
-    * recall of an empty set would read as healthy 0/0). */
-  def partialProbeRecall(
-      store: TableStore, name: String, probes: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int): Double = {
-    val approx = Loops.checkpoint(
-      query(store, name, probes, idCol, vecCol, k, nProbe), eager = true)
-    val exact = Loops.checkpoint(query(store, name, probes, idCol, vecCol, k,
-      nProbe = Int.MaxValue), eager = true)
-    val nExact = exact.count()
-    require(nExact > 0,
-      "partialProbeRecall: the probe batch produced no exact neighbors — " +
-        "an empty measurement would read as a healthy index")
-    val nHit = exact.select("id", "neighbor_id")
-      .join(approx.select("id", "neighbor_id"),
-        Seq("id", "neighbor_id"), "left_semi").count()
-    nHit.toDouble / nExact.toDouble
-  }
-
-  /** SCHEDULED-RETRAIN POLICY — the decision end of q174's staleness
-    * report: measure [[partialProbeRecall]] on the probe sample; if it
-    * sits at or above `recallFloor`, do nothing (the cheap steady-state
-    * path — two probe-sized query passes); below the floor, run the full
-    * [[compact]] + [[retrain]] maintenance pass (O(index), the q174
-    * recovery) and re-measure so the decision record carries the recovery
-    * evidence. Returns [[RetrainDecision]]. The measurement is
-    * deterministic for a fixed index state and probe batch, so the policy
-    * never flaps on noise — only on real drift. Single-writer contract as
-    * [[compact]]/[[retrain]]: run it on the maintenance cadence, never
-    * concurrently with ingest. */
-  def maybeRetrain(
-      store: TableStore, name: String, probes: DataFrame,
-      idCol: String, vecCol: String, k: Int, nProbe: Int,
-      recallFloor: Double, nClusters: Int,
-      sampleSize: Int = 2048, iters: Int = 8): RetrainDecision = {
-    require(recallFloor > 0.0 && recallFloor <= 1.0,
-      s"recallFloor must be in (0, 1] (got $recallFloor)")
-    val before = partialProbeRecall(store, name, probes, idCol, vecCol, k,
-      nProbe)
-    if (before >= recallFloor) RetrainDecision(before, retrained = false, None)
-    else {
-      compact(store, name)
-      retrain(store, name, nClusters, sampleSize, iters)
-      val after = partialProbeRecall(store, name, probes, idCol, vecCol, k,
-        nProbe)
-      RetrainDecision(before, retrained = true, Some(after))
-    }
-  }
-
   /** Top-k cosine neighbors of each query from the persisted index:
     * (id, neighbor_id, cosine, rank). Rows whose neighbor id equals the
     * query id are excluded (self-join convention shared with the exact

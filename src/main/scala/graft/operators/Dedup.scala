@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Text, VectorExpressions => V}
 
-/** Document deduplication at scale: exact groups via content fingerprint, and
-  * MinHash + LSH banding for near-duplicates.
+/** Document deduplication at scale: MinHash + LSH banding for
+  * near-duplicates.
   *
   * The banding layout makes near-dup detection O(n · bands) instead of O(n²):
   * the only shuffles are (1) the band-bucket self-join keyed on
@@ -20,14 +20,6 @@ import graft.functions.{Text, VectorExpressions => V}
 object Dedup {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Exact duplicate groups keyed by the normalized-content fingerprint
-    * (case/whitespace-insensitive). Returns (fingerprint, keep_id, dup_count)
-    * with the smallest id as the canonical representative.
-    */
-  def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(Text.contentFingerprint(col(textCol)).as("fingerprint"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))
 
   /** MinHash-LSH near-duplicate candidate pairs, verified by estimated Jaccard
     * (fraction of agreeing MinHash slots). Output: (id_a, id_b, est_jaccard)

@@ -22,8 +22,7 @@ import graft.functions.Text
   *
   * Scale shape: token explode scan-local; the (doc, bucket) count is one
   * map-side-combined groupBy; the norm is a per-doc rollup joined back by
-  * id; [[dense]] assembles the fixed-width array scan-locally from a map
-  * literal — no window, no all-pairs, nothing driver-side.
+  * id — no window, no all-pairs, nothing driver-side.
   */
 object HashedEmbedding {
 
@@ -48,18 +47,4 @@ object HashedEmbedding {
         (col("__cnt").cast("double") / sqrt(col("__ss").cast("double")))
           .as("weight"))
   }
-
-  /** Dense form: `(id, embedding array<float> of 256)` — the shape
-    * [[Ann]]/[[SemDedup]] consume. Absent buckets are 0f; blank documents
-    * are absent entirely (callers keep them via a left join, mirroring the
-    * corrupt-row contract of the neural-embedding path). */
-  def dense(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    sparse(df, idCol, textCol)
-      .groupBy(idCol)
-      .agg(map_from_entries(collect_list(
-        struct(col("bucket"), col("weight")))).as("__m"))
-      .select(col(idCol),
-        transform(sequence(lit(0L), lit(255L)),
-          i => coalesce(element_at(col("__m"), i), lit(0.0)).cast("float"))
-          .as("embedding"))
 }

@@ -26,9 +26,9 @@ import graft.functions.{Sketches, Text}
   * both check. `eps` tunes pruning power only (error ≤ eps×N): an undersized
   * sketch admits extra tail grams — slower, never wrong.
   *
-  * Two full scans vs one is the CMS trade (same as [[BloomScreen]]'s
-  * build-vs-probe split): at scale the sketch build is a map-side-combined
-  * aggregate with a constant-size result per partition, and the second scan
+  * Two full scans vs one is the CMS trade (a build-vs-probe split): at
+  * scale the sketch build is a map-side-combined aggregate with a
+  * constant-size result per partition, and the second scan
   * is the one that would have happened anyway — the win is replacing a
   * full-vocabulary exchange with a candidates-only exchange.
   */

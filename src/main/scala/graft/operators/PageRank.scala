@@ -49,8 +49,8 @@ import org.apache.spark.sql.functions._
   * references `ranks` twice (contributions + dangling) and a lazy chain
   * re-executes prior iterations exponentially (measured: iters=3 ran the
   * first iteration's joins 4×). The per-round frame is node-sized, so the
-  * cut is cheap; deep convergence-driven runs also keep a constant-size
-  * plan. The edge/node/outW caches are released once the final ranks are
+  * cut is cheap; deep runs also keep a constant-size plan. The
+  * edge/node/outW caches are released once the final ranks are
   * materialized.
   */
 object PageRank {
@@ -63,15 +63,16 @@ object PageRank {
     * the loop), so the returned frame is a node-sized checkpoint scan, not a
     * lazy plan. Callers that EXPLAIN the result see only that scan;
     * the per-iteration join shape is asserted directly in GraphSearchSpec
-    * ("per-iteration plan shape") against [[lazyPlan]]'s un-checkpointed
-    * chain, which is why registered-query plan sweeps don't need to see it. */
+    * ("per-iteration plan shape") on the plan the final checkpoint
+    * executes, which is why registered-query plan sweeps don't need to see
+    * it. */
   def run(
       edges: DataFrame,
       iters: Int,
       damping: Double = 0.85,
       deterministic: Boolean = true,
       checkpointEvery: Int = 1): DataFrame =
-    impl(edges, iters, damping, deterministic, checkpointEvery, eager = true)
+    impl(edges, iters, damping, deterministic, checkpointEvery)
 
   /** INCREMENTAL MAINTENANCE form: [[run]] warm-started from a previous
     * rank vector — the daily-refresh policy a production crawl rank runs
@@ -92,43 +93,8 @@ object PageRank {
       damping: Double = 0.85,
       deterministic: Boolean = false,
       checkpointEvery: Int = 1): DataFrame =
-    impl(edges, iters, damping, deterministic, checkpointEvery, eager = true,
+    impl(edges, iters, damping, deterministic, checkpointEvery,
       init = Some(prevRanks.select(col("node"), col("rank"))))
-
-  /** The same computation with NO materialization anywhere — the full
-    * iteration chain as one lazy plan. Spec-only: lets PlanSpec/OperatorsSpec
-    * EXPLAIN the per-iteration join+rollup shape that [[run]]'s eager
-    * checkpoints hide. Never call at depth in production: the lazy chain
-    * re-executes prior rounds exponentially (the measured 4×-at-iters-3
-    * hazard [[run]] exists to avoid). */
-  private[graft] def lazyPlan(
-      edges: DataFrame,
-      iters: Int,
-      damping: Double = 0.85,
-      deterministic: Boolean = true): DataFrame =
-    impl(edges, iters, damping, deterministic, Int.MaxValue, eager = false)
-
-  /** Convergence-driven variant: iterate until the L1 rank delta between
-    * consecutive rounds falls under `tol`, capped at `maxIters` — the form
-    * a production crawl-rank actually runs (fixed small iteration counts
-    * are an oracle convenience; real graphs converge at data-dependent
-    * depth). Per round this adds ONE node-sized join + one scalar rollup
-    * (trivial next to the edge×rank join); every round is materialized (the
-    * delta needs both generations, and [[run]]'s re-execution argument
-    * applies doubly at convergence depth). Defaults to the production
-    * sum-fold mode; the delta itself folds unordered, so its ulp noise is
-    * immaterial against any sane `tol` (≫ 1e-15). Not driver-oracled — the
-    * executed depth is data-dependent — but spec-pinned: the fixed point
-    * matches deep fixed-iteration runs and the cap is honored. */
-  def runConverged(
-      edges: DataFrame,
-      tol: Double,
-      maxIters: Int = 100,
-      damping: Double = 0.85,
-      deterministic: Boolean = false): DataFrame = {
-    require(tol > 0.0, s"tol must be > 0 (got $tol)")
-    impl(edges, maxIters, damping, deterministic, 1, eager = true, tol = Some(tol))
-  }
 
   /** PERSONALIZED PageRank (the TrustRank family — Gyöngyi et al. VLDB'04):
     * the teleport distribution is uniform over `seeds` instead of over all
@@ -148,7 +114,7 @@ object PageRank {
       damping: Double = 0.85,
       deterministic: Boolean = false,
       checkpointEvery: Int = 1): DataFrame =
-    impl(edges, iters, damping, deterministic, checkpointEvery, eager = true,
+    impl(edges, iters, damping, deterministic, checkpointEvery,
       teleport = Some(seeds))
 
   private def impl(
@@ -157,8 +123,6 @@ object PageRank {
       damping: Double,
       deterministic: Boolean,
       checkpointEvery: Int,
-      eager: Boolean,
-      tol: Option[Double] = None,
       teleport: Option[DataFrame] = None,
       init: Option[DataFrame] = None): DataFrame = {
     require(teleport.isEmpty || init.isEmpty,
@@ -175,19 +139,16 @@ object PageRank {
     // raise branch IS the NULL path).
     def diag(c: org.apache.spark.sql.Column) =
       coalesce(c.cast("string"), lit("NULL"))
-    // cache only on the eager path: [[run]] unpersists after materializing,
-    // while the spec-only lazyPlan returns BEFORE execution — persisting
-    // there would leak three cached frames per call with no one to release
-    def cached(df: DataFrame): DataFrame = if (eager) df.persist() else df
-    val e = cached(edges.select(col("src"), col("dst"),
+    // cached for the whole run; released once the final ranks materialize
+    val e = edges.select(col("src"), col("dst"),
       when(col("w") > 0, col("w")).otherwise(raise_error(concat(
         lit("PageRank: edge weight must be > 0 (w <= 0 would NaN-poison ranks); got "),
         diag(col("w")), lit(" on edge "),
         diag(col("src")), lit(" -> "), diag(col("dst")))))
-        .as("w")))
-    val nodes = cached(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct())
-    val outW = cached(e.groupBy("src").agg(sum("w").as("ow")))
+        .as("w")).persist()
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct().persist()
+    val outW = e.groupBy("src").agg(sum("w").as("ow")).persist()
     val nRow = nodes.agg(count(lit(1)).as("__n"))
     val nD = col("__n").cast("double")
 
@@ -231,13 +192,12 @@ object PageRank {
     }
 
     var i = 1
-    var converged = false
     // the last two in-loop checkpoints (r18b: lazy rounds defer each free
     // one more generation — see the loop comment); rounds otherwise pile
     // up in the block manager for the session (r18)
     var lastCkpt: DataFrame = null
     var prevCkpt: DataFrame = null
-    while (i <= iters && !converged) {
+    while (i <= iters) {
       val contribs = e
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .join(outW, Seq("src"))
@@ -270,43 +230,29 @@ object PageRank {
       // so an UNcheckpointed chain re-executes prior iterations
       // exponentially — at iters=3 the first iteration's joins run 4×. The
       // frame is node-sized (the broadcastable side). r18b: the checkpoint
-      // is LAZY — once persisted (at the next round's stage build, or the
-      // tol delta probe) both references read the same blocks, so the
+      // is LAZY — once persisted (at the next round's stage build) both
+      // references read the same blocks, so the
       // double-reference argument is unaffected while the eager count job
       // per round disappears; frees defer one generation (storage rule 2
       // in [[Loops]]). `checkpointEvery` can stretch the cadence for
       // callers who prefer re-execution over materialization (it also
       // still truncates lineage for deep runs).
       val newCkpt =
-        if (eager && (tol.isDefined || (i % checkpointEvery == 0 && i < iters)))
+        if (i % checkpointEvery == 0 && i < iters)
           Some(Loops.checkpoint(next, eager = false))
         else None
-      val nextMat = newCkpt.getOrElse(next)
-      // convergence mode: one node-sized equi-join + scalar rollup per round
-      // (reads the PREVIOUS round too — it is freed only after this; the
-      // probe is also the round's materializing action under tol)
-      tol.foreach { t =>
-        val delta = nextMat
-          .join(ranks.withColumnRenamed("rank", "__prev"), Seq("node"))
-          .agg(coalesce(sum(abs(col("rank") - col("__prev"))), lit(0.0)))
-          .collect()(0).getDouble(0)
-        if (delta < t) converged = true
-      }
       newCkpt.foreach { r =>
-        // round i−1 materialized while this round's stages built (or in the
-        // tol probe above) — its parent, round i−2, is now provably dead
+        // round i−1 materialized while this round's stages built — its
+        // parent, round i−2, is now provably dead
         if (prevCkpt != null) Loops.free(prevCkpt)
         prevCkpt = lastCkpt
         lastCkpt = r
       }
-      ranks = nextMat
+      ranks = newCkpt.getOrElse(next)
       i += 1
     }
-    if (!eager) ranks
-    else {
-      val result = Loops.checkpoint(ranks, eager = true)
-      e.unpersist(); nodes.unpersist(); outW.unpersist()
-      result
-    }
+    val result = Loops.checkpoint(ranks, eager = true)
+    e.unpersist(); nodes.unpersist(); outW.unpersist()
+    result
   }
 }

@@ -14,25 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** collect_list over (keys) with `salt`-way pre-aggregation; order within
-    * the merged list is not defined (like collect_list itself). Output:
-    * keys* + `alias` (array of `valueCol`'s type). Salt = hash(value) keeps
-    * the plan fully deterministic; a hot key whose rows share ONE identical
-    * value would defeat the split — salt on a second column in that case. */
-  def saltedCollectList(
-      df: DataFrame,
-      keys: Seq[String],
-      valueCol: Column,
-      alias: String,
-      salt: Int = 16): DataFrame = {
-    require(salt >= 1, s"salt must be >= 1 (got $salt)")
-    df.withColumn("__salt", pmod(hash(valueCol), lit(salt)))
-      .groupBy((keys.map(col) :+ col("__salt")): _*)
-      .agg(collect_list(valueCol).as("__part"))
-      .groupBy(keys.map(col): _*)
-      .agg(flatten(collect_list(col("__part"))).as(alias))
-  }
-
   /** collect_set with salting: per-salt sets, merged and deduplicated. */
   def saltedCollectSet(
       df: DataFrame,

@@ -22,9 +22,8 @@ import org.apache.spark.sql.functions._
   * small-world link graphs — and hard-capped by `maxRounds`. The distance
   * and frontier frames are node-sized; both materialize per round
   * (`localCheckpoint`, the [[PageRank]]/[[Bfs]] re-execution argument), and
-  * the loop stops EAGERLY the first round that improves nothing — the
-  * convergence test [[PageRank.runConverged]] uses. Weights are exact
-  * non-negative LONGS end-to-end (min-plus on negative weights never
+  * the loop stops EAGERLY the first round that improves nothing. Weights
+  * are exact non-negative LONGS end-to-end (min-plus on negative weights never
   * terminates — rejected up front), so distances are engine-exact and
   * DuckDB-oracle-able by an unrolled Bellman–Ford layer chain (q172).
   */

@@ -34,31 +34,15 @@ object EventStream {
       n_events: Long,
       sum_value: Double)
 
-  final case class FunnelProgress(
-      user_id: Long,
-      steps_completed: Int,
-      completed: Boolean,
-      last_step_ts: Timestamp)
-
   /** Event-time windowed counts per event type: tumbling `windowDur` windows,
     * late data beyond `watermark` dropped, window state evicted as the
-    * watermark passes (bounded state at any input rate).
-    */
-  def windowedCounts(events: DataFrame, watermark: String, windowDur: String): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(
-        col("window.start").as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-
-  /** [[windowedCounts]] with the value sum routed through DECIMAL(18,2) —
-    * the oracle-exact form (the q141 policy: exact decimal addition is
-    * order-independent, so the streamed sum is bit-identical to any batch
-    * engine's). Used by the driver-oracled append-mode registration, where
-    * the accumulated sink is hash-compared against batch SQL: a double sum
-    * would drift by partial-aggregation order, a decimal sum cannot. */
+    * watermark passes (bounded state at any input rate). The value sum is
+    * routed through DECIMAL(18,2) — the oracle-exact form (the q141 policy:
+    * exact decimal addition is order-independent, so the streamed sum is
+    * bit-identical to any batch engine's). Used by the driver-oracled
+    * append-mode registration, where the accumulated sink is hash-compared
+    * against batch SQL: a double sum would drift by partial-aggregation
+    * order, a decimal sum cannot. */
   def windowedCountsExact(events: DataFrame, watermark: String, windowDur: String): DataFrame =
     events
       .withWatermark("ts", watermark)
@@ -69,24 +53,6 @@ object EventStream {
         col("window.start").as("window_start"),
         col("event_type"), col("n_events"),
         col("__sum").cast("double").as("sum_value"))
-
-  /** Streaming exact dedup: drops any row whose `keyCols` combination was
-    * already seen within the watermark horizon — the streaming-ingest form
-    * of exact dedup for a training-data feed. The first occurrence is
-    * emitted immediately (append mode, no watermark latency); seen-key state
-    * is evicted as the watermark passes, so state stays bounded at any input
-    * rate. The documented tradeoff of bounded state: a duplicate arriving
-    * later than the watermark horizon is not caught — at ingest scale, pair
-    * this with the batch [[graft.operators.Dedup]] sweep downstream.
-    */
-  def dedupWithinWatermark(
-      events: DataFrame,
-      tsCol: String,
-      watermark: String,
-      keyCols: Seq[String]): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
 
   /** Streaming exact-dedup rollup: the per-content-hash keeper/copy-count
     * aggregation maintained as STREAMING STATE — each micro-batch folds
@@ -116,8 +82,8 @@ object EventStream {
     * projection — no watermark, no state store, identical semantics to the
     * batch path by construction (asserted per batch in StreamingSpec).
     * The one q41 stage that needs state — exact-dedup canonicalization — is
-    * deliberately not fused in: compose with [[dedupWithinWatermark]] keyed
-    * on a content hash for the streaming form of that stage.
+    * deliberately not fused in: [[dedupRollup]] is the streaming form of
+    * that stage.
     *
     * Returns the gated stream with lang_pred / quality_score / n_tokens
     * columns and `textCol` scrubbed IN PLACE — the same contract as the
@@ -147,43 +113,6 @@ object EventStream {
         col("quality_score") >= minQuality &&
         col("n_tokens").between(tokenRange._1, tokenRange._2))
   }
-
-  /** Constant-space exact-content membership screen on a document STREAM:
-    * every arriving row gains a `might_exist` flag probed against a Bloom
-    * sketch of the stored corpus's content keys
-    * ([[graft.operators.BloomScreen]]). A STATELESS projection — no
-    * watermark, no state store, no per-batch join against the corpus: the
-    * sketch rides the plan and each row pays one hash probe, which is the
-    * cheapest possible first stage of ingest dedup (flagged rows go on to
-    * the exact keyed lookup; unflagged rows are GUARANTEED new). Rebuild
-    * the sketch when the corpus generation advances — it is a snapshot, so
-    * rows upserted mid-stream probe as new until then (false negatives
-    * never; stale positives only). */
-  def bloomScreen(
-      docs: DataFrame,
-      keyCol: String,
-      bf: org.apache.spark.util.sketch.BloomFilter,
-      flagCol: String = "might_exist"): DataFrame =
-    graft.operators.BloomScreen.screen(docs, keyCol, bf, flagCol)
-
-  /** Stream-static enrichment join: each micro-batch joins against a STATIC
-    * dimension frame — the standard ingest-enrichment shape (events × user /
-    * tenant / source dim). A stream-static join carries NO streaming state
-    * (the static side is re-planned per batch), so the only scale question
-    * is keeping the fact side shuffle-free: with `broadcastDim = true` (the
-    * default, right for dims under Spark's 8 GB broadcast hard limit) the
-    * dim is broadcast explicitly; pass `false` for a dim too large to
-    * broadcast and let Catalyst plan a shuffled join instead of dying at
-    * runtime on the forced hint. Left join: an event with no dim row passes
-    * through with nulls rather than silently dropping — at ingest time,
-    * completeness beats lookup hygiene.
-    */
-  def enrichWithDim(
-      events: DataFrame,
-      dim: DataFrame,
-      keys: Seq[String],
-      broadcastDim: Boolean = true): DataFrame =
-    events.join(if (broadcastDim) broadcast(dim) else dim, keys, "left")
 
   /** Watermarked stream-stream interval join: correlate two live streams on
     * equality `keys` where the right event lands within
@@ -260,333 +189,6 @@ object EventStream {
     l.join(r, keyCond && bound, joinType)
       .select(leftCols ++
         right.columns.filterNot(keys.contains).map(c => col(s"__r.$c")): _*)
-  }
-
-  /** Incremental near-duplicate screening of a document STREAM against a
-    * static embedding corpus: each micro-batch runs the exact block-
-    * partitioned pair scan ([[graft.operators.Ann.blockPairsAboveJoinWithDim]])
-    * via `foreachBatch` — the batch kernel unchanged, applied per batch —
-    * and `emit` receives that batch's (query_id, corpus_id, cosine)
-    * verdicts. foreachBatch is the standard bridge for batch-only shapes
-    * (cogroup is not a streaming operator): state lives in the static
-    * corpus, not the stream, so nothing accumulates across batches. The
-    * corpus dimension is computed ONCE up front (not per batch); persist
-    * the corpus frame for repeated-scan economy — its lifecycle belongs to
-    * the caller. `configure` receives the writer before `start()` — set
-    * `checkpointLocation` (mandatory for restartable sources: without it
-    * offsets live in a temp dir and a driver restart reprocesses or skips),
-    * trigger, and queryName there. Returns the started query (caller stops
-    * it).
-    */
-  def nearDupScreen(
-      docs: DataFrame,
-      idCol: String,
-      vecCol: String,
-      corpus: DataFrame,
-      corpusId: String,
-      corpusVec: String,
-      threshold: Double,
-      configure: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =>
-        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = identity)(
-      emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    // ONE pre-pass job resolves dim AND block count for the whole query's
-    // lifetime — per-batch auto-resolution would re-count the static corpus
-    // every micro-batch
-    val (dim, corpusRows) = graft.operators.Ann.majorityDimAndCountOf(corpus, corpusVec)
-      .getOrElse(throw new IllegalArgumentException(
-        "near-dup screen: corpus has no valid vectors to screen against"))
-    val blocks = graft.operators.Ann.autoBlocks(
-      corpusRows, dim, corpus.sparkSession.sparkContext.defaultParallelism)
-    configure(
-      docs.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          emit(graft.operators.Ann.blockPairsAboveJoinWithDim(
-            batch, idCol, vecCol, corpus, corpusId, corpusVec, threshold, dim, blocks))
-        })
-      .start()
-  }
-
-  /** Incremental decontamination screening of a document STREAM against a
-    * static evaluation corpus: each micro-batch runs the exact q52 kernel
-    * ([[graft.operators.Decontamination.sharedShingleCounts]]) via
-    * `foreachBatch` — ingest-time benchmark-leakage detection, so a
-    * contaminated document is flagged the moment it arrives instead of at
-    * the next batch sweep. `emit` receives that batch's (doc id, n_shared)
-    * verdicts. Same bridge rationale as [[nearDupScreen]]: the kernel's
-    * aggregation shape is batch-only, and state lives entirely in the
-    * static eval corpus — nothing accumulates across batches. The eval
-    * frame is re-planned per batch (its DISTINCT shingles broadcast, the
-    * batch side never shuffles before the join — the q52 plan contract);
-    * persist it for repeated-scan economy — its lifecycle belongs to the
-    * caller. `maxShingleDf` keeps the boilerplate cap available, but note
-    * its document frequency is computed over each BATCH, not the full
-    * stream — leave it unlimited unless batches are corpus-sized.
-    * `configure` receives the writer before `start()` — set
-    * `checkpointLocation`, trigger, and queryName there. Returns the
-    * started query (caller stops it). */
-  def decontaminationScreen(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      eval: DataFrame,
-      n: Int = graft.functions.Curation.DeconNgram,
-      maxShingleDf: Long = Long.MaxValue,
-      configure: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =>
-        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = identity)(
-      emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    configure(
-      docs.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          emit(graft.operators.Decontamination.sharedShingleCounts(
-            batch, eval, idCol, textCol, n, maxShingleDf))
-        })
-      .start()
-
-  /** Incremental TEXT near-duplicate screening of a document STREAM against
-    * a static document corpus: each micro-batch runs the asymmetric
-    * LSH-gated exact-Jaccard kernel
-    * ([[graft.operators.Dedup.lshJaccardPairsJoin]]) via `foreachBatch`,
-    * and `emit` receives that batch's (new_id, corpus_id, jaccard)
-    * verdicts — the text counterpart of [[nearDupScreen]], completing the
-    * pair: embedding screen for semantic near-dups, shingle screen for
-    * lexical ones. Same bridge rationale: the kernel's candidate-distinct
-    * and rejoin shapes are batch-only, and state lives entirely in the
-    * static corpus — nothing accumulates across batches. The corpus is
-    * re-shingled and re-signed per batch by this bridge; persist the
-    * corpus frame (or pre-materialize its banded signatures upstream) for
-    * repeated-scan economy — its lifecycle belongs to the caller.
-    * `configure` receives the writer before `start()` — set
-    * `checkpointLocation`, trigger, and queryName there. Returns the
-    * started query (caller stops it). */
-  def textNearDupScreen(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      corpus: DataFrame,
-      shingleSize: Int = 3,
-      k: Int = 64,
-      bands: Int = 32,
-      minJaccard: Double = 0.5,
-      configure: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =>
-        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = identity)(
-      emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    configure(
-      docs.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          emit(graft.operators.Dedup.lshJaccardPairsJoin(
-            batch, corpus, idCol, textCol, shingleSize, k, bands, minJaccard))
-        })
-      .start()
-
-  /** Incremental unigram-LM quality screening of a document STREAM against
-    * a FROZEN reference corpus: each micro-batch is scored with the exact
-    * q74-family kernel ([[graft.operators.UnigramLm.scoreAgainst]]) via
-    * `foreachBatch`, and `emit` receives that batch's (doc id, n_tokens,
-    * sum_df, n_oov, mean_tok_prob) verdicts — the statistical companion to
-    * [[curateStream]]'s rule gate, in CCNet order at ingest time. The
-    * reference statistics are trained ONCE up front ([[graft.operators.UnigramLm.stats]]
-    * — train them on yesterday's curated corpus, not on the stream); state
-    * lives entirely in that static vocabulary frame, nothing accumulates
-    * across batches. Persist `refCorpus`-derived stats for repeated-scan
-    * economy — the vocabulary frame's lifecycle belongs to the caller via
-    * the overload taking (freq, nTotal) directly. `configure` receives the
-    * writer before `start()` — set `checkpointLocation`, trigger, and
-    * queryName there. Returns the started query (caller stops it). */
-  def unigramScreen(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      freq: DataFrame,
-      nTotal: Long,
-      configure: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =>
-        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = identity)(
-      emit: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    configure(
-      docs.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          emit(graft.operators.UnigramLm.scoreAgainst(batch, idCol, textCol, freq, nTotal))
-        })
-      .start()
-
-  /** STREAMING corpus ingest: every micro-batch runs the full incremental
-    * ingest driver ([[graft.CuratePipeline.ingestBatch]] — gate → self
-    * near-dup prune → asymmetric corpus screen → asymmetric decontamination
-    * → scrub → keyed upsert into the standing curated corpus) via
-    * `foreachBatch`, and `onBatch` receives each batch's per-stage counts.
-    * This is the end of the ingest story: the same screens the batch
-    * pipeline runs nightly, applied the moment documents arrive, with the
-    * corpus's generation-parity invariant preserved across every batch.
-    * Cost note: with the corpus in the keyed layout
-    * ([[graft.io.TableStore.upsertKeyed]]) each micro-batch rewrites ONLY
-    * the doc_id hash buckets its survivors touch — O(batch), not
-    * O(corpus); a legacy non-keyed corpus is migrated by the first batch's
-    * one full rewrite. foreachBatch is the right bridge
-    * because the kernels aggregate and the sink is a swap — neither is a
-    * streaming operator. `configure` receives the writer before `start()` —
-    * set `checkpointLocation`, trigger, and queryName there. Returns the
-    * started query (caller stops it). */
-  def ingestStream(
-      docs: DataFrame,
-      store: graft.io.TableStore,
-      configure: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =>
-        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = identity)(
-      onBatch: graft.CuratePipeline.IngestCounts => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    configure(
-      docs.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            onBatch(graft.CuratePipeline.ingestBatch(batch.sparkSession, batch, store))
-        })
-      .start()
-
-  /** Streaming conversion funnel — the stateful arrival-time form of the
-    * batch q87 kernel ([[graft.operators.OrderedAnalytics.funnel]]): per
-    * user, match `steps` as a strictly-time-increasing subsequence, holding
-    * only the matched step times as state (O(steps) longs per live user).
-    * Emits one [[FunnelProgress]] row per user per micro-batch IN WHICH THE
-    * FUNNEL ADVANCED — an append-only progress feed; the final row per user
-    * has `completed = true` or their stalled step count.
-    *
-    * Divergence from the exact batch kernel (the sessionize precedent of a
-    * documented streaming trade): matching is greedy in ARRIVAL order
-    * (batches sorted by event time internally, so in-order streams
-    * reproduce q87 exactly), and an out-of-order event arriving in a later
-    * batch with a timestamp at or before the last matched step cannot
-    * retro-improve the match — the dropped anchor would require replaying
-    * history the state no longer holds. Same-instant events never advance
-    * (the q87 strictness contract).
-    *
-    * State is bounded two ways: completed users' state is dropped
-    * immediately (no further row can change anything), and stalled users
-    * expire via event-time timeout `idleGapMillis` past their last matched
-    * step once the watermark passes — an expiry, not an emission, so no
-    * duplicate rows.
-    */
-  def funnelScreen(
-      events: Dataset[Event],
-      steps: Seq[String],
-      watermark: String,
-      idleGapMillis: Long): Dataset[FunnelProgress] = {
-    require(steps.nonEmpty, "funnel needs at least one step")
-    require(steps.distinct.length == steps.length,
-      s"funnel steps must be distinct (got $steps)")
-    // gap 0 would set the idle timeout AT the advancing event's own
-    // timestamp: for an event at the watermark that lands at/below the
-    // current watermark, which setTimeoutTimestamp rejects at RUNTIME and
-    // fails the whole query — same contract as sessionize's gap
-    require(idleGapMillis > 0, s"idleGapMillis must be > 0 (got $idleGapMillis)")
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[Long], FunnelProgress](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[List[Long]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var times = state.getOption.getOrElse(Nil) // ascending matched step times (ms)
-            val before = times.length
-            for (e <- batch.toSeq.sortBy(_.ts.getTime)) {
-              val t = e.ts.getTime
-              if (times.length < steps.length && e.event_type == steps(times.length) &&
-                  (times.isEmpty || t > times.last))
-                times = times :+ t
-            }
-            if (times.length == before) Iterator.empty
-            else {
-              val done = times.length == steps.length
-              if (done) state.remove() // nothing can ever change; free the slot
-              else {
-                state.update(times)
-                state.setTimeoutTimestamp(times.last + idleGapMillis)
-              }
-              Iterator.single(FunnelProgress(
-                userId, times.length, done, new Timestamp(times.last)))
-            }
-          }
-      }
-  }
-
-  /** One NEW (cohort_day, offset_days) activity cell for one user — the
-    * increment form of the q88 retention triangle: summing increments per
-    * (cohort_day, offset_days) is the batch `n_active`. */
-  final case class RetentionIncrement(user_id: Long, cohort_day: Long, offset_days: Long)
-
-  /** Internal keyed state of [[retentionScreen]] — public only because
-    * generated deserializer code constructs it. */
-  final case class RetentionState(cohortDay: Long, seen: Array[Long])
-
-  /** Streaming retention ([[graft.operators.Cohorts.retention]]'s increment
-    * form): per-user keyed state holds the cohort day (first ARRIVING
-    * event's day — arrival-order cohort assignment, the funnel/sessionize
-    * streaming trade: an earlier-day event arriving late within the
-    * watermark joins the existing cohort rather than retro-moving it) and
-    * the set of offsets already emitted; each event whose
-    * `day − cohort_day` offset is NEW emits exactly one increment row.
-    * Rolling the increments up per (cohort_day, offset_days) reproduces the
-    * batch kernel's `n_active` exactly for in-order streams (spec-pinned);
-    * cohort sizes are the offset-0 cells.
-    *
-    * State is O(distinct active days per user) — bounded by the reporting
-    * horizon, not the event count — and expires via event-time timeout
-    * `idleTimeoutMillis` past the user's last activity (an expiry, not an
-    * emission: no duplicate rows; a user re-appearing later restarts as a
-    * NEW cohort member, the documented horizon semantics).
-    */
-  def retentionScreen(
-      events: Dataset[Event],
-      watermark: String,
-      idleTimeoutMillis: Long,
-      dayMillis: Long = 86400000L): Dataset[RetentionIncrement] = {
-    require(dayMillis > 0, s"dayMillis must be > 0 (got $dayMillis)")
-    require(idleTimeoutMillis > 0,
-      s"idleTimeoutMillis must be > 0 (got $idleTimeoutMillis)") // funnel contract
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[RetentionState, RetentionIncrement](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[RetentionState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var lastMs = Long.MinValue
-            var out = List.empty[RetentionIncrement]
-            var st = state.getOption.orNull
-            for (e <- batch.toSeq.sortBy(_.ts.getTime)) {
-              val ms = e.ts.getTime
-              if (ms > lastMs) lastMs = ms
-              val day = Math.floorDiv(ms, dayMillis)
-              if (st == null) {
-                st = RetentionState(day, Array(0L))
-                out ::= RetentionIncrement(userId, day, 0L)
-              } else {
-                val off = day - st.cohortDay
-                // a late event from BEFORE the cohort day folds into offset 0
-                // (it cannot retro-move the cohort); new offsets emit once
-                val eff = math.max(0L, off)
-                if (!st.seen.contains(eff)) {
-                  st = st.copy(seen = st.seen :+ eff)
-                  out ::= RetentionIncrement(userId, st.cohortDay, eff)
-                }
-              }
-            }
-            if (st != null) {
-              state.update(st)
-              state.setTimeoutTimestamp(lastMs + idleTimeoutMillis)
-            }
-            out.reverseIterator
-          }
-      }
   }
 
   /** Gap-based sessionization with explicit keyed state: a session closes

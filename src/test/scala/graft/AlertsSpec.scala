@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 import graft.analytics.Alerts
-import graft.format.AlertMessage
+import graft.format.{AlertMessage, ConsoleAlertSink, Json}
 import graft.format.AlertMessage.Violator
 
 /** The reference's 13 alert unit tests ported 1:1
@@ -174,5 +174,69 @@ class AlertsSpec extends SparkSpec {
       None, "@ivan")))
     val msg = AlertMessage.format(vs, 12, 3, Some(0.6))
     assert(msg.contains("🟡") && msg.contains("1. Иван (Bass)") && msg.contains("@ivan"))
+  }
+
+  // -- building blocks --------------------------------------------------------
+
+  test("flagOf dispatches on the column type: boolean, numeric non-zero, string 1/TRUE/YES") {
+    import spark.implicits._
+    val df = Seq[(Boolean, Option[Int], Double, String)](
+      (true, Some(-3), 0.5, " yes "),
+      (false, Some(0), 0.0, "2"),
+      (false, None, 2.0, null)).toDF("b", "i", "d", "s")
+    val got = df.select(Seq("b", "i", "d", "s").map(Alerts.flagOf(df, _)): _*).collect()
+      .map(r => (0 until 4).map(r.getInt)).toSeq
+    assert(got === Seq(Seq(1, 1, 1, 1), Seq(0, 0, 0, 0), Seq(0, 0, 1, 0)))
+  }
+
+  test("normalizeAvailable: unavailable and date-less rows dropped, dates sliced, strings trimmed") {
+    val rows = Seq(
+      Row(" 2024-06-16T19:00 ", " c1 ", " Анна ", " Alto ", null, 1, 0, 1, 1),
+      Row("2024-06-23", "c1", "Анна", "Alto", "", 0, 1, 0, 1),
+      Row("", "c2", "Иван", "Bass", "", 1, 0, 1, 0),
+      Row(null, "c3", "Пётр", "Tenor", "", 1, 0, 1, 1))
+    val got = Alerts.normalizeAvailable(mart(rows)).collect()
+    assert(got.toSeq === Seq(
+      Row("2024-06-16", "c1", "Анна", "Alto", "", 1, 0, true)))
+  }
+
+  test("attendanceRateFrame: no row for an empty window, else counts and their ratio") {
+    assert(Alerts.attendanceRateFrame(mart(Seq.empty), 5).count() === 0L)
+    val base = weeksAgo(2)
+    val rows = Seq(
+      martRow(base.toString, "c1", "", "", 0, 1),
+      martRow(base.toString, "c2", "", "", 1, 0),
+      martRow(base.plusWeeks(1).toString, "c1", "", "", 0, 1),
+      martRow(base.plusWeeks(1).toString, "c2", "", "", 0, 1, availableFlag = 0),
+      // 10 weeks before the newest date: outside a 5-week lookback
+      martRow(base.minusWeeks(9).toString, "c2", "", "", 0, 1))
+    val frame = Alerts.attendanceRateFrame(mart(rows), 5)
+    assert(frame.columns.toSeq === Seq("n_available", "n_attended", "rate"))
+    assert(frame.collect().toSeq === Seq(Row(3L, 2L, 2.0 / 3)))
+  }
+
+  test("ConsoleAlertSink prints the message between dry-run markers") {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out, true, "UTF-8"))(
+      ConsoleAlertSink.send("1. Иван (Bass)"))
+    assert(out.toString("UTF-8").linesIterator.toSeq ===
+      Seq("--- Alert message ---", "1. Иван (Bass)", "---"))
+  }
+
+  test("Json.escape: quotes, backslashes and every control character below 0x20 are escaped") {
+    assert(Json.escape("a\"b\\c") === "a\\\"b\\\\c")
+    assert(Json.escape("\n\r\t") === "\\n\\r\\t")
+    assert(Json.escape(s"${1.toChar}${0x1f.toChar}") === "\\u0001\\u001f")
+    // DEL and non-ASCII text pass through unchanged
+    val plain = s"Привет ✓ ${0x7f.toChar}"
+    assert(Json.escape(plain) === plain)
+    assert(Json.str("x") === "\"x\"")
+  }
+
+  test("Json.str round-trips every ASCII character and non-ASCII text through a JSON parser") {
+    val all = (0 until 128).map(_.toChar).mkString + "Привет, хор! ✓"
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Json.str(all), classOf[String])
+    assert(parsed === all)
   }
 }

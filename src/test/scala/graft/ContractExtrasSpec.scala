@@ -1,106 +1,14 @@
 package graft
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.types._
+import graft.etl.{DimChorister, DimSong, RawSheet}
 
-import graft.analytics.Alerts
-import graft.etl.{DimChorister, FactAttendance, RawSheet}
-
-/** The two contract-spec'd-but-never-implemented reference features
-  * (SURVEY §2.11): the bad_cells quarantine (data_contract.md:196-205) and
-  * the song-filtered miss alert (data_contract.md:209-212), plus the
-  * lake-scale explicit-ordinal ingest.
-  */
+/** The lake-scale explicit-ordinal ingest ([[graft.etl.RawSheet.fromOrdinal]])
+  * and the RAW-sheet contract's building blocks: which rows are choristers or
+  * songs, the D2/D3 numbering and lookup rules, the header split and the X1
+  * override table. The contract's two spec'd-but-never-implemented reference features
+  * (SURVEY §2.11: the bad_cells quarantine and the song-filtered miss
+  * alert) are not implemented here either. */
 class ContractExtrasSpec extends SparkSpec {
-
-  private val header = Seq("Tag", "Joined", "tgid", "Who", "16.06.24", "23.06.24")
-
-  test("bad_cells quarantine: invalid cells diverted with reasons, run continues") {
-    val raw = RawSheet.fromRows(spark, header, Seq(
-      Seq("Alto", "16.06.24", "", "Anna", "2", "abc"),
-      Seq("Bass", "16.06.24", "", "Ivan", "-1", "1,5")))
-    val (facts, bad) = FactAttendance.buildWithQuarantine(raw, DimChorister.idByKey(raw))
-
-    val gotFacts = facts.select("rehearsal_date", "chorister_id", "hours_attended", "missed_flag")
-      .collect().map(_.toSeq).toSet
-    assert(gotFacts === Set(
-      Seq("2024-06-16", "Anna", 2.0, 0),
-      Seq("2024-06-23", "Ivan", 1.5, 0)))
-
-    val gotBad = bad.select("entity_type", "tag", "who", "rehearsal_date", "raw_value", "error_reason")
-      .collect().map(r => (r.getString(1), r.getString(2), r.getDate(3).toString,
-        r.getString(4), r.getString(5))).toSet
-    assert(gotBad === Set(
-      ("Alto", "Anna", "2024-06-23", "abc", "unparseable number"),
-      ("Bass", "Ivan", "2024-06-16", "-1", "negative hours")))
-    assert(bad.schema("rehearsal_date").dataType === DateType)
-  }
-
-  test("bad_cells: clean input yields empty quarantine and identical facts to strict build") {
-    val raw = RawSheet.fromRows(spark, header, Seq(
-      Seq("Alto", "16.06.24", "", "Anna", "2", "2,5")))
-    val (facts, bad) = FactAttendance.buildWithQuarantine(raw, DimChorister.idByKey(raw))
-    val strict = FactAttendance.build(raw, DimChorister.idByKey(raw))
-    assert(bad.count() === 0)
-    assert(facts.select("rehearsal_date", "chorister_id", "hours_attended", "missed_flag")
-      .collect().map(_.toSeq).toSet ===
-      strict.select("rehearsal_date", "chorister_id", "hours_attended", "missed_flag")
-        .collect().map(_.toSeq).toSet)
-  }
-
-  test("missedWhileSong: misses counted only on dates the song was rehearsed") {
-    val martSchema = StructType(Seq(
-      StructField("rehearsal_date", StringType), StructField("chorister_id", StringType),
-      StructField("full_name", StringType), StructField("voice_part", StringType),
-      StructField("tgid", StringType), StructField("missed_flag", IntegerType),
-      StructField("attended_flag", IntegerType), StructField("available_flag", IntegerType),
-      StructField("is_active", IntegerType)))
-    val dates = (0 until 4).map(i => java.time.LocalDate.of(2025, 3, 3).plusWeeks(i).toString)
-    // c1 misses all 4; c2 misses only non-Gloria dates; c3 misses all but inactive
-    val mart = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        dates.map(d => Row(d, "c1", "Ivan", "Bass", "", 1, 0, 1, 1)) ++
-        dates.zipWithIndex.map { case (d, i) =>
-          Row(d, "c2", "Olga", "Alto", "", if (i < 2) 1 else 0, if (i < 2) 0 else 1, 1, 1) } ++
-        dates.map(d => Row(d, "c3", "Petr", "Tenor", "", 1, 0, 1, 0))),
-      martSchema)
-    // Gloria rehearsed on the last two dates only
-    val songs = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(dates(2), "Gloria"), Row(dates(3), "Gloria"), Row(dates(0), "Ave Maria"))),
-      StructType(Seq(
-        StructField("rehearsal_date", StringType), StructField("song_name", StringType))))
-
-    val out = Alerts.missedWhileSong(mart, songs, "gloria", lookbackWeeks = 12, missThreshold = 2)
-      .collect()
-    // c1 missed both Gloria dates -> reported; c2 attended them; c3 inactive
-    assert(out.length === 1)
-    assert(out(0).getAs[String]("chorister_id") === "c1")
-    assert(out(0).getAs[Long]("n_missed_song") === 2L)
-    assert(out(0).getAs[Seq[String]]("missed_dates") === Seq(dates(3), dates(2)))
-  }
-
-  test("missedWhileSong: missed_dates capped at 10 like alert #1") {
-    val martSchema = StructType(Seq(
-      StructField("rehearsal_date", StringType), StructField("chorister_id", StringType),
-      StructField("full_name", StringType), StructField("voice_part", StringType),
-      StructField("tgid", StringType), StructField("missed_flag", IntegerType),
-      StructField("attended_flag", IntegerType), StructField("available_flag", IntegerType),
-      StructField("is_active", IntegerType)))
-    val dates = (0 until 14).map(i => java.time.LocalDate.of(2025, 1, 6).plusDays(i).toString)
-    val mart = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        dates.map(d => Row(d, "c1", "Ivan", "Bass", "", 1, 0, 1, 1))),
-      martSchema)
-    val songs = spark.createDataFrame(
-      spark.sparkContext.parallelize(dates.map(d => Row(d, "Gloria"))),
-      StructType(Seq(
-        StructField("rehearsal_date", StringType), StructField("song_name", StringType))))
-    val out = Alerts.missedWhileSong(mart, songs, "gloria", 12, 3).collect()
-    assert(out.length === 1)
-    assert(out(0).getAs[Long]("n_missed_song") === 14L)
-    assert(out(0).getAs[Seq[String]]("missed_dates").length === 10)
-  }
 
   test("fromOrdinal: ordinal column is dropped (cannot become a date header) and nulls fail fast") {
     import spark.implicits._
@@ -132,5 +40,79 @@ class ContractExtrasSpec extends SparkSpec {
     assert(ids(("Anna", "16.06.24")) === "Anna")
     assert(ids(("Anna", "23.06.24")) === "Anna | 23.06.24")
     assert(!raw.queryExecution.executedPlan.toString.contains("Coalesce"))
+  }
+
+  test("choristerRows: Song rows and blank tags or names dropped, cells trimmed, absent tgid is empty") {
+    val raw = RawSheet.fromRows(spark, Seq("Tag", "Joined", "Who", "16.06.24"), Seq(
+      Seq(" Alto ", " 16.06.24 ", " Anna ", "1"),
+      Seq("Song", "", "Ave Maria", "10"),
+      Seq("", "", "Nobody", ""),
+      Seq("Bass", "", "  ", ""),
+      Seq("Bass", null, "Ivan", null)))
+    val got = DimChorister.choristerRows(raw).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
+    assert(got.toSeq === Seq((0L, "Alto", "16.06.24", "", "Anna"), (4L, "Bass", "", "", "Ivan")))
+  }
+
+  test("choristerRows and songRows name the RAW columns they require") {
+    val noWho = RawSheet.fromRows(spark, Seq("Tag", "Joined"), Seq(Seq("Alto", "")))
+    val e1 = intercept[IllegalArgumentException](DimChorister.choristerRows(noWho))
+    assert(e1.getMessage.contains("Tag/Joined/Who"))
+    val e2 = intercept[IllegalArgumentException](DimSong.songRows(noWho))
+    assert(e2.getMessage.contains("Tag/Who"))
+  }
+
+  test("normToId (D3): the first row of each normalized name wins across spelling variants") {
+    val raw = RawSheet.fromRows(spark, Seq("Tag", "Joined", "tgid", "Who"), Seq(
+      Seq("Alto", "16.06.24", "", "Anna  Petrova"),
+      Seq("Alto", "23.06.24", "", "anna petrova"),
+      Seq("Bass", "", "", "Ivan"),
+      Seq("Alto", "30.06.24", "", "Anna Petrova")))
+    val got = DimChorister.normToId(raw).collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(got === Map("anna_petrova" -> "Anna  Petrova", "ivan" -> "Ivan"))
+  }
+
+  test("songRows keeps empty titles; withSeq numbers the emitted songs and suffixes repeats (D2)") {
+    val raw = RawSheet.fromRows(spark, Seq("Tag", "Joined", "tgid", "Who"), Seq(
+      Seq("Song", "", "", "Ave"),
+      Seq("Alto", "16.06.24", "", "Anna"),
+      Seq("Song", "", "", ""),
+      Seq("Song", "", "", " Ave "),
+      Seq("Song", "", "", "Gloria")))
+    assert(DimSong.songRows(raw).collect().map(r => (r.getLong(0), r.getString(2))).toSeq ===
+      Seq((0L, "Ave"), (2L, ""), (3L, "Ave"), (4L, "Gloria")))
+    val seq = DimSong.withSeq(raw).orderBy("seq_idx")
+      .select(RawSheet.RowIdx, "song_id", "seq_idx").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
+    assert(seq === Seq((0L, "Ave", 1), (3L, "Ave (2)", 2), (4L, "Gloria", 3)))
+  }
+
+  test("extraColumns and rawDateColumns: fixed and ordinal columns excluded, sheet order kept") {
+    val raw = RawSheet.fromRows(spark,
+      Seq("Tag", "16.06.24", "Joined", " ", "45473", "tgid", "Who", "notes"),
+      Seq(Seq("Alto", "1", "", "", "2", "", "Anna", "x")))
+    assert(RawSheet.extraColumns(raw) === Seq("16.06.24", " ", "45473", "notes"))
+    assert(RawSheet.rawDateColumns(raw) === Seq("16.06.24", "45473", "notes"))
+    assert(RawSheet.dateColumns(raw) === Seq("16.06.24" -> "2024-06-16", "45473" -> "2024-06-30"))
+    // a dotted header is one column name, not a struct path
+    assert(raw.select(RawSheet.qcol("16.06.24")).collect()(0).getString(0) === "1")
+  }
+
+  test("X1 overrides: each history is contiguous (next from = previous to + 1 day), the last open") {
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("dd.MM.yy")
+    def day(s: String) = java.time.LocalDate.parse(s, fmt)
+    for ((norm, hist) <- DimChorister.Overrides.groupBy(_._1)) {
+      val byOrd = hist.sortBy(_._2)
+      assert(byOrd.map(_._2) === (1 to byOrd.size), norm)
+      for (Seq(prev, next) <- byOrd.sliding(2))
+        assert(day(next._4) === day(prev._5).plusDays(1), norm)
+      assert(byOrd.last._5 === "", norm)
+      assert(byOrd.init.forall(o => !day(o._5).isBefore(day(o._4))), norm)
+    }
+    val df = DimChorister.overridesDf(spark)
+    assert(df.columns.toSeq ===
+      Seq("norm", "ovr_ord", "ovr_voice_part", "ovr_valid_from", "ovr_valid_to"))
+    assert(df.collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3),
+      r.getString(4))).toSeq === DimChorister.Overrides)
   }
 }

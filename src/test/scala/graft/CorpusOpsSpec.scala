@@ -239,34 +239,6 @@ class CorpusOpsSpec extends SparkSpec {
     assert(none.map(_.getLong(3)).sum === 8L)
   }
 
-  test("bloom screen: zero false negatives, FP within bound, bit-identical builds, NULL probes false") {
-    import graft.operators.BloomScreen
-    val corpus = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      .select(md5(col("text").cast("binary")).as("k"))
-    val bf = BloomScreen.build(corpus, "k", expectedItems = 1000L, fpp = 0.01)
-    // every stored key must flag true — the no-false-negative guarantee
-    val missed = BloomScreen.screen(corpus, "k", bf)
-      .filter(!col("might_exist")).count()
-    assert(missed === 0L)
-    // disjoint probe keys: measured FP rate within 5x the configured 1%
-    val n = 20000
-    val fresh = spark.range(n).select(md5(concat(lit("fresh:"),
-      col("id").cast("string")).cast("binary")).as("k"))
-    val fp = BloomScreen.screen(fresh, "k", bf)
-      .filter(col("might_exist")).count()
-    assert(fp <= (n * 0.05).toLong, s"FP rate ${fp.toDouble / n} > 5x fpp")
-    // build is a commutative bitwise-OR merge: bit-identical under any
-    // partitioning
-    val bf2 = BloomScreen.build(corpus.repartition(17), "k", 1000L, 0.01)
-    assert(java.util.Arrays.equals(
-      BloomScreen.toBytes(bf), BloomScreen.toBytes(bf2)))
-    // NULL key probes false, never NULL/maybe
-    val nulls = Seq[Option[String]](None, Some("x")).toDF("k")
-    val flags = BloomScreen.screen(nulls, "k", bf)
-      .collect().map(r => Option(r.get(0)).orNull -> r.getBoolean(1)).toMap
-    assert(flags(null) === false)
-  }
-
   test("tfidf keywords: rare repeated term dominates, blank docs emit nothing, ranks dense") {
     val out = Queries.tfidfKeywords(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),

@@ -972,43 +972,6 @@ class CurationSpec extends SparkSpec {
     assert(ingested === Set(82001L, 82003L), s"parity with the batch path: $ingested")
   }
 
-  test("sharded export: dirs match manifest, manifest matches data, balance holds, rerun identical") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("shard_export").toString
-    val store = new graft.io.TableStore(spark, root)
-    val b = 5000L
-    val prepared = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      .select(col("doc_id"), col("text"),
-        graft.functions.Text.tokenCount(col("text")).as("n_tokens"),
-        graft.functions.Curation.saltedHash(col("text"), "shard").as("__pri"))
-    val manifest = store.exportShards("train_shards", prepared,
-      "doc_id", "n_tokens", "__pri", tokensPerShard = b)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(manifest.nonEmpty)
-    // one Hive dir per manifest shard, no extras
-    val dirs = new java.io.File(root, "train_shards").listFiles
-      .filter(_.getName.startsWith("shard_id=")).map(_.getName).toSet
-    assert(dirs === manifest.keySet.map(k => s"shard_id=$k"))
-    // manifest equals a recount of what's on disk; nothing lost
-    val back = store.read("train_shards")
-    assert(back.count() === prepared.count())
-    val recount = back.groupBy(col("shard_id").cast("long").as("shard_id"))
-      .agg(count(lit(1)), sum("n_tokens")).collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(recount === manifest)
-    // token balance: every non-last shard within ±maxDoc of the budget
-    val maxDoc = prepared.agg(max("n_tokens")).head().getLong(0)
-    val last = manifest.keys.max
-    manifest.foreach { case (shard, (_, tok)) =>
-      if (shard != last) assert(math.abs(tok - b) < maxDoc, s"shard $shard: $tok")
-    }
-    // deterministic rerun: identical manifest AND identical doc→shard map
-    val m2 = store.exportShards("train_shards", prepared,
-      "doc_id", "n_tokens", "__pri", tokensPerShard = b)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(m2 === manifest)
-  }
-
   test("keyed upsert: untouched bucket dirs are physically untouched; merge, idempotence, null-safety hold") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("kb_upsert").toString

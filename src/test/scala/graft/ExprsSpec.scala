@@ -128,4 +128,31 @@ class ExprsSpec extends SparkSpec {
     assert((r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5))
       === ((1, 1, 1, 0, 1, 0)))
   }
+
+  test("P2 safeStr: null becomes empty, strings are trimmed, numbers are stringified") {
+    import spark.implicits._
+    val df = Seq[(String, Option[Int])](("  Anna ", Some(7)), (null, None)).toDF("s", "n")
+    val got = df.select(Exprs.safeStr(col("s")), Exprs.safeStr(col("n"))).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(got === Seq(("Anna", "7"), ("", "")))
+  }
+
+  test("boolFromString: TRUE / 1 / YES in any case and padding are true, other values false") {
+    val cases = Seq(" true " -> true, "Yes" -> true, "1" -> true,
+      "2" -> false, "0" -> false, "no" -> false, "" -> false)
+    for ((raw, want) <- cases)
+      assert(evalStr(Exprs.boolFromString(lit(raw))) === want.toString, s"input '$raw'")
+  }
+
+  test("P14 dateSlice: the first ten characters of the trimmed text") {
+    val cases = Seq(
+      "  2024-06-16T19:00:00 " -> "2024-06-16",
+      "2024-06-16" -> "2024-06-16",
+      "2024-06" -> "2024-06",
+      "   " -> "")
+    for ((raw, want) <- cases)
+      assert(evalStr(Exprs.dateSlice(lit(raw))) === want, s"input '$raw'")
+    assert(spark.range(1).select(Exprs.dateSlice(lit(null).cast("string")))
+      .collect()(0).isNullAt(0))
+  }
 }

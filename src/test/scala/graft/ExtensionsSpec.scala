@@ -702,15 +702,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(e.getMessage.contains("integer literal"))
   }
 
-  test("saltedCollectList merges to the same multiset as plain collect_list") {
-    val df = (1 to 500).map(i => ("hot", i % 37)).toDF("k", "v")
-    val plain = df.groupBy("k").agg(collect_list(col("v")).as("vs"))
-      .collect()(0).getSeq[Int](1).sorted
-    val salted = Skew.saltedCollectList(df, Seq("k"), col("v"), "vs", salt = 8)
-      .collect()(0).getSeq[Int](1).sorted
-    assert(salted === plain)
-  }
-
   test("saltedCollectSet deduplicates across salt buckets") {
     val df = ((1 to 300).map(i => ("hot", i % 10)) ++ Seq(("cold", 99))).toDF("k", "v")
     val out = Skew.saltedCollectSet(df, Seq("k"), col("v"), "vs", salt = 4)

@@ -4,16 +4,21 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
-import graft.operators.Ann
 
 /** Multimodal columns with REAL codecs: BMP decoded through the JDK's
   * ImageIO, WAV through AudioSystem, motion-BMP container walks — plus the
   * production-side contract (schema, corrupt-payload tolerance, determinism,
-  * shuffle-free plans, ANN composition). Feature extraction: REAL classical
-  * features from decoded content (exact-value specs below); only the neural
-  * encoder stays a disclosed stub (no model weights in a JVM container).
+  * shuffle-free plans).
   */
 class MultimodalSpec extends SparkSpec {
+
+  /** Closed-form file sizes of the synthetic encoders, the expected values
+    * the decode specs compare against: a 24-bit BMP is its 54-byte header
+    * plus rows of 3 bytes/px padded to 4; an `encodePng` image is the
+    * signature and IHDR/IDAT/IEND chunks (68 bytes) plus one filter byte and
+    * 3 bytes/px per row. */
+  private def bmpSize(width: Int, height: Int): Int = 54 + ((3 * width + 3) / 4) * 4 * height
+  private def pngSize(width: Int, height: Int): Int = 68 + height * (1 + 3 * width)
 
   test("decode parses real BMP and WAV payloads; corrupt/truncated/null → valid=false") {
     val bmp = Multimodal.encodeBmp(seed = 7, width = 320, height = 200)
@@ -32,7 +37,7 @@ class MultimodalSpec extends SparkSpec {
     // image: pixel dims + 3 bands, decoded by ImageIO, not by our own parser
     assert(out(1L).getInt(2) === 320 && out(1L).getInt(3) === 200 &&
       out(1L).getInt(4) === 3 && out(1L).getBoolean(6))
-    assert(out(1L).getLong(5) === Multimodal.bmpSize(320, 200).toLong)
+    assert(out(1L).getLong(5) === bmpSize(320, 200).toLong)
     // audio: frame count / sample rate / channels from AudioSystem
     assert(out(4L).getInt(2) === 120 && out(4L).getInt(3) === 44100 &&
       out(4L).getInt(4) === 2 && out(4L).getBoolean(6))
@@ -56,14 +61,12 @@ class MultimodalSpec extends SparkSpec {
       spark.sparkContext.parallelize(rows, 1), Multimodal.MediaSchema)
     val dec = Multimodal.decode(media).collect().map(r => r.getLong(0) -> r).toMap
     assert(!dec(1L).getBoolean(6), "lying-dim image must be invalid, not decoded")
-    assert(Multimodal.resize(media, 8, 8).collect()
-      .forall(!_.getBoolean(3)), "lying-dim image must not resize")
     val frames = Multimodal.frameSample(media, everyK = 1).collect()
     assert(frames.length === 1 && frames(0).getInt(1) === 0,
       "walk must emit the valid frame and stop at the overflowing size field")
   }
 
-  test("decode and resize accept the same ImageIO family (PNG parity)") {
+  test("decode accepts the ImageIO family beyond BMP (PNG)") {
     val img = new java.awt.image.BufferedImage(5, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until 4; x <- 0 until 5) img.setRGB(x, y, x * 37 + y * 101)
     val bos = new java.io.ByteArrayOutputStream()
@@ -74,8 +77,6 @@ class MultimodalSpec extends SparkSpec {
     val d = Multimodal.decode(media).collect()(0)
     assert(d.getBoolean(6) && d.getInt(2) === 5 && d.getInt(3) === 4,
       "a PNG payload must decode valid with its pixel dims")
-    val r = Multimodal.resize(media, 2, 2).collect()(0)
-    assert(r.getBoolean(3), "the same PNG must be resizable (decode/resize parity)")
   }
 
   test("syntheticMedia: odd image ids are REAL PNGs with the closed-form byte size") {
@@ -89,10 +90,10 @@ class MultimodalSpec extends SparkSpec {
       val h = 16 + (id % 5).toInt * 8
       if (id % 2 == 0) {
         assert(p(0) === 'B'.toByte && p(1) === 'M'.toByte, s"media $id must be BMP")
-        assert(p.length === Multimodal.bmpSize(w, h))
+        assert(p.length === bmpSize(w, h))
       } else {
         assert(p(1) === 'P'.toByte && p(2) === 'N'.toByte, s"media $id must be PNG")
-        assert(p.length === Multimodal.pngSize(w, h))
+        assert(p.length === pngSize(w, h))
         // a REAL file: the JDK's PNG reader opens it at the declared dims
         val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p))
         assert(img.getWidth === w && img.getHeight === h)
@@ -126,163 +127,10 @@ class MultimodalSpec extends SparkSpec {
             assert(r.getInt(4) === 1 + (id % 2).toInt)
           case "video" =>
             assert(r.getInt(2) === 16 && r.getInt(3) === 16 && r.getInt(4) === 3)
-            assert(r.getLong(5) === (2 + (id % 4)) * Multimodal.bmpSize(16, 16).toLong)
+            assert(r.getLong(5) === (2 + (id % 4)) * bmpSize(16, 16).toLong)
         }
       }
     }
-  }
-
-  test("extractFeaturesStub: deterministic fixed-dim vectors that feed ANN") {
-    val media = Multimodal.syntheticMedia(spark, 60)
-    val f1 = Multimodal.extractFeaturesStub(media, dim = 16)
-    val f2 = Multimodal.extractFeaturesStub(media, dim = 16)
-    val a = f1.orderBy("media_id").collect().map(_.getSeq[Float](1))
-    val b = f2.orderBy("media_id").collect().map(_.getSeq[Float](1))
-    assert(a.zip(b).forall { case (x, y) => x == y })
-    assert(a.forall(_.length === 16))
-    // composition: the feature frame is a valid ANN input as-is
-    val nn = Ann.bruteForceTopK(
-      f1.withColumnRenamed("feature", "embedding"), "media_id", "embedding", k = 2)
-    assert(nn.count() === 60L * 2)
-  }
-
-  test("MediaEncoder seam: a custom (model-shaped) encoder plugs into the same plumbing") {
-    // the production seam: swapping the feature model is ONE trait impl —
-    // here a fake "neural" encoder (payload-length geometry, rejects video)
-    // — with zero changes to schema, batching, or the corrupt-row policy.
-    class FakeNeural extends graft.multimodal.MediaEncoder {
-      override val dim = 3
-      override def encode(kind: String, payload: Array[Byte]) =
-        if (payload == null || kind == "video") None
-        else Some(Array(payload.length.toFloat, kind.length.toFloat, 1.0f))
-    }
-    val media = Multimodal.syntheticMedia(spark, 30)
-    val out = Multimodal.encodeFeatures(media, new FakeNeural)
-    assert(out.columns.toSeq === Seq("media_id", "kind", "valid", "feature"))
-    val rows = out.collect().map(r => r.getString(1) -> r.getBoolean(2))
-    assert(rows.exists(_._1 == "video") && rows.filter(_._1 == "video").forall(!_._2),
-      "rejected kinds must surface as valid=false, not failures")
-    assert(rows.filter(r => r._1 != "video" && r._1 != "corrupt").forall(_._2))
-    // dim contract is enforced, not trusted
-    class Liar extends graft.multimodal.MediaEncoder {
-      override val dim = 5
-      override def encode(kind: String, payload: Array[Byte]) = Some(Array(1.0f))
-    }
-    intercept[Exception](Multimodal.encodeFeatures(media, new Liar).collect())
-  }
-
-  test("extractFeatures: image features are exact means/histogram of the DECODED raster") {
-    // solid red 4x3 BMP: bottom-up BGR rows (B=0, G=0, R=255)
-    val w = 4; val h = 3
-    val px = new Array[Byte](Multimodal.bmpStride(w) * h)
-    for (y <- 0 until h; x <- 0 until w) px(y * Multimodal.bmpStride(w) + 3 * x + 2) = 0xff.toByte
-    val red = Multimodal.encodeBmpPixels(w, h, px)
-    val media = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(1L, "image", red)), 1), Multimodal.MediaSchema)
-    val r = Multimodal.extractFeatures(media).collect()(0)
-    assert(r.getBoolean(2))
-    val f = r.getSeq[Float](3)
-    // [modality, meanR, meanG, meanB, lum hist]: red luminance 76.245 -> bin 2
-    assert(f(0) === 0f && f(1) === 255f && f(2) === 0f && f(3) === 0f)
-    assert(f(4 + 2) === 1f && f.drop(4).sum === 1f)
-  }
-
-  test("extractFeatures: audio RMS/peak/ZCR are exact on a known PCM signal") {
-    // constant half-scale signal: s = 16384/32768 = 0.5 exactly
-    val const = Multimodal.encodeWavSamples(8000, 1, Array.fill[Short](100)(16384))
-    // full-scale alternating square wave: crosses zero at EVERY step
-    val square = Multimodal.encodeWavSamples(8000, 1,
-      Array.tabulate[Short](100)(i => if (i % 2 == 0) 16384 else -16384))
-    val media = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(1L, "audio", const), Row(2L, "audio", square)), 1),
-      Multimodal.MediaSchema)
-    val out = Multimodal.extractFeatures(media).collect().map(r => r.getLong(0) -> r).toMap
-    val fc = out(1L).getSeq[Float](3)
-    assert(fc(0) === 1f && fc(1) === 0.5f && fc(2) === 0.5f && fc(3) === 0f)
-    assert(fc(4 + 4) === 1f) // |0.5| * 8 = bin 4 holds every sample
-    val fs = out(2L).getSeq[Float](3)
-    assert(fs(1) === 0.5f && fs(2) === 0.5f && fs(3) === 1f) // 99/99 sign changes
-  }
-
-  test("extractFeatures: 8-bit unsigned WAV converts through AudioSystem — decode-valid implies feature-valid") {
-    // hand-rolled RIFF/WAVE, 8-bit unsigned PCM (the WAV convention for 8-bit),
-    // constant midpoint 0x80 -> converts to signed 16-bit silence
-    val n = 64
-    val out = new Array[Byte](44 + n)
-    def le32(off: Int, v: Int): Unit = { out(off) = (v & 0xff).toByte
-      out(off + 1) = ((v >> 8) & 0xff).toByte; out(off + 2) = ((v >> 16) & 0xff).toByte
-      out(off + 3) = ((v >> 24) & 0xff).toByte }
-    def le16(off: Int, v: Int): Unit = { out(off) = (v & 0xff).toByte
-      out(off + 1) = ((v >> 8) & 0xff).toByte }
-    "RIFF".getBytes.copyToArray(out, 0); le32(4, 36 + n)
-    "WAVE".getBytes.copyToArray(out, 8); "fmt ".getBytes.copyToArray(out, 12)
-    le32(16, 16); le16(20, 1); le16(22, 1); le32(24, 8000); le32(28, 8000)
-    le16(32, 1); le16(34, 8) // blockAlign 1, bits 8
-    "data".getBytes.copyToArray(out, 36); le32(40, n)
-    java.util.Arrays.fill(out, 44, 44 + n, 0x80.toByte)
-    val media = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(1L, "audio", out)), 1), Multimodal.MediaSchema)
-    assert(Multimodal.decode(media).collect()(0).getBoolean(6), "decode accepts the 8-bit WAV")
-    val r = Multimodal.extractFeatures(media).collect()(0)
-    assert(r.getBoolean(2), "feature path converts instead of rejecting")
-    val f = r.getSeq[Float](3)
-    assert(f(0) === 1f && f(1) === 0f && f(2) === 0f && f(4) === 1f) // silence: rms=peak=0, |a| bin 0
-  }
-
-  test("extractFeatures: video gets its first frame's features; corrupt rows survive as invalid") {
-    val video = Multimodal.encodeVideo(seed = 5, nFrames = 3, width = 6, height = 4)
-    val firstFrame = Multimodal.encodeBmp(seed = 5 * 31, width = 6, height = 4)
-    val rows = Seq(
-      Row(1L, "video", video), Row(2L, "image", firstFrame),
-      Row(3L, "image", "junk-bytes".getBytes), Row(4L, "audio", null))
-    val media = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 2), Multimodal.MediaSchema)
-    val out = Multimodal.extractFeatures(media).collect().map(r => r.getLong(0) -> r).toMap
-    assert(out(1L).getBoolean(2) && out(2L).getBoolean(2))
-    assert(out(1L).getSeq[Float](3) === out(2L).getSeq[Float](3),
-      "motion-BMP features == its first frame's features")
-    assert(!out(3L).getBoolean(2) && out(3L).isNullAt(3))
-    assert(!out(4L).getBoolean(2) && out(4L).isNullAt(3))
-  }
-
-  test("multimodal -> embedding bridge: features flow through SemDedup and cluster the planted duplicate image") {
-    // E2E: raw media bytes -> extractFeatures (classical 12-dim vector) ->
-    // SemDedup.assign — the multimodal near-dup path VERDICT r10 asked for.
-    // 101/102: near-identical red rasters (one pixel nudged) -> cosine ~1;
-    // 103: blue raster (orthogonal channel means); 104: a PCM clip (stats
-    // live on a 0..1 scale vs 0..255 image means — no spurious closeness).
-    val w = 8; val h = 8
-    def solid(r: Int, g: Int, b: Int): Array[Byte] = {
-      val px = new Array[Byte](Multimodal.bmpStride(w) * h)
-      for (y <- 0 until h; x <- 0 until w) {
-        px(y * Multimodal.bmpStride(w) + 3 * x) = b.toByte
-        px(y * Multimodal.bmpStride(w) + 3 * x + 1) = g.toByte
-        px(y * Multimodal.bmpStride(w) + 3 * x + 2) = r.toByte
-      }
-      px
-    }
-    val redPx = solid(255, 0, 0)
-    val redNudged = solid(255, 0, 0)
-    redNudged(1) = 40.toByte // one blue sub-pixel of one corner pixel
-    val samples = Array.tabulate[Short](800)(i =>
-      (math.sin(i * 2 * math.Pi / 80) * 12000).toShort)
-    val media = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(101L, "image", Multimodal.encodeBmpPixels(w, h, redPx)),
-        Row(102L, "image", Multimodal.encodeBmpPixels(w, h, redNudged)),
-        Row(103L, "image", Multimodal.encodeBmpPixels(w, h, solid(0, 0, 255))),
-        Row(104L, "audio", Multimodal.encodeWavSamples(8000, 1, samples))), 2),
-      Multimodal.MediaSchema)
-    val features = Multimodal.extractFeatures(media)
-      .filter(org.apache.spark.sql.functions.col("valid"))
-    assert(features.count() === 4L, "all four payloads must be feature-valid")
-    val verdict = graft.operators.SemDedup.assign(
-      features, "media_id", "feature", threshold = 0.99, nClusters = 2, iters = 4)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
-    assert(verdict(101L) === ((101L, true)), s"canonical red survives: $verdict")
-    assert(verdict(102L) === ((101L, false)), s"nudged duplicate collapses: $verdict")
-    assert(verdict(103L) === ((103L, true)), s"blue raster is no dup: $verdict")
-    assert(verdict(104L) === ((104L, true)), s"audio clip is no dup: $verdict")
   }
 
   test("dHash: pixel function — container-invariant, noise-local, structure-sensitive") {
@@ -332,33 +180,6 @@ class MultimodalSpec extends SparkSpec {
       "one noisy pixel must move only a few bits")
     assert(java.lang.Long.bitCount(hb ^ hf) >= 24,
       "a reversed gradient must be far in Hamming space")
-  }
-
-  test("resize: real raster op — output decodes at target dims; pixels come from the source") {
-    val media = Multimodal.syntheticMedia(spark, 12)
-    val resized = Multimodal.resize(media, targetW = 8, targetH = 8)
-    // every image row resized, every other row passed through untouched
-    val flags = resized.collect().map(r => (r.getString(1), r.getBoolean(3)))
-    assert(flags.forall { case (kind, f) => f == (kind == "image") })
-    // the resized payloads decode (via ImageIO) to the NEW dimensions
-    val decoded = Multimodal.decode(resized.select("media_id", "kind", "payload"))
-      .filter(col("kind") === "image").collect()
-    assert(decoded.nonEmpty)
-    assert(decoded.forall(r => r.getInt(2) === 8 && r.getInt(3) === 8 && r.getBoolean(6)))
-    // nearest-neighbor at scale 1:1 must reproduce the source image exactly
-    val one = Multimodal.syntheticMedia(spark, 3).filter(col("kind") === "image")
-    val same = Multimodal.resize(one, 16 + 0 * 8, 16 + 0 * 8) // media_id 0: 16x16
-      .filter(col("media_id") === 0).collect()(0).getAs[Array[Byte]](2)
-    assert(same.toSeq === Multimodal.encodeBmp(0, 16, 16).toSeq)
-    // deterministic: same input, same bytes
-    val again = Multimodal.resize(media, 8, 8)
-      .filter(col("kind") === "image").orderBy("media_id")
-      .collect().map(_.getAs[Array[Byte]](2).toSeq)
-    val first = resized.filter(col("kind") === "image").orderBy("media_id")
-      .collect().map(_.getAs[Array[Byte]](2).toSeq)
-    assert(again.toSeq === first.toSeq)
-    // shuffle-free, like decode
-    assert(!resized.queryExecution.executedPlan.toString.contains("Exchange"))
   }
 
   test("frameSample: walks the motion-BMP container; every frame a decodable BMP") {
@@ -450,27 +271,6 @@ class MultimodalSpec extends SparkSpec {
       minJaccard = 0.3, maxFrameDf = 50)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(capped.toSeq === Seq((498L, 499L, 1L, 1.0)))
-  }
-
-  test("OnnxEncoder: CHW preprocessing is exact; corrupt→None; missing runtime fails with the diagnostic") {
-    // rasterCHW on a known 1×1 BMP (stride-4 row: B=10, G=20, R=30, pad):
-    // every resized pixel samples the one source pixel; planes are R, G, B
-    val bmp = Multimodal.encodeBmpPixels(1, 1, Array[Byte](10, 20, 30, 0))
-    val chw = graft.multimodal.OnnxEncoder.rasterCHW(bmp, 2, 2).get
-    assert(chw.length === 12)
-    assert(chw.take(4).forall(_ === 30 / 255.0f), chw.mkString(","))
-    assert(chw.slice(4, 8).forall(_ === 20 / 255.0f))
-    assert(chw.drop(8).forall(_ === 10 / 255.0f))
-    val enc = new graft.multimodal.OnnxEncoder("/nonexistent/model.onnx", dim = 4)
-    // corrupt payload is a DATA condition: None, the runtime is never touched
-    assert(enc.encode("image", "!corrupt-media!!".getBytes("US-ASCII")) === None)
-    assert(enc.encode("image", null) === None)
-    // a decodable payload without the runtime is a CONFIGURATION error:
-    // loud, contextual, names the missing artifact (this build is
-    // zero-egress, so this is the branch that runs here; with the jar on
-    // the classpath the same call would run the model)
-    val e = intercept[IllegalStateException](enc.encode("image", bmp))
-    assert(e.getMessage.contains("ai.onnxruntime"), e.getMessage)
   }
 
   test("lumaNudge: BMP images and motion-BMP videos nudge in place; PNG/corrupt pass through") {

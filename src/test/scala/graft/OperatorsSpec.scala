@@ -411,8 +411,7 @@ class OperatorsSpec extends SparkSpec {
       .groupBy(datediff(to_date(col("ts")), lit("1970-01-01")).as("day"))
       .agg(ThetaSketch.thetaSketchAgg(col("user_id")).as("sk"))
     val rolled = daily
-      .agg(ThetaSketch.thetaEstimate(
-        ThetaSketch.thetaUnionAgg(col("sk"))).as("n"))
+      .agg(ThetaSketch.thetaEstimate(theta_union_agg(col("sk"))).as("n"))
       .head.getLong(0)
     val direct = ev.repartition(13)
       .agg(ThetaSketch.thetaEstimate(
@@ -686,56 +685,6 @@ class OperatorsSpec extends SparkSpec {
     assert(keyOf(AnnIndex.query(store, "e", allReversed, "vec_id", "embedding",
       k = 3, nProbe = 16)) ===
       keyOf(Ann.blockTopK(allReversed, "vec_id", "embedding", k = 3)))
-  }
-
-  test("AnnIndex: maybeRetrain — healthy no-op; drift trips the floor, retrain recovers") {
-    import graft.operators.AnnIndex
-    import org.apache.spark.sql.Column
-    // q174's planted geometry, inline: 8 axis-aligned base clusters; the
-    // drifted family sits BETWEEN axis pairs — exactly where the frozen
-    // quantizer has no cell, so nProbe=1 recall decays measurably
-    def planted(n: Int, idBase: Long)(center: (Column, Column) => Column) =
-      spark.range(n).select((col("id") + lit(idBase)).as("vec_id"),
-          (col("id") % 8).as("cl"))
-        .select(col("vec_id"), transform(sequence(lit(0), lit(63)),
-          d => (center(col("cl"), d) +
-            (pmod(xxhash64(col("vec_id") * lit(64) + d), lit(1000))
-              .cast("double") / 1000.0 - 0.5) * 0.04).cast("float"))
-          .as("embedding"))
-    val base = planted(512, 0L)(
-      (c, d) => when(d === c, lit(1.0)).otherwise(lit(0.0)))
-    val drift = planted(256, 10000L)(
-      (c, d) => when(d === c * 2 || d === c * 2 + 1, lit(0.7071))
-        .otherwise(lit(0.0)))
-    val store = new graft.io.TableStore(spark,
-      java.nio.file.Files.createTempDirectory("annidx6").toString)
-    AnnIndex.build(store, "e", base, "vec_id", "embedding", nClusters = 8,
-      iters = 3)
-    val qBase = base.filter(pmod(col("vec_id"), lit(8)) === 1)
-    val qDrift = drift.filter(pmod(col("vec_id"), lit(4)) === 2)
-    // healthy index: the policy measures, decides NO, touches nothing
-    val healthy = AnnIndex.maybeRetrain(store, "e", qBase, "vec_id",
-      "embedding", k = 3, nProbe = 1, recallFloor = 0.9, nClusters = 16)
-    assert(!healthy.retrained && healthy.recallAfter.isEmpty)
-    assert(healthy.recallBefore >= 0.9, s"fresh recall ${healthy.recallBefore}")
-    assert(store.read("e__centroids").count() === 8L,
-      "a no-decision must not touch the codebook")
-    // drifted upsert: the drift probes trip the floor -> compact + retrain
-    // with the resized codebook, recovery measured in the decision record
-    AnnIndex.upsert(store, "e", drift, "vec_id", "embedding")
-    val decision = AnnIndex.maybeRetrain(store, "e", qDrift, "vec_id",
-      "embedding", k = 3, nProbe = 1, recallFloor = 0.9, nClusters = 16)
-    assert(decision.retrained, s"stale recall ${decision.recallBefore} must trip the 0.9 floor")
-    assert(decision.recallBefore < 0.9)
-    assert(decision.recallAfter.exists(_ >= 0.9),
-      s"post-retrain recall ${decision.recallAfter} must recover")
-    assert(store.read("e__centroids").count() === 16L)
-    // steady state restored: the next policy pass is a no-op again
-    val after = AnnIndex.maybeRetrain(store, "e", qDrift, "vec_id",
-      "embedding", k = 3, nProbe = 1, recallFloor = 0.9, nClusters = 16)
-    assert(!after.retrained && after.recallBefore >= 0.9)
-    intercept[IllegalArgumentException](AnnIndex.maybeRetrain(store, "e",
-      qDrift, "vec_id", "embedding", 3, 1, recallFloor = 1.5, nClusters = 16))
   }
 
   test("AnnIndex: sidecar clock survives sweeps; legacy parquet __meta migrates once") {

@@ -102,4 +102,18 @@ class SpanDomainSpec extends SparkSpec {
     assert(DomainFilter.filterBySource(df, "source", "text").columns.sorted
       === df.columns.sorted)
   }
+
+  test("sourceQuality: per-source counts and good share; the threshold is inclusive") {
+    val good = "the quick brown fox jumps over the lazy dog again and again. " +
+      "it is a fine day in the meadow and the sun is up."
+    val df = Seq((1L, "srcA", good), (2L, "srcA", "x"), (3L, "srcB", "x"))
+      .toDF("doc_id", "source", "text")
+    val q = df.filter(col("doc_id") === 1L).select(Text.qualityScore(col("text")))
+      .head().getDouble(0)
+    def rollup(threshold: Double) =
+      DomainFilter.sourceQuality(df, "source", "text", threshold).collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
+    assert(rollup(q) === Map("srcA" -> ((2L, 1L, 0.5)), "srcB" -> ((1L, 0L, 0.0))))
+    assert(rollup(math.nextUp(q)) === Map("srcA" -> ((2L, 0L, 0.0)), "srcB" -> ((1L, 0L, 0.0))))
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, md5}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.streaming.EventStream
@@ -20,11 +20,11 @@ class StreamingSpec extends SparkSpec {
   private val Base = 1020L
   private def ts(minutes: Long): Timestamp = new Timestamp((Base + minutes) * 60000L)
 
-  test("windowedCounts: tumbling event-time windows per type") {
+  test("windowedCountsExact: tumbling event-time windows per type") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val source = MemoryStream[Event]
-    val query = EventStream.windowedCounts(source.toDF(), "10 minutes", "1 hour")
+    val query = EventStream.windowedCountsExact(source.toDF(), "10 minutes", "1 hour")
       .writeStream.format("memory").queryName("wc").outputMode(OutputMode.Complete).start()
     try {
       source.addData(
@@ -66,27 +66,6 @@ class StreamingSpec extends SparkSpec {
       source.addData(Event(2, ts(10), "click", 9.0))
       query.processAllAvailable()
       assert(spark.table("wmb").count() === 1, "append mode must never retract/re-emit")
-    } finally query.stop()
-  }
-
-  test("streaming dedup: first occurrence passes through, in-watermark repeats dropped") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[Event]
-    val query = EventStream.dedupWithinWatermark(
-      source.toDF(), "ts", "10 minutes", Seq("user_id", "event_type"))
-      .writeStream.format("memory").queryName("dd").outputMode(OutputMode.Append).start()
-    try {
-      source.addData(
-        Event(1, ts(5), "click", 1.0), Event(1, ts(6), "click", 99.0),
-        Event(2, ts(5), "view", 2.0))
-      query.processAllAvailable()
-      source.addData(Event(1, ts(7), "click", 50.0)) // repeat in a later batch
-      query.processAllAvailable()
-      val got = spark.table("dd")
-        .collect().map(r => (r.getLong(0), r.getString(2), r.getDouble(3))).toSet
-      assert(got === Set((1L, "click", 1.0), (2L, "view", 2.0)),
-        "first occurrence wins; in-watermark duplicates across batches dropped")
     } finally query.stop()
   }
 
@@ -308,170 +287,6 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.contains("collide"))
   }
 
-  test("stream-static enrichment: dim attributes land on every batch, missing keys keep nulls") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dim = Seq((1L, "pro"), (2L, "free")).toDF("user_id", "tier")
-    val source = MemoryStream[Event]
-    val query = EventStream.enrichWithDim(source.toDF(), dim, Seq("user_id"))
-      .writeStream.format("memory").queryName("en").outputMode(OutputMode.Append).start()
-    try {
-      source.addData(Event(1, ts(1), "click", 1.0), Event(9, ts(2), "view", 2.0))
-      query.processAllAvailable()
-      source.addData(Event(2, ts(3), "click", 3.0)) // later batch re-joins the dim
-      query.processAllAvailable()
-      val got = spark.table("en")
-        .collect().map(r => (r.getLong(0), Option(r.getString(4)))).toSet
-      assert(got === Set((1L, Some("pro")), (9L, None), (2L, Some("free"))),
-        "left join: unmatched events survive with null tier")
-    } finally query.stop()
-  }
-
-  test("streaming near-dup screen: each batch's verdicts match the batch kernel") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // corpus: two orthogonal-ish reference vectors
-    val corpus = Seq(
-      (100L, Seq(1f, 0f, 0f)), (200L, Seq(0f, 1f, 0f))
-    ).toDF("vec_id", "embedding")
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val source = MemoryStream[(Long, Seq[Float])]
-    val query = EventStream.nearDupScreen(
-      source.toDF().toDF("doc_id", "emb"), "doc_id", "emb",
-      corpus, "vec_id", "embedding", threshold = 0.9,
-      configure = _.queryName("ndscreen")) { verdicts =>
-      collected.synchronized {
-        collected ++= verdicts.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      }
-    }
-    try {
-      source.addData((1L, Seq(1f, 0.1f, 0f)), (2L, Seq(0f, 0f, 1f)))
-      query.processAllAvailable()
-      source.addData((3L, Seq(0.05f, 1f, 0f))) // later batch, matches corpus 200
-      query.processAllAvailable()
-      val got = collected.synchronized(collected.toSet)
-      assert(got.map(t => (t._1, t._2)) === Set((1L, 100L), (3L, 200L)),
-        s"near-dup verdicts wrong: $got")
-      assert(got.forall(_._3 >= 0.9))
-      assert(query.name === "ndscreen", "configure must reach the writer")
-    } finally query.stop()
-  }
-
-  test("streaming decontamination screen: each batch's verdicts match the batch kernel") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val evalCorpus = Seq(
-      100L -> "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
-    ).toDF("doc_id", "text")
-    val leaky = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
-    val clean = "one two three four five six seven eight nine ten eleven twelve"
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val source = MemoryStream[(Long, String)]
-    val query = EventStream.decontaminationScreen(
-      source.toDF().toDF("doc_id", "text"), "doc_id", "text", evalCorpus,
-      configure = _.queryName("deconscreen")) { verdicts =>
-      collected.synchronized {
-        collected ++= verdicts.collect().map(r => (r.getLong(0), r.getLong(1)))
-      }
-    }
-    try {
-      source.addData((1L, leaky), (2L, clean))
-      query.processAllAvailable()
-      source.addData((3L, leaky + " with extra trailing words")) // later batch
-      query.processAllAvailable()
-      val got = collected.synchronized(collected.toMap)
-      // doc 1 shares the full 10-token sentence (3 8-grams); doc 3 the same
-      // sentence inside a longer text; doc 2 is clean and never emitted —
-      // and the counts equal the batch kernel on the same rows
-      val batchKernel = graft.operators.Decontamination.sharedShingleCounts(
-        Seq(1L -> leaky, 2L -> clean, 3L -> (leaky + " with extra trailing words"))
-          .toDF("doc_id", "text"),
-        evalCorpus, "doc_id", "text", graft.functions.Curation.DeconNgram)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got === batchKernel)
-      assert(got === Map(1L -> 3L, 3L -> 3L))
-      assert(query.name === "deconscreen", "configure must reach the writer")
-    } finally query.stop()
-  }
-
-  test("streaming text near-dup screen: each batch's verdicts match the batch kernel") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ref = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
-    val corpus = Seq(100L -> ref, 200L -> "uno dos tres cuatro cinco seis siete ocho nueve diez")
-      .toDF("doc_id", "text")
-    val nearDup = ref + " mike"  // 10 of 11 shingles shared → J = 10/11
-    val clean = "one two three four five six seven eight nine ten eleven twelve"
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val source = MemoryStream[(Long, String)]
-    val query = EventStream.textNearDupScreen(
-      source.toDF().toDF("doc_id", "text"), "doc_id", "text", corpus,
-      configure = _.queryName("textndscreen")) { verdicts =>
-      collected.synchronized {
-        collected ++= verdicts.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      }
-    }
-    try {
-      source.addData((1L, nearDup), (2L, clean))
-      query.processAllAvailable()
-      source.addData((3L, "zz " + ref)) // later batch, still a near-dup of 100
-      query.processAllAvailable()
-      val got = collected.synchronized(collected.toSet)
-      val batchKernel = graft.operators.Dedup.lshJaccardPairsJoin(
-        Seq(1L -> nearDup, 2L -> clean, 3L -> ("zz " + ref)).toDF("doc_id", "text"),
-        corpus, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got === batchKernel)
-      assert(got.map(t => (t._1, t._2)) === Set((1L, 100L), (3L, 100L)),
-        s"text near-dup verdicts wrong: $got")
-      assert(got.forall(_._3 >= 0.5))
-      assert(query.name === "textndscreen", "configure must reach the writer")
-    } finally query.stop()
-  }
-
-  test("streaming unigram screen: frozen reference stats, verdicts match the batch kernel") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ref = Seq(
-      100L -> "alpha bravo charlie alpha bravo alpha",
-      101L -> "delta echo delta").toDF("doc_id", "text")
-    // reference stats: alpha×3 bravo×2 charlie×1 delta×2 echo×1, N = 9
-    val (freq, n) = graft.operators.UnigramLm.stats(ref, "text")
-    freq.persist()
-    assert(n === 9L)
-    val collected = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Double)]
-    val source = MemoryStream[(Long, String)]
-    val query = EventStream.unigramScreen(
-      source.toDF().toDF("doc_id", "text"), "doc_id", "text", freq, n,
-      configure = _.queryName("ugscreen")) { verdicts =>
-      collected.synchronized {
-        collected ++= verdicts.collect().map(r =>
-          (r.getLong(0), r.getLong(2), r.getLong(3), r.getDouble(4)))
-      }
-    }
-    try {
-      source.addData((1L, "alpha bravo"), (2L, "zz yy"))
-      query.processAllAvailable()
-      source.addData((3L, "alpha delta zz")) // later batch, mixed known/oov
-      query.processAllAvailable()
-      val got = collected.synchronized(collected.toSet)
-      // doc 1: sum_df 5, oov 0, prob 5/(2·9); doc 2: all-oov, prob 0;
-      // doc 3: sum_df 5, oov 1, prob 5/(3·9)
-      assert(got === Set(
-        (1L, 5L, 0L, 5.0 / (2.0 * 9.0)),
-        (2L, 0L, 2L, 0.0),
-        (3L, 5L, 1L, 5.0 / (3.0 * 9.0))))
-      val batchKernel = graft.operators.UnigramLm.scoreAgainst(
-        Seq(1L -> "alpha bravo", 2L -> "zz yy", 3L -> "alpha delta zz")
-          .toDF("doc_id", "text"), "doc_id", "text", freq, n)
-        .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getDouble(4))).toSet
-      assert(got === batchKernel)
-      assert(query.name === "ugscreen", "configure must reach the writer")
-    } finally {
-      query.stop(); freq.unpersist()
-    }
-  }
-
   test("stateless chunking and C4 screen run unchanged on a live stream") {
     // Chunking.chunkDocs and Heuristics.c4Keep are pure projections/filters
     // (no state, no aggregation) — this pins that they stay streaming-legal
@@ -507,42 +322,6 @@ class StreamingSpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSet
       assert(gotKeep === Set(2L), "only the well-formed multi-line page passes C4")
     } finally { chunkQ.stop(); c4Q.stop() }
-  }
-
-  test("streaming ingest: each micro-batch upserts screened docs, generation parity holds") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("ingest_stream").toString
-    val store = new graft.io.TableStore(spark, root)
-    graft.CuratePipeline.run(spark,
-      Tables.load(spark, "/root/testdata/sf0.001", "documents"), store)
-    val n0 = store.read("curated_corpus").count()
-    val gen0 = graft.CuratePipeline.checkGenerationParity(store)
-    val f1 = "the lighthouse keeper logged every passing ship and the color of " +
-      "each flag while winter storms battered the northern coast of the island."
-    val f2 = "a village baker perfected a rye loaf recipe over nine seasons and " +
-      "traded bread for stories with travelers from the eastern valleys."
-    val counts = scala.collection.mutable.ArrayBuffer.empty[graft.CuratePipeline.IngestCounts]
-    val source = MemoryStream[(Long, String, String, String, Long)]
-    val query = EventStream.ingestStream(
-      source.toDF().toDF("doc_id", "text", "lang", "source", "n_chars"), store,
-      configure = _.queryName("ingeststream")) { c => counts.synchronized { counts += c } }
-    try {
-      source.addData((9600001L, f1, "en", "web", 160L))
-      query.processAllAvailable()
-      source.addData((9600002L, f2, "en", "web", 150L),
-        (9600003L, f1, "en", "web", 160L)) // f1 again: now STORED → screened out
-      query.processAllAvailable()
-      val got = counts.synchronized(counts.toList)
-      assert(got.map(_.upserted) === List(1L, 1L),
-        s"batch 1 lands f1; batch 2 lands f2 and screens the re-sent f1: $got")
-      assert(store.read("curated_corpus").count() === n0 + 2L)
-      assert(store.read("curated_corpus")
-        .filter(org.apache.spark.sql.functions.col("doc_id") >= 9600000L)
-        .select("doc_id").collect().map(_.getLong(0)).toSet === Set(9600001L, 9600002L))
-      // the generation invariant survives streaming ingest
-      assert(graft.CuratePipeline.checkGenerationParity(store) === gen0)
-    } finally query.stop()
   }
 
   test("ingest curation gate: streaming verdicts equal the batch gate per batch") {
@@ -591,162 +370,6 @@ class StreamingSpec extends SparkSpec {
         .filter($"keep").select("doc_id").collect().map(_.getLong(0)).toSeq
       assert(q41Kept === Seq(1L, 4L))
     } finally query.stop()
-  }
-
-  test("bloom screen: stateless stream probe — stored keys flag, fresh keys pass, no state store") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq("alpha text", "beta text", "gamma text").toDF("text")
-      .select(md5($"text".cast("binary")).as("k"))
-    val bf = graft.operators.BloomScreen.build(corpus, "k", 100L, 0.01)
-    val source = MemoryStream[(Long, String)]
-    val query = EventStream.bloomScreen(
-      source.toDF().toDF("doc_id", "text")
-        .withColumn("k", md5($"text".cast("binary"))),
-      "k", bf)
-      .writeStream.format("memory").queryName("bloom")
-      .outputMode(OutputMode.Append).start()
-    try {
-      source.addData(1L -> "alpha text", 2L -> "totally new doc one")
-      query.processAllAvailable()
-      source.addData(3L -> "beta text", 4L -> "another brand new doc")
-      query.processAllAvailable()
-      val got = spark.table("bloom").orderBy("doc_id")
-        .collect().map(r => r.getLong(0) -> r.getAs[Boolean]("might_exist")).toMap
-      // re-sent corpus content flags (no false negatives), fresh content
-      // passes (these 2 probes are not in the sketch's 1% fpp tail — checked
-      // by the assertion itself being deterministic: same sketch, same keys)
-      assert(got === Map(1L -> true, 2L -> false, 3L -> true, 4L -> false))
-      // stateless: no state store rows were needed for the verdicts
-      assert(query.lastProgress == null ||
-        Option(query.lastProgress.stateOperators).forall(_.isEmpty))
-    } finally query.stop()
-  }
-
-  test("funnelScreen: zero idle gap is rejected at build time, not at the watermark") {
-    // idleGapMillis = 0 would setTimeoutTimestamp at the advancing event's
-    // own time — at/below the watermark for a watermark-edge event, which
-    // throws inside the running query. Same build-time contract as
-    // sessionize's gap.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[Event]
-    val e = intercept[IllegalArgumentException] {
-      EventStream.funnelScreen(source.toDS(), Seq("signup"), "30 minutes", 0L)
-    }
-    assert(e.getMessage.contains("idleGapMillis"))
-  }
-
-  test("funnelScreen: progress rows per advancing batch, cross-batch completion, state freed") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val source = MemoryStream[Event]
-    val query = EventStream.funnelScreen(
-      source.toDS(), Seq("signup", "click", "purchase"),
-      watermark = "30 minutes", idleGapMillis = 60 * 60000L)
-      .writeStream.format("memory").queryName("fun").outputMode(OutputMode.Append).start()
-    try {
-      // batch 1: u1 signs up; u2 clicks without signup (no progress);
-      //          u3 signup+click at the SAME instant (strict > never advances)
-      source.addData(
-        Event(1, ts(0), "signup", 0.0), Event(2, ts(0), "click", 0.0),
-        Event(3, ts(0), "signup", 0.0), Event(3, ts(0), "click", 0.0))
-      query.processAllAvailable()
-      val b1 = spark.table("fun").as[EventStream.FunnelProgress].collect()
-        .map(p => p.user_id -> ((p.steps_completed, p.completed))).toMap
-      assert(b1 === Map(1L -> ((1, false)), 3L -> ((1, false))),
-        "only funnel entrants emit; same-instant click must not advance")
-
-      // batch 2: u1 completes across batches; u3 clicks later (advances to 2)
-      source.addData(
-        Event(1, ts(5), "click", 0.0), Event(1, ts(10), "purchase", 0.0),
-        Event(3, ts(6), "click", 0.0))
-      query.processAllAvailable()
-      val b2 = spark.table("fun").as[EventStream.FunnelProgress].collect()
-      assert(b2.length === 4, "one new row per advancing user per batch")
-      val u1 = b2.filter(p => p.user_id == 1L).maxBy(_.steps_completed)
-      assert(u1.steps_completed === 3 && u1.completed && u1.last_step_ts === ts(10))
-      val u3 = b2.filter(p => p.user_id == 3L).maxBy(_.steps_completed)
-      assert(u3.steps_completed === 2 && !u3.completed)
-
-      // batch 3: a purchase for completed u1 emits nothing (state freed);
-      // an out-of-order click at u3's matched instant cannot retro-advance
-      source.addData(Event(1, ts(20), "purchase", 0.0), Event(3, ts(6), "purchase", 0.0))
-      query.processAllAvailable()
-      val b3 = spark.table("fun").as[EventStream.FunnelProgress].collect()
-      assert(b3.length === 4, "completed users and non-advancing events emit nothing")
-    } finally query.stop()
-  }
-
-  test("funnelScreen: in-order stream reproduces the batch q87 kernel per entrant") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val evs = Seq(
-      Event(1, ts(0), "signup", 0.0), Event(1, ts(1), "click", 0.0),
-      Event(1, ts(2), "purchase", 0.0),
-      Event(2, ts(0), "click", 0.0), Event(2, ts(1), "signup", 0.0), // stalls at 1
-      Event(3, ts(0), "signup", 0.0), Event(3, ts(1), "purchase", 0.0), // stalls at 1
-      Event(4, ts(0), "view", 0.0)) // never enters
-    val source = MemoryStream[Event]
-    val query = EventStream.funnelScreen(
-      source.toDS(), Seq("signup", "click", "purchase"),
-      watermark = "30 minutes", idleGapMillis = 60 * 60000L)
-      .writeStream.format("memory").queryName("funp").outputMode(OutputMode.Append).start()
-    try {
-      source.addData(evs: _*)
-      query.processAllAvailable()
-      val streamed = spark.table("funp").as[EventStream.FunnelProgress].collect()
-        .groupBy(_.user_id).map { case (u, ps) => u -> ps.map(_.steps_completed).max }
-      val batch = graft.operators.OrderedAnalytics.funnel(
-        evs.toDF().withColumn("ts_ns", col("ts").cast("long")),
-        Seq("user_id"), "ts_ns", "event_type", Seq("signup", "click", "purchase"))
-        .collect().map(r => r.getLong(0) -> r.getLong(r.length - 2).toInt).toMap
-      // entrants match the exact kernel; non-entrants emit nothing streamed
-      streamed.foreach { case (u, n) => assert(batch(u) === n, s"user $u") }
-      assert(batch.filter(_._2 > 0).keySet === streamed.keySet)
-    } finally query.stop()
-  }
-
-  test("retentionScreen: rolled-up increments reproduce the batch q88 kernel; offsets emit once") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val day = 24 * 60L // minutes per "day" via ts(); use real dayMillis below
-    // batch 1 = days 0–1, batch 2 = days 2–3 (watermark-ordered arrival, so
-    // nothing is late-dropped and the batch kernel is the exact target)
-    val evs1 = Seq(
-      Event(1, ts(0), "click", 0.0), Event(1, ts(30), "view", 0.0), // same day
-      Event(1, ts(day), "click", 0.0),
-      Event(2, ts(10), "click", 0.0),
-      Event(3, ts(day + 5), "click", 0.0))
-    val evs2 = Seq(
-      Event(1, ts(3 * day), "click", 0.0),
-      Event(3, ts(2 * day + 5), "view", 0.0))
-    val evs = evs1 ++ evs2
-    val source = MemoryStream[Event]
-    val query = EventStream.retentionScreen(
-      source.toDS(), watermark = "1 hour", idleTimeoutMillis = 30L * 86400000L)
-      .writeStream.format("memory").queryName("ret").outputMode(OutputMode.Append).start()
-    try {
-      // two batches to cross micro-batch boundaries mid-cohort
-      source.addData(evs1: _*)
-      query.processAllAvailable()
-      source.addData(evs2: _*)
-      query.processAllAvailable()
-      val inc = spark.table("ret").as[EventStream.RetentionIncrement].collect()
-      // each (user, cohort, offset) exactly once — repeats within a day are silent
-      assert(inc.length === inc.map(i => (i.user_id, i.cohort_day, i.offset_days)).distinct.length)
-      val streamed = inc.groupBy(i => (i.cohort_day, i.offset_days))
-        .map { case (k, v) => k -> v.length.toLong }
-      val batch = graft.operators.Cohorts.retention(
-        evs.toDF(), Seq("user_id"),
-        org.apache.spark.sql.functions.floor(col("ts").cast("double") / 86400.0).cast("long"))
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap
-      assert(streamed === batch,
-        s"streamed $streamed != batch $batch")
-    } finally query.stop()
-    intercept[IllegalArgumentException] {
-      EventStream.retentionScreen(MemoryStream[Event].toDS(), "1 hour", 0L)
-    }
   }
 
   test("sessionize: sessions close exactly once when the watermark passes the gap") {

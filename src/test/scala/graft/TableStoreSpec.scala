@@ -100,4 +100,35 @@ class TableStoreSpec extends SparkSpec {
     assertReadsLikeParquet(store, "parted")
     assert(store.read("parted").columns.last === "part")
   }
+
+  test("overwriteStaged: the new generation replaces the old, even when built from the table itself") {
+    val store = freshStore()
+    store.overwriteStaged("clock", frame)
+    assertReadsLikeParquet(store, "clock")
+    store.overwriteStaged("clock", store.read("clock").filter(col("id") < 5))
+    assertReadsLikeParquet(store, "clock")
+    assert(store.read("clock").count() === 5L)
+    // no staging or retired generation is left beside the live table
+    val dir = new java.io.File(store.path("clock"))
+    assert(dir.getParentFile.list().filter(_.startsWith("clock")).toSeq === Seq("clock"))
+  }
+
+  test("appendPartitioned: a batch adds files only under the partitions it touches") {
+    val store = freshStore()
+    val dir = new java.io.File(store.path("log"))
+    def files(part: String): Set[String] =
+      new java.io.File(dir, part).list().filter(_.endsWith(".parquet")).toSet
+    store.appendPartitioned("log", frame.filter(col("part") === 0), Seq("part"))
+    val part0 = files("part=0")
+    store.appendPartitioned("log", frame.filter(col("part") =!= 0), Seq("part"))
+    assert(files("part=0") === part0)
+    assert(dir.list().filter(_.startsWith("part=")).sorted.toSeq ===
+      Seq("part=0", "part=1", "part=2"))
+    assertReadsLikeParquet(store, "log")
+    assert(store.read("log").count() === 40L)
+    // append-only: re-appending a batch duplicates its rows
+    store.appendPartitioned("log", frame.filter(col("part") === 1), Seq("part"))
+    assert(store.read("log").count() === 53L)
+    assert(files("part=0") === part0)
+  }
 }

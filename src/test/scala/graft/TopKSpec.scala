@@ -26,11 +26,11 @@ class TopKSpec extends SparkSpec {
       viaSlice.orderBy("g").collect().toSeq)
   }
 
-  test("topKDesc == slice(sort_array(collect_list, desc)) on plain longs") {
+  test("SQL top_k_desc == slice(sort_array(collect_list, desc)) on plain longs") {
     val viaSlice = groups.groupBy("g")
       .agg(slice(sort_array(collect_list(col("id")), asc = false), 1, 2).as("top"))
     val viaHeap = groups.groupBy("g")
-      .agg(TopK.topKDesc(col("id"), 2).as("top"))
+      .agg(expr("top_k_desc(id, 2)").as("top"))
     assert(viaHeap.orderBy("g").collect().toSeq ===
       viaSlice.orderBy("g").collect().toSeq)
   }

@@ -63,11 +63,12 @@ class VectorSpec extends SparkSpec {
     assert(comps(1L) === 1L && comps(2L) === 1L && comps(5L) === 1L)
   }
 
-  test("exactGroups: case/whitespace-insensitive fingerprint groups") {
+  test("contentFingerprint: case/whitespace-insensitive fingerprint groups") {
     val docs = Seq(
       (1L, "Hello  World"), (2L, "hello world"), (3L, "HELLO\tWORLD"), (4L, "bye")
     ).toDF("doc_id", "text")
-    val g = Dedup.exactGroups(docs, "doc_id", "text")
+    val g = docs.groupBy(Text.contentFingerprint(col("text")).as("fingerprint"))
+      .agg(min(col("doc_id")), count(lit(1)))
       .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
     assert(g === Map(1L -> 3L, 4L -> 1L)) // keep_id -> dup_count
   }
@@ -311,7 +312,7 @@ class VectorSpec extends SparkSpec {
     // (few bits) and several tables. Parameter sweep measured: (4 bits, 8
     // tables) -> 0.69, (6, 8) -> 0.36, (8, 4) -> 0.06.
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val brute = Ann.bruteForceTopK(emb, "vec_id", "embedding", 3)
+    val brute = ExactAnn.bruteForceTopK(emb, "vec_id", "embedding", 3)
       .select("id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val lsh = Ann.lshTopK(emb, "vec_id", "embedding", 3, nBits = 4, tables = 8)
@@ -324,7 +325,7 @@ class VectorSpec extends SparkSpec {
 
   test("IVF ANN recall >= 0.55 at quarter-corpus probe budget on sf0.001") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val brute = Ann.bruteForceTopK(emb, "vec_id", "embedding", 3)
+    val brute = ExactAnn.bruteForceTopK(emb, "vec_id", "embedding", 3)
       .select("id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ivf = graft.operators.Ivf.ivfTopK(emb, "vec_id", "embedding", 3,
@@ -344,16 +345,16 @@ class VectorSpec extends SparkSpec {
 
   test("broadcast brute-force kNN is row-identical to the declarative join version") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val a = Ann.bruteForceTopK(emb, "vec_id", "embedding", 3)
+    val a = ExactAnn.bruteForceTopK(emb, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val b = Ann.bruteForceTopKBroadcast(emb, "vec_id", "embedding", 3)
+    val b = ExactAnn.bruteForceTopKBroadcast(emb, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     assert(a === b) // bit-identical cosines, same tie-breaks, same ranks
   }
 
   test("block-partitioned exact kNN is row-identical to both brute-force forms") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val declarative = Ann.bruteForceTopK(emb, "vec_id", "embedding", 3)
+    val declarative = ExactAnn.bruteForceTopK(emb, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     val block = Ann.blockTopK(emb, "vec_id", "embedding", 3, blocks = 7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
@@ -392,7 +393,7 @@ class VectorSpec extends SparkSpec {
 
   test("block-partitioned exact pair scan is row-identical to the non-equi join form") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-    val joined = Ann.cosinePairsAbove(emb, "vec_id", "embedding", 0.25)
+    val joined = ExactAnn.cosinePairsAbove(emb, "vec_id", "embedding", 0.25)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val block = Ann.blockPairsAbove(emb, "vec_id", "embedding", 0.25, blocks = 7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -425,7 +426,7 @@ class VectorSpec extends SparkSpec {
       .select("id").collect().map(_.getLong(0)).toSet
     assert(!out.contains(-1L), "corrupt row must be excluded")
     assert(out.size === 50, "all well-formed rows must be scored")
-    val brute = Ann.bruteForceTopKBroadcast(corrupt, "vec_id", "embedding", 3)
+    val brute = ExactAnn.bruteForceTopKBroadcast(corrupt, "vec_id", "embedding", 3)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(brute === out, "broadcast kernel must apply the same majority-dim rule")
   }
@@ -675,8 +676,9 @@ class VectorSpec extends SparkSpec {
       .filter(col("embedding").isNotNull)
       .withColumn("scale", int8Scale(col("embedding")))
       .withColumn("codes", int8Codes(col("embedding"), col("scale")))
+      // reconstruction: code / scale, double per element
       .withColumn("err", array_max(zip_with(
-        col("embedding"), dequantize(col("codes"), col("scale")),
+        col("embedding"), transform(col("codes"), c => c.cast("double") / col("scale")),
         (o, d) => abs(o.cast("double") - d))))
     val bad = df.filter(col("err") > lit(0.5) / col("scale") + lit(1e-12)).count()
     assert(bad === 0L, "every element must reconstruct within 0.5/scale")
@@ -768,7 +770,7 @@ class VectorSpec extends SparkSpec {
       s"all-pairs join found in plan:\n$plan")
   }
 
-  test("hashed embeddings: unit-norm dense vectors, identical texts collapse through SemDeDup") {
+  test("hashed embeddings: unit-norm sparse vectors, blank docs absent, identical texts collapse") {
     import graft.operators.HashedEmbedding
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
@@ -776,33 +778,20 @@ class VectorSpec extends SparkSpec {
       (3L, "completely different vocabulary occupying other buckets"),
       (4L, "")
     ).toDF("doc_id", "text")
-    val dense = HashedEmbedding.dense(docs, "doc_id", "text")
-    // blank doc has no direction: absent from the dense table
-    assert(dense.count() === 3L)
-    assert(dense.filter(col("doc_id") === 4L).isEmpty)
-    // every vector is 256-wide and unit-norm (float rounding tolerance)
-    val rows = dense.collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(rows.values.forall(_.length === 256))
-    rows.values.foreach { v =>
-      val n = math.sqrt(v.map(x => x.toDouble * x).sum)
-      assert(math.abs(n - 1.0) < 1e-6, s"norm $n")
+    val vecs = HashedEmbedding.sparse(docs, "doc_id", "text").collect()
+      .groupBy(_.getLong(0))
+      .map { case (id, rs) => id -> rs.map(r => r.getLong(1) -> r.getDouble(2)).toMap }
+    // blank doc has no direction: it emits no rows
+    assert(vecs.keySet === Set(1L, 2L, 3L))
+    vecs.values.foreach { v =>
+      assert(v.keys.forall(b => b >= 0L && b < 256L), v.keys)
+      val n = math.sqrt(v.values.map(x => x * x).sum)
+      assert(math.abs(n - 1.0) < 1e-12, s"norm $n")
     }
     // identical texts → identical vectors; distinct texts → distant
-    val cos = dense.as("a").join(dense.as("b"),
-      col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id"), col("b.doc_id"),
-        V.vec_cosine(col("a.embedding"), col("b.embedding")).as("c"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(cos((1L, 2L)) > 0.999999)
-    assert(cos((1L, 3L)) < 0.5, s"cross cosine ${cos((1L, 3L))}")
-    // the bridge composes: SemDeDup over the hashed vectors keeps one of
-    // the identical pair (min id canonical) and both distinct docs
-    val assigned = graft.operators.SemDedup.assign(
-      dense, "doc_id", "embedding", threshold = 0.99, nClusters = 2, iters = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(assigned.contains((1L, 1L, true)) && assigned.contains((2L, 1L, false)))
-    assert(assigned.exists(t => t._1 == 3L && t._3))
+    assert(vecs(1L) === vecs(2L))
+    val cross = vecs(1L).map { case (b, w) => w * vecs(3L).getOrElse(b, 0.0) }.sum
+    assert(cross < 0.5, s"cross cosine $cross")
   }
 
   test("SemDeDup fixture: cluster-local pairs, min-id canonicals, corrupt row excluded") {
