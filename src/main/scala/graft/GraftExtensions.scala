@@ -1,9 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import scala.util.Try
+
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession,
+  SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.{array, col, lit, round}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
+  IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.VectorExpressions._
@@ -57,6 +63,41 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+
+  /** The table or view a string-literal argument names. A missing one, or
+    * one without `cols`, fails resolution with a message naming `what`. */
+  private def table(e: Expression, what: String, cols: String*): DataFrame = {
+    val name = strLit(e, what)
+    val df = try SparkSession.active.table(name) catch {
+      case ex: AnalysisException => throw new IllegalArgumentException(
+        s"$what: no table or view '$name' (${ex.getMessage})", ex)
+    }
+    val missing = cols.filter(c => Try(df.col(c)).isFailure)
+    require(missing.isEmpty, s"$what '$name' has no column " +
+      s"${missing.mkString(", ")}; its columns: ${df.columns.mkString(", ")}")
+    df
+  }
+
+  /** A node id's type in a graph operator's output: `src`, `dst` and
+    * `extra` widened as `array()` widens them. */
+  private def nodeType(edges: DataFrame, extra: Long*): DataType =
+    edges.select(array(extra.map(lit) :+ col("src") :+ col("dst"): _*))
+      .schema.head.dataType.asInstanceOf[ArrayType].elementType
+
+  // a community label after at least one sweep: the argmax negates labels,
+  // and a negated string id reads as a double
+  private def labelType(edges: DataFrame, sweeps: Int): DataType =
+    nodeType(edges) match {
+      case StringType if sweeps > 0 => DoubleType
+      case t => t
+    }
+
+  /** An iterative table function: its `fields` are fixed at resolution and
+    * `run` executes the operator's loop when the query does
+    * ([[graft.plans.IterativeOp]]). */
+  private def iterative(name: String, fields: (String, DataType)*)(
+      run: => DataFrame): LogicalPlan =
+    graft.plans.IterativeOp(name, StructType(fields.map { case (n, t) => StructField(n, t) }))(run)
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
@@ -117,13 +158,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // bit_count(a^b) <= k) rewrites to the pigeonhole banded equi-join
     // union — the naive O(n²) form gets the scalable physical shape.
     ext.injectOptimizerRule(_ => graft.plans.HammingJoinRewrite)
+    // the iterative table functions' leaves run their loops at execution
+    ext.injectPlannerStrategy(_ => graft.plans.IterativeOpStrategy)
 
     // ---- table functions: the flagship pipeline OPERATORS, reachable from
     // pure SQL. Each takes catalog/temp-view names and column names as
     // string literals (plan-time constants — a TVF's shape cannot depend on
     // row values) and returns the operator's logical plan over
-    // SparkSession.active's catalog. The operators build lazy declarative
-    // plans, so injection does no work until the query runs.
+    // SparkSession.active's catalog: a declarative operator's lazy plan, or
+    // for an iterative one an IterativeOp leaf (see `iterative`). Either
+    // way, resolving the call runs no job.
     ext.injectTableFunction((
       FunctionIdentifier("edit_distance_pairs"),
       info("edit_distance_pairs",
@@ -132,7 +176,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 4,
           "edit_distance_pairs(table, idCol, strCol, k) takes 4 arguments")
         graft.operators.EditDistance.editDistancePairs(
-          SparkSession.active.table(strLit(children(0), "table")),
+          table(children(0), "table"),
           strLit(children(1), "idCol"), strLit(children(2), "strCol"),
           intLit(children(3), "k"))
           .queryExecution.logical
@@ -147,9 +191,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "bm25_topk(docs, idCol, textCol, queries, qidCol, qtextCol, k" +
             "[, maxQueryTerms]) takes 7 or 8 arguments")
         graft.operators.Bm25.topK(
-          SparkSession.active.table(strLit(children(0), "docs")),
+          table(children(0), "docs"),
           strLit(children(1), "idCol"), strLit(children(2), "textCol"),
-          SparkSession.active.table(strLit(children(3), "queries")),
+          table(children(3), "queries"),
           strLit(children(4), "qidCol"), strLit(children(5), "qtextCol"),
           intLit(children(6), "k"),
           maxQueryTerms =
@@ -167,7 +211,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 4,
           "mixture_resample(table, idCol, stratumCol, k) takes 4 arguments")
         graft.operators.Mixture.resampleUniform(
-          SparkSession.active.table(strLit(children(0), "table")),
+          table(children(0), "table"),
           strLit(children(1), "idCol"), strLit(children(2), "stratumCol"),
           intLit(children(3), "k"))
           .queryExecution.logical
@@ -182,7 +226,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 1, "table_profile(table) takes 1 argument")
         graft.operators.Profile.table(
-          SparkSession.active.table(strLit(children(0), "table")))
+          table(children(0), "table"))
           .queryExecution.logical
       }))
     ext.injectTableFunction((
@@ -191,29 +235,30 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "quality_lr_scores(table, idCol, textCol, iters) - train the " +
           "logistic quality classifier (C4-gate label, heuristic page " +
           "features, softsign link) by full-batch gradient descent and " +
-          "score every row; resolving the call RUNS TRAINING (one text " +
-          "scan + iters aggregations), the pagerank eager-resolution " +
-          "contract"),
+          "score every row; training (one text scan + iters " +
+          "aggregations) runs when the query executes"),
       (children: Seq[Expression]) => {
         require(children.length == 4,
           "quality_lr_scores(table, idCol, textCol, iters) takes 4 arguments")
-        val docs = SparkSession.active.table(strLit(children(0), "table"))
         val idCol = strLit(children(1), "idCol")
         val textCol = strLit(children(2), "textCol")
-        val txt = org.apache.spark.sql.functions.col(textCol)
-        import org.apache.spark.sql.functions.{col, lit, round}
-        // the SHARED canonical recipe — one definition for the oracled
-        // queries, this TVF, and the specs
-        val feats = graft.operators.Classifier.heuristicPageFeatures(txt)
-        val label = graft.operators.Classifier.c4Label(txt)
-        val model = graft.operators.Classifier.trainOnFeatures(
-          docs, feats, label, iters = intLit(children(3), "iters"), lr = 0.5,
-          link = graft.operators.Classifier.Link.Softsign)
-        val scored = round(model.score(feats.map { case (n, c) => c }), 6)
-        docs.select(
+        val docs = table(children(0), "table", idCol, textCol)
+        val iters = intLit(children(3), "iters")
+        iterative("quality_lr_scores", "id" -> docs.select(idCol).schema.head.dataType,
+            "label" -> LongType, "score" -> DoubleType, "predicted" -> BooleanType) {
+          val txt = col(textCol)
+          // the SHARED canonical recipe — one definition for the oracled
+          // queries, this TVF, and the specs
+          val feats = graft.operators.Classifier.heuristicPageFeatures(txt)
+          val label = graft.operators.Classifier.c4Label(txt)
+          val model = graft.operators.Classifier.trainOnFeatures(
+            docs, feats, label, iters = iters, lr = 0.5,
+            link = graft.operators.Classifier.Link.Softsign)
+          val scored = round(model.score(feats.map { case (n, c) => c }), 6)
+          docs.select(
             col(idCol).as("id"), label.cast("long").as("label"),
             scored.as("score"), (scored >= lit(0.5)).as("predicted"))
-          .queryExecution.logical
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("weighted_sample"),
@@ -227,7 +272,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val strata = strLit(children(3), "strataCsv")
           .split(',').map(_.trim).filter(_.nonEmpty).toSeq
         graft.operators.Sampling.weightedSample(
-          SparkSession.active.table(strLit(children(0), "table")),
+          table(children(0), "table"),
           strLit(children(1), "idCol"), strLit(children(2), "weightCol"),
           strata, intLit(children(4), "k"))
           .queryExecution.logical
@@ -242,7 +287,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 4,
           "ann_topk(table, idCol, vecCol, k) takes 4 arguments")
         graft.operators.Ann.blockTopK(
-          SparkSession.active.table(strLit(children(0), "table")),
+          table(children(0), "table"),
           strLit(children(1), "idCol"), strLit(children(2), "vecCol"),
           intLit(children(3), "k"))
           .queryExecution.logical
@@ -261,8 +306,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           names
         }
         graft.operators.SnapshotDiff.diff(
-          SparkSession.active.table(strLit(children(0), "oldTable")),
-          SparkSession.active.table(strLit(children(1), "newTable")),
+          table(children(0), "oldTable"),
+          table(children(1), "newTable"),
           cols(children(2), "keyColsCsv"), cols(children(3), "valueColsCsv"))
           .queryExecution.logical
       }))
@@ -273,21 +318,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "PageRank over (src, dst, w) edges, returning (node, rank). " +
           "deterministic defaults to FALSE (the production sum-fold shape; " +
           "O(1) aggregation buffers); true swaps in the bit-deterministic " +
-          "sorted folds. NOTE: PageRank.run is EAGER — resolving this call " +
-          "runs the full iteration and plans a checkpoint scan (the " +
-          "ann_topk analysis-time-work precedent, but heavier; re-analysis " +
-          "replans only the materialized scan)"),
+          "sorted folds. Each iteration is materialized when the query " +
+          "executes"),
       (children: Seq[Expression]) => {
         require(children.length >= 2 && children.length <= 4,
           "pagerank(edgesTable, iters[, damping[, deterministic]]) takes 2-4 arguments")
+        val edges = table(children(0), "edgesTable", "src", "dst", "w")
+        val iters = intLit(children(1), "iters")
         val damping =
           if (children.length >= 3) doubleLit(children(2), "damping") else 0.85
         val det =
           if (children.length == 4) boolLit(children(3), "deterministic") else false
-        graft.operators.PageRank.run(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          intLit(children(1), "iters"), damping, deterministic = det)
-          .queryExecution.logical
+        iterative("pagerank", "node" -> nodeType(edges), "rank" -> DoubleType) {
+          graft.operators.PageRank.run(edges, iters, damping, deterministic = det)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("video_neardup_pairs"),
@@ -305,7 +349,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val cap =
           if (children.length == 3) intLit(children(2), "maxFrameDf") else 1000
         graft.multimodal.Multimodal.videoNearDupPairs(
-          SparkSession.active.table(strLit(children(0), "table")),
+          table(children(0), "table"),
           minJaccard = minJ, maxFrameDf = cap)
           .queryExecution.logical
       }))
@@ -321,7 +365,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "audio_neardup_pairs(table[, maxHamming]) takes 1-2 arguments")
         val maxH = if (children.length == 2) intLit(children(1), "maxHamming") else 0
         val hashes = graft.multimodal.Multimodal
-          .audioHash(SparkSession.active.table(strLit(children(0), "table")))
+          .audioHash(table(children(0), "table"))
           .filter(org.apache.spark.sql.functions.col("valid"))
           .select("media_id", "ahash")
         graft.operators.Dedup.hammingNearDupPairs(
@@ -338,7 +382,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 4,
           "jaccard_pairs(table, idCol, textCol, minJaccard) takes 4 arguments")
         graft.operators.Dedup.prefixJaccardPairs(
-          SparkSession.active.table(strLit(children(0), "table")),
+          table(children(0), "table"),
           strLit(children(1), "idCol"), strLit(children(2), "textCol"),
           minJaccard = doubleLit(children(3), "minJaccard"))
           .queryExecution.logical
@@ -347,52 +391,49 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("graph_bfs"),
       info("graph_bfs",
         "graph_bfs(edgesTable, sourcesTable[, maxDepth]) - (node, dist) hop " +
-          "distances from the source set over (src, dst) edges. NOTE: " +
-          "EAGER like pagerank — resolving the call runs the frontier " +
-          "rounds (each round is materialized)"),
+          "distances from the source set over (src, dst) edges; each " +
+          "frontier round is materialized"),
       (children: Seq[Expression]) => {
         require(children.length >= 2 && children.length <= 3,
           "graph_bfs(edgesTable, sourcesTable[, maxDepth]) takes 2-3 arguments")
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        val sources = table(children(1), "sourcesTable", "node")
         val depth = if (children.length == 3) intLit(children(2), "maxDepth") else 50
-        graft.operators.Bfs.distances(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          SparkSession.active.table(strLit(children(1), "sourcesTable")),
-          maxDepth = depth)
-          .queryExecution.logical
+        iterative("graph_bfs", "node" -> nodeType(edges), "dist" -> LongType) {
+          graft.operators.Bfs.distances(edges, sources, maxDepth = depth)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_sssp"),
       info("graph_sssp",
         "graph_sssp(edgesTable, sourcesTable[, maxRounds]) - (node, dist) " +
           "min-plus weighted shortest path from the source set over " +
-          "(src, dst, w>=0) edges. NOTE: EAGER like pagerank/graph_bfs — " +
-          "resolving the call runs the relaxation rounds (each round is " +
-          "materialized)"),
+          "(src, dst, w>=0) edges; each relaxation round is materialized"),
       (children: Seq[Expression]) => {
         require(children.length >= 2 && children.length <= 3,
           "graph_sssp(edgesTable, sourcesTable[, maxRounds]) takes 2-3 arguments")
+        val edges = table(children(0), "edgesTable", "src", "dst", "w")
+        val sources = table(children(1), "sourcesTable", "node")
         val rounds = if (children.length == 3) intLit(children(2), "maxRounds") else 100
-        graft.operators.Sssp.distances(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          SparkSession.active.table(strLit(children(1), "sourcesTable")),
-          maxRounds = rounds)
-          .queryExecution.logical
+        iterative("graph_sssp", "node" -> nodeType(edges), "dist" -> LongType) {
+          graft.operators.Sssp.distances(edges, sources, maxRounds = rounds)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_kcore"),
       info("graph_kcore",
         "graph_kcore(edgesTable, k[, maxRounds]) - (node, core_deg) " +
           "members of the k-core (iterative peeling) over (src, dst) " +
-          "edges. NOTE: EAGER like pagerank/graph_bfs — resolving the " +
-          "call runs the peel rounds (each round is materialized)"),
+          "edges; each peel round is materialized"),
       (children: Seq[Expression]) => {
         require(children.length >= 2 && children.length <= 3,
           "graph_kcore(edgesTable, k[, maxRounds]) takes 2-3 arguments")
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        val k = intLit(children(1), "k")
         val rounds = if (children.length == 3) intLit(children(2), "maxRounds") else 100
-        graft.operators.KCore.core(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          k = intLit(children(1), "k"), maxRounds = rounds)
-          .queryExecution.logical
+        iterative("graph_kcore", "node" -> nodeType(edges), "core_deg" -> LongType) {
+          graft.operators.KCore.core(edges, k = k, maxRounds = rounds)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_lpa"),
@@ -400,34 +441,36 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "graph_lpa(edgesTable, rounds) - (node, label) synchronous " +
           "label-propagation communities after exactly `rounds` majority " +
           "sweeps over (src, dst) edges (deterministic: smallest-label " +
-          "ties). NOTE: EAGER like pagerank/graph_bfs — resolving the " +
-          "call runs the sweeps (each is materialized)"),
+          "ties); each sweep is materialized"),
       (children: Seq[Expression]) => {
         require(children.length == 2,
           "graph_lpa(edgesTable, rounds) takes 2 arguments")
-        graft.operators.LabelProp.communities(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          rounds = intLit(children(1), "rounds"))
-          .queryExecution.logical
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        val rounds = intLit(children(1), "rounds")
+        iterative("graph_lpa", "node" -> nodeType(edges),
+            "label" -> labelType(edges, rounds)) {
+          graft.operators.LabelProp.communities(edges, rounds = rounds)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_scc"),
       info("graph_scc",
         "graph_scc(edgesTable[, maxRounds]) - (id, scc) strongly connected " +
           "components (mutual reachability, scc = min member id) over " +
-          "DIRECTED (src, dst) edges. NOTE: EAGER like pagerank/graph_bfs " +
-          "— resolving the call runs the coloring rounds (each wave is " +
-          "materialized; once the live graph of integer ids has at most 1M " +
-          "nodes plus edges, one job collects it and the driver finishes " +
-          "the rounds)"),
+          "DIRECTED (src, dst) edges; each coloring wave is materialized, " +
+          "and once the live graph of integer ids has at most 1M nodes " +
+          "plus edges, one job collects it and the driver finishes the " +
+          "rounds"),
       (children: Seq[Expression]) => {
         require(children.length >= 1 && children.length <= 2,
           "graph_scc(edgesTable[, maxRounds]) takes 1-2 arguments")
+        val edges = table(children(0), "edgesTable", "src", "dst")
         val rounds = if (children.length == 2) intLit(children(1), "maxRounds") else 100
-        graft.operators.Scc.components(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          maxRounds = rounds)
-          .queryExecution.logical
+        // the labels widen to long: the peel unions onto a (long, long) frame
+        val id = nodeType(edges, 0L)
+        iterative("graph_scc", "id" -> id, "scc" -> id) {
+          graft.operators.Scc.components(edges, maxRounds = rounds)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_clustering"),
@@ -440,7 +483,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 1,
           "graph_clustering(edgesTable) takes 1 argument")
         graft.operators.Triangles.localClustering(
-          SparkSession.active.table(strLit(children(0), "edgesTable")))
+          table(children(0), "edgesTable"))
           .queryExecution.logical
       }))
     ext.injectTableFunction((
@@ -458,7 +501,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val cols = strLit(children(1), "colsCsv")
           .split(',').map(_.trim).filter(_.nonEmpty).toSeq
         graft.operators.Profile.functionalDeps(
-          SparkSession.active.table(strLit(children(0), "table")), cols)
+          table(children(0), "table"), cols)
           .queryExecution.logical
       }))
     ext.injectTableFunction((
@@ -473,7 +516,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 1,
           "link_prediction(edgesTable) takes 1 argument")
         graft.operators.LinkPredict.jaccardCandidates(
-          SparkSession.active.table(strLit(children(0), "edgesTable")))
+          table(children(0), "edgesTable"))
           .queryExecution.logical
       }))
     ext.injectTableFunction((
@@ -481,17 +524,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("graph_truss",
         "graph_truss(edgesTable, k[, maxRounds]) - (u, v, support) edges " +
           "of the k-truss (every edge in >= k-2 triangles within the " +
-          "surviving subgraph) over (src, dst) edges. NOTE: EAGER like " +
-          "pagerank/graph_kcore — resolving the call runs the peel rounds " +
-          "(each is materialized)"),
+          "surviving subgraph) over (src, dst) edges; each peel round is " +
+          "materialized"),
       (children: Seq[Expression]) => {
         require(children.length >= 2 && children.length <= 3,
           "graph_truss(edgesTable, k[, maxRounds]) takes 2-3 arguments")
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        val k = intLit(children(1), "k")
         val rounds = if (children.length == 3) intLit(children(2), "maxRounds") else 100
-        graft.operators.Truss.edges(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          k = intLit(children(1), "k"), maxRounds = rounds)
-          .queryExecution.logical
+        val node = nodeType(edges)
+        iterative("graph_truss", "u" -> node, "v" -> node, "support" -> LongType) {
+          graft.operators.Truss.edges(edges, k = k, maxRounds = rounds)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("temporal_reach"),
@@ -499,18 +543,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "temporal_reach(edgesTable, sourcesTable[, maxRounds]) - " +
           "(node, arrival) earliest time-respecting arrival from the " +
           "source set over (src, dst, ts>=0) temporal edges (paths may " +
-          "only traverse non-decreasing timestamps; sources at -1). NOTE: " +
-          "EAGER like graph_sssp — resolving the call runs the relaxation " +
-          "rounds (each is materialized)"),
+          "only traverse non-decreasing timestamps; sources at -1); each " +
+          "relaxation round is materialized"),
       (children: Seq[Expression]) => {
         require(children.length >= 2 && children.length <= 3,
           "temporal_reach(edgesTable, sourcesTable[, maxRounds]) takes 2-3 arguments")
+        val edges = table(children(0), "edgesTable", "src", "dst", "ts")
+        val sources = table(children(1), "sourcesTable", "node")
         val rounds = if (children.length == 3) intLit(children(2), "maxRounds") else 100
-        graft.operators.TemporalReach.earliestArrival(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          SparkSession.active.table(strLit(children(1), "sourcesTable")),
-          maxRounds = rounds)
-          .queryExecution.logical
+        iterative("temporal_reach", "node" -> nodeType(edges), "arrival" -> LongType) {
+          graft.operators.TemporalReach.earliestArrival(edges, sources, maxRounds = rounds)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_betweenness"),
@@ -518,18 +561,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "graph_betweenness(edgesTable, pivotsTable[, maxDepth]) - " +
           "(node, betweenness) Brandes betweenness centrality over " +
           "(src, dst) edges from the pivot set (all nodes = exact; a " +
-          "sampled subset = the Brandes-Pich estimator, ranking-faithful)." +
-          " NOTE: EAGER like pagerank/graph_bfs — resolving the call runs " +
-          "the BFS + dependency rounds (each is materialized)"),
+          "sampled subset = the Brandes-Pich estimator, ranking-faithful);" +
+          " each BFS and dependency level is materialized"),
       (children: Seq[Expression]) => {
         require(children.length >= 2 && children.length <= 3,
           "graph_betweenness(edgesTable, pivotsTable[, maxDepth]) takes 2-3 arguments")
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        val pivots = table(children(1), "pivotsTable", "node")
         val depth = if (children.length == 3) intLit(children(2), "maxDepth") else 50
-        graft.operators.Betweenness.fromPivots(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          SparkSession.active.table(strLit(children(1), "pivotsTable")),
-          maxDepth = depth)
-          .queryExecution.logical
+        iterative("graph_betweenness", "node" -> nodeType(edges),
+            "betweenness" -> DoubleType) {
+          graft.operators.Betweenness.fromPivots(edges, pivots, maxDepth = depth)
+        }
       }))
     // mixer selector shared by the kmv TVFs: 'lcg' = the portable oracled
     // hash (default), 'xx' = the production xxhash64 mixer
@@ -561,7 +604,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val k = intLit(children(3), "k")
         val (hasher, modulus) = kmvMixer(children.lift(4))
         graft.operators.Kmv.sketch(
-            SparkSession.active.table(strLit(children(0), "table")),
+            table(children(0), "table"),
             groupCols, strLit(children(2), "valueCol"), k, hasher)
           .select(groupCols.map(col) :+
             size(col("kmv")).cast("long").as("n_kept") :+
@@ -589,7 +632,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val (hasher, modulus) = kmvMixer(children.lift(5))
         graft.operators.Kmv.mergeTrailing(
             graft.operators.Kmv.sketch(
-              SparkSession.active.table(strLit(children(0), "table")),
+              table(children(0), "table"),
               Seq(ordCol), strLit(children(2), "valueCol"), k, hasher),
             ordCol, intLit(children(3), "window"), k)
           .select(col(ordCol), col("n_periods"),
@@ -609,8 +652,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 3,
           "categorical_drift(tableA, tableB, keyCol) takes 3 arguments")
         graft.operators.Drift.categoricalDrift(
-          SparkSession.active.table(strLit(children(0), "tableA")),
-          SparkSession.active.table(strLit(children(1), "tableB")),
+          table(children(0), "tableA"),
+          table(children(1), "tableB"),
           strLit(children(2), "keyCol"))
           .queryExecution.logical
       }))
@@ -630,7 +673,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           .split(',').map(_.trim).filter(_.nonEmpty).toSeq
         require(keys.nonEmpty, "keyColsCsv must list at least one column")
         graft.operators.TimeSeries.ewmaDeviation(
-          SparkSession.active.table(strLit(children(0), "table")),
+          table(children(0), "table"),
           keys, strLit(children(2), "ordCol"), strLit(children(3), "valueCol"),
           lags = intLit(children(4), "lags"),
           alarmNum = intLit(children(5), "alarmNum").toLong,
@@ -653,7 +696,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           .split(',').map(_.trim).filter(_.nonEmpty).toSeq
         require(keys.nonEmpty, "keyColsCsv must list at least one column")
         graft.operators.TimeSeries.autocorrelation(
-          SparkSession.active.table(strLit(children(0), "table")),
+          table(children(0), "table"),
           keys, strLit(children(2), "ordCol"),
           strLit(children(3), "valueCol"),
           lag = intLit(children(4), "lag"))
@@ -677,7 +720,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           .split(',').map(_.trim).filter(_.nonEmpty).toSeq
         require(keys.nonEmpty, "keyColsCsv must list at least one column")
         graft.operators.TimeSeries.seasonalDeviation(
-          SparkSession.active.table(strLit(children(0), "table")),
+          table(children(0), "table"),
           keys, strLit(children(2), "ordCol"), strLit(children(3), "valueCol"),
           period = intLit(children(4), "period"),
           alarmNum = intLit(children(5), "alarmNum").toLong,
@@ -691,15 +734,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "Louvain communities after exactly `sweeps` alternating-parity " +
           "greedy modularity-gain half-sweeps over (src, dst) edges " +
           "(deterministic: (gain desc, label asc) ties, strict-improve " +
-          "moves). NOTE: EAGER like pagerank/graph_lpa — resolving the " +
-          "call runs the sweeps (each is materialized)"),
+          "moves); each sweep is materialized"),
       (children: Seq[Expression]) => {
         require(children.length == 2,
           "graph_louvain(edgesTable, sweeps) takes 2 arguments")
-        graft.operators.Louvain.communities(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          sweeps = intLit(children(1), "sweeps"))
-          .queryExecution.logical
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        val sweeps = intLit(children(1), "sweeps")
+        iterative("graph_louvain", "node" -> nodeType(edges),
+            "label" -> labelType(edges, sweeps)) {
+          graft.operators.Louvain.communities(edges, sweeps = sweeps)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_louvain_refine"),
@@ -708,18 +752,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "refined) Leiden-style connectivity refinement of the " +
           "one-level Louvain partition: each community split into the " +
           "connected components of its induced subgraph (refined = " +
-          "component min node; never lowers modularity). NOTE: EAGER " +
-          "like graph_louvain — resolving the call runs the sweeps and " +
-          "the refinement closure"),
+          "component min node; never lowers modularity); runs the sweeps " +
+          "and the refinement closure"),
       (children: Seq[Expression]) => {
         require(children.length == 2,
           "graph_louvain_refine(edgesTable, sweeps) takes 2 arguments")
-        val edges = SparkSession.active.table(
-          strLit(children(0), "edgesTable"))
-        val labels = graft.operators.Louvain.communities(
-          edges, sweeps = intLit(children(1), "sweeps"))
-        graft.operators.Louvain.refine(edges, labels.select("node", "label"))
-          .queryExecution.logical
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        val sweeps = intLit(children(1), "sweeps")
+        val node = nodeType(edges)
+        iterative("graph_louvain_refine", "node" -> node,
+            "label" -> labelType(edges, sweeps), "refined" -> node) {
+          val labels = graft.operators.Louvain.communities(edges, sweeps = sweeps)
+          graft.operators.Louvain.refine(edges, labels.select("node", "label"))
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_louvain2"),
@@ -728,16 +773,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "TWO-LEVEL Louvain: one-level local moves, communities " +
           "contracted to a weighted supergraph (intra weight as " +
           "self-loop degrees), weighted local moves there, mapped back " +
-          "(never lowers Q vs one level). NOTE: EAGER like " +
-          "graph_louvain — resolving the call runs both levels"),
+          "(never lowers Q vs one level); runs both levels"),
       (children: Seq[Expression]) => {
         require(children.length == 3,
           "graph_louvain2(edgesTable, sweeps1, sweeps2) takes 3 arguments")
-        graft.operators.Louvain.twoLevel(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          sweeps1 = intLit(children(1), "sweeps1"),
-          sweeps2 = intLit(children(2), "sweeps2"))
-          .queryExecution.logical
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        val sweeps1 = intLit(children(1), "sweeps1")
+        val sweeps2 = intLit(children(2), "sweeps2")
+        iterative("graph_louvain2", "node" -> nodeType(edges),
+            "label" -> labelType(edges, sweeps1 + sweeps2)) {
+          graft.operators.Louvain.twoLevel(edges, sweeps1 = sweeps1, sweeps2 = sweeps2)
+        }
       }))
     ext.injectFunction((
       FunctionIdentifier("kmv_jaccard"),
@@ -769,46 +815,47 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("graph_coreness",
         "graph_coreness(edgesTable[, maxK]) - (node, coreness) full " +
           "k-shell decomposition over (src, dst) edges: each node's max " +
-          "k with k-core membership. NOTE: EAGER like graph_kcore — the " +
-          "graded peel runs at resolution (each shell materializes)"),
+          "k with k-core membership; each shell of the graded peel is " +
+          "materialized"),
       (children: Seq[Expression]) => {
         require(children.length >= 1 && children.length <= 2,
           "graph_coreness(edgesTable[, maxK]) takes 1-2 arguments")
+        val edges = table(children(0), "edgesTable", "src", "dst")
         val mk = if (children.length == 2) intLit(children(1), "maxK") else 64
-        graft.operators.KCore.coreness(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          maxK = mk)
-          .queryExecution.logical
+        iterative("graph_coreness", "node" -> nodeType(edges), "coreness" -> LongType) {
+          graft.operators.KCore.coreness(edges, maxK = mk)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_katz"),
       info("graph_katz",
         "graph_katz(edgesTable[, depth]) - (node, katz) fixed-depth Katz " +
           "centrality (alpha = 0.5) over DIRECTED (src, dst) edges: " +
-          "alpha^k-discounted walk counts into each node. NOTE: EAGER " +
-          "like pagerank — the layers run at resolution"),
+          "alpha^k-discounted walk counts into each node; each layer is " +
+          "materialized"),
       (children: Seq[Expression]) => {
         require(children.length >= 1 && children.length <= 2,
           "graph_katz(edgesTable[, depth]) takes 1-2 arguments")
+        val edges = table(children(0), "edgesTable", "src", "dst")
         val d = if (children.length == 2) intLit(children(1), "depth") else 4
-        graft.operators.Katz.scores(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          depth = d)
-          .queryExecution.logical
+        iterative("graph_katz", "node" -> nodeType(edges), "katz" -> DoubleType) {
+          graft.operators.Katz.scores(edges, depth = d)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_wcc"),
       info("graph_wcc",
         "graph_wcc(edgesTable) - (id, comp) weakly connected components " +
           "over (src, dst) edges (log-rounds star contraction; comp = min " +
-          "member id). NOTE: EAGER — the star rounds run at resolution"),
+          "member id); each star round is materialized"),
       (children: Seq[Expression]) => {
         require(children.length == 1,
           "graph_wcc(edgesTable) takes 1 argument")
-        graft.operators.Dedup.connectedComponentsLogRoundsStrict(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          idA = "src", idB = "dst")
-          .queryExecution.logical
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        iterative("graph_wcc", "id" -> LongType, "comp" -> LongType) {
+          graft.operators.Dedup.connectedComponentsLogRoundsStrict(
+            edges, idA = "src", idB = "dst")
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_modularity"),
@@ -816,29 +863,35 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "graph_modularity(edgesTable, labelsTable) - per community " +
           "(label, n_nodes, e_in, d_sum, modularity) over (src, dst) " +
           "edges and a TOTAL (node, label) partition — Newman Q_c from " +
-          "exact counts, one IEEE division. NOTE: EAGER — the edge count " +
-          "and the total-labeling guard run at resolution"),
+          "exact counts, one IEEE division; the edge count and the " +
+          "total-labeling guard each run a job"),
       (children: Seq[Expression]) => {
         require(children.length == 2,
           "graph_modularity(edgesTable, labelsTable) takes 2 arguments")
-        graft.operators.GraphStats.modularity(
-          SparkSession.active.table(strLit(children(0), "edgesTable")),
-          SparkSession.active.table(strLit(children(1), "labelsTable")))
-          .queryExecution.logical
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        val labels = table(children(1), "labelsTable", "node", "label")
+        iterative("graph_modularity",
+            "label" -> labels.select("label").schema.head.dataType,
+            "n_nodes" -> LongType, "e_in" -> LongType, "d_sum" -> LongType,
+            "modularity" -> DoubleType) {
+          graft.operators.GraphStats.modularity(edges, labels)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("graph_assortativity"),
       info("graph_assortativity",
         "graph_assortativity(edgesTable) - ONE row (m_stubs, s_x, s_xy, " +
           "s_xx, assortativity): degree assortativity of the undirected " +
-          "graph — exact stub sums, sqrt-free, NULL on zero variance. " +
-          "NOTE: EAGER — the non-empty guard runs at resolution"),
+          "graph — exact stub sums, sqrt-free, NULL on zero variance; the " +
+          "non-empty guard runs a job"),
       (children: Seq[Expression]) => {
         require(children.length == 1,
           "graph_assortativity(edgesTable) takes 1 argument")
-        graft.operators.GraphStats.assortativity(
-          SparkSession.active.table(strLit(children(0), "edgesTable")))
-          .queryExecution.logical
+        val edges = table(children(0), "edgesTable", "src", "dst")
+        iterative("graph_assortativity", "m_stubs" -> LongType, "s_x" -> LongType,
+            "s_xy" -> LongType, "s_xx" -> LongType, "assortativity" -> DoubleType) {
+          graft.operators.GraphStats.assortativity(edges)
+        }
       }))
     ext.injectTableFunction((
       FunctionIdentifier("as_of_join"),
@@ -856,8 +909,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           names
         }
         graft.operators.AsOfJoin.lastValueAsOf(
-          SparkSession.active.table(strLit(children(0), "left")),
-          SparkSession.active.table(strLit(children(1), "right")),
+          table(children(0), "left"),
+          table(children(1), "right"),
           cols(children(2), "keyColsCsv"), strLit(children(3), "ordCol"),
           cols(children(4), "valueColsCsv"))
           .queryExecution.logical

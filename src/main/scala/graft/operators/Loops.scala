@@ -44,14 +44,25 @@ import org.apache.spark.storage.StorageLevel
   * so both refuse anything but Project, Filter and Union over checkpoints. */
 private[graft] object Loops {
 
-  /** Checkpoints made on this thread inside the innermost open [[scope]]. */
-  private val open = new ThreadLocal[ArrayBuffer[RDD[_]]]
+  /** The checkpoints made inside one [[scope]] call. Work that runs on
+    * another thread for the scope's query records into it through
+    * [[within]]; once the scope has returned, it records nothing more. */
+  final class Scope private[Loops] {
+    private val made = ArrayBuffer.empty[RDD[_]]
+    private var closed = false
+    def isOpen: Boolean = synchronized(!closed)
+    private[Loops] def add(rdd: RDD[_]): Unit = synchronized { if (!closed) made += rdd }
+    private[Loops] def close(): Seq[RDD[_]] = synchronized { closed = true; made.toList }
+  }
+
+  /** The innermost open scope of this thread. */
+  private val open = new ThreadLocal[Scope]
 
   /** `ds.localCheckpoint(eager)`; recorded by the thread's open scope. */
   def checkpoint[T](ds: Dataset[T], eager: Boolean): Dataset[T] = {
     val out = ds.localCheckpoint(eager)
-    val made = open.get
-    if (made != null) made += storage(out.queryExecution.analyzed, "checkpoint")
+    val s = open.get
+    if (s != null) s.add(storage(out.queryExecution.analyzed, "checkpoint"))
     out
   }
 
@@ -74,17 +85,25 @@ private[graft] object Loops {
   }
 
   /** Runs `body`, then unpersists every checkpoint this thread made inside
-    * it. Checkpoints made outside any scope, or on other threads, are left
+    * it, and those that threads running [[within]] this scope made.
+    * Checkpoints made outside any scope, or on other threads, are left
     * alone. Nested scopes release their own checkpoints. */
   def scope[T](body: => T): T = {
+    val s = new Scope
+    try within(Some(s))(body)
+    finally s.close().foreach(release)
+  }
+
+  /** This thread's innermost open scope, for work the thread hands on. */
+  def currentScope: Option[Scope] = Option(open.get)
+
+  /** Runs `body` with `s` as this thread's innermost scope (`None`: no
+    * scope, so ContextCleaner releases what it checkpoints). */
+  def within[T](s: Option[Scope])(body: => T): T = {
     val outer = open.get
-    val made = ArrayBuffer.empty[RDD[_]]
-    open.set(made)
+    open.set(s.orNull)
     try body
-    finally {
-      open.set(outer)
-      made.foreach(release)
-    }
+    finally open.set(outer)
   }
 
   private def release(rdd: RDD[_]): Unit =

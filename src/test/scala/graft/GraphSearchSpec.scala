@@ -82,11 +82,36 @@ class GraphSearchSpec extends SparkSpec {
     assert(math.abs(sum.values.sum - 1.0) < 1e-9) // mass conserved in sum mode
   }
 
+  /** The executed plan of every `localCheckpoint` that `body` runs: the
+    * plans an eager operator actually executes (its returned frame is
+    * only a checkpoint scan). */
+  private def checkpointPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // listener events arrive on the bus asynchronously
+    try { body; org.apache.spark.sql.graftshim.ListenerBusAccess.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    val seen = plans.toArray(Array.empty[String]).toSeq
+    assert(seen.nonEmpty, "no localCheckpoint plan seen")
+    seen
+  }
+
   test("pageRank: scale mode plans partial-aggregable sums, no collect_list buffers") {
     val edges = Seq((1L, 2L, 1L), (2L, 1L, 1L)).toDF("src", "dst", "w")
-    val p = PageRank.run(edges, iters = 2, deterministic = false)
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("collect_list"), p)
+    // every round's executed plan: sums with a partial phase, no list buffer
+    val scale = checkpointPlans(PageRank.run(edges, iters = 2, deterministic = false))
+    assert(scale.exists(_.contains("partial_sum")), scale.mkString("\n---\n"))
+    scale.foreach(p => assert(!p.contains("collect_list"), p))
+    // the same plans in deterministic mode do buffer: the check can fail
+    val det = checkpointPlans(PageRank.run(edges, iters = 2, deterministic = true))
+    assert(det.exists(_.contains("collect_list")), det.mkString("\n---\n"))
   }
 
   test("pageRank: per-iteration plan shape — keyed equi-joins + partial-aggregable rollup") {
@@ -97,21 +122,8 @@ class GraphSearchSpec extends SparkSpec {
     // the only nested-loop joins are the 1-row broadcast scalars n and
     // danglingMass), and the per-dst rollup in scale mode is a
     // map-side-combinable partial_sum, not a collect_list.
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val plans = new java.util.concurrent.LinkedBlockingQueue[String]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     val edges = Seq((1L, 2L, 1L), (2L, 3L, 2L), (3L, 1L, 1L)).toDF("src", "dst", "w")
-    spark.listenerManager.register(listener)
-    // listener events arrive on the bus asynchronously
-    val p = try {
-      PageRank.run(edges, iters = 1, deterministic = false)
-      Option(plans.poll(60, TimeUnit.SECONDS)).getOrElse(fail("no localCheckpoint plan seen"))
-    } finally spark.listenerManager.unregister(listener)
+    val p = checkpointPlans(PageRank.run(edges, iters = 1, deterministic = false)).head
     assert(p.contains("Join"), p)
     assert(!p.contains("CartesianProduct"), p)
     assert(p.contains("partial_sum"), p)
