@@ -84,8 +84,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     edges.select(array(extra.map(lit) :+ col("src") :+ col("dst"): _*))
       .schema.head.dataType.asInstanceOf[ArrayType].elementType
 
-  // a community label after at least one sweep: the argmax negates labels,
-  // and a negated string id reads as a double
+  // a Louvain community label after at least one sweep: its argmax negates
+  // labels, and a negated string id reads as a double, so Louvain's parity
+  // with its oracle needs numeric ids
   private def labelType(edges: DataFrame, sweeps: Int): DataType =
     nodeType(edges) match {
       case StringType if sweeps > 0 => DoubleType
@@ -447,8 +448,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "graph_lpa(edgesTable, rounds) takes 2 arguments")
         val edges = table(children(0), "edgesTable", "src", "dst")
         val rounds = intLit(children(1), "rounds")
-        iterative("graph_lpa", "node" -> nodeType(edges),
-            "label" -> labelType(edges, rounds)) {
+        val node = nodeType(edges)
+        iterative("graph_lpa", "node" -> node, "label" -> node) {
           graft.operators.LabelProp.communities(edges, rounds = rounds)
         }
       }))

@@ -2,7 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analytics.Alerts
@@ -36,14 +36,24 @@ object Main {
       errorMessage: String,
       counts: Map[String, Long])
 
-  /** The five curated tables in write order, each with its builder over RAW;
-    * also the order of the `rows_<name>` columns of `etl_log`. */
-  private[graft] val CuratedTables: Seq[(String, DataFrame => DataFrame)] = Seq(
+  /** The five curated tables in write order, each with its builder over RAW
+    * and the run's timestamp; also the order of the `rows_<name>` columns of
+    * `etl_log`. */
+  private[graft] val CuratedTables: Seq[(String, (DataFrame, Column) => DataFrame)] = Seq(
     "dim_chorister" -> DimChorister.build,
-    "dim_chorister_assignment" -> DimChorister.buildAssignments,
+    "dim_chorister_assignment" -> ((raw, _) => DimChorister.buildAssignments(raw)),
     "dim_song" -> DimSong.build,
-    "fact_attendance" -> (raw => FactAttendance.build(raw, DimChorister.idByKey(raw))),
-    "fact_song_time" -> (raw => FactSongTime.build(raw, DimSong.withSeq(raw))))
+    "fact_attendance" -> FactAttendance.build,
+    "fact_song_time" -> FactSongTime.build)
+
+  /** The run's timestamp, taken once per run. Generated code reads it
+    * through a reference (a 0-arg UDF returning the captured instant), where
+    * `current_timestamp()` would inline each run's value as a literal and
+    * make a warm run compile its classes again. */
+  private def runTimestamp(): Column = {
+    val at = java.time.Instant.now()
+    udf(() => at).asNondeterministic()()
+  }
 
   /** Build + write the five curated tables, then marts, then alerts.
     * Mirrors main.py:182-299; the etl_log append happens here too, so a
@@ -58,9 +68,11 @@ object Main {
     val counts = scala.collection.mutable.LinkedHashMap(
       CuratedTables.map(_._1 -> 0L): _*)
 
+    val now = runTimestamp()
+
     try {
       CuratedTables.foreach { case (name, build) =>
-        counts(name) = store.overwrite(name, build(raw))
+        counts(name) = store.overwrite(name, build(raw, now))
       }
 
       buildMarts(spark, store)
@@ -72,7 +84,7 @@ object Main {
         error = Option(e.getMessage).getOrElse(e.toString).take(500)
     }
 
-    appendLog(spark, store, status, error, counts.toMap)
+    appendLog(spark, store, now, status, error, counts.toMap)
     RunResult(status, error, counts.toMap)
   }
 
@@ -98,13 +110,11 @@ object Main {
         factAttendance, factSongTime))
   }
 
-  /** Entry point 3 (main.py:111-143): mart_attendance → streaks + rate →
-    * formatted message → sink. */
+  /** Entry point 3 (main.py:111-143): mart_attendance → one collected
+    * per-chorister summary → streaks + rate → formatted message → sink. */
   def runAlerts(spark: SparkSession, store: TableStore, cfg: AlertConfig): Unit = {
-    val mart = store.read("mart_attendance")
-    val violators = AlertMessage.collectViolators(
-      Alerts.currentMissedStreaks(mart, cfg.lookbackWeeks, cfg.streakThreshold))
-    val rate = Alerts.attendanceRate(mart, cfg.lookbackWeeks)
+    val summary = Alerts.summary(store.read("mart_attendance"), cfg.lookbackWeeks).collect()
+    val (violators, rate) = AlertMessage.fromSummary(summary.toSeq, cfg.streakThreshold)
     cfg.sink.send(AlertMessage.format(
       violators, cfg.lookbackWeeks, cfg.streakThreshold, rate))
   }
@@ -114,10 +124,11 @@ object Main {
   private def appendLog(
       spark: SparkSession,
       store: TableStore,
+      now: Column,
       status: String,
       error: String,
       counts: Map[String, Long]): Unit = {
-    val cols = Seq(current_timestamp().as("run_ts"), lit(status).as("status")) ++
+    val cols = Seq(now.as("run_ts"), lit(status).as("status")) ++
       CuratedTables.map { case (name, _) => lit(counts(name)).as(s"rows_$name") } :+
       lit(error).as("error_message")
     val row = spark.sql("SELECT 1").select(cols: _*)

@@ -6835,7 +6835,7 @@ object Queries {
   /** The curated tables of [[Main.CuratedTables]] over the golden fixture. */
   private def choirTables(s: SparkSession): Map[String, DataFrame] = {
     val raw = graft.etl.ChoirFixture.raw(s)
-    Main.CuratedTables.map { case (name, build) => name -> build(raw) }.toMap
+    Main.CuratedTables.map { case (name, build) => name -> build(raw, current_timestamp()) }.toMap
   }
 
   /** The full mart_attendance pipeline (R1/R2/P7/P8/D1/D4/J1/J3/X1/P11) on

@@ -33,6 +33,10 @@ object Sessions {
     // A static conf: CodeGenerator sizes its cache once per JVM, at the
     // first codegen, so later sessions in the same JVM share that size.
     .config("spark.sql.codegen.cache.maxEntries", "1000")
+    // Whole-stage class names otherwise carry the codegen stage id, which
+    // AQE assigns in plan order: the same stage gets another id, hence
+    // another class source, from one run to the next. Names only.
+    .config("spark.sql.codegen.useIdInClassName", "false")
 
   def local(cores: Int = 4, shufflePartitions: Int = 0): SparkSession = {
     val sp = if (shufflePartitions > 0) shufflePartitions else cores

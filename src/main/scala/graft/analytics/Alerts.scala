@@ -26,9 +26,10 @@ import graft.etl.Exprs
   *  - the streak is the run of leading rows (newest first) until the first
   *    attended_flag=1 or missed_flag=0 row; missed_dates caps at 10.
   *
-  * Shuffle shape: one exchange on chorister_id shared by the running-break
-  * window and the per-chorister aggregation, plus a broadcast of the 1-row
-  * max-date frame. No per-row windows over unique keys.
+  * Shape: one tiny job finds the window's first date; then one exchange on
+  * chorister_id serves the running-break window and the one per-chorister
+  * aggregate ([[summary]]) that yields everything else. Streaks and the rate
+  * are views of that summary, which has at most one row per chorister.
   */
 object Alerts {
 
@@ -63,81 +64,77 @@ object Alerts {
       .filter(col("rehearsal_date") =!= "")
   }
 
-  /** Rows restricted to the lookback window: dates >= max(date) - 7*weeks
-    * (inclusive). The 1-row max frame is broadcast — no shuffle of the fact
-    * side, works identically on a 1000-executor cluster.
+  /** Per-chorister alert summary over the available rows: one row per
+    * chorister with an available row, holding
+    *  - `full_name`, `voice_part` ("—" when empty), `tgid` and `is_active`
+    *    of the newest in-window row (null when it has none);
+    *  - `last_attended_date` over ALL available rows (null if never);
+    *  - `streak_len` and `missed_dates` (newest first, at most 10): the
+    *    in-window rows before the first attended or not-missed one;
+    *  - `n_available` and `n_attended`: in-window rows, and those attended.
+    * The window is the dates >= max(date) - 7*weeks (inclusive); its first
+    * date comes from one tiny job here, so the frame's plan reads it as a
+    * literal.
     */
-  private def inWindow(available: DataFrame, lookbackWeeks: Int): DataFrame = {
-    val mx = available.agg(max(col("rehearsal_date")).as("__max_date"))
+  def summary(mart: DataFrame, lookbackWeeks: Int): DataFrame = {
+    val available = normalizeAvailable(mart)
+    val start = available
+      .agg(date_format(date_sub(to_date(max(col("rehearsal_date"))), 7 * lookbackWeeks),
+        "yyyy-MM-dd"))
+      .head().getString(0)
+    val in = col("__in")
+    val w = Window.partitionBy("chorister_id").orderBy(col("rehearsal_date").desc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val breakCond = col("attended_flag") === 1 || col("missed_flag") === 0
+    val missed = in && col("__breaks") === 0
+    def orDash(c: Column) = when(c === "", "—").otherwise(c)
     available
-      .crossJoin(broadcast(mx))
-      .filter(col("rehearsal_date") >=
-        date_format(date_sub(to_date(col("__max_date")), 7 * lookbackWeeks), "yyyy-MM-dd"))
-      .drop("__max_date")
+      .withColumn("__in", coalesce(col("rehearsal_date") >= lit(start).cast("string"), lit(false)))
+      .withColumn("__breaks", sum(when(in && breakCond, 1).otherwise(0)).over(w))
+      .groupBy("chorister_id")
+      .agg(
+        max_by(when(in, struct(col("is_active"), col("full_name"), col("voice_part"), col("tgid"))),
+          when(in, col("rehearsal_date"))).as("__latest"),
+        max(when(col("attended_flag") === 1, col("rehearsal_date"))).as("last_attended_date"),
+        count(when(missed, 1)).as("streak_len"),
+        slice(sort_array(collect_list(when(missed, col("rehearsal_date"))), asc = false), 1, 10)
+          .as("missed_dates"),
+        count(when(in, 1)).as("n_available"),
+        count(when(in && col("attended_flag") === 1, 1)).as("n_attended"))
+      .select(
+        col("chorister_id"),
+        orDash(col("__latest.full_name")).as("full_name"),
+        orDash(col("__latest.voice_part")).as("voice_part"),
+        col("__latest.tgid").as("tgid"),
+        col("__latest.is_active").as("is_active"),
+        col("last_attended_date"),
+        col("streak_len"),
+        col("missed_dates"),
+        col("n_available"),
+        col("n_attended"))
   }
 
-  /** Reference `compute_current_missed_streak` (alerts.py:77-151). Returns
+  /** Reference `compute_current_missed_streak` (alerts.py:77-151): the
+    * [[summary]] rows of active choristers with streak >= threshold, as
     * (chorister_id, full_name, voice_part, tgid, last_attended_date,
-    * streak_len, missed_dates) for active choristers with streak >= threshold.
-    * full_name / voice_part fall back to "—"; last_attended_date is null when
-    * the chorister never attended; missed_dates is newest-first, capped at 10.
+    * streak_len, missed_dates), ordered by chorister_id.
     */
   def currentMissedStreaks(
       mart: DataFrame,
       lookbackWeeks: Int,
-      streakThreshold: Int): DataFrame = {
-    val available = normalizeAvailable(mart)
-
-    val lastAttended = available
-      .filter(col("attended_flag") === 1)
-      .groupBy("chorister_id")
-      .agg(max(col("rehearsal_date")).as("last_attended_date"))
-
-    val w = Window.partitionBy("chorister_id").orderBy(col("rehearsal_date").desc)
-    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val breakCond = col("attended_flag") === 1 || col("missed_flag") === 0
-
-    val streaks = inWindow(available, lookbackWeeks)
-      .withColumn("__breaks", sum(when(breakCond, 1).otherwise(0)).over(wRun))
-      .groupBy("chorister_id")
-      .agg(
-        max_by(
-          struct(col("is_active"), col("full_name"), col("voice_part"), col("tgid")),
-          col("rehearsal_date")).as("__latest"),
-        count(when(col("__breaks") === 0, 1)).as("streak_len"),
-        slice(sort_array(collect_list(when(col("__breaks") === 0, col("rehearsal_date"))),
-          asc = false), 1, 10).as("missed_dates"))
-      .filter(col("__latest.is_active") && col("streak_len") >= streakThreshold)
-
-    streaks
-      .join(lastAttended, Seq("chorister_id"), "left")
-      .select(
-        col("chorister_id"),
-        when(col("__latest.full_name") === "", "—")
-          .otherwise(col("__latest.full_name")).as("full_name"),
-        when(col("__latest.voice_part") === "", "—")
-          .otherwise(col("__latest.voice_part")).as("voice_part"),
-        col("__latest.tgid").as("tgid"),
-        col("last_attended_date"),
-        col("streak_len"),
-        col("missed_dates"))
+      streakThreshold: Int): DataFrame =
+    summary(mart, lookbackWeeks)
+      .filter(col("is_active") && col("streak_len") >= streakThreshold)
+      .select("chorister_id", "full_name", "voice_part", "tgid",
+        "last_attended_date", "streak_len", "missed_dates")
       .orderBy("chorister_id")
-  }
 
-  /** Attendance rate as a 1-row frame (n_available, n_attended, rate) —
-    * empty when there is no available data in the window. */
+  /** Reference `compute_attendance_rate` (alerts.py:154-174) as a 1-row
+    * frame (n_available, n_attended, rate = attended / available inside
+    * the window) — empty when there is no available data in the window. */
   def attendanceRateFrame(mart: DataFrame, lookbackWeeks: Int): DataFrame =
-    inWindow(normalizeAvailable(mart), lookbackWeeks)
-      .agg(
-        count(lit(1)).as("n_available"),
-        sum(col("attended_flag")).cast("long").as("n_attended"))
+    summary(mart, lookbackWeeks)
+      .agg(sum(col("n_available")).as("n_available"), sum(col("n_attended")).as("n_attended"))
       .filter(col("n_available") > 0)
       .withColumn("rate", col("n_attended").cast("double") / col("n_available"))
-
-  /** Reference `compute_attendance_rate` (alerts.py:154-174): attended /
-    * available inside the window, or None when the window is empty.
-    */
-  def attendanceRate(mart: DataFrame, lookbackWeeks: Int): Option[Double] =
-    attendanceRateFrame(mart, lookbackWeeks)
-      .collect().headOption.map(_.getAs[Double]("rate"))
 }

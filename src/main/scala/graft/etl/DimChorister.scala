@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,8 @@ import graft.etl.RawSheet.{qcol, RowIdx}
   *
   * Capability source: /root/reference/etl/dim_chorister.py. The reference
   * assigns IDs in source-row order with hand-rolled dicts; here every
-  * order-dependent rule is a deterministic window over `src_row_idx`:
+  * order-dependent rule is a window over `src_row_idx` in one chorister
+  * frame ([[frame]]):
   *  - D1 duplicate numbering: k-th occurrence of a full_name gets
   *    `"name | joined_date"` (dim_chorister.py:39-49);
   *  - the (full_name, joined_date) → id lookup keeps the LAST occurrence
@@ -21,59 +22,48 @@ import graft.etl.RawSheet.{qcol, RowIdx}
   */
 object DimChorister {
 
-  /** Chorister rows of RAW: Tag present and not "Song", Who present (P3). */
-  def choristerRows(raw: DataFrame): DataFrame = {
+  /** The chorister frame: every chorister row of RAW (Tag present and not
+    * "Song", Who present; P3) with `cells` carried along, its normalized name
+    * `norm` and three ids:
+    *  - `chorister_id` (D1): the row's own id;
+    *  - `keyed_id` (D4): the `chorister_id` of the last row with the same
+    *    (full_name, joined_date) — what facts and derived assignments use;
+    *  - `norm_id` (D3): the `chorister_id` of the first row with the same
+    *    `norm`. That row is the first of its full_name, so its id is its name.
+    * Every window partitions by `norm` first; `norm` is a function of
+    * `full_name`, so the one hash exchange on `norm` under the bottom window
+    * serves all three.
+    */
+  def frame(raw: DataFrame, cells: Seq[Column] = Nil): DataFrame = {
     require(Seq("Tag", "Joined", "Who").forall(raw.columns.contains),
       "RAW is missing required columns Tag/Joined/Who")
     val tgid =
       if (raw.columns.contains("tgid")) safeStr(qcol("tgid")) else lit("")
-    raw.select(
+    val byNorm = Window.partitionBy(col("norm"))
+    val byName = Window.partitionBy(col("norm"), col("full_name")).orderBy(col(RowIdx))
+    val byKey = Window.partitionBy(col("norm"), col("full_name"), col("joined_date"))
+    raw.select(Seq(
         col(RowIdx),
         safeStr(qcol("Tag")).as("tag"),
         safeStr(qcol("Joined")).as("joined_date"),
         tgid.as("tgid"),
-        safeStr(qcol("Who")).as("full_name"))
+        safeStr(qcol("Who")).as("full_name")) ++ cells: _*)
       .filter(col("tag") =!= "" && col("tag") =!= "Song" && col("full_name") =!= "")
-  }
-
-  /** Chorister rows + their D1 chorister_id. */
-  def withIds(raw: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("full_name")).orderBy(col(RowIdx))
-    choristerRows(raw)
-      .withColumn("__rn", row_number().over(w))
+      .withColumn("norm", normalizeName(col("full_name")))
+      .withColumn("norm_id", min_by(col("full_name"), col(RowIdx)).over(byNorm))
       .withColumn("chorister_id",
-        when(col("__rn") === 1, col("full_name"))
+        when(row_number().over(byName) === 1, col("full_name"))
           .otherwise(concat(col("full_name"), lit(" | "), col("joined_date"))))
-      .drop("__rn")
+      .withColumn("keyed_id", max_by(col("chorister_id"), col(RowIdx)).over(byKey))
   }
 
   /** dim_chorister table (canonical 6 columns + src ordinal for read-back). */
-  def build(raw: DataFrame): DataFrame =
-    withIds(raw).select(
+  def build(raw: DataFrame, now: Column): DataFrame =
+    frame(raw).select(
       col("chorister_id"), col("tgid"), col("full_name"), col("joined_date"),
-      current_timestamp().as("created_at"),
-      current_timestamp().as("updated_at"),
+      now.as("created_at"),
+      now.as("updated_at"),
       col(RowIdx).as("src_ord"))
-
-  /** (full_name, joined_date) → chorister_id; last occurrence wins. (D4) */
-  def idByKey(raw: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("full_name"), col("joined_date"))
-      .orderBy(col(RowIdx).desc)
-    withIds(raw)
-      .withColumn("__krn", row_number().over(w))
-      .filter(col("__krn") === 1)
-      .select(col("full_name"), col("joined_date"), col("chorister_id"))
-  }
-
-  /** normalized full_name → chorister_id; first occurrence wins. (D3) */
-  def normToId(raw: DataFrame): DataFrame = {
-    val named = withIds(raw).withColumn("norm", normalizeName(col("full_name")))
-    val w = Window.partitionBy(col("norm")).orderBy(col(RowIdx))
-    named
-      .withColumn("__nrn", row_number().over(w))
-      .filter(col("__nrn") === 1)
-      .select(col("norm"), col("chorister_id").as("norm_chorister_id"))
-  }
 
   /** Hard-coded SCD2 voice-part histories keyed by normalized name — X1,
     * /root/reference/etl/dim_chorister.py:136-154. `ord` preserves the
@@ -86,53 +76,45 @@ object DimChorister {
     ("митя_чернаков", 1, "bass", "16.06.24", "31.12.25"),
     ("митя_чернаков", 2, "tenor", "01.01.26", ""))
 
-  def overridesDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Overrides.toDF("norm", "ovr_ord", "ovr_voice_part", "ovr_valid_from", "ovr_valid_to")
-  }
+  /** [[Overrides]] as a literal `norm → history` map; a history is an array
+    * of (ord, voice_part, valid_from, valid_to) in `ord` order. */
+  private[graft] val OverrideHistory: Column =
+    map(Overrides.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (norm, hist) =>
+      Seq(lit(norm), array(hist.sortBy(_._2).map { case (_, ord, part, from, to) =>
+        struct(lit(ord).as("ord"), lit(part).as("voice_part"),
+          lit(from).as("valid_from"), lit(to).as("valid_to"))
+      }: _*))
+    }: _*)
 
-  /** dim_chorister_assignment: derived rows (voice part + active from Tag,
-    * valid_from = joined_date, open valid_to), except rows whose normalized
-    * name has a manual override — those emit the override history instead
-    * (anti-join ∪ union; dim_chorister.py:219-242). `asg_ord` is the stable
-    * emission order the reference implies (source row, then override index),
-    * used by the marts' as-of tie-break.
+  /** dim_chorister_assignment: each chorister row emits its derived row
+    * (voice part + active from Tag, valid_from = joined_date, open valid_to)
+    * under its keyed id, unless its normalized name has a manual override —
+    * then it emits the override history under its `norm_id` instead
+    * (dim_chorister.py:219-242). `asg_ord` is the stable emission order the
+    * reference implies (source row, then override index), used by the marts'
+    * as-of tie-break.
     */
   def buildAssignments(raw: DataFrame): DataFrame = {
-    val spark = raw.sparkSession
-    val base = withIds(raw)
-      .drop("chorister_id") // assignment uses the keyed lookup, not the row's own id
-      .withColumn("norm", normalizeName(col("full_name")))
-      .join(idByKey(raw), Seq("full_name", "joined_date"), "left")
-      .withColumn("chorister_id", coalesce(col("chorister_id"), col("full_name")))
-    val ovr = overridesDf(spark)
-
-    val overridden = base
-      .join(broadcast(ovr), Seq("norm"))
-      .join(broadcast(normToId(raw)), Seq("norm"), "left")
-      .withColumn("asg_cid", coalesce(col("norm_chorister_id"), col("chorister_id")))
-      .select(
-        concat(col("asg_cid"), lit(" | "), col("ovr_voice_part"), lit(" | "),
-          col("ovr_valid_from")).as("assignment_id"),
-        col("asg_cid").as("chorister_id"),
-        col("ovr_voice_part").as("voice_part"),
-        lit("TRUE").as("is_active"),
-        col("ovr_valid_from").as("valid_from"),
-        col("ovr_valid_to").as("valid_to"),
-        (col(RowIdx) * 10 + col("ovr_ord")).as("asg_ord"))
-
-    val derived = base
-      .join(broadcast(ovr.select("norm").distinct()), Seq("norm"), "left_anti")
-      .select(
-        concat(col("chorister_id"), lit(" | "), voicePart(col("tag")), lit(" | "),
-          col("joined_date")).as("assignment_id"),
-        col("chorister_id"),
-        voicePart(col("tag")).as("voice_part"),
-        when(isActiveFromTag(col("tag")), "TRUE").otherwise("FALSE").as("is_active"),
-        col("joined_date").as("valid_from"),
-        lit("").as("valid_to"),
-        (col(RowIdx) * 10).as("asg_ord"))
-
-    derived.unionByName(overridden)
+    val derived = struct(
+      concat(col("keyed_id"), lit(" | "), voicePart(col("tag")), lit(" | "),
+        col("joined_date")).as("assignment_id"),
+      col("keyed_id").as("chorister_id"),
+      voicePart(col("tag")).as("voice_part"),
+      when(isActiveFromTag(col("tag")), "TRUE").otherwise("FALSE").as("is_active"),
+      col("joined_date").as("valid_from"),
+      lit("").as("valid_to"),
+      (col(RowIdx) * 10).as("asg_ord"))
+    val overridden = transform(try_element_at(OverrideHistory, col("norm")), o => struct(
+      concat(col("norm_id"), lit(" | "), o("voice_part"), lit(" | "),
+        o("valid_from")).as("assignment_id"),
+      col("norm_id").as("chorister_id"),
+      o("voice_part").as("voice_part"),
+      lit("TRUE").as("is_active"),
+      o("valid_from").as("valid_from"),
+      o("valid_to").as("valid_to"),
+      (col(RowIdx) * 10 + o("ord")).as("asg_ord")))
+    frame(raw)
+      .select(explode(coalesce(overridden, array(derived))).as("a"))
+      .select("a.*")
   }
 }

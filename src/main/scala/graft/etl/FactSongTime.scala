@@ -1,11 +1,9 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Exprs._
-import graft.etl.RawSheet.RowIdx
 
 /** fact_song_time: the sparse unpivot (R3).
   *
@@ -20,36 +18,29 @@ import graft.etl.RawSheet.RowIdx
   */
 object FactSongTime {
 
-  /** @param dimSong output of [[DimSong.withSeq]] (or the built table — needs
-    *                `song_id` and `seq_idx`). */
-  def build(raw: DataFrame, dimSong: DataFrame): DataFrame = {
+  def build(raw: DataFrame, now: Column): DataFrame = {
     val rawDates = RawSheet.rawDateColumns(raw)
-    val wAll = Window.orderBy(col(RowIdx))
-    val songPos = DimSong.songRows(raw)
-      .withColumn("fact_seq", row_number().over(wAll))
-      .join(dimSong.select(col("seq_idx"), col("song_id")),
-        col("fact_seq") === col("seq_idx"), "inner")
-      .select(col(RowIdx), col("song_id"))
-
-    if (rawDates.isEmpty) {
-      return songPos.select(
-        lit("").as("rehearsal_date"), col("song_id"),
-        lit(0.0).as("minutes_spent"),
-        current_timestamp().as("load_ts")).limit(0)
-    }
-
     val dated = rawDates.map(n =>
       coalesce(RawSheet.qcol(n).cast("string"), lit("")).as(n))
-    val base = raw.select((col(RowIdx) +: dated): _*)
-      .join(songPos, Seq(RowIdx), "inner")
+    // the song frame carries the date cells: no join back to RAW
+    val linked = DimSong.frame(raw, dated)
+      .filter(col("link_id").isNotNull)
+      .withColumn("song_id", col("link_id"))
 
-    base.unpivot(
+    if (rawDates.isEmpty) {
+      return linked.select(
+        lit("").as("rehearsal_date"), col("song_id"),
+        lit(0.0).as("minutes_spent"),
+        now.as("load_ts")).limit(0)
+    }
+
+    linked.unpivot(
         Array(col("song_id")),
         rawDates.map(n => RawSheet.qcol(n)).toArray,
         "rehearsal_date", "raw_val")
       .withColumn("minutes_spent", parseNumLenient(col("raw_val")))
       .filter(col("minutes_spent").isNotNull)
       .select(col("rehearsal_date"), col("song_id"), col("minutes_spent"),
-        current_timestamp().as("load_ts"))
+        now.as("load_ts"))
   }
 }

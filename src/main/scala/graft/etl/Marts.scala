@@ -1,7 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Exprs._
@@ -9,92 +8,79 @@ import graft.etl.Exprs._
 /** The three BI marts — capability source /root/reference/etl/marts.py.
   *
   * The reference's per-row assignment lookup (marts.py:56-80) is an
-  * O(|facts| × |assignments|) Python loop; here it is an equi-keyed interval
-  * join (hash join on chorister_id, range predicate on the validity window)
-  * followed by a row_number top-1 — the join stays a broadcast/hash join at
-  * any scale because the equi key carries it, and the tie-break (max
-  * valid_from, then assignment order) matches the reference's stable sort.
+  * O(|facts| × |assignments|) Python loop. Here every chorister's
+  * attributes and assignments sit in one row of a per-chorister lookup,
+  * built by one aggregate and broadcast to the fact side; each fact row then
+  * picks its as-of assignment from its chorister's array, already sorted by
+  * the reference's stable tie-break (max valid_from, then assignment order).
+  * No window, no distinct and no join-back of the fact side.
   */
 object Marts {
 
   /** Normalized date-or-raw: ISO if parseable, else the trimmed raw string
     * (marts.py:149-152 keeps the raw value when normalization fails). */
-  private def dateOrRaw(c: org.apache.spark.sql.Column) = {
+  private def dateOrRaw(c: Column) = {
     val n = normalizeDateToIso(c)
     when(n === "", safeStr(c)).otherwise(n)
   }
 
-  /** J3: enrich `facts` (carrying `chorister_id` and an ISO string date column
-    * `dateCol`) with the assignment valid on that date. Adds `voice_part`
-    * (string, "" when none) and `asg_is_active` (boolean).
-    *
-    * The lookup is a pure function of (chorister_id, date), so it is computed
-    * once per DISTINCT pair — interval join against the broadcast assignment
-    * dim, top-1 by (max valid_from, assignment order) over the pair grain —
-    * and equi-joined back to the facts. No window ever partitions by a unique
-    * per-row key, no synthetic row ids exist (deterministic under task
-    * retries/AQE re-plans), and the interval join's blow-up is bounded by
-    * |distinct pairs| × |matching assignments| instead of |facts| × matches.
-    */
-  private def withAssignment(
-      facts: DataFrame,
-      assignments: DataFrame,
-      dateCol: String): DataFrame = {
-    // asg_ord is the stable tie-break our dim builder stores; a read-back
-    // table always has it. For ad-hoc frames without it, the window's sort
-    // below falls through to (voice_part, valid_to) so equal-valid_from ties
-    // still resolve to ONE deterministic winner instead of partition order.
-    val ord =
-      if (assignments.columns.contains("asg_ord")) col("asg_ord") else lit(0L)
-    val a = assignments.select(
-        safeStr(col("chorister_id")).as("a_cid"),
-        safeStr(col("voice_part")).as("a_voice_part"),
-        col("is_active").as("a_is_active_raw"),
-        normalizeDateToIso(col("valid_from")).as("a_vf"),
-        safeStr(col("valid_to")).as("a_vt_raw"),
-        normalizeDateToIso(col("valid_to")).as("a_vt"),
-        ord.as("a_ord"))
-      .filter(col("a_vf") =!= "")
+  /** Assignment preference: later `vf` first, then lower `ord`, then
+    * `voice_part` and `vt` ascending, so equal-`valid_from` ties resolve to
+    * one winner also in frames without `asg_ord`. An `array_sort` comparator. */
+  private def preferred(l: Column, r: Column): Column =
+    Seq("vf" -> -1, "ord" -> 1, "voice_part" -> 1, "vt" -> 1).foldRight(lit(0)) {
+      case ((f, dir), tie) =>
+        when(l(f) < r(f), -dir).when(l(f) > r(f), dir).otherwise(tie)
+    }
 
-    val pairs = facts.select(col("chorister_id"), col(dateCol)).distinct()
-    val cond = col("chorister_id") === col("a_cid") &&
-      col(dateCol) =!= "" &&
-      col(dateCol) >= col("a_vf") &&
-      !(col("a_vt_raw") =!= "" && col("a_vt") =!= "" && col(dateCol) > col("a_vt"))
-
-    val w = Window.partitionBy(col("chorister_id"), col(dateCol))
-      .orderBy(col("a_vf").desc, col("a_ord").asc,
-        col("a_voice_part").asc, col("a_vt").asc)
-    val lookup = pairs.join(broadcast(a), cond, "left")
-      .withColumn("__arn", row_number().over(w))
-      .filter(col("__arn") === 1)
-      .select(
-        col("chorister_id"), col(dateCol),
-        coalesce(col("a_voice_part"), lit("")).as("voice_part"),
-        coalesce(boolFromString(col("a_is_active_raw")), lit(false)).as("asg_is_active"))
-
-    facts.join(lookup, Seq("chorister_id", dateCol), "left")
+  /** One row per chorister id of `dimChorister` ∪ `assignments`, built in
+    * one aggregate:
+    *  - `c_full_name`, `c_tgid`, `c_joined_raw`: the dim row with the LAST
+    *    `src_ord` (the reference builds a dict keyed by id — marts.py:145;
+    *    chorister_id is unique by construction, so the ordinal's absence in
+    *    ad-hoc frames only matters for duplicate-id inputs);
+    *  - `asgs`: the chorister's assignments with a parseable valid_from, in
+    *    [[preferred]] order. */
+  private def choristerLookup(dimChorister: DataFrame, assignments: DataFrame): DataFrame = {
+    def ordinal(df: DataFrame, name: String) =
+      if (df.columns.contains(name)) col(name).cast("long") else lit(0L)
+    val dim = dimChorister.select(
+        safeStr(col("chorister_id")).as("c_cid"),
+        struct(
+          ordinal(dimChorister, "src_ord").as("ord"),
+          safeStr(col("full_name")).as("full_name"),
+          safeStr(col("tgid")).as("tgid"),
+          col("joined_date").cast("string").as("joined_raw")).as("c"))
+      .filter(col("c_cid") =!= "")
+    val asg = assignments.select(
+        safeStr(col("chorister_id")).as("c_cid"),
+        struct(
+          normalizeDateToIso(col("valid_from")).as("vf"),
+          ordinal(assignments, "asg_ord").as("ord"),
+          safeStr(col("voice_part")).as("voice_part"),
+          normalizeDateToIso(col("valid_to")).as("vt"),
+          safeStr(col("valid_to")).as("vt_raw"),
+          boolFromString(col("is_active")).as("active")).as("a"))
+      .filter(col("a.vf") =!= "")
+    dim.unionByName(asg, allowMissingColumns = true)
+      .groupBy("c_cid")
+      .agg(max(col("c")).as("c"), array_sort(collect_list(col("a")), preferred _).as("asgs"))
+      .select(col("c_cid"), col("c.full_name").as("c_full_name"), col("c.tgid").as("c_tgid"),
+        col("c.joined_raw").as("c_joined_raw"), col("asgs"))
   }
 
-  /** dim_chorister as a lookup: one row per chorister_id, LAST stored row wins
-    * (the reference builds a dict keyed by id — marts.py:145). Uses the
-    * `src_ord` ordinal our dim builder stores; chorister_id is unique by
-    * construction (D1 disambiguation), so the lit(0) fallback for ad-hoc
-    * frames only matters for pathological duplicate-id inputs. */
-  private def choristerLookup(dimChorister: DataFrame): DataFrame = {
-    val ord =
-      if (dimChorister.columns.contains("src_ord")) col("src_ord") else lit(0L)
-    val w = Window.partitionBy(col("c_cid")).orderBy(col("__ord").desc)
-    dimChorister.select(
-        safeStr(col("chorister_id")).as("c_cid"),
-        safeStr(col("full_name")).as("c_full_name"),
-        safeStr(col("tgid")).as("c_tgid"),
-        col("joined_date").cast("string").as("c_joined_raw"),
-        ord.as("__ord"))
-      .filter(col("c_cid") =!= "")
-      .withColumn("__crn", row_number().over(w))
-      .filter(col("__crn") === 1)
-      .drop("__ord", "__crn")
+  /** J3: enrich `facts`, already joined with [[choristerLookup]], with the
+    * assignment valid on the ISO string date `dateCol`: `voice_part` ("" when
+    * none) and `asg_is_active` (false when none). Valid means inclusive
+    * bounds, with an empty or unparseable valid_to open; the first valid
+    * entry of `asgs` is the pick. */
+  private def withAssignment(facts: DataFrame, dateCol: String): DataFrame = {
+    val d = col(dateCol)
+    val asOf = try_element_at(filter(col("asgs"), a =>
+      d =!= "" && d >= a("vf") && !(a("vt_raw") =!= "" && a("vt") =!= "" && d > a("vt"))), lit(1))
+    facts
+      .withColumn("voice_part", coalesce(asOf("voice_part"), lit("")))
+      .withColumn("asg_is_active", coalesce(asOf("active"), lit(false)))
   }
 
   /** mart_attendance — marts.py:136-184. One row per fact_attendance row. */
@@ -109,7 +95,7 @@ object Marts {
         when(parseNumDefault(col("missed_flag")) =!= 0.0, 1).otherwise(0)
           .as("missed_flag"))
 
-    val ch = choristerLookup(dimChorister)
+    val ch = choristerLookup(dimChorister, assignments)
     val joined = f.join(broadcast(ch), col("chorister_id") === col("c_cid"), "left")
       // joined_date: ISO for display; present-but-unparseable aborts the run
       // (X2, marts.py:122-133). Evaluated only for choristers that actually
@@ -125,7 +111,7 @@ object Marts {
         when(col("__joined_iso") =!= "", col("__joined_iso"))
           .otherwise(coalesce(safeStr(col("c_joined_raw")), lit(""))))
 
-    withAssignment(joined, assignments, "rehearsal_date")
+    withAssignment(joined, "rehearsal_date")
       .select(
         col("rehearsal_date"),
         col("chorister_id"),
@@ -183,7 +169,7 @@ object Marts {
         parseNumDefault(col("minutes_spent")).as("minutes_spent"))
       .filter(col("rehearsal_date") =!= "")
 
-    val ch = choristerLookup(dimChorister)
+    val ch = choristerLookup(dimChorister, assignments)
     val sng = dimSong.select(
         safeStr(col("song_id")).as("s_sid"),
         safeStr(col("song_name")).as("s_name"))
@@ -192,7 +178,7 @@ object Marts {
     val base = att.join(songs, Seq("rehearsal_date"), "inner")
       .join(broadcast(ch), col("chorister_id") === col("c_cid"), "left")
 
-    withAssignment(base, assignments, "rehearsal_date")
+    withAssignment(base, "rehearsal_date")
       .join(broadcast(sng), col("song_id") === col("s_sid"), "left")
       .select(
         col("rehearsal_date"),

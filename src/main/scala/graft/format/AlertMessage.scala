@@ -1,15 +1,17 @@
 package graft.format
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Driver-side alert formatting and delivery — capability source
   * /root/reference/etl/alerts.py:177-230 (X4 + S8). The analytics stay
-  * distributed ([[graft.analytics.Alerts]]); only the collected, tens-of-rows
-  * violator list is formatted here.
+  * distributed ([[graft.analytics.Alerts.summary]]); the collected summary,
+  * at most one row per chorister, becomes the violator list and the rate
+  * here.
   */
 object AlertMessage {
 
-  /** One violator row, as produced by Alerts.currentMissedStreaks. */
+  /** One violator, as in a row of Alerts.currentMissedStreaks. */
   final case class Violator(
       fullName: String,
       voicePart: String,
@@ -22,20 +24,28 @@ object AlertMessage {
     "https://lookerstudio.google.com/reporting/0a0ee2af-cb64-42ca-bc16-c312a3d27f1e" +
       "/page/p_v5isym300d/edit?s=hs0hEMSZUdg"
 
-  /** Collect a currentMissedStreaks frame into [[Violator]]s (small by
-    * construction: violators are a handful of people). */
-  def collectViolators(df: DataFrame): Seq[Violator] =
-    df.select("full_name", "voice_part", "streak_len", "missed_dates",
-      "last_attended_date", "tgid")
-      .collect().toSeq.map { r: Row =>
+  /** The violators among collected [[graft.analytics.Alerts.summary]] rows
+    * (active, streak >= threshold) in chorister_id order — Spark's binary
+    * string order, as Alerts.currentMissedStreaks sorts — and the
+    * attendance rate over all of them (None when no row is in the window). */
+  def fromSummary(rows: Seq[Row], streakThreshold: Int): (Seq[Violator], Option[Double]) = {
+    val violators = rows
+      .filter(r => Option(r.getAs[java.lang.Boolean]("is_active")).contains(true) &&
+        r.getAs[Long]("streak_len") >= streakThreshold)
+      .sortBy(r => UTF8String.fromString(r.getAs[String]("chorister_id")))
+      .map { r =>
         Violator(
-          fullName = r.getString(0),
-          voicePart = r.getString(1),
-          streakLen = r.getLong(2),
-          missedDates = r.getSeq[String](3),
-          lastAttendedDate = Option(r.getString(4)),
-          tgid = r.getString(5))
+          fullName = r.getAs[String]("full_name"),
+          voicePart = r.getAs[String]("voice_part"),
+          streakLen = r.getAs[Long]("streak_len"),
+          missedDates = r.getSeq[String](r.fieldIndex("missed_dates")),
+          lastAttendedDate = Option(r.getAs[String]("last_attended_date")),
+          tgid = r.getAs[String]("tgid"))
       }
+    val available = rows.map(_.getAs[Long]("n_available")).sum
+    val attended = rows.map(_.getAs[Long]("n_attended")).sum
+    (violators, if (available > 0) Some(attended.toDouble / available) else None)
+  }
 
   /** Reference `format_alert_message` (alerts.py:177-214), 1:1 including the
     * Russian text, emoji thresholds (🔴 < 50%, 🟡 <= 65%, 🟢 else), numbered

@@ -28,7 +28,8 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: one keyed equi-join propagating neighbor labels
   * (never all-pairs), one (node, label) count rollup — map-side combined,
   * O(1) buffers — and one per-node argmax via partial-aggregable
-  * max(struct(cnt, −label)) (the q168 no-window argmax), then a
+  * min(struct(−cnt, label)) (the q168 no-window argmax; labels keep the
+  * node id's type, so string ids work), then a
   * node-keyed merge. Labels materialize each round (`localCheckpoint`,
   * the [[PageRank]]/[[Bfs]] lineage argument). Rounds are a small constant
   * by design — community basins stabilize in a handful of sweeps. */
@@ -63,10 +64,9 @@ object LabelProp {
         .join(labels.withColumnRenamed("node", "nbr"), Seq("nbr"))
         .groupBy("node", "label").agg(count(lit(1)).as("__cnt"))
         .groupBy("node")
-        .agg(max(struct(col("__cnt"), (-col("label")).as("__neg")))
+        .agg(min(struct((-col("__cnt")).as("__neg_cnt"), col("label")))
           .as("__best"))
-        .select(col("node"),
-          (-col("__best").getField("__neg")).as("label"))
+        .select(col("node"), col("__best.label").as("label"))
       val next = Loops.checkpoint(sweepPlan, eager = r == rounds)
       if (labelsPrev != null) Loops.free(labelsPrev) // grandparent: dead
       labelsPrev = labels

@@ -106,8 +106,12 @@ class AlertsSpec extends SparkSpec {
 
   // -- compute_attendance_rate (test_alerts.py:113-133) ----------------------
 
+  /** The rate `Main.runAlerts` derives from the collected summary. */
+  private def rate(df: DataFrame, weeks: Int): Option[Double] =
+    AlertMessage.fromSummary(Alerts.summary(df, weeks).collect().toSeq, 3)._2
+
   test("rate: empty returns None") {
-    assert(Alerts.attendanceRate(mart(Seq.empty), 5) === None)
+    assert(rate(mart(Seq.empty), 5) === None)
   }
 
   test("rate in window: 8/12") {
@@ -116,9 +120,9 @@ class AlertsSpec extends SparkSpec {
       i <- 0 until 4
       (cid, attended) <- Seq(("c1", 1), ("c2", 1), ("c3", 0))
     } yield martRow(base.plusWeeks(i).toString, cid, "", "", 1 - attended, attended)
-    val rate = Alerts.attendanceRate(mart(rows), 5)
-    assert(rate.isDefined)
-    assert(math.abs(rate.get - 8.0 / 12.0) < 1e-9)
+    val got = rate(mart(rows), 5)
+    assert(got.isDefined)
+    assert(math.abs(got.get - 8.0 / 12.0) < 1e-9)
   }
 
   // -- format_alert_message (test_alerts.py:136-174) -------------------------
@@ -162,13 +166,12 @@ class AlertsSpec extends SparkSpec {
 
   // -- end-to-end bridge ------------------------------------------------------
 
-  test("collectViolators round-trips the streak frame") {
+  test("fromSummary gives the streak frame's violators") {
     val base = weeksAgo(4)
     val rows = (0 until 5).map(i =>
       martRow(base.plusWeeks(i).toString, "c1", "Иван", "Bass", 1, 0,
         tgid = "@ivan"))
-    val vs = AlertMessage.collectViolators(
-      Alerts.currentMissedStreaks(mart(rows), 12, 3))
+    val (vs, _) = AlertMessage.fromSummary(Alerts.summary(mart(rows), 12).collect().toSeq, 3)
     assert(vs === Seq(Violator("Иван", "Bass", 5L,
       (0 until 5).map(i => base.plusWeeks(4 - i).toString),
       None, "@ivan")))

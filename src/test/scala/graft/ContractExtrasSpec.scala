@@ -33,7 +33,7 @@ class ContractExtrasSpec extends SparkSpec {
       (20L, "Bass", "16.06.24", "", "Ivan"))
       .toDF("ord", "Tag", "Joined", "tgid", "Who")
     val raw = RawSheet.fromOrdinal(df, "ord")
-    val ids = DimChorister.withIds(raw)
+    val ids = DimChorister.frame(raw)
       .select("full_name", "joined_date", "chorister_id")
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
     // ordinal 10 row is FIRST despite appearing second in the data
@@ -42,46 +42,51 @@ class ContractExtrasSpec extends SparkSpec {
     assert(!raw.queryExecution.executedPlan.toString.contains("Coalesce"))
   }
 
-  test("choristerRows: Song rows and blank tags or names dropped, cells trimmed, absent tgid is empty") {
+  test("chorister frame: Song rows and blank tags or names dropped, cells trimmed, absent tgid is empty") {
     val raw = RawSheet.fromRows(spark, Seq("Tag", "Joined", "Who", "16.06.24"), Seq(
       Seq(" Alto ", " 16.06.24 ", " Anna ", "1"),
       Seq("Song", "", "Ave Maria", "10"),
       Seq("", "", "Nobody", ""),
       Seq("Bass", "", "  ", ""),
       Seq("Bass", null, "Ivan", null)))
-    val got = DimChorister.choristerRows(raw).collect()
+    val got = DimChorister.frame(raw)
+      .select(RawSheet.RowIdx, "tag", "joined_date", "tgid", "full_name")
+      .orderBy(RawSheet.RowIdx).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
     assert(got.toSeq === Seq((0L, "Alto", "16.06.24", "", "Anna"), (4L, "Bass", "", "", "Ivan")))
   }
 
-  test("choristerRows and songRows name the RAW columns they require") {
+  test("the chorister and song frames name the RAW columns they require") {
     val noWho = RawSheet.fromRows(spark, Seq("Tag", "Joined"), Seq(Seq("Alto", "")))
-    val e1 = intercept[IllegalArgumentException](DimChorister.choristerRows(noWho))
+    val e1 = intercept[IllegalArgumentException](DimChorister.frame(noWho))
     assert(e1.getMessage.contains("Tag/Joined/Who"))
-    val e2 = intercept[IllegalArgumentException](DimSong.songRows(noWho))
+    val e2 = intercept[IllegalArgumentException](DimSong.frame(noWho))
     assert(e2.getMessage.contains("Tag/Who"))
   }
 
-  test("normToId (D3): the first row of each normalized name wins across spelling variants") {
+  test("norm_id (D3): the first row of each normalized name wins across spelling variants") {
     val raw = RawSheet.fromRows(spark, Seq("Tag", "Joined", "tgid", "Who"), Seq(
       Seq("Alto", "16.06.24", "", "Anna  Petrova"),
       Seq("Alto", "23.06.24", "", "anna petrova"),
       Seq("Bass", "", "", "Ivan"),
       Seq("Alto", "30.06.24", "", "Anna Petrova")))
-    val got = DimChorister.normToId(raw).collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val got = DimChorister.frame(raw).select("norm", "norm_id").distinct()
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got === Map("anna_petrova" -> "Anna  Petrova", "ivan" -> "Ivan"))
   }
 
-  test("songRows keeps empty titles; withSeq numbers the emitted songs and suffixes repeats (D2)") {
+  test("song frame keeps empty titles, numbers the emitted songs and suffixes repeats (D2)") {
     val raw = RawSheet.fromRows(spark, Seq("Tag", "Joined", "tgid", "Who"), Seq(
       Seq("Song", "", "", "Ave"),
       Seq("Alto", "16.06.24", "", "Anna"),
       Seq("Song", "", "", ""),
       Seq("Song", "", "", " Ave "),
       Seq("Song", "", "", "Gloria")))
-    assert(DimSong.songRows(raw).collect().map(r => (r.getLong(0), r.getString(2))).toSeq ===
+    val songs = DimSong.frame(raw).orderBy(RawSheet.RowIdx)
+    assert(songs.select(RawSheet.RowIdx, "song_name").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ===
       Seq((0L, "Ave"), (2L, ""), (3L, "Ave"), (4L, "Gloria")))
-    val seq = DimSong.withSeq(raw).orderBy("seq_idx")
+    val seq = songs.filter("song_id IS NOT NULL").orderBy("seq_idx")
       .select(RawSheet.RowIdx, "song_id", "seq_idx").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
     assert(seq === Seq((0L, "Ave", 1), (3L, "Ave (2)", 2), (4L, "Gloria", 3)))
@@ -109,10 +114,13 @@ class ContractExtrasSpec extends SparkSpec {
       assert(byOrd.last._5 === "", norm)
       assert(byOrd.init.forall(o => !day(o._5).isBefore(day(o._4))), norm)
     }
-    val df = DimChorister.overridesDf(spark)
-    assert(df.columns.toSeq ===
-      Seq("norm", "ovr_ord", "ovr_voice_part", "ovr_valid_from", "ovr_valid_to"))
+    import org.apache.spark.sql.functions.{col, explode}
+    val df = spark.range(1)
+      .select(explode(DimChorister.OverrideHistory).as(Seq("norm", "hist")))
+      .select(col("norm"), explode(col("hist")).as("h"))
+      .select(col("norm"), col("h.ord"), col("h.voice_part"), col("h.valid_from"), col("h.valid_to"))
+    assert(df.columns.toSeq === Seq("norm", "ord", "voice_part", "valid_from", "valid_to"))
     assert(df.collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3),
-      r.getString(4))).toSeq === DimChorister.Overrides)
+      r.getString(4))).toSeq.sorted === DimChorister.Overrides.sorted)
   }
 }

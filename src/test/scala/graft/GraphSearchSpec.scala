@@ -766,6 +766,22 @@ class GraphSearchSpec extends SparkSpec {
       10L -> 3L, 11L -> 3L, 12L -> 3L))
   }
 
+  test("lpa: non-numeric STRING ids keep their type, through the operator and graph_lpa") {
+    import graft.operators.LabelProp
+    // the bridged triangles with string ids: labels "a" and "c" after 4
+    // sweeps, as the LONG case gives 1 and 3 (ties take the smallest label)
+    val edges = Seq(("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"),
+      ("x", "z"), ("c", "x")).toDF("src", "dst")
+    val want = Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "c", "y" -> "c", "z" -> "c")
+    val out = LabelProp.communities(edges, rounds = 4)
+    assert(out.schema("label").dataType === org.apache.spark.sql.types.StringType)
+    assert(out.collect().map(r => r.getString(0) -> r.getString(1)).toMap === want)
+    edges.createOrReplaceTempView("lpa_str_e")
+    val viaSql = spark.sql("SELECT * FROM graph_lpa('lpa_str_e', 4)")
+    assert(viaSql.schema("label").dataType === org.apache.spark.sql.types.StringType)
+    assert(viaSql.collect().map(r => r.getString(0) -> r.getString(1)).toMap === want)
+  }
+
   test("lpa: fixed-round contract — a bare edge 2-cycles; ties take the smallest label") {
     import graft.operators.LabelProp
     val pair = Seq((1L, 2L)).toDF("src", "dst")

@@ -901,7 +901,7 @@ class PlanSpec extends SparkSpec {
     // aggregate grouped by the __budget_bucket prefix; anything else (a
     // corpus-sized global window) fails here, not in a 100 TB run.
     // Exempt: the documented sheet-scale choir globals (dup numbering over a
-    // bounded header sheet, DimSong.scala:39 / FactSongTime.scala:27).
+    // bounded header sheet, the song frame, `DimSong.frame`).
     import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     val choirExempt = Set("q06_dup_numbering", "q29_choir_mart_attendance",
@@ -936,25 +936,47 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("mart_attendance: dim joins broadcast, no row-id windows, rank-limited top-1") {
+  test("mart_attendance: one broadcast chorister lookup, no row-id windows, no per-pair window") {
     val raw = RawSheet.fromRows(spark,
       Seq("Tag", "Joined", "tgid", "Who", "16.06.24"),
       Seq(Seq("Alto", "16.06.24", "", "Anna", "2")))
+    val now = current_timestamp()
     val mart = graft.etl.Marts.martAttendance(
-      graft.etl.DimChorister.build(raw),
+      graft.etl.DimChorister.build(raw, now),
       graft.etl.DimChorister.buildAssignments(raw),
-      graft.etl.FactAttendance.build(raw, graft.etl.DimChorister.idByKey(raw)))
+      graft.etl.FactAttendance.build(raw, now))
     val p = plan(mart)
     // the synthetic-row-id pattern must never come back
     assert(!p.contains("monotonically_increasing_id"), p)
-    // dim lookups (chorister, assignment interval join) are broadcast
-    assert(p.linesIterator.count(_.contains("BroadcastHashJoin")) >= 2, p)
-    // every window partitions on the natural grain, and the as-of top-1 is
-    // rank-limited (WindowGroupLimit), not a full sort of each partition
+    // the per-chorister lookup (dim attributes + assignments) is broadcast
+    assert(p.linesIterator.count(_.contains("BroadcastHashJoin")) === 1, p)
+    // the as-of pick reads the lookup's array: the only windows left are
+    // the curated frames' windows under the facts, none over
+    // (chorister_id, rehearsal_date) and none global
     assert(!p.contains("windowspecdefinition()"), p)
-    assert(p.contains("WindowGroupLimit"), p)
-    // the facts <-> pair-lookup join on (chorister_id, date) may be SMJ in the
-    // static plan; AQE broadcasts it at runtime when small. That is the right
-    // default at 100 TB, where the lookup grows with fact key cardinality.
+    assert(!p.contains("WindowGroupLimit"), p)
+    for (m <- Seq(graft.etl.Marts.martChoristerSong(
+        graft.etl.DimChorister.build(raw, now), graft.etl.DimChorister.buildAssignments(raw),
+        graft.etl.DimSong.build(raw, now), graft.etl.FactAttendance.build(raw, now),
+        graft.etl.FactSongTime.build(raw, now)))) {
+      val q = m.queryExecution.sparkPlan
+      assert(!q.exists {
+        case w: org.apache.spark.sql.execution.window.WindowExec =>
+          w.partitionSpec.map(_.references.map(_.name).mkString).toSet ==
+            Set("chorister_id", "rehearsal_date")
+        case _ => false
+      }, q)
+    }
   }
+
+  test("curated tables: each write plans exactly one exchange") {
+    val raw = graft.etl.ChoirFixture.raw(spark)
+    val now = current_timestamp()
+    for ((name, build) <- Main.CuratedTables) {
+      val p = plan(build(raw, now))
+      assert(p.linesIterator.count(_.contains("Exchange")) === 1, s"$name:\n$p")
+    }
+  }
+
+
 }

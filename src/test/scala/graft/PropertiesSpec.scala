@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.etl.{DimChorister, Exprs, FactAttendance, RawSheet}
+import graft.etl.{Exprs, FactAttendance, RawSheet}
 import graft.operators.OrderedAnalytics
 
 /** The SURVEY §5 property commitments, driven by seeded random fixtures:
@@ -30,7 +30,7 @@ class PropertiesSpec extends SparkSpec {
         (0 until nSongs).map(i => Seq("Song", "", "", s"Song $i") ++
           (0 until nDates).map(_ => "10"))
       val raw = RawSheet.fromRows(spark, header, rows)
-      val facts = FactAttendance.build(raw, DimChorister.idByKey(raw))
+      val facts = FactAttendance.build(raw, current_timestamp())
       assert(facts.count() === nChor.toLong * nDates,
         s"nChor=$nChor nDates=$nDates nSongs=$nSongs")
     }
@@ -86,7 +86,7 @@ class PropertiesSpec extends SparkSpec {
     val rows = (0 until 10).map(i =>
       Seq("Alto", "3.1.00", "", s"C$i") ++ (0 until nDates).map(j => if ((i + j) % 2 == 0) "" else "1,5"))
     val raw = RawSheet.fromRows(spark, header, rows)
-    val facts = FactAttendance.build(raw, DimChorister.idByKey(raw))
+    val facts = FactAttendance.build(raw, current_timestamp())
     assert(facts.count() === 10L * nDates)
     val agg = facts.agg(sum(col("missed_flag")), sum(col("hours_attended"))).collect()(0)
     assert(agg.getLong(0) === 10L * nDates / 2)
