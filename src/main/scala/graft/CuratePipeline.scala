@@ -27,7 +27,7 @@ import graft.operators.{Boilerplate, Budget, Decontamination, Dedup, DomainFilte
   *     falls below the bar are dropped wholesale before any per-document
   *     screen;
   *  1. quality gate — language / quality-score / token-budget rules plus
-  *     exact-dedup canonicalization ([[Queries.curationOf]], the q41 kernel)
+  *     exact-dedup canonicalization ([[graft.functions.Curation.decisions]], the q41 kernel)
   *     AND the Gopher-style repetition screen (the q53 kernel: a doc whose
   *     top 2-gram or duplicated 2-grams exceed the shared Curation.GateRep*
   *     thresholds is dropped), with two optional companions: the C4
@@ -278,7 +278,7 @@ object CuratePipeline {
     *     for TRAIN that share an 8-gram with any STORED eval doc are
     *     benchmark leakage — dropped;
     *  5. PII scrub in place, stored-token counts, and the upsert
-    *     ([[graft.io.TableStore.upsert]] keyed on the id — re-ingesting a
+    *     ([[graft.io.TableStore.upsertKeyed]] keyed on the id — re-ingesting a
     *     corrected doc replaces its stored row; the step-3 same-id
     *     exemption and the step-4 outgoing-generation exclusion are what
     *     guarantee a correction actually reaches this step).
@@ -349,7 +349,7 @@ object CuratePipeline {
         else batch.filter(graft.functions.Heuristics.c4Keep(
           col("text"), minGoodLines = c4MinGoodLines))
       val q41Kept = c4Screened.join(
-        Queries.curationOf(c4Screened.select(col("doc_id"), col("text")))
+        Curation.decisions(c4Screened.select(col("doc_id"), col("text")))
           .filter(col("keep")).select("doc_id"),
         Seq("doc_id"), "left_semi").persist()
       val repetitive = Repetition
@@ -376,7 +376,7 @@ object CuratePipeline {
       val kept = (
         if (entropyMinBits <= 0.0) statKept
         else statKept.join(
-          Queries.tokenEntropyOf(statKept.select(col("doc_id"), col("text")))
+          UnigramLm.tokenEntropy(statKept.select(col("doc_id"), col("text")))
             .filter(col("entropy") >= entropyMinBits)
             .select("doc_id"),
           Seq("doc_id"), "left_semi")
@@ -702,7 +702,7 @@ object CuratePipeline {
       if (c4MinGoodLines <= 0) screened
       else screened.filter(Heuristics.c4Keep(col("text"), minGoodLines = c4MinGoodLines))
     val q41Kept = c4Screened.join(
-      Queries.curationOf(c4Screened.select(col("doc_id"), col("text")))
+      Curation.decisions(c4Screened.select(col("doc_id"), col("text")))
         .filter(col("keep")).select("doc_id"),
       Seq("doc_id"), "left_semi")
       .persist()
@@ -728,7 +728,7 @@ object CuratePipeline {
     val kept = (
       if (entropyMinBits <= 0.0) statKept
       else statKept.join(
-        graft.Queries.tokenEntropyOf(statKept.select(col("doc_id"), col("text")))
+        UnigramLm.tokenEntropy(statKept.select(col("doc_id"), col("text")))
           .filter(col("entropy") >= entropyMinBits)
           .select("doc_id"),
         Seq("doc_id"), "left_semi")

@@ -1,10 +1,12 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
+
+import graft.queries.{Queries, RelationalQueries}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Queries.joinAggNation(spark, "/root/testdata/sf0.001")
+    RelationalQueries.joinAggNation(spark, "/root/testdata/sf0.001")
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -14,6 +14,14 @@ import graft.etl.Exprs._
   * picks its as-of assignment from its chorister's array, already sorted by
   * the reference's stable tie-break (max valid_from, then assignment order).
   * No window, no distinct and no join-back of the fact side.
+  *
+  * Every string cell the marts read, `chorister_id` included, goes through
+  * `safeStr`, so the marts show trimmed ids where the curated tables store
+  * them untrimmed (a repeated name with an empty `Joined` is `"name | "` in
+  * `dim_chorister` and `"name |"` here). That is the reference's behaviour:
+  * its `_safe_str` (marts.py:50-53) returns `str(v).strip()` (SURVEY.md §2,
+  * P2). A consumer joining a mart back to `dim_chorister` on `chorister_id`
+  * has to trim the dimension side too.
   */
 object Marts {
 

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation column functions a training-data pipeline runs at ingest:
@@ -47,7 +48,7 @@ object Curation {
   }
 
   /** The curation gate thresholds shared by the batch decision
-    * ([[graft.Queries.curationOf]], q41) and the streaming gate
+    * ([[decisions]], q41) and the streaming gate
     * ([[graft.streaming.EventStream.curateStream]]) — one definition so the
     * two paths cannot silently diverge (the streaming spec additionally
     * asserts per-batch equality against the batch gate). */
@@ -57,7 +58,7 @@ object Curation {
   val GateTokenMax = 1000L
 
   /** Repetition-gate thresholds shared by the q53 query flag
-    * ([[graft.Queries.repetitionStats]]) and the pipeline's repetition
+    * ([[graft.queries.TextQueries.repetitionStats]]) and the pipeline's repetition
     * screen ([[graft.CuratePipeline]]) — a doc whose top `GateRepNgram`-gram
     * claims more than `GateRepTopFrac` of all its n-gram occurrences, or
     * whose duplicated n-grams claim more than `GateRepDupFrac`, is dropped
@@ -157,4 +158,33 @@ object Curation {
         regexp_replace(coalesce(c, lit("")), EmailRe, "<EMAIL>"),
         Ipv4Re, "<IP>"),
       PhoneRe, "<PHONE>")
+
+  /** [[curation]] over any (doc_id, text) frame — split out so the planted
+    * spec can drive every reason branch (the synthetic corpus happens to
+    * trigger only lang/quality). */
+  def decisions(docs: DataFrame): DataFrame = {
+    val scored = docs.select(
+      col("doc_id"),
+      Text.langId(col("text")).as("lang_pred"),
+      Text.qualityScore(col("text")).as("quality_score"),
+      Text.tokenCount(col("text")).as("n_tokens"),
+      coalesce(md5(col("text").cast("binary")), lit("")).as("__fp"))
+    // canonical per content hash as ONE window aggregate — same shuffle key
+    // as a groupBy+rejoin but a single exchange and no join stage
+    scored
+      .withColumn("__keep_id", min("doc_id").over(Window.partitionBy("__fp")))
+      .withColumn("reason",
+        // gate thresholds shared with the streaming curation gate — see
+        // Curation.Gate* (one definition, so the paths cannot diverge)
+        when(col("lang_pred") =!= graft.functions.Curation.GateLang, "lang")
+          .when(col("quality_score") < graft.functions.Curation.GateMinQuality, "quality")
+          .when(col("n_tokens") < graft.functions.Curation.GateTokenMin ||
+            col("n_tokens") > graft.functions.Curation.GateTokenMax, "length")
+          .when(col("doc_id") =!= col("__keep_id"), "duplicate")
+          .otherwise("keep"))
+      .select(
+        col("doc_id"), col("lang_pred"), col("quality_score"), col("n_tokens"),
+        (col("reason") === "keep").as("keep"), col("reason"))
+      .orderBy("doc_id")
+  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * Everything here is built-in Catalyst expressions (codegen'd, no UDFs) so the
   * scan→score path stays inside WholeStageCodegen at 100 TB. The regex dialect
   * is restricted to constructs that mean the same thing in Java regex and RE2,
-  * so the DuckDB oracles in [[graft.Queries]] can mirror the semantics 1:1.
+  * so the DuckDB oracles in [[graft.queries]] can mirror the semantics 1:1.
   */
 object Text {
 

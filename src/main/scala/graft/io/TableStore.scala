@@ -368,35 +368,6 @@ final class TableStore(private[graft] val spark: SparkSession, root: String) {
     df.write.mode("append").partitionBy(partitionCols: _*).parquet(path(name))
   }
 
-  /** Keyed upsert — the incremental-maintenance sink ("merge tonight's batch
-    * into the corpus"): rows of `batch` REPLACE all current rows sharing
-    * their `keyCols` values (every batch row for a key lands, so a multi-row
-    * batch group replaces wholesale), all other current rows are retained.
-    * Key matching is NULL-SAFE: a NULL key in the batch replaces the NULL-key
-    * group, never silently duplicates it (the q63 stratum-join lesson).
-    * First write degrades to a plain overwrite.
-    *
-    * Parquet is immutable, so the merge is a REWRITE: the anti-join of the
-    * current table against the batch's distinct keys, unioned with the
-    * batch, written through the same staged-swap as [[overwritePartitioned]]
-    * — which is also what makes reading and replacing the SAME path safe
-    * (the merged plan scans the live generation while the new one builds in
-    * staging; a plain mode("overwrite") would delete its own input).
-    * Idempotent: re-upserting the same batch reproduces the identical
-    * table. This flat form rewrites the WHOLE table per batch — fine for
-    * small/medium tables; for incremental maintenance at scale use
-    * [[upsertKeyed]], which scopes the rewrite to the hash buckets the
-    * batch's keys touch. */
-  def upsert(name: String, batch: DataFrame, keyCols: Seq[String]): Unit = {
-    require(keyCols.nonEmpty, "need at least one key column")
-    if (!exists(name)) { overwrite(name, batch); return }
-    val current = read(name)
-    val keys = batch.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
-    val cond = keyCols.map(k => current(k) <=> keys(k)).reduce(_ && _)
-    val merged = current.join(keys, cond, "left_anti").unionByName(batch)
-    stagedSwap(name)(staging => merged.write.parquet(staging.toString))
-  }
-
   // ---- Keyed (bucket-partitioned) layout: O(batch) incremental upsert -----
 
   import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
@@ -459,10 +430,11 @@ final class TableStore(private[graft] val spark: SparkSession, root: String) {
     }
   }
 
-  /** Keyed upsert — the INCREMENTAL form of [[upsert]]: same merge contract
-    * (batch rows replace all current rows sharing their key, null-safe,
-    * idempotent, multi-row batch groups land wholesale), but the rewrite is
-    * scoped to the buckets the batch's keys hash into. Untouched bucket
+  /** Keyed upsert — the incremental-maintenance sink ("merge tonight's
+    * batch into the corpus"): batch rows replace all current rows sharing
+    * their key (null-safe, idempotent, multi-row batch groups land
+    * wholesale), and the rewrite is scoped to the buckets the batch's keys
+    * hash into. Untouched bucket
     * directories are never read, written, or moved — per-batch cost is
     * O(touched_buckets · bucket_size) ≈ O(batch), independent of corpus
     * size. This is what converts the streaming-ingest sink from O(corpus)

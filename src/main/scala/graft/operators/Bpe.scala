@@ -26,7 +26,7 @@ import graft.functions.Text
   *
   * Determinism: ties on pair weight break by (left, right) ascending —
   * iteration 1 therefore reproduces exactly the head of q78's pair table
-  * (`Queries.bpePairs` orders by weight desc, pair asc; for single-char
+  * (`TextQueries.bpePairs` orders by weight desc, pair asc; for single-char
   * symbols the concatenated pair string orders identically to the tuple).
   *
   * Simplification vs the paper: no end-of-word marker symbol — merges

@@ -42,7 +42,7 @@ object OrderedAnalytics {
     * Change detection is null-safe (a null value is a run like any other,
     * and null→null does not split); `tiebreakCol` makes the order total so
     * same-ordinate rows collapse deterministically on any engine — the
-    * [[graft.Queries.transitionsOf]] contract.
+    * [[transitions]] contract.
     *
     * Scale shape: ONE key shuffle — the lag/run-numbering windows and the
     * run rollup all ride the same (key, ord) partitioning, and the
@@ -149,5 +149,26 @@ object OrderedAnalytics {
       .groupBy(keyCols.map(col): _*)
       .agg(count(when(col("__last_break").isNull || col(ordCol) > col("__last_break"), 1))
         .as("streak"))
+  }
+
+  /** Kernel of q97: first-order transition counts and row-normalized
+    * probabilities between consecutive event types per key. The lead window
+    * orders by (ord, tiebreakCol) — callers pass a unique tiebreak so the
+    * successor of equal-instant events is deterministic on both engines.
+    * Scale shape: ONE key shuffle for the lead window; the transition
+    * rollup is |types|² rows, its per-row normalization a window over that
+    * tiny aggregate partitioned by from_type (never single-partition). */
+  def transitions(
+      events: DataFrame, keyCol: String, ordCol: String,
+      typeCol: String, tiebreakCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(keyCol).orderBy(col(ordCol), col(tiebreakCol))
+    events
+      .withColumn("__next", lead(col(typeCol), 1).over(w))
+      .filter(col("__next").isNotNull)
+      .groupBy(col(typeCol).as("from_type"), col("__next").as("to_type"))
+      .agg(count(lit(1)).as("n"))
+      .withColumn("p", col("n").cast("double") /
+        sum("n").over(Window.partitionBy("from_type")))
   }
 }

@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Product quantization (Jégou, Douze & Schmid 2011, "Product Quantization
   * for Nearest Neighbor Search") composed with the IVF coarse index — the
@@ -152,9 +150,6 @@ object Pq {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  private def enc(schema: StructType): ExpressionEncoder[Row] =
-    ExpressionEncoder(RowEncoder.encoderFor(schema))
-
   /** Deterministic hash-gated distributed sample + the seed rows (the only
     * rows that ever reach the driver) — the [[Ivf.ivfTopK]] sampling
     * contract, shared by the coarse and PQ trainers. */
@@ -183,48 +178,6 @@ object Pq {
       seeds = seedsOf(sample)
     }
     (sample, seeds)
-  }
-
-  /** PQ-encode every vector: (id, codes BINARY(m)) — the 4·d → m byte
-    * storage form of the corpus, plus the trained codebooks (the model a
-    * caller persists alongside the codes). Corrupt (dimension-mismatched /
-    * null) vectors are excluded, the [[Ivf.ivfTopK]] policy. */
-  def encode(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int = 8,
-      codebookSize: Int = 16,
-      sampleSize: Int = 2048,
-      iters: Int = 8): (DataFrame, Array[Array[Array[Float]]]) = {
-    require(codebookSize >= 1 && codebookSize <= 256,
-      s"codebookSize $codebookSize out of [1, 256]: codes are single bytes, " +
-        "a larger codebook would silently wrap indices to wrong centroids")
-    val empty = emb.sparkSession.createDataFrame(
-      new java.util.ArrayList[Row](),
-      StructType(Seq(StructField("id", LongType), StructField("codes", BinaryType))))
-    val (dim, n) = Ann.majorityDimAndCountOf(emb, vecCol).getOrElse(
-      return (empty, Array.empty))
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    val validVecs = emb
-      .select(col(idCol).cast("long").as("_1"), col(vecCol).as("_2"))
-      .filter(col("_2").isNotNull && size(col("_2")) === dim)
-    val (sample, seedRows) = sampleAndSeeds(validVecs, n, sampleSize, codebookSize)
-    val seeds = Array.tabulate(m, seedRows.length) { (s, j) =>
-      java.util.Arrays.copyOfRange(seedRows(j), s * dsub, (s + 1) * dsub)
-    }
-    val books = trainCodebooks(sample, seeds, m, dsub, iters)
-    sample.unpersist()
-    val bc = emb.sparkSession.sparkContext.broadcast(books)
-    val out = validVecs.mapPartitions { it =>
-      val bks = bc.value
-      it.map { r =>
-        Row(r.getLong(0), encodeOne(bks, r.getSeq[Float](1).toArray, m, dsub))
-      }
-    }(enc(StructType(Seq(
-      StructField("id", LongType), StructField("codes", BinaryType)))))
-    (out, books)
   }
 
   /** IVF-PQ cosine top-k (IVFADC): the index side lives under its nearest

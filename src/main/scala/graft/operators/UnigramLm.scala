@@ -115,4 +115,48 @@ object UnigramLm {
             (col("n_tokens").cast("double") * col("__n_total").cast("double")))
           .as("mean_tok_prob"))
   }
+
+  /** Per-document unigram (token) Shannon entropy + top-token fraction —
+    * the information-density quality signal: low entropy flags repetitive
+    * machine-generated text the way the Gopher fraction filters (q53) do,
+    * but in one number with a natural threshold scale (bits). Computed as
+    * log2(n) − (Σ c·log2 c)/n over the per-doc token counts.
+    *
+    * Determinism policy: counts and top_token_frac are exact (longs + one
+    * division); entropy's cross-token float sum folds in SORTED token order
+    * on BOTH engines (Spark `aggregate(array_sort(collect_list))`, DuckDB
+    * `list_reduce(list(... ORDER BY tok))` — the 0.0-seeded and
+    * first-element-seeded folds produce the identical addition sequence
+    * since 0.0 + x = x bitwise), leaving only log2's last-ulp libm
+    * variation, absorbed by the 6dp round (the q33 precedent). Blank
+    * documents surface with n_tokens 0 and NULL entropy, never dropped.
+    *
+    * Scale shape: explode → (doc, tok) rollup → per-doc fold: two
+    * partial-aggregated shuffles, both doc-keyed; the per-doc collect_list
+    * is bounded by the doc's VOCABULARY (distinct tokens), not its
+    * length. */
+  def tokenEntropy(docs: DataFrame): DataFrame = {
+    val toks = docs
+      .filter(trim(coalesce(col("text"), lit(""))) =!= "")
+      .select(col("doc_id"), explode(graft.functions.Text.tokens(col("text"))).as("tok"))
+    val agg = toks.groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
+      .groupBy("doc_id")
+      .agg(
+        sum("c").as("n_tokens"),
+        count(lit(1)).as("vocab_size"),
+        max("c").as("__mx"),
+        aggregate(
+          array_sort(collect_list(struct(col("tok"), col("c")))),
+          lit(0.0),
+          (acc, x) => acc +
+            x.getField("c").cast("double") * log2(x.getField("c").cast("double")))
+          .as("__scc"))
+    docs.select("doc_id").join(agg, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
+        coalesce(col("vocab_size"), lit(0L)).as("vocab_size"),
+        round(log2(col("n_tokens").cast("double")) - col("__scc") / col("n_tokens"), 6)
+          .as("entropy"),
+        (col("__mx").cast("double") / col("n_tokens")).as("top_token_frac"))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.{Queries, Sessions}
+import graft.Sessions
+import graft.queries.Queries
 
 /** Dump `.explain("formatted")` for named registered queries to files —
   * the round-17 optimization-evidence harness (guide §1: capture the plan

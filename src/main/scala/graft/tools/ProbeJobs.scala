@@ -7,7 +7,8 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.graftshim.ListenerBusAccess
 
-import graft.{Queries, Sessions}
+import graft.Sessions
+import graft.queries.Queries
 
 /** Per-query COST-SHAPE probe for the round-17 optimization work: run each
   * named registered query once untimed (codegen/JIT warm-up), then once

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Curation
 import graft.operators.{Boilerplate, Budget}
+import graft.queries.TextQueries
 
 /** Specs for the token-budget selection ([[Budget]]) and the line-level
   * boilerplate screen ([[Boilerplate]]) — the two sub-document/mixture
@@ -118,7 +119,7 @@ class BudgetBoilerplateSpec extends SparkSpec {
   test("removeFrequentLines: fixture removal branches (cap, boundary, blank, all-boiler)") {
     val footer = "subscribe to the newsletter at news example com"
     val out = Boilerplate
-      .removeFrequentLines(Queries.boilerplateFixture(spark), "doc_id", "text", maxDf = 3L)
+      .removeFrequentLines(TextQueries.boilerplateFixture(spark), "doc_id", "text", maxDf = 3L)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap

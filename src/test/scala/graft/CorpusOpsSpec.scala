@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Heuristics
-import graft.operators.{Chunking, UnigramLm}
+import graft.operators.{Chunking, OrderedAnalytics, UnigramLm}
+import graft.queries.{DedupQueries, EventQueries, TextQueries}
 
 /** Hand-computed contracts for the round-10 corpus operators: the C4
   * heuristic screen, the corpus-unigram LM score, and context-window
@@ -99,7 +100,7 @@ class CorpusOpsSpec extends SparkSpec {
   test("semantic decontamination: cross-split only, train->eval oriented, live, subset of q27") {
     import graft.functions.Curation
     val dir = "/root/testdata/sf0.001"
-    val out = Queries.semanticDecontamination(spark, dir)
+    val out = TextQueries.semanticDecontamination(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.nonEmpty, "no semantic leakage found — the row is dead")
     // orientation: train ids really are train, eval ids really are eval
@@ -109,7 +110,7 @@ class CorpusOpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(out.forall { case (t, e) => !evalIds(t) && evalIds(e) })
     // the screen is q27's exact pair scan filtered — never a new pair
-    val q27 = Queries.embeddingNearDup(spark, dir)
+    val q27 = DedupQueries.embeddingNearDup(spark, dir)
       .collect().map(r => Set(r.getLong(0), r.getLong(1))).toSet
     assert(out.forall { case (t, e) => q27.contains(Set(t, e)) })
     // and it reports BOTH orientations' worth of pairs as one direction:
@@ -121,7 +122,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("quality cutoff: keeps at least the top p per source, minimally (ties spill, nothing more)") {
     val p = 0.3
-    val out = Queries.qualityCutoff(spark, "/root/testdata/sf0.001", p)
+    val out = TextQueries.qualityCutoff(spark, "/root/testdata/sf0.001", p)
       .collect().map(r => (r.getString(1), r.getDouble(2), r.getLong(3),
         r.getDouble(4), r.getBoolean(5)))
     assert(out.nonEmpty)
@@ -143,7 +144,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("perplexity buckets: per-lang terciles, ties spill up, blanks surface, fixture lang exact") {
-    val out = Queries.perplexityBuckets(spark, "/root/testdata/sf0.001")
+    val out = TextQueries.perplexityBuckets(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getString(1),
         if (r.isNullAt(3)) None else Some(r.getDouble(3)),
         if (r.isNullAt(4)) None else Some(r.getLong(4)),
@@ -186,7 +187,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("normalize: NFC recompose, control strip, FFFD kept+counted, collapse, idempotent") {
     import graft.functions.Normalize
-    val fx = Queries.normalizeFixture(spark)
+    val fx = TextQueries.normalizeFixture(spark)
     val rows = fx.select(col("doc_id"),
       Normalize.cleanText(col("text")).as("c"),
       Normalize.controlCount(col("text")).as("nc"),
@@ -240,7 +241,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("tfidf keywords: rare repeated term dominates, blank docs emit nothing, ranks dense") {
-    val out = Queries.tfidfKeywords(spark, "/root/testdata/sf0.001")
+    val out = TextQueries.tfidfKeywords(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getLong(3), r.getLong(4), r.getDouble(5)))
     // blank fixture doc: no keyword rows at all
@@ -268,7 +269,7 @@ class CorpusOpsSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // word freqs: ab×3, ba×1, c×3, abc×1 → pairs: ab = 3(ab) + 1(abc) = 4,
     // ba = 1, bc = 1(abc); 'c' has no pair
-    val out = Queries.bpePairs(spark, dir)
+    val out = TextQueries.bpePairs(spark, dir)
       .collect().map(r => r.getString(0) -> r.getLong(1))
     assert(out.toSeq === Seq("ab" -> 4L, "ba" -> 1L, "bc" -> 1L))
   }
@@ -299,7 +300,7 @@ class CorpusOpsSpec extends SparkSpec {
   test("BPE trainer: iteration 1 reproduces the q78 pair kernel's top row") {
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
-    val q78Top = Queries.bpePairs(spark, "/root/testdata/sf0.001", topK = 1)
+    val q78Top = TextQueries.bpePairs(spark, "/root/testdata/sf0.001", topK = 1)
       .head()
     val trained = graft.operators.Bpe.train(docs, "text", merges = 1).head()
     assert(trained.getString(1) + trained.getString(2) === q78Top.getString(0),
@@ -325,7 +326,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("token entropy: planted branches — blank NULL, repetition 0, uniform log2(k)") {
-    val out = Queries.tokenEntropy(spark, "/root/testdata/sf0.001")
+    val out = TextQueries.tokenEntropy(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") >= 9460001L)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
@@ -339,7 +340,7 @@ class CorpusOpsSpec extends SparkSpec {
     // "a b c d": uniform over 4 types → entropy exactly log2(4) = 2
     assert(out(9460003L) === ((4L, 4L, 2.0, 0.25)))
     // real corpus rows: entropy ∈ [0, log2(n)], top_token_frac ∈ (0, 1]
-    val real = Queries.tokenEntropy(spark, "/root/testdata/sf0.001")
+    val real = TextQueries.tokenEntropy(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") < 9460001L && col("n_tokens") > 0)
       .collect()
     assert(real.nonEmpty)
@@ -359,7 +360,7 @@ class CorpusOpsSpec extends SparkSpec {
       // u3: same-instant pair ordered by the event-id tiebreak: a(301) -> b(302)
       (3L, 50L, 301L, "a"), (3L, 50L, 302L, "b")
     ).toDF("user_id", "ts_ns", "event_id", "event_type")
-    val out = Queries.transitionsOf(ev, "user_id", "ts_ns", "event_type", "event_id")
+    val out = OrderedAnalytics.transitions(ev, "user_id", "ts_ns", "event_type", "event_id")
       .collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getDouble(3))))
       .toMap
@@ -378,7 +379,7 @@ class CorpusOpsSpec extends SparkSpec {
       (2L, "apple"),
       (4L, "")                    // blank doc contributes nothing
     ).toDF("doc_id", "text")
-    val out = Queries.invertedIndexOf(docs, minDf = 2L, headLen = 2)
+    val out = TextQueries.invertedIndexOf(docs, minDf = 2L, headLen = 2)
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getString(2))))
       .toMap
@@ -392,7 +393,7 @@ class CorpusOpsSpec extends SparkSpec {
       (1L, "a", 1.0), (2L, "a", 2.0), (3L, "a", 3.0), (4L, "a", 4.0), (5L, "a", 100.0),
       (6L, "b", 5.0), (7L, "b", 5.0), (8L, "b", 5.0), (9L, "b", 7.0)
     ).toDF("event_id", "event_type", "value")
-    val out = Queries.outliersOf(ev)
+    val out = EventQueries.outliersOf(ev)
       .collect()
       .map(r => r.getLong(0) -> ((r.getDouble(3), r.getDouble(4), r.getBoolean(5))))
       .toMap
@@ -407,7 +408,7 @@ class CorpusOpsSpec extends SparkSpec {
   test("daily uniques: HLL sketch twin lands within its error bound of the exact rollup") {
     import org.apache.spark.sql.functions.{approx_count_distinct, count => fcount, datediff, lit, to_date}
     val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
-    val exact = Queries.dailyUniques(spark, "/root/testdata/sf0.001")
+    val exact = EventQueries.dailyUniques(spark, "/root/testdata/sf0.001")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val rsd = 0.02
     val approx = ev

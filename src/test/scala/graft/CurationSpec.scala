@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Curation
-import graft.operators.{Decontamination, Repetition}
+import graft.operators.{Decontamination, Repetition, UnigramLm}
+import graft.queries.TextQueries
 
 /** Corpus-curation operators: content-hash splitting, train/eval
   * decontamination, Gopher-style repetition stats, PII scrubbing
@@ -731,7 +732,7 @@ class CurationSpec extends SparkSpec {
     val repetitiveDoc = (82010L, cycle, "en", "web", cycle.length.toLong)
     val docs2 = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .unionByName(Seq(repetitiveDoc).toDF("doc_id", "text", "lang", "source", "n_chars"))
-    val ent = graft.Queries.tokenEntropyOf(docs2.select(col("doc_id"), col("text")))
+    val ent = UnigramLm.tokenEntropy(docs2.select(col("doc_id"), col("text")))
       .filter(col("entropy").isNotNull)
     val rScore = ent.filter(col("doc_id") === 82010L).head().getDouble(3)
     val minReal = ent.filter(col("doc_id") =!= 82010L)
@@ -795,7 +796,7 @@ class CurationSpec extends SparkSpec {
     assert(scored(95002L) < scored(95001L) && scored(95002L) < scored(95003L),
       s"garbled must score lowest vs the corpus reference ($scored)")
     val uniMid = math.sqrt(scored(95002L) * (scored - 95002L).values.min)
-    val ent = graft.Queries.tokenEntropyOf(batch.select(col("doc_id"), col("text")))
+    val ent = UnigramLm.tokenEntropy(batch.select(col("doc_id"), col("text")))
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     assert(ent(95003L) < ent(95001L) && ent(95003L) < ent(95002L),
       s"de Bruijn doc must have the lowest entropy ($ent)")
@@ -879,37 +880,6 @@ class CurationSpec extends SparkSpec {
       s"stored row must carry the corrected text: ${storedFixed.toSeq}")
     assert(store.read("curated_corpus").count() === n0 + 2L,
       "a correction replaces, never adds")
-  }
-
-  test("upsert: batch keys replace wholesale, others retained, null-safe, idempotent") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("upsert").toString
-    val store = new graft.io.TableStore(spark, root)
-    def snap(): Set[(Option[Long], String)] =
-      store.read("docs").collect()
-        .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)), r.getString(1))).toSet
-    // first write degrades to plain overwrite
-    store.upsert("docs",
-      Seq((Some(1L), "v1"), (Some(2L), "v1"), (None: Option[Long], "null-v1"))
-        .toDF("doc_id", "text"), Seq("doc_id"))
-    assert(snap() === Set((Some(1L), "v1"), (Some(2L), "v1"), (None, "null-v1")))
-    // key 2 replaced (multi-row batch group lands wholesale), key 3 new,
-    // NULL key replaced null-safely, key 1 untouched
-    val batch = Seq((Some(2L), "v2a"), (Some(2L), "v2b"), (Some(3L), "v2"),
-      (None: Option[Long], "null-v2")).toDF("doc_id", "text")
-    store.upsert("docs", batch, Seq("doc_id"))
-    val want = Set((Some(1L), "v1"), (Some(2L), "v2a"), (Some(2L), "v2b"),
-      (Some(3L), "v2"), (None, "null-v2"))
-    assert(snap() === want)
-    // idempotent: the same batch again reproduces the identical table
-    store.upsert("docs", batch, Seq("doc_id"))
-    assert(snap() === want)
-    // a failing merge leaves the previous generation readable (staged swap):
-    // unionByName rejects the mismatched schema before anything is written
-    intercept[Exception] {
-      store.upsert("docs", Seq((9L, 9.9)).toDF("doc_id", "wrong"), Seq("doc_id"))
-    }
-    assert(snap() === want)
   }
 
   test("curation pipeline: semDedup stage collapses embedding near-dups in batch and ingest alike") {
@@ -1166,7 +1136,7 @@ class CurationSpec extends SparkSpec {
     // is PII-free, which is exactly why the original bug passed its E2E test)
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select(col("doc_id"), col("text"))
-      .unionAll(Queries.piiFixture(spark))
+      .unionAll(TextQueries.piiFixture(spark))
     CuratePipeline.run(spark, docs, store)
     val stored = store.read("curated_corpus").select("doc_id", "split")
     val q51 = docs.select(col("doc_id"),
@@ -1286,7 +1256,7 @@ class CurationSpec extends SparkSpec {
   // ---- JSON extraction ------------------------------------------------------
 
   test("json extraction: every planted failure branch lands as expected") {
-    val planted = Queries.jsonExtract(spark, "/root/testdata/sf0.001")
+    val planted = TextQueries.jsonExtract(spark, "/root/testdata/sf0.001")
       .filter(col("event_type") === "planted")
       .collect()
     assert(planted.length === 1)
@@ -1298,7 +1268,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("json extraction: real events rows all parse (no silent null inflation)") {
-    val real = Queries.jsonExtract(spark, "/root/testdata/sf0.001")
+    val real = TextQueries.jsonExtract(spark, "/root/testdata/sf0.001")
       .filter(col("event_type") =!= "planted")
       .agg(sum("n_events").as("n"), sum("n_with_k").as("k")).head()
     assert(real.getLong(0) > 0 && real.getLong(0) === real.getLong(1))
@@ -1307,7 +1277,7 @@ class CurationSpec extends SparkSpec {
   // ---- PII scrub ------------------------------------------------------------
 
   test("PII scrub: every branch of the planted fixture, exact counts and text") {
-    val got = Queries.piiScrub(spark, "/root/testdata/sf0.001")
+    val got = TextQueries.piiScrub(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") >= 9000000L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
     assert(got.toSeq === Seq(

@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bm25, Loops, PageRank, SnapshotDiff}
+import graft.queries.{GraphMaintenanceQueries, GraphQueries, Queries, Shared}
 
 /** Unit fixtures for the r12 additions: BM25 batch retrieval, damped
   * PageRank, and the keyed snapshot diff. */
@@ -1245,8 +1246,8 @@ class GraphSearchSpec extends SparkSpec {
     // cold under the exact evaluator — `tools/ProbeWarm.scala` at
     // `0ab6ae2` measured 1.3-1.9x
     val dir = "/root/testdata/sf0.001"
-    val today = Queries.affinityTopEdges(spark, dir).localCheckpoint(true)
-    val old = Louvain.communities(Queries.affinityTopEdges(spark, dir,
+    val today = Shared.affinityTopEdges(spark, dir).localCheckpoint(true)
+    val old = Louvain.communities(Shared.affinityTopEdges(spark, dir,
       before = Some("2024-01-16")), 6)
     def q(l: org.apache.spark.sql.DataFrame): Double =
       GraphStats.modularity(today, l.select("node", "label"))
@@ -1260,12 +1261,12 @@ class GraphSearchSpec extends SparkSpec {
   test("two-level louvain: aggregation raises Q and merges communities on the real graph") {
     import graft.operators.{GraphStats, Louvain}
     val dir = "/root/testdata/sf0.001"
-    val edges = Queries.affinityTopEdges(spark, dir).localCheckpoint(true)
+    val edges = Shared.affinityTopEdges(spark, dir).localCheckpoint(true)
     def q(l: org.apache.spark.sql.DataFrame): Double =
       GraphStats.modularity(edges, l.select("node", "label"))
         .agg(sum(col("modularity"))).head.getDouble(0)
     val l1 = Louvain.communities(edges, 6).localCheckpoint(true)
-    val l2 = Queries.louvainTwoLevel(spark, dir).localCheckpoint(true)
+    val l2 = GraphQueries.louvainTwoLevel(spark, dir).localCheckpoint(true)
     // the level-2 guarantee: every accepted move on the self-loop-degree
     // aggregate strictly raises original-graph Q (measured 0.18 -> 0.22)
     assert(q(l2) >= q(l1), s"two-level lowered Q: ${q(l2)} < ${q(l1)}")
@@ -1288,7 +1289,7 @@ class GraphSearchSpec extends SparkSpec {
     // the modularity-OPTIMIZING detector must score at least the
     // objective-free majority detector under the exact q205 evaluator
     val dir = "/root/testdata/sf0.001"
-    val edges = Queries.affinityTopEdges(spark, dir).localCheckpoint(true)
+    val edges = Shared.affinityTopEdges(spark, dir).localCheckpoint(true)
     def score(labels: org.apache.spark.sql.DataFrame): Double =
       GraphStats.modularity(edges, labels)
         .agg(sum(col("modularity"))).head.getDouble(0)
@@ -1337,10 +1338,10 @@ class GraphSearchSpec extends SparkSpec {
   test("louvain refine on the real graph: connectivity postcondition, Q >= louvain, live splits") {
     import graft.operators.{GraphStats, Louvain}
     val dir = "/root/testdata/sf0.001"
-    val edges = Queries.affinityTopEdges(spark, dir).localCheckpoint(true)
+    val edges = Shared.affinityTopEdges(spark, dir).localCheckpoint(true)
     val labels = Louvain.communities(edges, sweeps = 6)
       .select("node", "label").localCheckpoint(true)
-    val out = Queries.louvainRefined(spark, dir)
+    val out = GraphQueries.louvainRefined(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // the row is LIVE: one-level Louvain really leaves disconnected
     // communities on this graph (8 splits measured at sf0.001)
@@ -1365,7 +1366,7 @@ class GraphSearchSpec extends SparkSpec {
     def q(l: org.apache.spark.sql.DataFrame): Double =
       GraphStats.modularity(edges, l)
         .agg(sum(col("modularity"))).head.getDouble(0)
-    val qRef = q(Queries.louvainRefined(spark, dir)
+    val qRef = q(GraphQueries.louvainRefined(spark, dir)
       .select(col("node"), col("refined").as("label")))
     assert(qRef >= q(labels), "refinement lowered Q")
   }
@@ -1378,8 +1379,8 @@ class GraphSearchSpec extends SparkSpec {
     // both non-empty), so the registered row keeps exercising deletion
     // cascades and re-admission, not just delta bookkeeping
     val dir = "/root/testdata/sf0.001"
-    val today = Queries.affinityTopEdges(spark, dir)
-    val yesterday = Queries.affinityTopEdges(spark, dir,
+    val today = Shared.affinityTopEdges(spark, dir)
+    val yesterday = Shared.affinityTopEdges(spark, dir,
       before = Some("2024-01-16"))
     def members(e: org.apache.spark.sql.DataFrame): Set[Long] =
       KCore.core(e, k = 4).select("node").collect().map(_.getLong(0)).toSet
@@ -1389,7 +1390,7 @@ class GraphSearchSpec extends SparkSpec {
       "churn row no longer exercises deletion cascades")
     assert((newCore -- oldCore).nonEmpty, "no core re-entries/admissions")
     // and the registered query's maintained result equals the fixpoint
-    val got = Queries.kcoreChurn(spark, dir)
+    val got = GraphMaintenanceQueries.kcoreChurn(spark, dir)
       .select("node").collect().map(_.getLong(0)).toSet
     assert(got === newCore)
   }
@@ -1402,14 +1403,14 @@ class GraphSearchSpec extends SparkSpec {
     def trussSet(e: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       Truss.edges(e, k = 4).select("u", "v").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val t8y = Queries.affinityTopEdges(spark, dir, n = 8,
+    val t8y = Shared.affinityTopEdges(spark, dir, n = 8,
       before = Some("2024-01-16"))
-    val t8 = Queries.affinityTopEdges(spark, dir, n = 8)
+    val t8 = Shared.affinityTopEdges(spark, dir, n = 8)
     val oldT = trussSet(t8y)
     val newT = trussSet(t8)
     assert((oldT -- newT).nonEmpty, "no truss-edge evictions")
     assert((newT -- oldT).nonEmpty, "no truss-edge admissions")
-    assert(Queries.trussChurn(spark, dir).select("u", "v").collect()
+    assert(GraphMaintenanceQueries.trussChurn(spark, dir).select("u", "v").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet === newT)
     // scc: yesterday's labeling genuinely differs from today's (classes
     // split or merged), and the maintained result is the fixpoint
@@ -1417,12 +1418,12 @@ class GraphSearchSpec extends SparkSpec {
       Scc.components(e.filter(col("src") =!= col("dst"))
           .select("src", "dst").distinct(), maxRounds = 50)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val oldS = sccMap(Queries.affinityTopEdges(spark, dir,
+    val oldS = sccMap(Shared.affinityTopEdges(spark, dir,
       before = Some("2024-01-16")))
-    val newS = sccMap(Queries.affinityTopEdges(spark, dir))
+    val newS = sccMap(Shared.affinityTopEdges(spark, dir))
     assert(oldS !== newS, "SCC labeling unchanged — the churn row is " +
       "degenerate on this cutoff")
-    assert(Queries.sccChurn(spark, dir).collect()
+    assert(GraphMaintenanceQueries.sccChurn(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap === newS)
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
+import graft.queries.StreamingQueries
 
 /** Multimodal columns with REAL codecs: BMP decoded through the JDK's
   * ImageIO, WAV through AudioSystem, motion-BMP container walks — plus the
@@ -331,7 +332,7 @@ class MultimodalSpec extends SparkSpec {
     // re-encodes is a pinned NUMBER. Floors sit under the measured values
     // (1.0 / 0.995 / 1.0 / 1.0 on the frozen corpus) with slack only where
     // the perturbation genuinely flips near-tie hash bits.
-    val rep = Queries.perceptualRecall(spark, "/root/testdata/sf0.001")
+    val rep = StreamingQueries.perceptualRecall(spark, "/root/testdata/sf0.001")
       .collect().map(r => r.getString(0) -> r.getDouble(3)).toMap
     assert(rep("q144_video_vs_lumanudge_j03") >= 0.98, rep.toString)
     assert(rep("q144_video_vs_lumanudge_j05") >= 0.95, rep.toString)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.etl.RawSheet
+import graft.queries.{ChoirQueries, DedupQueries, EventQueries, Queries, RelationalQueries, SketchQueries, TextQueries}
 
 /** Physical-plan pins for the scale-critical queries: these assertions are
   * the "would this survive 100×?" contract — broadcast joins on dims (fact
@@ -30,11 +31,11 @@ class PlanSpec extends SparkSpec {
     // forced hint is an OOM at 100×, not a plan). At bench SFs the planner's
     // size estimate must still CHOOSE a broadcast; at full scale the same
     // code degrades to SMJ on custkey, which is the correct 100 TB strategy.
-    val p = plan(Queries.shippingPriority(spark, dir))
+    val p = plan(RelationalQueries.shippingPriority(spark, dir))
     assert(p.contains("TakeOrderedAndProject"), "top-10 must not be a global sort")
     assert(p.contains("BroadcastHashJoin"),
       "planner must pick a broadcast for the filtered customer side at this SF")
-    assert(!Queries.shippingPriority(spark, dir).queryExecution.analyzed.toString
+    assert(!RelationalQueries.shippingPriority(spark, dir).queryExecution.analyzed.toString
       .contains("UnresolvedHint"), "sanity")
     // both date predicates reach the scans
     assert(p.contains("l_shipdate"), p.take(500))
@@ -47,7 +48,7 @@ class PlanSpec extends SparkSpec {
   test("q102 six-table join: every dimension side broadcasts BY SIZE, no sort-merge join") {
     // only region→nation carries a hint (bounded by schema); customer and
     // supplier broadcasts are size-based — present at this SF, SMJ at 100×.
-    val p = plan(Queries.localSupplierVolume(spark, dir))
+    val p = plan(RelationalQueries.localSupplierVolume(spark, dir))
     assert(!p.contains("SortMergeJoin"),
       "a dimension flipping to SMJ would shuffle the fact side at 100 TB")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 3,
@@ -60,7 +61,7 @@ class PlanSpec extends SparkSpec {
     // schema). The cross-nation inequality is a post-join filter on two
     // broadcast-joined attributes — nothing forces a fact-side shuffle
     // before the rollup.
-    val p = plan(Queries.tradeVolume(spark, dir))
+    val p = plan(RelationalQueries.tradeVolume(spark, dir))
     assert(!p.contains("SortMergeJoin"),
       "a dim flipping to SMJ would shuffle lineitem/orders to join at this SF")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 4,
@@ -75,14 +76,14 @@ class PlanSpec extends SparkSpec {
     // the Q8 shape's teeth: nation/customer/supplier joins must not SMJ at
     // this SF (only lineitem⋈orders — the fact-fact join — may), and the
     // share numerator/denominator are ONE grouped aggregate, not two passes.
-    val p = plan(Queries.marketShare(spark, dir))
+    val p = plan(RelationalQueries.marketShare(spark, dir))
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 3, p)
     assert(p.linesIterator.count(_.contains("HashAggregate")) === 2,
       "numerator and denominator must share one partial+final rollup:\n" + p)
   }
 
   test("q107 large orders: HAVING prunes the per-order rollup BEFORE the customer join") {
-    val p = plan(Queries.largeOrders(spark, dir))
+    val p = plan(RelationalQueries.largeOrders(spark, dir))
     // the quantity filter must sit on the aggregate side, not after the join
     val lines = p.linesIterator.toVector
     val joinIdx = lines.indexWhere(l => l.contains("Join"))
@@ -98,7 +99,7 @@ class PlanSpec extends SparkSpec {
     // residual condition; an inner join would multiply orders by their
     // late-line count and need a distinct to undo it (an extra shuffle AND
     // wrong intermediate cardinality at 100 TB).
-    val p = plan(Queries.lateOrderPriorities(spark, dir))
+    val p = plan(RelationalQueries.lateOrderPriorities(spark, dir))
     assert(p.contains("LeftSemi"), "existence probe must plan as a semi-join:\n" + p)
     assert(!p.contains("HashAggregate(keys=[o_orderkey"),
       "no distinct-on-orderkey pass may exist:\n" + p)
@@ -108,7 +109,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q111 histogram: outer join preserves zero-order customers, priority filter pushes") {
-    val p = plan(Queries.orderCountHistogram(spark, dir))
+    val p = plan(RelationalQueries.orderCountHistogram(spark, dir))
     assert(p.contains("LeftOuter"),
       "zero-order customers must survive (the Q13 point):\n" + p)
     assert(p.linesIterator.exists(l =>
@@ -119,7 +120,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q112 top-20 plans as TakeOrderedAndProject; returnflag and quarter push to the scans") {
-    val p = plan(Queries.returnedItems(spark, dir))
+    val p = plan(RelationalQueries.returnedItems(spark, dir))
     assert(p.contains("TakeOrderedAndProject"), "top-20 must not be a global sort:\n" + p)
     assert(p.linesIterator.exists(l =>
       l.contains("PushedFilters") && l.contains("l_returnflag")),
@@ -135,7 +136,7 @@ class PlanSpec extends SparkSpec {
     // the Q17 teeth: the per-part average must be computed AFTER the brand
     // filter shrank the fact side (part filter pushed to its scan), and the
     // rollup joins back by key — never a cartesian re-pairing.
-    val p = plan(Queries.smallQuantityRevenue(spark, dir))
+    val p = plan(RelationalQueries.smallQuantityRevenue(spark, dir))
     assert(p.linesIterator.exists(l =>
       l.contains("PushedFilters") && l.contains("p_brand")),
       "brand filter must push to the part scan:\n" + p)
@@ -148,7 +149,7 @@ class PlanSpec extends SparkSpec {
     // PushExtraPredicateThroughJoin derives (A1∨A2) for the part side and
     // (B1∨B2) for the lineitem side — the pushdown that makes a disjunctive
     // bracket query scan-selective at 100 TB instead of joining every line.
-    val p = plan(Queries.bracketRevenue(spark, dir))
+    val p = plan(RelationalQueries.bracketRevenue(spark, dir))
     assert(p.linesIterator.exists(l =>
       l.contains("PushedFilters") && l.contains("p_brand")),
       "part-side OR-envelope must reach the part scan:\n" + p)
@@ -158,7 +159,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q116 dormant customers: anti-join on the RECENT slice, cutoff pushed, 1-row avg broadcast") {
-    val p = plan(Queries.dormantCustomers(spark, dir))
+    val p = plan(RelationalQueries.dormantCustomers(spark, dir))
     assert(p.contains("LeftAnti"), "no-recent-order must plan as an anti-join:\n" + p)
     assert(p.linesIterator.exists(l =>
       l.contains("PushedFilters") && l.contains("o_orderdate")),
@@ -169,7 +170,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q117 exact heavy grams: one rollup shuffle + presentation sort, no join") {
-    val p = plan(Queries.heavyGrams(spark, dir))
+    val p = plan(SketchQueries.heavyGrams(spark, dir))
     assert(!p.contains("Join"), "frequency mining must not plan a join:\n" + p)
     assert(shuffles(p) === 2, "gram rollup + presentation sort only:\n" + p)
     assert(p.contains("partial_count") || p.contains("HashAggregate"),
@@ -177,7 +178,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q118 sketched heavy grams: the CMS probe prunes BEFORE the rollup exchange") {
-    val p = plan(Queries.heavyGramsSketched(spark, dir))
+    val p = plan(SketchQueries.heavyGramsSketched(spark, dir))
     assert(p.contains("cms_estimate"),
       "the codegen'd CMS probe must appear in the physical plan:\n" + p)
     assert(!p.contains("Join"), "the prescreen is a scan-local filter, not a join:\n" + p)
@@ -197,7 +198,7 @@ class PlanSpec extends SparkSpec {
     // and the valid_to lead window are both satisfied by that same
     // clustering (subset-key co-location), so the whole history builder is
     // ONE data shuffle + the presentation sort — no per-stage re-exchange.
-    val p = plan(Queries.eventTypeHistory(spark, dir))
+    val p = plan(EventQueries.eventTypeHistory(spark, dir))
     assert(!p.contains("Join"), "runs-collapse must not plan a join:\n" + p)
     assert(shuffles(p) <= 2,
       "user shuffle + presentation sort only — a third exchange means the " +
@@ -210,7 +211,7 @@ class PlanSpec extends SparkSpec {
     // ALL as PushedFilters and read only the 4 referenced columns. At 100 TB
     // this is the difference between decoding 1/7 of the row groups and
     // decoding everything.
-    val df = Queries.forecastRevenue(spark, dir)
+    val df = RelationalQueries.forecastRevenue(spark, dir)
     assert(!plan(df).contains("Join"), plan(df))
     assert(shuffles(plan(df)) === 1, "one single-partition agg exchange only:\n" + plan(df))
     // the scan's metadata string is built lazily at the ACTIVE truncation
@@ -219,7 +220,7 @@ class PlanSpec extends SparkSpec {
     val scanLine =
       try {
         spark.conf.set("spark.sql.maxMetadataStringLength", "4096")
-        Queries.forecastRevenue(spark, dir).queryExecution.executedPlan
+        RelationalQueries.forecastRevenue(spark, dir).queryExecution.executedPlan
           .toString.linesIterator
           .find(_.contains("FileScan")).getOrElse(fail("no FileScan"))
       } finally spark.conf.set("spark.sql.maxMetadataStringLength", prevLen)
@@ -237,7 +238,7 @@ class PlanSpec extends SparkSpec {
     // canonically identical, so at runtime the fact scan + rollup evaluate
     // once. A drift that re-derives the rollup per side doubles the fact
     // scans at 100 TB.
-    val df = Queries.topSupplier(spark, dir)
+    val df = RelationalQueries.topSupplier(spark, dir)
     df.queryExecution.toRdd.count()
     val full = plan(df)
     val p = full.indexOf("== Initial Plan ==") match {
@@ -252,7 +253,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q130 product profit: every dim broadcasts, one rollup, LIKE pushed to the part scan") {
-    val p = plan(Queries.productProfit(spark, dir))
+    val p = plan(RelationalQueries.productProfit(spark, dir))
     assert(!p.contains("SortMergeJoin"),
       "part/supplier/orders/nation must all broadcast at this SF:\n" + p)
     assert("BroadcastHashJoin".r.findAllIn(p).size === 4, p)
@@ -267,7 +268,7 @@ class PlanSpec extends SparkSpec {
     // per-(order, supplier) lateness rollup. The groupBy-then-rejoin
     // formulation plans the rollup subtree twice (two full lineitem scans);
     // this pin holds the single-scan form.
-    val p = plan(Queries.waitingSuppliers(spark, dir))
+    val p = plan(RelationalQueries.waitingSuppliers(spark, dir))
     assert(p.linesIterator.count(l => l.contains("FileScan") && l.contains("lineitem")) === 1,
       "lineitem must be scanned exactly once:\n" + p)
     assert(p.contains("Window"), "per-order stats must be windows:\n" + p)
@@ -279,7 +280,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q132 cheapest supplier: the offer rollup is computed ONCE, per-part min is a window") {
-    val p = plan(Queries.cheapestRegionalSupplier(spark, dir))
+    val p = plan(RelationalQueries.cheapestRegionalSupplier(spark, dir))
     assert(p.linesIterator.count(l => l.contains("FileScan") && l.contains("lineitem")) === 1,
       "lineitem must be scanned exactly once:\n" + p)
     assert(p.contains("Window"), "the correlated MIN must be a window over the rollup:\n" + p)
@@ -292,7 +293,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q133 supplier mix: flagged suppliers leave via a BROADCAST anti-join below the rollup") {
-    val p = plan(Queries.supplierMix(spark, dir))
+    val p = plan(RelationalQueries.supplierMix(spark, dir))
     assert(p.contains("LeftAnti"), "NOT IN must plan as an anti-join:\n" + p)
     assert(!p.contains("SortMergeJoin"),
       "the anti probe and the part join must broadcast at this SF:\n" + p)
@@ -309,7 +310,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q134 dominant suppliers: ONE fact scan, share threshold via window, dim probe is LEFT SEMI") {
-    val p = plan(Queries.dominantSuppliers(spark, dir))
+    val p = plan(RelationalQueries.dominantSuppliers(spark, dir))
     assert(p.linesIterator.count(l => l.contains("FileScan") && l.contains("lineitem")) === 1,
       "lineitem must be scanned exactly once:\n" + p)
     assert(p.contains("Window"), "the per-part total must be a window over the rollup:\n" + p)
@@ -327,7 +328,7 @@ class PlanSpec extends SparkSpec {
     // and the 1-row total/count anchor; at runtime both consumers must share
     // one exchange (the q129 pattern) — a drift doubles the region-pruned
     // fact scans.
-    val df = Queries.importantStock(spark, dir)
+    val df = RelationalQueries.importantStock(spark, dir)
     df.queryExecution.toRdd.count()
     val full = plan(df)
     val p = full.indexOf("== Initial Plan ==") match {
@@ -344,7 +345,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q02 joins dims by broadcast only — the fact side never shuffles to join") {
-    val p = plan(Queries.joinAggNation(spark, dir))
+    val p = plan(RelationalQueries.joinAggNation(spark, dir))
     assert(p.contains("BroadcastHashJoin"))
     assert(!p.contains("SortMergeJoin"))
     // groupBy + presentation sort are the only data shuffles
@@ -352,7 +353,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q03 pushes both predicates and the 4-column projection into the scan") {
-    val p = plan(Queries.filterPushdown(spark, dir))
+    val p = plan(RelationalQueries.filterPushdown(spark, dir))
     val scanLine = p.linesIterator.find(_.contains("FileScan")).get
     assert(scanLine.contains("l_orderkey") && scanLine.contains("l_shipdate"))
     assert(!scanLine.contains("l_extendedprice"), "projection not pruned: " + scanLine)
@@ -361,24 +362,24 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q01 aggregates with a map-side partial before the shuffle") {
-    val p = plan(Queries.aggPricing(spark, dir))
+    val p = plan(RelationalQueries.aggPricing(spark, dir))
     assert(p.linesIterator.count(_.contains("HashAggregate")) === 2, p)
     assert(shuffles(p) === 2, p) // agg + presentation sort
   }
 
   test("q07 as-of join runs on ONE data shuffle (union + running-last)") {
-    val p = plan(Queries.asofJoin(spark, dir))
+    val p = plan(ChoirQueries.asofJoin(spark, dir))
     assert(!p.contains("Join"), "as-of must not be a physical join: " + p)
     assert(shuffles(p) === 2, p) // window shuffle + presentation sort
   }
 
   test("q09 streak shares one shuffle between window and aggregation") {
-    val p = plan(Queries.trailingStreak(spark, dir))
+    val p = plan(ChoirQueries.trailingStreak(spark, dir))
     assert(shuffles(p) === 2, p) // user_id shuffle + presentation sort
   }
 
   test("q20 minhash candidate generation has no all-pairs stage") {
-    val p = plan(Queries.minhashPairs(spark, dir))
+    val p = plan(DedupQueries.minhashPairs(spark, dir))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
@@ -430,7 +431,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q168 keeper pick is a partial-aggregable max(struct) — no window, no object agg") {
-    val p = plan(Queries.dedupKeepBest(spark, dir))
+    val p = plan(DedupQueries.dedupKeepBest(spark, dir))
     assert(!p.contains("Window"),
       s"argmax must fold through the aggregate, not rank through a window:\n$p")
     assert(!p.contains("ObjectHashAggregate") && !p.contains("collect_list"),
@@ -639,7 +640,7 @@ class PlanSpec extends SparkSpec {
     // ReuseExchange evaluates the scan + native simhash32md5 kernel once. A
     // regression that re-derives the fingerprint per side doubles the corpus
     // scans (and in r11's interpreted form read 8.8× in the driver bench).
-    val df = Queries.simhashNearDup(spark, dir)
+    val df = DedupQueries.simhashNearDup(spark, dir)
     df.queryExecution.toRdd.count() // AQE finalizes exchange reuse at runtime
     val full = plan(df)
     val p = full.indexOf("== Initial Plan ==") match {
@@ -657,7 +658,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q51 split assignment is scan-local: no join, no aggregate, pruned scan") {
-    val p = plan(Queries.splitAssignQ(spark, dir))
+    val p = plan(TextQueries.splitAssignQ(spark, dir))
     assert(!p.contains("Join") && !p.contains("HashAggregate"), p)
     // presentation sort is the only exchange — the split itself is free
     assert(shuffles(p) === 1, p)
@@ -670,13 +671,13 @@ class PlanSpec extends SparkSpec {
     // are both satisfied by hash-partitioning on doc_id, so neither adds an
     // exchange. A regression to the aggregate-first shape doubles the
     // shuffled bytes (exploded gram rows, twice) and fails here.
-    val p = plan(Queries.repetitionStats(spark, dir))
+    val p = plan(TextQueries.repetitionStats(spark, dir))
     assert(shuffles(p) === 2, p) // repartition + presentation sort
     assert(!p.contains("Join"), p)
   }
 
   test("q54 PII scrub shuffles only for the presentation sort") {
-    val p = plan(Queries.piiScrub(spark, dir))
+    val p = plan(TextQueries.piiScrub(spark, dir))
     assert(!p.contains("Join") && !p.contains("HashAggregate"), p)
     assert(shuffles(p) === 1, p)
   }
@@ -691,7 +692,7 @@ class PlanSpec extends SparkSpec {
     // consumers canonically identical; if either side drifts, the
     // ReusedExchange disappears and this pin fails before a 100 TB run pays
     // double scans.
-    val df = Queries.spanScrub(spark, dir)
+    val df = DedupQueries.spanScrub(spark, dir)
     df.queryExecution.toRdd.count()
     val full = plan(df)
     val p = full.indexOf("== Initial Plan ==") match {
@@ -717,7 +718,7 @@ class PlanSpec extends SparkSpec {
     // the eval/boiler frame, so BuildRight = small side broadcast; a flip to
     // BuildLeft would broadcast the TRAINING corpus — the exact 100 TB
     // failure mode.
-    val p = plan(Queries.decontaminate(spark, dir))
+    val p = plan(TextQueries.decontaminate(spark, dir))
     assert(p.contains("BroadcastHashJoin"), p)
     assert(p.contains("BuildRight") && !p.contains("BuildLeft"), p)
     assert(!p.contains("SortMergeJoin"), p)
@@ -725,7 +726,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q55 sequence packing: one group shuffle, no join — the greedy fold is scan-local") {
-    val p = plan(Queries.sequencePack(spark, dir))
+    val p = plan(TextQueries.sequencePack(spark, dir))
     assert(shuffles(p) === 2, p) // group collect + presentation sort
     assert(!p.contains("Join"), p)
   }
@@ -744,7 +745,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q56 stratified sample is scan-local with a pruned scan") {
-    val p = plan(Queries.stratifiedSampleQ(spark, dir))
+    val p = plan(TextQueries.stratifiedSampleQ(spark, dir))
     assert(!p.contains("Join") && !p.contains("HashAggregate"), p)
     assert(shuffles(p) === 1, p) // presentation sort only
     val scanLine = p.linesIterator.find(_.contains("FileScan")).get

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.RangeJoin
+import graft.queries.RelationalQueries
 
 /** Range-join correctness: the bin equi-join decomposition must produce the
   * exact relation of the naive non-equi join (which Spark plans as a BNLJ —
@@ -132,7 +133,7 @@ class RangeJoinSpec extends SparkSpec {
   }
 
   test("q38 range join plans an equi-join on the bin, no BNLJ anywhere") {
-    val p = Queries.rangeJoin(spark, "/root/testdata/sf0.001")
+    val p = RelationalQueries.rangeJoin(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
     assert(p.contains("BroadcastHashJoin") || p.contains("SortMergeJoin") ||

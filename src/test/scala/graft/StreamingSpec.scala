@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.functions.Curation
 import graft.streaming.EventStream
 import graft.streaming.EventStream.Event
 
@@ -359,12 +360,12 @@ class StreamingSpec extends SparkSpec {
       assert(got.select("text").collect().toSeq ===
         batch.orderBy("doc_id").select("text").collect().toSeq)
       // …and, NON-self-referentially, its keep decisions equal the ACTUAL
-      // q41 batch curation (Queries.curationOf) on the same rows — these
+      // q41 batch curation (Curation.decisions) on the same rows — these
       // docs are distinct, so the one stage curateStream doesn't fuse in
       // (exact-dedup canonicalization) can't fire, and the gate decisions
       // must match rule for rule. Guards against the two paths' thresholds
       // drifting apart (they share Curation.Gate*, but this asserts it).
-      val q41Kept = Queries.curationOf(
+      val q41Kept = Curation.decisions(
         Seq(1L -> pass1, 2L -> failLang, 3L -> failShort, 4L -> pass2)
           .toDF("doc_id", "text"))
         .filter($"keep").select("doc_id").collect().map(_.getLong(0)).toSeq

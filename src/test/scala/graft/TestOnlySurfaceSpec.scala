@@ -29,29 +29,41 @@ class TestOnlySurfaceSpec extends AnyFunSuite {
     files.map(p => p -> stripComments(new String(Files.readAllBytes(p), "UTF-8")))
   }
 
-  /** (name, file:line) of every def visible outside its own package. */
-  private lazy val publicDefs: List[(String, String)] = for {
+  /** Every def visible outside its own package. */
+  private lazy val publicDefs: List[PublicDef] = for {
     (p, c) <- code
     m <- Def.findAllMatchIn(c)
     mods = c.substring(c.lastIndexOf('\n', m.start) + 1, m.start)
     if !mods.contains("override") && Hidden.findFirstIn(mods).isEmpty
-  } yield (m.group(1), s"${root.relativize(p)}:${c.substring(0, m.start).count(_ == '\n') + 1}")
+  } yield PublicDef(m.group(1), ownerOf(c, m.start), p,
+    s"${root.relativize(p)}:${c.substring(0, m.start).count(_ == '\n') + 1}")
 
   test("every public main definition has a caller in main code") {
     val uses = code.iterator.flatMap { case (_, c) => Word.findAllIn(c) }
       .toSeq.groupBy(identity).view.mapValues(_.size).toMap
-    val headers = publicDefs.groupBy(_._1).view.mapValues(_.size).toMap
-    val testOnly = publicDefs.filter { case (name, _) =>
-      name != "main" && !Allowed.contains(name) && uses(name) <= headers(name)
+    val headers = publicDefs.groupBy(_.name).view.mapValues(_.size).toMap
+    val owners = publicDefs.groupBy(_.name).view.mapValues(_.map(_.owner).distinct.size).toMap
+    // a name several owners define is used only where the owner is named
+    // (`Owner.name`) or inside the owner's own file
+    def ownUses(d: PublicDef): Int = {
+      val qualified = s"\\b${d.owner}\\s*\\.\\s*${d.name}\\b".r
+      val bare = s"\\b${d.name}\\b".r
+      val inFile = code.collect { case (p, c) if p == d.file => bare.findAllIn(c).size }.sum
+      code.map { case (_, c) => qualified.findAllIn(c).size }.sum +
+        inFile - publicDefs.count(o => o.name == d.name && o.file == d.file)
+    }
+    val testOnly = publicDefs.filter { d =>
+      d.name != "main" && !Allowed.contains(d.name) &&
+        (if (owners(d.name) > 1) ownUses(d) <= 0 else uses(d.name) <= headers(d.name))
     }
     if (testOnly.nonEmpty)
       fail("defined in src/main but called only from tests (delete it, move it into " +
         "test sources, or add it to TestOnlySurfaceSpec.Allowed with a reason):\n" +
-        testOnly.map { case (name, at) => s"$at: $name" }.mkString("\n"))
+        testOnly.map(d => s"${d.at}: ${d.owner}.${d.name}").mkString("\n"))
   }
 
   test("every allowed name is still a public main definition") {
-    val stale = Allowed.keySet -- publicDefs.map(_._1)
+    val stale = Allowed.keySet -- publicDefs.map(_.name)
     assert(stale.isEmpty, s"allowed but no longer defined; drop from Allowed: $stale")
   }
 }
@@ -67,7 +79,20 @@ object TestOnlySurfaceSpec {
     "fromOrdinal" -> "RawSheet.fromOrdinal: the ingest entry named in docs/data_contract.md",
     "checkGenerationParity" -> "CuratePipeline: the read-time integrity check for a curated corpus")
 
+  /** A def, the object, class or trait that encloses it, and where it is. */
+  private final case class PublicDef(name: String, owner: String, file: Path, at: String)
+
   private val Word = "[A-Za-z_][A-Za-z0-9_]*".r
+  private val Owner = "(?m)^([ \\t]*)(?:[a-z]+(?:\\[\\w+\\])?\\s+)*(?:object|class|trait)\\s+([A-Za-z_][A-Za-z0-9_]*)".r
+
+  /** The innermost object, class or trait declared above `at` with less
+    * indentation than the line `at` sits on. */
+  private def ownerOf(c: String, at: Int): String = {
+    val lineStart = c.lastIndexOf('\n', at) + 1
+    val indent = c.substring(lineStart).takeWhile(ch => ch == ' ' || ch == '\t').length
+    Owner.findAllMatchIn(c.substring(0, lineStart)).toSeq.reverse
+      .find(_.group(1).length < indent).map(_.group(2)).getOrElse("")
+  }
   private val Def = "\\bdef\\s+([A-Za-z_][A-Za-z0-9_]*)".r
   /** Modifiers before `def` on its line that hide it from other packages. */
   private val Hidden = "\\b(private(?!\\[graft\\])|protected)\\b".r

@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Text, VectorExpressions => V}
+import graft.functions.{Curation, Text, VectorExpressions => V}
 import graft.operators.{Ann, Dedup}
+import graft.queries.{AnnQueries, DedupQueries, Shared}
 
 /** Vector/dedup/ANN behavior: kernel edge cases (round-2 ADVICE regressions)
   * and end-to-end pipeline checks with planted duplicates and a recall bound.
@@ -257,7 +258,7 @@ class VectorSpec extends SparkSpec {
       (4L, "the extraordinarily magnificent incomprehensibilities."), // 4 tokens, 54 chars
       (5L, "the x k j q w z") // quality: en stopword, but short, no punct -> 0.228
     ).toDF("doc_id", "text")
-    val got = Queries.curationOf(docs)
+    val got = Curation.decisions(docs)
       .collect().map(r => r.getLong(0) -> (r.getBoolean(4), r.getString(5))).toMap
     assert(got(1L) === ((true, "keep")))
     assert(got(2L) === ((false, "duplicate")))
@@ -542,7 +543,7 @@ class VectorSpec extends SparkSpec {
   }
 
   test("dedup-clusters query matches the hand-derived planted clustering") {
-    val out = Queries.dedupClusters(spark, "")
+    val out = DedupQueries.dedupClusters(spark, "")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
       5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 8L))
@@ -741,13 +742,13 @@ class VectorSpec extends SparkSpec {
 
   test("corpus dedup clusters agree with propagation CC over the exact pair set") {
     val dir = "/root/testdata/sf0.001"
-    val pairs = Queries.neardupExactPairs(spark, dir)
+    val pairs = DedupQueries.neardupExactPairs(spark, dir)
     val comp = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ids = Tables.load(spark, dir, "documents")
       .select("doc_id").collect().map(_.getLong(0))
     val expected = ids.map(id => id -> comp.getOrElse(id, id)).toMap
-    val out = Queries.dedupClustersCorpus(spark, dir)
+    val out = DedupQueries.dedupClustersCorpus(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out === expected)
     assert(out.size === ids.length)
@@ -755,7 +756,7 @@ class VectorSpec extends SparkSpec {
   }
 
   test("corpus-pair CC converges in O(log n) star rounds and reports the count") {
-    val pairs = Queries.neardupExactPairs(spark, "/root/testdata/sf0.001")
+    val pairs = DedupQueries.neardupExactPairs(spark, "/root/testdata/sf0.001")
     val (comp, rounds) = Dedup.connectedComponentsLogRoundsStrictWithStats(pairs)
     info(s"corpus CC: $rounds star rounds")
     assert(rounds <= 4, s"near-dup clusters are shallow; $rounds rounds means a regression")
@@ -796,7 +797,7 @@ class VectorSpec extends SparkSpec {
 
   test("SemDeDup fixture: cluster-local pairs, min-id canonicals, corrupt row excluded") {
     val out = graft.operators.SemDedup.assign(
-      Queries.semDedupFixture(spark), "vec_id", "embedding",
+      DedupQueries.semDedupFixture(spark), "vec_id", "embedding",
       threshold = 0.99, nClusters = 2, iters = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     assert(out === Set(
@@ -812,7 +813,7 @@ class VectorSpec extends SparkSpec {
     // 0.895; sf0.01/sf0.1 measured within ±0.07 of these) with slack only
     // for future parameter retuning — a quantizer/band/probe regression
     // that drops recall below the production 0.8 bar must fail here.
-    val rows = Queries.recallReport(spark, "/root/testdata/sf0.001")
+    val rows = AnnQueries.recallReport(spark, "/root/testdata/sf0.001")
       .collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), if (r.isNullAt(3)) -1.0 else r.getDouble(3))))
@@ -839,7 +840,7 @@ class VectorSpec extends SparkSpec {
     // cells; a 1-probe query finds only its own half), retrained 1.0 on
     // BOTH query families. The ceilings/floors bound the contract: decay
     // must be VISIBLE (stale well under fresh) and retrain must restore it.
-    val rows = Queries.annIndexStaleness(spark, "/root/testdata/sf0.001")
+    val rows = AnnQueries.annIndexStaleness(spark, "/root/testdata/sf0.001")
       .collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
       .toMap
@@ -862,9 +863,9 @@ class VectorSpec extends SparkSpec {
     // converges on the data values, ADC replays CosineSimilarity's loop on a
     // bit-exact reconstruction — so the IVFADC output must EQUAL the exact
     // block scan (same ids, ranks, and 6dp scores).
-    val fix = Queries.annPqFixture(spark, "/root/testdata/sf0.001")
+    val fix = AnnQueries.annPqFixture(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val exact = Ann.blockTopK(Queries.annFixture(spark), "vec_id", "embedding", 3)
+    val exact = Ann.blockTopK(Shared.annFixture(spark), "vec_id", "embedding", 3)
       .withColumn("cosine", round(col("cosine"), 6))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
     assert(fix === exact)
@@ -900,20 +901,6 @@ class VectorSpec extends SparkSpec {
       nClusters = 16, nProbe = 4, m = 8, codebookSize = 16, rerank = 32)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
     assert(rows.toSet === again.toSet, "rerun must be bit-identical")
-  }
-
-  test("PQ encode: m-byte codes, deterministic, corrupt rows excluded") {
-    val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .unionByName(Seq((990001L, Seq(1f, 2f), 0)).toDF("vec_id", "embedding", "label"))
-    val (codes1, books1) = graft.operators.Pq.encode(emb, "vec_id", "embedding", m = 8)
-    val c1 = codes1.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(!c1.contains(990001L), "dimension-mismatched row must be excluded")
-    assert(c1.nonEmpty && c1.values.forall(_.length === 8), "one byte per subspace")
-    val (codes2, books2) = graft.operators.Pq.encode(emb, "vec_id", "embedding", m = 8)
-    val c2 = codes2.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    assert(c1 === c2, "codes must be bit-reproducible")
-    assert(books1.flatten.flatten.toSeq === books2.flatten.flatten.toSeq,
-      "codebooks must be bit-reproducible")
   }
 
   test("SemDeDup on the real corpus: keep-set canonicals are consistent with the exact scan") {
